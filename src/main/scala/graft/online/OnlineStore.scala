@@ -82,9 +82,11 @@ trait OnlineStore extends Serializable {
   * durably must be able to drop rows aged past a view's ttl, or a TTL
   * workload grows the store without bound — the read-time staleness
   * gate (OUTSIDE_MAX_AGE) protects serves, not disk. Implemented by
-  * [[ParquetOnlineStore]] (per-bucket rewrite) and [[JdbcOnlineStore]]
-  * (one transactional DELETE); the sharded composite fans out to any
-  * ring whose children all implement it. The reference has no
+  * [[ParquetOnlineStore]] (per-bucket rewrite) and by the three JDBC
+  * stores — [[JdbcOnlineStore]], [[ReferenceSqlStore]] and
+  * [[ReferenceDocStore]] — through their shared [[JdbcStore]] base (one
+  * transactional DELETE); the sharded composite fans out to any ring
+  * whose children all implement it. The reference has no
   * storage-level expiry at all (its redis store pins EX_SECONDS to
   * year 9999, `sdk/python/feast/infra/online_stores/redis.py:38`) —
   * this is parity-plus. Returns the number of expired rows. */
@@ -125,14 +127,15 @@ object OnlineStore {
   /** Null join keys are a data-quality error: reject them with a
     * readable message instead of letting a key-serializing closure
     * throw an opaque per-task stack deep inside the store's routing
-    * expressions. Shared by every store implementation. */
+    * expressions. Shared by every store implementation; `op` names the
+    * rejecting operation ("upsert" or "delete") in the message. */
   def guardNullKeys(cols: Seq[String], joinKeys: Seq[String],
-      viewName: String): Seq[org.apache.spark.sql.Column] =
+      viewName: String, op: String): Seq[org.apache.spark.sql.Column] =
     cols.map {
       case k if joinKeys.contains(k) =>
         when(col(k).isNull, raise_error(lit(
-          s"graft: null join key '$k' in upsert for view '$viewName' — " +
-            "filter or fill null-keyed rows before materialize"))).otherwise(col(k)).as(k)
+          s"graft: null join key '$k' in $op for view '$viewName' — " +
+            s"filter or fill null-keyed rows before the $op"))).otherwise(col(k)).as(k)
       case c => col(c)
     }
 }
@@ -594,7 +597,7 @@ class ParquetOnlineStore(
     val buckets = effectiveBuckets(fs, p)
 
     val cols = (joinKeys ++ Seq(tsCol) ++ createdCol.toSeq ++ view.featureNames).distinct
-    val incoming = df.select(OnlineStore.guardNullKeys(cols, joinKeys, view.name): _*)
+    val incoming = df.select(OnlineStore.guardNullKeys(cols, joinKeys, view.name, "upsert"): _*)
       .withColumn(BucketCol, bucketExpr(joinKeys, buckets))
     val tmp = p + ".tmp"
     // ONE-exchange merge + layout: the latest-per-key reduction IS the
@@ -736,7 +739,7 @@ class ParquetOnlineStore(
     if (!fs.exists(hp(p))) return
     val buckets = effectiveBuckets(fs, p)
     val keys = df
-      .select(OnlineStore.guardNullKeys(matchCols, joinKeys, view.name): _*)
+      .select(OnlineStore.guardNullKeys(matchCols, joinKeys, view.name, "delete"): _*)
       .distinct()
       .withColumn(BucketCol, bucketExpr(joinKeys, buckets))
     val cached = keys.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

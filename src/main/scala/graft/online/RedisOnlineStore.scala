@@ -1,105 +1,11 @@
 package graft.online
 
-import java.io.{BufferedInputStream, BufferedOutputStream, EOFException, InputStream, OutputStream}
-import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Row
 
 import graft.model.FeatureView
-import graft.operators.PullLatest
-
-/** Minimal RESP2 (REdis Serialization Protocol) client over a JDK
-  * socket — the wire format every Redis-compatible server speaks
-  * (redis.io/docs/reference/protocol-spec): requests are arrays of
-  * bulk strings, replies are simple strings / errors / integers /
-  * bulk strings / arrays. Binary-safe (bulk strings carry raw bytes).
-  * Supports PIPELINING: send n commands, then read n replies — the
-  * batched round-trip pattern the store's write path depends on.
-  *
-  * Deliberately tiny: no connection pool, no cluster topology, no
-  * RESP3 — one socket per writer partition / driver reader, which is
-  * the reference redis store's own per-process client shape
-  * (`sdk/python/feast/infra/online_stores/redis.py`).
-  */
-private[online] final class RespClient(host: String, port: Int,
-    timeoutMs: Int = 10000) extends AutoCloseable {
-  private val socket = new Socket(host, port)
-  socket.setSoTimeout(timeoutMs)
-  socket.setTcpNoDelay(true)
-  private val out: OutputStream = new BufferedOutputStream(socket.getOutputStream, 1 << 16)
-  private val in: InputStream = new BufferedInputStream(socket.getInputStream, 1 << 16)
-
-  /** Queue one command (array of binary-safe args). Call [[flush]] then
-    * [[readReply]] once per queued command. */
-  def send(args: Seq[Array[Byte]]): Unit = {
-    out.write(s"*${args.length}\r\n".getBytes(UTF_8))
-    args.foreach { a =>
-      out.write(s"$$${a.length}\r\n".getBytes(UTF_8))
-      out.write(a)
-      out.write('\r'.toInt); out.write('\n'.toInt)
-    }
-  }
-  def flush(): Unit = out.flush()
-
-  def command(args: Seq[Array[Byte]]): RespClient.Reply = {
-    send(args); flush(); readReply()
-  }
-
-  private def readLine(): String = {
-    val sb = new StringBuilder
-    var c = in.read()
-    while (c != '\r') {
-      if (c < 0) throw new EOFException("redis connection closed")
-      sb.append(c.toChar)
-      c = in.read()
-    }
-    if (in.read() != '\n') throw new IllegalStateException("malformed RESP line end")
-    sb.toString
-  }
-
-  def readReply(): RespClient.Reply = {
-    val t = in.read()
-    if (t < 0) throw new EOFException("redis connection closed")
-    t.toChar match {
-      case '+' => RespClient.Simple(readLine())
-      case '-' => throw new IllegalStateException(s"redis error: ${readLine()}")
-      case ':' => RespClient.Num(readLine().toLong)
-      case '$' =>
-        val n = readLine().toInt
-        if (n < 0) RespClient.Bulk(null)
-        else {
-          val b = new Array[Byte](n)
-          var off = 0
-          while (off < n) {
-            val r = in.read(b, off, n - off)
-            if (r < 0) throw new EOFException("redis connection closed mid-bulk")
-            off += r
-          }
-          if (in.read() != '\r' || in.read() != '\n')
-            throw new IllegalStateException("malformed bulk terminator")
-          RespClient.Bulk(b)
-        }
-      case '*' =>
-        val n = readLine().toInt
-        if (n < 0) RespClient.Arr(null)
-        else RespClient.Arr(Vector.fill(n)(readReply()))
-      case other => throw new IllegalStateException(s"unknown RESP type byte '$other'")
-    }
-  }
-
-  override def close(): Unit = socket.close()
-}
-
-private[online] object RespClient {
-  sealed trait Reply
-  final case class Simple(s: String) extends Reply
-  final case class Num(n: Long) extends Reply
-  final case class Bulk(bytes: Array[Byte]) extends Reply
-  final case class Arr(items: Vector[Reply]) extends Reply
-}
 
 /** Redis-backed online store — the networked production KV adapter the
   * reference ships as its primary online store (reference
@@ -115,187 +21,73 @@ private[online] object RespClient {
   * field per feature as protobuf `Value`; one binary map per entity
   * halves the field count and keeps LWW atomic per entity).
   *
-  * Writes are distributed (`foreachPartition`, one connection per
-  * partition, hash-repartitioned by entity key so no two tasks race on
-  * a key) and PIPELINED in two phases per batch: batched `HGET _ts`
+  * Writes are PIPELINED in two phases per batch: batched `HGET _ts`
   * for the incoming keys, then `HSET` only where the incoming row is
   * strictly newer by `(event_ts, created_ts)` — the same
   * check-then-write the reference performs per key
-  * (redis.py:192-209), batched. Point reads are driver-side pipelined
-  * `HGETALL` — no Spark job on the latency path. Teardown is
-  * cursor-`SCAN` + batched `DEL` (never `KEYS`, which blocks the
-  * server at production keyspace sizes).
+  * (redis.py:192-209), batched. Teardown is cursor-`SCAN MATCH` over
+  * the view's key prefix + batched `DEL`.
   */
-class RedisOnlineStore(
-    host: String,
-    port: Int,
-    writeBatchSize: Int = 500,
-    writeParallelism: Int = 4) extends OnlineStore {
+class RedisOnlineStore(host: String, port: Int)
+  extends RespStore(host, port, RedisOnlineStore)
+
+object RedisOnlineStore extends RespStore.Layout {
   import RespClient._
 
-  /** upsert reduces internally (latestPerKey before any round-trip)
-    * and writes via distributed foreachPartition — a caller-side
-    * PullLatest would just duplicate the exchange. */
-  override def wantsPreReduced: Boolean = false
+  private[online] def key(project: String, view: String,
+      kvs: Seq[(String, Any)]): Array[Byte] =
+    bytes(s"$project:$view:${EntityKeyCodec.hexKey(kvs)}")
 
-  private def keyOf(project: String, view: String, hex: String): String =
-    s"$project:$view:$hex"
-
-  def upsert(project: String, view: FeatureView, joinKeys: Seq[String],
-      df: DataFrame, tsCol: String, createdCol: Option[String]): Unit = {
-    val feats = view.featureNames
-    val cols = (joinKeys ++ Seq(tsCol) ++ createdCol.toSeq ++ feats).distinct
-    // one row per key before any network round-trip (JdbcOnlineStore
-    // policy: the map-side-combining reduction is cheaper than talking
-    // to the server per duplicate)
-    val latest = PullLatest.latestPerKey(
-      df.select(OnlineStore.guardNullKeys(cols, joinKeys, view.name): _*),
-      joinKeys, tsCol, createdCol, feats)
-    val (h, p, batch, viewName) = (host, port, writeBatchSize, view.name)
-    val (keys, ts, created) = (joinKeys, tsCol, createdCol)
-    latest
-      .repartition(math.max(1, writeParallelism), joinKeys.map(col): _*)
-      .foreachPartition { (rows: Iterator[Row]) =>
-        if (rows.nonEmpty) {
-          val client = new RespClient(h, p)
-          try rows.grouped(batch).foreach { group =>
-            val prepared = group.map { r =>
-              val kvs = keys.map(k => k -> r.getAs[Any](k))
-              val hex = EntityKeyCodec.hexKey(kvs)
-              val et = r.getAs[Timestamp](ts)
-              // Some(null) -> None: a null created_ts value must not
-              // NPE the _cts encoding below
-              val ct = created.flatMap(c => Option(r.getAs[Timestamp](c)))
-              val payload = ValueCodec.encodeMap(feats.map(f => f -> r.getAs[Any](f)))
-              (keyOf(project, viewName, hex), et, ct, payload)
-            }
-            // phase 1: pipelined staleness probe
-            prepared.foreach { case (k, _, _, _) =>
-              client.send(Seq(b("HGET"), b(k), b("_ts")))
-            }
-            client.flush()
-            val existing = prepared.map(_ => client.readReply() match {
-              case Bulk(null) => None
-              case Bulk(bytes) => Some(new String(bytes, UTF_8).toLong)
-              case other => throw new IllegalStateException(s"HGET _ts: $other")
-            })
-            // phase 2: pipelined conditional writes (strictly-newer or
-            // equal-ts LWW, matching the engine-wide (ts, created)
-            // contract: equal event_ts falls through to overwrite,
-            // which the sorted-merge stores resolve by created/payload
-            // — acceptable for a KV store, same as the reference)
-            var sent = 0
-            prepared.zip(existing).foreach { case ((k, et, ct, payload), ex) =>
-              // null event_ts is valid engine-wide (the parquet store's
-              // expire preserves such rows); treat it as minus infinity
-              // in the LWW compare instead of NPE-ing the task
-              val etMs = if (et == null) Long.MinValue else et.getTime
-              if (ex.forall(_ <= etMs)) {
-                // null event_ts: omit the _ts field entirely so the read
-                // path round-trips None (null-ts parity with the parquet
-                // store); an absent _ts also keeps the row
-                // always-overwritable in the phase-1 probe, which is the
-                // minus-infinity LWW semantics. A null-ts write can only
-                // land on a key whose probe returned <= MinValue — i.e.
-                // _ts absent, or the Long.MinValue SENTINEL a pre-r7
-                // writer stored for null ts. HDEL clears that legacy
-                // sentinel (HSET merges fields, so it would otherwise
-                // survive and read back as a year −292M timestamp);
-                // deleting an absent field is a no-op.
-                if (et == null) { client.send(Seq(b("HDEL"), b(k), b("_ts"))); sent += 1 }
-                val tsFields =
-                  if (et == null) Seq.empty else Seq(b("_ts"), b(etMs.toString))
-                val base = Seq(b("HSET"), b(k)) ++ tsFields ++
-                  Seq(b("payload"), payload)
-                val withCt = ct.fold(base)(c =>
-                  base ++ Seq(b("_cts"), b(c.getTime.toString)))
-                client.send(withCt)
-                sent += 1
-              }
-            }
-            client.flush()
-            (0 until sent).foreach(_ => client.readReply())
-          } finally client.close()
-        }
+  private[online] def writeCommands(c: RespClient, project: String, view: String,
+      cols: ExternalStore.Cols, batch: Seq[Row]): Seq[Seq[Array[Byte]]] = {
+    val keys = batch.map(r => key(project, view, cols.key(r)))
+    // phase 1: pipelined staleness probe
+    val existing = c.pipeline(keys.map(k => Seq(bytes("HGET"), k, bytes("_ts")))).map {
+      case Bulk(null) => None
+      case Bulk(ts) => Some(new String(ts, UTF_8).toLong)
+      case other => throw new IllegalStateException(s"HGET _ts: $other")
+    }
+    // phase 2: conditional writes (strictly-newer or equal-ts LWW,
+    // matching the engine-wide (ts, created) contract: equal event_ts
+    // falls through to overwrite, which the sorted-merge stores resolve
+    // by created/payload — acceptable for a KV store, same as the
+    // reference)
+    batch.lazyZip(keys).lazyZip(existing).flatMap { (r, k, ex) =>
+      val et = cols.eventTs(r)
+      // null event_ts is valid engine-wide (the parquet store's
+      // expire preserves such rows); treat it as minus infinity
+      // in the LWW compare instead of NPE-ing the task
+      val etMs = if (et == null) Long.MinValue else et.getTime
+      if (!ex.forall(_ <= etMs)) Nil
+      else {
+        val tsFields = if (et == null) Nil else Seq(bytes("_ts"), bytes(etMs.toString))
+        val ctFields = Option(cols.createdTs(r)).toSeq
+          .flatMap(ct => Seq(bytes("_cts"), bytes(ct.getTime.toString)))
+        val hset = Seq(bytes("HSET"), k) ++ tsFields ++
+          Seq(bytes("payload"), ValueCodec.encodeMap(cols.values(r))) ++ ctFields
+        // null event_ts: omit the _ts field entirely so the read
+        // path round-trips None (null-ts parity with the parquet
+        // store); an absent _ts also keeps the row
+        // always-overwritable in the phase-1 probe, which is the
+        // minus-infinity LWW semantics. A null-ts write can only
+        // land on a key whose probe returned <= MinValue — i.e.
+        // _ts absent, or the Long.MinValue SENTINEL a pre-r7
+        // writer stored for null ts. HDEL clears that legacy
+        // sentinel (HSET merges fields, so it would otherwise
+        // survive and read back as a year −292M timestamp);
+        // deleting an absent field is a no-op.
+        if (et == null) Seq(Seq(bytes("HDEL"), k, bytes("_ts")), hset) else Seq(hset)
       }
+    }
   }
 
-  def read(project: String, view: FeatureView, joinKeys: Seq[String],
-      entityKeys: Seq[Seq[(String, Any)]],
-      features: Seq[String]): Seq[(Option[Timestamp], Map[String, FeatureValue])] = {
-    val ks = entityKeys.map(ek => keyOf(project, view.name, EntityKeyCodec.hexKey(ek)))
-    val client = new RespClient(host, port)
-    try {
-      ks.foreach(k => client.send(Seq(b("HGETALL"), b(k))))
-      client.flush()
-      ks.map { _ =>
-        client.readReply() match {
-          case Arr(items) if items != null && items.nonEmpty =>
-            val fields = items.grouped(2).collect {
-              case Vector(Bulk(f), Bulk(v)) => new String(f, UTF_8) -> v
-            }.toMap
-            val ts = fields.get("_ts").map(v => new Timestamp(new String(v, UTF_8).toLong))
-            val values = fields.get("payload").map(ValueCodec.decodeMap).getOrElse(Map.empty)
-            (ts, features.map { f =>
-              val v = values.getOrElse(f, null)
-              f -> (if (v != null) FeatureValue(v, FeatureStatus.Present)
-                    else FeatureValue(null, FeatureStatus.NotFound))
-            }.toMap)
-          case _ =>
-            (None, features.map(f =>
-              f -> FeatureValue(null, FeatureStatus.NotFound)).toMap)
-        }
-      }
-    } finally client.close()
-  }
+  private[online] def decoder(view: String, features: Seq[String])
+      : Map[String, Array[Byte]] => (Option[Timestamp], Map[String, Any]) = fields =>
+    (fields.get("_ts").map(v => new Timestamp(new String(v, UTF_8).toLong)),
+      fields.get("payload").map(ValueCodec.decodeMap).getOrElse(Map.empty))
 
-  /** CDC tombstones: distributed pipelined DEL by canonical key. */
-  override def delete(project: String, view: FeatureView, joinKeys: Seq[String],
-      keysDf: DataFrame): Unit = {
-    val (h, p, batch, viewName) = (host, port, writeBatchSize, view.name)
-    val keys = joinKeys
-    keysDf.select(OnlineStore.guardNullKeys(keys, keys, viewName): _*)
-      .distinct()
-      .foreachPartition { (rows: Iterator[Row]) =>
-        if (rows.nonEmpty) {
-          val client = new RespClient(h, p)
-          try rows.grouped(batch).foreach { group =>
-            val ks = group.map { r =>
-              keyOf(project, viewName,
-                EntityKeyCodec.hexKey(keys.map(k => k -> r.getAs[Any](k))))
-            }
-            client.send(b("DEL") +: ks.map(b))
-            client.flush()
-            client.readReply()
-          } finally client.close()
-        }
-      }
-  }
-
-  def teardown(project: String, views: Seq[FeatureView]): Unit = {
-    val client = new RespClient(host, port)
-    try views.foreach { v =>
-      val pattern = s"${keyOf(project, v.name, "")}*"
-      var cursor = "0"
-      var first = true
-      while (first || cursor != "0") {
-        first = false
-        client.send(Seq(b("SCAN"), b(cursor), b("MATCH"), b(pattern), b("COUNT"), b("1000")))
-        client.flush()
-        client.readReply() match {
-          case Arr(Vector(Bulk(c), Arr(ks))) =>
-            cursor = new String(c, UTF_8)
-            val found = ks.collect { case Bulk(k) => k }
-            if (found.nonEmpty) {
-              client.send(b("DEL") +: found)
-              client.flush()
-              client.readReply()
-            }
-          case other => throw new IllegalStateException(s"SCAN: $other")
-        }
-      }
-    } finally client.close()
-  }
-
-  private def b(s: String): Array[Byte] = s.getBytes(UTF_8)
+  private[online] def teardown(c: RespClient, project: String,
+      views: Seq[FeatureView]): Unit =
+    views.foreach(v => RespStore.scan(c, Some(s"$project:${v.name}:*"))(ks =>
+      c.command(bytes("DEL") +: ks)))
 }

@@ -1,12 +1,9 @@
 package graft.online
 
-import java.sql.{Connection, SQLException, Timestamp}
+import java.sql.{Connection, ResultSet}
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Row
 
-import graft.model.FeatureView
-import graft.operators.PullLatest
 import graft.serving.{FeastProto, ProtoWire}
 
 /** Document-keyed online store in the REFERENCE's DynamoDB/Datastore
@@ -47,213 +44,66 @@ import graft.serving.{FeastProto, ProtoWire}
   *
   * Reads are `get_item` by document id (dynamodb.py:130-157): the
   * row's event_ts and its decoded values map; a missing id → all
-  * NOT_FOUND. The latency path is a point SELECT per id chunk — no
-  * Spark job.
+  * NOT_FOUND. Keyed deletes are point DELETEs by document id, and
+  * expire counts documents (entity grain).
   */
-class ReferenceDocStore(
-    url: String,
-    writeBatchSize: Int = 500,
-    writeParallelism: Int = 4) extends OnlineStore with ExpirableOnlineStore {
-  import ReferenceDocStore._
-  import JdbcOnlineStore.{utcCalendar, withConnection, isMissingTable, ReadChunk}
+class ReferenceDocStore(url: String) extends JdbcStore(url, ReferenceDocStore)
 
-  /** Storage-level TTL sweep over the reference document layout
-    * (VERDICT r14 #3): one transactional DELETE of documents strictly
-    * older than the cutoff (entity grain — one document per key); a
-    * NULL event_ts document survives, matching the parquet twin. */
-  def expire(spark: org.apache.spark.sql.SparkSession, project: String,
-      view: FeatureView, joinKeys: Seq[String], tsCol: String,
-      cutoff: Timestamp): Long = {
-    val t = tableId(project, view.name)
-    try withConnection(url) { conn =>
-      val st = conn.prepareStatement(s"DELETE FROM $t WHERE event_ts < ?")
-      try { st.setTimestamp(1, cutoff, utcCalendar()); st.executeUpdate().toLong }
-      finally st.close()
-    } catch { case e: SQLException if isMissingTable(e) => 0L }
-  }
-
-  /** upsert reduces internally (latestPerKey before any round-trip). */
-  override def wantsPreReduced: Boolean = false
-
-  def upsert(project: String, view: FeatureView, joinKeys: Seq[String],
-      df: DataFrame, tsCol: String, createdCol: Option[String]): Unit = {
-    val t = tableId(project, view.name)
-    val feats = view.featureNames
-    val cols = (joinKeys ++ Seq(tsCol) ++ createdCol.toSeq ++ feats).distinct
-    val latest = PullLatest.latestPerKey(
-      df.select(OnlineStore.guardNullKeys(cols, joinKeys, view.name): _*),
-      joinKeys, tsCol, createdCol, feats)
-    withConnection(url)(ensureTable(_, t))
-    val (u, keys, ts, created, batch) = (url, joinKeys, tsCol, createdCol, writeBatchSize)
-    latest
-      .repartition(math.max(1, writeParallelism), joinKeys.map(col): _*)
-      .foreachPartition { (rows: Iterator[Row]) =>
-        if (rows.nonEmpty) withConnection(u) { conn =>
-          conn.setAutoCommit(false)
-          val utc = utcCalendar()
-          val upd = conn.prepareStatement(
-            s"UPDATE $t SET entity_key = ?, values_doc = ?, event_ts = ?, " +
-              "created_ts = ? WHERE entity_id = ?")
-          val ins = conn.prepareStatement(
-            s"INSERT INTO $t (entity_id, entity_key, values_doc, event_ts, " +
-              "created_ts) VALUES (?, ?, ?, ?, ?)")
-          try {
-            rows.grouped(batch).foreach { group =>
-              group.foreach { r =>
-                val kvs = keys.map(k => k -> r.getAs[Any](k))
-                val keyBytes = EntityKeyCodec.referenceSerializeEntityKey(kvs)
-                val id = EntityKeyCodec.referenceEntityId(kvs)
-                val doc = encodeValues(feats.map(f =>
-                  f -> FeastProto.encodeValue(r.getAs[Any](f)).toBytes))
-                val et = r.getAs[Timestamp](ts)
-                val ct = created.flatMap(c => Option(r.getAs[Timestamp](c))).orNull
-                // put_item = whole-document replace: UPDATE overwrites
-                // EVERY body column, never merging with stored features
-                upd.setBytes(1, keyBytes)
-                upd.setBytes(2, doc)
-                upd.setTimestamp(3, et, utc)
-                upd.setTimestamp(4, ct, utc)
-                upd.setString(5, id)
-                if (upd.executeUpdate() == 0) {
-                  ins.setString(1, id)
-                  ins.setBytes(2, keyBytes)
-                  ins.setBytes(3, doc)
-                  ins.setTimestamp(4, et, utc)
-                  ins.setTimestamp(5, ct, utc)
-                  // a concurrent first INSERT of the same id can win
-                  // the race: re-run the UPDATE so THIS writer's
-                  // document still lands (last-by-arrival)
-                  try ins.executeUpdate()
-                  catch { case e: SQLException if isDuplicateKey(e) =>
-                    upd.executeUpdate(); ()
-                  }
-                }
-              }
-              conn.commit()
-            }
-          } catch { case e: Throwable =>
-            try conn.rollback() catch { case _: SQLException => () }
-            throw e
-          } finally { upd.close(); ins.close() }
-        }
-      }
-  }
-
-  def read(project: String, view: FeatureView, joinKeys: Seq[String],
-      entityKeys: Seq[Seq[(String, Any)]],
-      features: Seq[String]): Seq[(Option[Timestamp], Map[String, FeatureValue])] = {
-    val t = tableId(project, view.name)
-    val ids = entityKeys.map(EntityKeyCodec.referenceEntityId)
-    val found: Map[String, (Option[Timestamp], Map[String, Any])] =
-      try withConnection(url) { conn =>
-        val utc = utcCalendar()
-        ids.distinct.grouped(ReadChunk).flatMap { chunk =>
-          val in = chunk.map(_ => "?").mkString(",")
-          val st = conn.prepareStatement(
-            s"SELECT entity_id, values_doc, event_ts FROM $t " +
-              s"WHERE entity_id IN ($in)")
-          try {
-            chunk.zipWithIndex.foreach { case (k, i) => st.setString(i + 1, k) }
-            val rs = st.executeQuery()
-            val rows = Iterator.continually(rs).takeWhile(_.next()).map { r =>
-              val values = decodeValues(r.getBytes(2)).map { case (f, vb) =>
-                f -> FeastProto.decodeValue(new ProtoWire.Reader(vb))
-              }.toMap
-              r.getString(1) -> (Option(r.getTimestamp(3, utc)), values)
-            }.toList
-            rs.close()
-            rows
-          } finally st.close()
-        }.toMap
-      } catch {
-        case e: SQLException if isMissingTable(e) => Map.empty // never materialized
-      }
-    ids.map { id =>
-      found.get(id) match {
-        case Some((ts, values)) =>
-          (ts, features.map { f =>
-            val v = values.getOrElse(f, null)
-            f -> (if (v != null) FeatureValue(v, FeatureStatus.Present)
-                  else FeatureValue(null, FeatureStatus.NotFound))
-          }.toMap)
-        case None =>
-          (None, features.map(f =>
-            f -> FeatureValue(null, FeatureStatus.NotFound)).toMap)
-      }
-    }
-  }
-
-  /** CDC tombstones: one document per key, so the delete is a point
-    * DELETE by document id. A never-materialized view is a no-op. */
-  override def delete(project: String, view: FeatureView, joinKeys: Seq[String],
-      keysDf: DataFrame): Unit = {
-    val t = tableId(project, view.name)
-    val (u, keys, batch) = (url, joinKeys, writeBatchSize)
-    val viewName = view.name
-    keysDf.select(OnlineStore.guardNullKeys(keys, keys, viewName): _*)
-      .distinct()
-      .repartition(math.max(1, writeParallelism), joinKeys.map(col): _*)
-      .foreachPartition { (rows: Iterator[Row]) =>
-        if (rows.nonEmpty) {
-          try withConnection(u) { conn =>
-            conn.setAutoCommit(false)
-            val st = conn.prepareStatement(s"DELETE FROM $t WHERE entity_id = ?")
-            try {
-              rows.grouped(batch).foreach { group =>
-                group.foreach { r =>
-                  st.setString(1, EntityKeyCodec.referenceEntityId(
-                    keys.map(k => k -> r.getAs[Any](k))))
-                  st.addBatch()
-                }
-                st.executeBatch()
-                conn.commit()
-              }
-            } catch { case e: Throwable =>
-              try conn.rollback() catch { case _: SQLException => () }
-              throw e
-            } finally st.close()
-          } catch {
-            case e: SQLException if JdbcOnlineStore.isMissingTable(e) => ()
-          }
-        }
-      }
-  }
-
-  def teardown(project: String, views: Seq[FeatureView]): Unit =
-    withConnection(url) { conn =>
-      views.foreach { v =>
-        val st = conn.createStatement()
-        try st.executeUpdate(s"DROP TABLE ${tableId(project, v.name)}")
-        catch { case e: SQLException if isMissingTable(e) => () }
-        finally st.close()
-      }
-    }
-}
-
-object ReferenceDocStore {
-
-  import JdbcOnlineStore.withConnection
+object ReferenceDocStore
+    extends JdbcStore.Layout(keyCol = "entity_id", valueCols = "values_doc") {
+  import JdbcStore.writeRows
 
   /** The JDBC spelling of DynamoDB's `{project}.{table.name}` /
     * Datastore's `Project/{p}/Table/{t}` namespace — a dot is not a
     * SQL identifier character, so the twin uses the `_doc` suffix to
     * coexist with a [[ReferenceSqlStore]] on the same database. */
-  private[graft] def tableId(project: String, view: String): String =
+  private[online] def table(project: String, view: String): String =
     s"${project}_${view}_doc"
 
-  private def isDuplicateKey(e: SQLException): Boolean =
-    e.getSQLState == "23505"
+  // entity_id is the 32-hex-char compute_entity_id digest — a
+  // fixed-width string partition key, exactly DynamoDB's
+  // AttributeType "S" HASH key (dynamodb.py:68-71)
+  private[online] def ddl(t: String): Seq[String] = Seq(
+    s"""CREATE TABLE $t (
+       |  entity_id VARCHAR (32) NOT NULL PRIMARY KEY,
+       |  entity_key VARCHAR (8192) FOR BIT DATA,
+       |  values_doc BLOB,
+       |  event_ts TIMESTAMP,
+       |  created_ts TIMESTAMP)""".stripMargin)
+
+  private[online] def key(kvs: Seq[(String, Any)]): Any = EntityKeyCodec.referenceEntityId(kvs)
+  private[online] def values(rs: ResultSet): Map[String, Any] =
+    decodeValues(rs.getBytes(3)).map { case (f, vb) =>
+      f -> FeastProto.decodeValue(new ProtoWire.Reader(vb))
+    }.toMap
+
+  /** put_item = whole-document replace: the UPDATE overwrites EVERY
+    * body column, never merging with stored features. */
+  private[online] def write(conn: Connection, t: String, cols: ExternalStore.Cols,
+      rows: Iterator[Row]): Unit =
+    writeRows(conn,
+      s"UPDATE $t SET entity_key = ?, values_doc = ?, event_ts = ?, " +
+        "created_ts = ? WHERE entity_id = ?",
+      s"INSERT INTO $t (entity_id, entity_key, values_doc, event_ts, " +
+        "created_ts) VALUES (?, ?, ?, ?, ?)",
+      rows.map { r =>
+        val kvs = cols.key(r)
+        val (keyBytes, id) = (EntityKeyCodec.referenceSerializeEntityKey(kvs), key(kvs))
+        val doc = encodeValues(cols.values(r))
+        val (et, ct) = (cols.eventTs(r), cols.createdTs(r))
+        Seq((Seq(keyBytes, doc, et, ct, id), Seq(id, keyBytes, doc, et, ct)))
+      })
 
   /** The `values` map as the canonical proto map-entry encoding:
     * repeated `entry{key=1: feature name, value=2: Value bytes}` in
     * write order. The entry VALUES are exactly the reference's
     * serialized feast.types.Value protos. */
-  private[online] def encodeValues(values: Seq[(String, Array[Byte])]): Array[Byte] = {
+  private[online] def encodeValues(values: Seq[(String, Any)]): Array[Byte] = {
     val w = new ProtoWire.Writer()
-    values.foreach { case (name, bytes) =>
+    values.foreach { case (name, v) =>
       val entry = new ProtoWire.Writer()
       entry.stringField(1, name)
-      entry.bytesField(2, bytes)
+      entry.bytesField(2, FeastProto.encodeValue(v).toBytes)
       w.msgField(1, entry)
     }
     w.toBytes
@@ -279,23 +129,4 @@ object ReferenceDocStore {
     }
     out.result()
   }
-
-  private def ensureTable(conn: Connection, t: String): Unit =
-    try {
-      val st = conn.createStatement()
-      // entity_id is the 32-hex-char compute_entity_id digest — a
-      // fixed-width string partition key, exactly DynamoDB's
-      // AttributeType "S" HASH key (dynamodb.py:68-71)
-      try {
-        st.executeUpdate(
-          s"""CREATE TABLE $t (
-             |  entity_id VARCHAR (32) NOT NULL PRIMARY KEY,
-             |  entity_key VARCHAR (8192) FOR BIT DATA,
-             |  values_doc BLOB,
-             |  event_ts TIMESTAMP,
-             |  created_ts TIMESTAMP)""".stripMargin)
-      } finally st.close()
-    } catch {
-      case e: SQLException if e.getSQLState == "X0Y32" => () // already exists
-    }
 }

@@ -1,13 +1,11 @@
 package graft.online
 
-import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
+import java.nio.charset.StandardCharsets.ISO_8859_1
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Row
 
 import graft.model.FeatureView
-import graft.operators.PullLatest
 import graft.serving.{FeastProto, ProtoWire}
 
 /** Redis online store in the REFERENCE's exact byte layout
@@ -37,180 +35,85 @@ import graft.serving.{FeastProto, ProtoWire}
   * Reads HGETALL the hash and pick the `_mmh3` fields (a superset of
   * the reference's HMGET of the same names — identical decode).
   */
-class ReferenceRedisStore(
-    host: String,
-    port: Int,
-    writeBatchSize: Int = 500,
-    writeParallelism: Int = 4) extends OnlineStore {
-  import RespClient._
+class ReferenceRedisStore(host: String, port: Int)
+  extends RespStore(host, port, ReferenceRedisStore)
 
-  /** upsert reduces internally before any round-trip (same policy as
-    * [[RedisOnlineStore]]) — a caller-side PullLatest would just
-    * duplicate the exchange on every materialize / micro-batch. */
-  override def wantsPreReduced: Boolean = false
+object ReferenceRedisStore extends RespStore.Layout {
+  import RespClient.bytes
 
   private def tsProto(seconds: Long): Array[Byte] =
     FeastProto.encodeTimestamp(seconds).toBytes
 
-  private def tsField(view: String): Array[Byte] = s"_ts:$view".getBytes(UTF_8)
-  private def exField(view: String): Array[Byte] = s"_ex:$view".getBytes(UTF_8)
+  private def tsField(view: String): Array[Byte] = bytes(s"_ts:$view")
+  private def exField(view: String): Array[Byte] = bytes(s"_ex:$view")
   private val ExSeconds = 253402300799L // redis.py:38
 
-  def upsert(project: String, view: FeatureView, joinKeys: Seq[String],
-      df: DataFrame, tsCol: String, createdCol: Option[String]): Unit = {
-    val feats = view.featureNames
-    val cols = (joinKeys ++ Seq(tsCol) ++ createdCol.toSeq ++ feats).distinct
-    val latest = PullLatest.latestPerKey(
-      df.select(OnlineStore.guardNullKeys(cols, joinKeys, view.name): _*),
-      joinKeys, tsCol, createdCol, feats)
-    val (h, p, batch, viewName) = (host, port, writeBatchSize, view.name)
-    val (keys, ts) = (joinKeys, tsCol)
-    val featNames = feats
-    latest
-      .repartition(math.max(1, writeParallelism), joinKeys.map(col): _*)
-      .foreachPartition { (rows: Iterator[Row]) =>
-        if (rows.nonEmpty) {
-          // row-invariant bytes hoisted out of the row loop: field
-          // names, the _ex sentinel, and the HSET verb never change
-          val hset = "HSET".getBytes(UTF_8)
-          val tsF = tsField(viewName)
-          val exF = exField(viewName)
-          val exV = tsProto(ExSeconds)
-          val featFields = featNames.map(f =>
-            f -> EntityKeyCodec.referenceFeatureFieldName(viewName, f))
-          val client = new RespClient(h, p)
-          try rows.grouped(batch).foreach { group =>
-            var sent = 0
-            group.foreach { r =>
-              val kvs = keys.map(k => k -> r.getAs[Any](k))
-              val key = EntityKeyCodec.referenceRedisKey(project, kvs)
-              val et = r.getAs[Timestamp](ts)
-              val fields = Seq.newBuilder[Array[Byte]]
-              fields += tsF
-              fields += tsProto(if (et == null) 0L else et.getTime / 1000L)
-              fields += exF
-              fields += exV
-              featFields.foreach { case (f, name) =>
-                fields += name
-                fields += FeastProto.encodeValue(r.getAs[Any](f)).toBytes
-              }
-              client.send(Array(hset, key) ++ fields.result())
-              sent += 1
-            }
-            client.flush()
-            (0 until sent).foreach(_ => client.readReply())
-          } finally client.close()
+  private[online] def key(project: String, view: String,
+      kvs: Seq[(String, Any)]): Array[Byte] =
+    EntityKeyCodec.referenceRedisKey(project, kvs)
+
+  private[online] def writeCommands(c: RespClient, project: String, view: String,
+      cols: ExternalStore.Cols, batch: Seq[Row]): Seq[Seq[Array[Byte]]] = {
+    // row-invariant bytes hoisted out of the row loop: field
+    // names, the _ex sentinel, and the HSET verb never change
+    val (hset, tsF, exF, exV) = (bytes("HSET"), tsField(view), exField(view), tsProto(ExSeconds))
+    val featFields = cols.feats.map(f => EntityKeyCodec.referenceFeatureFieldName(view, f))
+    batch.map { r =>
+      val et = cols.eventTs(r)
+      Seq(hset, key(project, view, cols.key(r)),
+        tsF, tsProto(if (et == null) 0L else et.getTime / 1000L), exF, exV) ++
+        featFields.zip(cols.values(r)).flatMap { case (name, (_, v)) =>
+          Seq(name, FeastProto.encodeValue(v).toBytes)
         }
-      }
+    }
   }
 
-  def read(project: String, view: FeatureView, joinKeys: Seq[String],
-      entityKeys: Seq[Seq[(String, Any)]],
-      features: Seq[String]): Seq[(Option[Timestamp], Map[String, FeatureValue])] = {
-    val ks = entityKeys.map(ek => EntityKeyCodec.referenceRedisKey(project, ek))
-    val client = new RespClient(host, port)
-    try {
-      ks.foreach(k => client.send(Seq("HGETALL".getBytes(UTF_8), k)))
-      client.flush()
-      // per-call invariants: one murmur3 per FEATURE, not per
-      // (entity key, feature) — this is the ms-latency path
-      val tsName = new String(tsField(view.name), ISO_8859_1)
-      val featNames = features.map(f =>
-        f -> new String(
-          EntityKeyCodec.referenceFeatureFieldName(view.name, f), ISO_8859_1))
-      ks.map { _ =>
-        client.readReply() match {
-          case Arr(items) if items != null && items.nonEmpty =>
-            // binary field names keyed through ISO-8859-1 (byte-bijective)
-            val fields = items.grouped(2).collect {
-              case Vector(Bulk(f), Bulk(v)) => new String(f, ISO_8859_1) -> v
-            }.toMap
-            val tsOpt = fields.get(tsName).flatMap { b =>
-              val secs = FeastProto.decodeTimestampSeconds(new ProtoWire.Reader(b))
-              if (secs == 0) None else Some(new Timestamp(secs * 1000L))
-            }
-            (tsOpt, featNames.map { case (f, name) =>
-              val v = fields.get(name)
-                .map(b => FeastProto.decodeValue(new ProtoWire.Reader(b))).orNull
-              f -> (if (v != null) FeatureValue(v, FeatureStatus.Present)
-                    else FeatureValue(null, FeatureStatus.NotFound))
-            }.toMap)
-          case _ =>
-            (None, features.map(f =>
-              f -> FeatureValue(null, FeatureStatus.NotFound)).toMap)
-        }
-      }
-    } finally client.close()
+  private[online] def decoder(view: String, features: Seq[String])
+      : Map[String, Array[Byte]] => (Option[Timestamp], Map[String, Any]) = {
+    // per-call invariants: one murmur3 per FEATURE, not per
+    // (entity key, feature) — this is the ms-latency path
+    val tsName = new String(tsField(view), ISO_8859_1)
+    val featNames = features.map(f =>
+      f -> new String(EntityKeyCodec.referenceFeatureFieldName(view, f), ISO_8859_1))
+    fields => (
+      fields.get(tsName).flatMap { b =>
+        val secs = FeastProto.decodeTimestampSeconds(new ProtoWire.Reader(b))
+        if (secs == 0) None else Some(new Timestamp(secs * 1000L))
+      },
+      featNames.flatMap { case (f, name) =>
+        fields.get(name).map(b => f -> FeastProto.decodeValue(new ProtoWire.Reader(b)))
+      }.toMap)
   }
 
-  /** CDC tombstones: the reference has no delete path for redis (its
-    * teardown deletes whole tables); deleting the per-view FIELDS would
-    * strand sibling views' data, so delete the hash keys — correct when
-    * one view owns the keyspace, the reference's own deploy shape. */
-  override def delete(project: String, view: FeatureView, joinKeys: Seq[String],
-      keysDf: DataFrame): Unit = {
-    val (h, p, batch) = (host, port, writeBatchSize)
-    val keys = joinKeys
-    val viewName = view.name
-    keysDf.select(OnlineStore.guardNullKeys(keys, keys, viewName): _*)
-      .distinct()
-      .foreachPartition { (rows: Iterator[Row]) =>
-        if (rows.nonEmpty) {
-          val client = new RespClient(h, p)
-          try rows.grouped(batch).foreach { group =>
-            val ks = group.map(r =>
-              EntityKeyCodec.referenceRedisKey(project, keys.map(k => k -> r.getAs[Any](k))))
-            client.send("DEL".getBytes(UTF_8) +: ks)
-            client.flush()
-            client.readReply()
-          } finally client.close()
-        }
-      }
-  }
-
-  def teardown(project: String, views: Seq[FeatureView]): Unit = {
-    // Teardown is scoped to the GIVEN views, like every other store:
-    // the hash keys of this layout are SHARED across views (one hash
-    // per entity key, fields namespaced by view), so DELing whole keys
-    // would destroy sibling views' serving data. Instead HDEL each
-    // view's own fields (_ts/_ex + its mmh3 feature names); Redis
-    // removes a hash key when its last field goes, so tearing down
-    // every view of a project leaves no keys. Candidate keys come from
-    // a cursor SCAN filtered client-side by the project's RedisKey
-    // prefix (the length-prefix byte makes project-name prefixes
-    // collision-safe; the prefix is binary, so glob-escaping it is not
-    // worth the trip saved).
+  /** CDC tombstones (the shared keyed delete) remove whole hash keys:
+    * the reference has no delete path for redis (its teardown deletes
+    * whole tables); deleting the per-view FIELDS would strand sibling
+    * views' data, so delete the hash keys — correct when one view owns
+    * the keyspace, the reference's own deploy shape.
+    *
+    * Teardown, though, is scoped to the GIVEN views, like every other
+    * store: the hash keys of this layout are SHARED across views (one
+    * hash per entity key, fields namespaced by view), so DELing whole
+    * keys would destroy sibling views' serving data. Instead HDEL each
+    * view's own fields (_ts/_ex + its mmh3 feature names); Redis
+    * removes a hash key when its last field goes, so tearing down
+    * every view of a project leaves no keys. Candidate keys come from
+    * a cursor SCAN filtered client-side by the project's RedisKey
+    * prefix (the length-prefix byte makes project-name prefixes
+    * collision-safe; the prefix is binary, so glob-escaping it is not
+    * worth the trip saved). */
+  private[online] def teardown(c: RespClient, project: String,
+      views: Seq[FeatureView]): Unit = {
     val prefixW = new ProtoWire.Writer
     prefixW.stringField(1, project)
     val prefix = new String(prefixW.toBytes, ISO_8859_1)
-    val hdel = "HDEL".getBytes(UTF_8)
     val viewFields: Seq[Array[Byte]] = views.flatMap { v =>
       tsField(v.name) +: exField(v.name) +:
         v.featureNames.map(f => EntityKeyCodec.referenceFeatureFieldName(v.name, f))
     }
-    val client = new RespClient(host, port)
-    try {
-      var cursor = "0"
-      var first = true
-      while (first || cursor != "0") {
-        first = false
-        client.send(Seq("SCAN".getBytes(UTF_8), cursor.getBytes(UTF_8),
-          "COUNT".getBytes(UTF_8), "1000".getBytes(UTF_8)))
-        client.flush()
-        client.readReply() match {
-          case Arr(Vector(Bulk(c), Arr(ks))) =>
-            cursor = new String(c, UTF_8)
-            val mine = ks.collect {
-              case Bulk(k) if new String(k, ISO_8859_1).startsWith(prefix) => k
-            }
-            if (mine.nonEmpty && viewFields.nonEmpty) {
-              mine.foreach(k => client.send(hdel +: k +: viewFields))
-              client.flush()
-              mine.foreach(_ => client.readReply())
-            }
-          case other => throw new IllegalStateException(s"SCAN: $other")
-        }
-      }
-    } finally client.close()
+    if (viewFields.nonEmpty) RespStore.scan(c, None) { ks =>
+      c.pipeline(ks.filter(k => new String(k, ISO_8859_1).startsWith(prefix))
+        .map(k => bytes("HDEL") +: k +: viewFields))
+    }
   }
 }

@@ -1,12 +1,9 @@
 package graft.online
 
-import java.sql.{Connection, DriverManager, SQLException, Timestamp}
+import java.sql.{Connection, ResultSet}
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Row
 
-import graft.model.FeatureView
-import graft.operators.PullLatest
 import graft.serving.{FeastProto, ProtoWire}
 
 /** SQL online store in the REFERENCE's exact row layout
@@ -30,12 +27,14 @@ import graft.serving.{FeastProto, ProtoWire}
   * per (key, feature) — an UNCONDITIONAL overwrite with no staleness
   * probe (sqlite.py:96-126); within one upsert the internal
   * latest-per-key reduction collapses duplicates, across upserts the
-  * last writer wins by arrival. Reads follow sqlite.py:129-164: all
-  * rows of the entity key, features decoded from Value protos, the row
-  * timestamp as the response ts (max over rows here — the reference
-  * takes iteration order's last, an arbitrary tie the SQL layer
-  * shouldn't reproduce). teardown DROPs the views' tables, the
-  * reference's own `teardown` (sqlite.py:186-196).
+  * last writer wins by arrival. A feature the write does not mention
+  * keeps its row. Reads follow sqlite.py:129-164: all rows of the
+  * entity key, features decoded from Value protos, the row timestamp
+  * as the response ts (max over rows here — the reference takes
+  * iteration order's last, an arbitrary tie the SQL layer shouldn't
+  * reproduce). teardown DROPs the views' tables, the reference's own
+  * `teardown` (sqlite.py:186-196); expire counts FEATURE rows, this
+  * layout's row grain.
   *
   * Dialect note: against a sqlite JDBC driver the DDL is the
   * reference's own (`entity_key BLOB, ... PRIMARY KEY(entity_key,
@@ -45,248 +44,57 @@ import graft.serving.{FeastProto, ProtoWire}
   * interop surface — are identical either way and byte-pinned in
   * EngineSpec.
   */
-class ReferenceSqlStore(
-    url: String,
-    writeBatchSize: Int = 500,
-    writeParallelism: Int = 4) extends OnlineStore with ExpirableOnlineStore {
-  import ReferenceSqlStore._
-  import JdbcOnlineStore.{utcCalendar, withConnection, isMissingTable, ReadChunk}
+class ReferenceSqlStore(url: String) extends JdbcStore(url, ReferenceSqlStore)
 
-  /** Storage-level TTL sweep over the reference sqlite layout
-    * (VERDICT r14 #3): one transactional DELETE of rows strictly older
-    * than the cutoff. This layout's row grain is (entity_key,
-    * feature_name), so the returned count is FEATURE rows; a NULL
-    * event_ts row survives (SQL three-valued comparison rejects it),
-    * matching the parquet twin's null-ts-survives discipline. The
-    * reference itself never expires storage — parity-plus. */
-  def expire(spark: org.apache.spark.sql.SparkSession, project: String,
-      view: FeatureView, joinKeys: Seq[String], tsCol: String,
-      cutoff: Timestamp): Long = {
-    val t = tableId(project, view.name)
-    try withConnection(url) { conn =>
-      val st = conn.prepareStatement(s"DELETE FROM $t WHERE event_ts < ?")
-      try { st.setTimestamp(1, cutoff, utcCalendar()); st.executeUpdate().toLong }
-      finally st.close()
-    } catch { case e: SQLException if isMissingTable(e) => 0L }
-  }
-
-  /** upsert reduces internally (latestPerKey before any round-trip). */
-  override def wantsPreReduced: Boolean = false
-
-  def upsert(project: String, view: FeatureView, joinKeys: Seq[String],
-      df: DataFrame, tsCol: String, createdCol: Option[String]): Unit = {
-    val t = tableId(project, view.name)
-    val feats = view.featureNames
-    val cols = (joinKeys ++ Seq(tsCol) ++ createdCol.toSeq ++ feats).distinct
-    val latest = PullLatest.latestPerKey(
-      df.select(OnlineStore.guardNullKeys(cols, joinKeys, view.name): _*),
-      joinKeys, tsCol, createdCol, feats)
-    withConnection(url)(ensureTable(_, t))
-    val (u, keys, ts, created, batch) = (url, joinKeys, tsCol, createdCol, writeBatchSize)
-    latest
-      .repartition(math.max(1, writeParallelism), joinKeys.map(col): _*)
-      .foreachPartition { (rows: Iterator[Row]) =>
-        if (rows.nonEmpty) withConnection(u) { conn =>
-          conn.setAutoCommit(false)
-          val utc = utcCalendar()
-          val upd = conn.prepareStatement(
-            s"UPDATE $t SET value = ?, event_ts = ?, created_ts = ? " +
-              "WHERE entity_key = ? AND feature_name = ?")
-          val ins = conn.prepareStatement(
-            s"INSERT INTO $t (entity_key, feature_name, value, event_ts, created_ts) " +
-              "VALUES (?, ?, ?, ?, ?)")
-          try {
-            rows.grouped(batch).foreach { group =>
-              group.foreach { r =>
-                val key = EntityKeyCodec.referenceSerializeEntityKey(
-                  keys.map(k => k -> r.getAs[Any](k)))
-                val et = r.getAs[Timestamp](ts)
-                val ct = created.flatMap(c => Option(r.getAs[Timestamp](c))).orNull
-                feats.foreach { f =>
-                  val valBytes = FeastProto.encodeValue(r.getAs[Any](f)).toBytes
-                  // the reference's UPDATE-then-INSERT-OR-IGNORE pair,
-                  // with the insert attempted only on a missed update
-                  // (same net rows, one statement on the common path)
-                  upd.setBytes(1, valBytes)
-                  upd.setTimestamp(2, et, utc)
-                  upd.setTimestamp(3, ct, utc)
-                  upd.setBytes(4, key)
-                  upd.setString(5, f)
-                  if (upd.executeUpdate() == 0) {
-                    ins.setBytes(1, key)
-                    ins.setString(2, f)
-                    ins.setBytes(3, valBytes)
-                    ins.setTimestamp(4, et, utc)
-                    ins.setTimestamp(5, ct, utc)
-                    // a concurrent first INSERT of the same (key,
-                    // feature) can win the race: re-run the UPDATE so
-                    // THIS writer's value still lands (last-by-arrival
-                    // means the later statement wins, not "first
-                    // inserter wins" — review r7)
-                    try ins.executeUpdate()
-                    catch { case e: SQLException if isDuplicateKey(e) =>
-                      upd.executeUpdate(); ()
-                    }
-                  }
-                }
-              }
-              conn.commit()
-            }
-          } catch { case e: Throwable =>
-            // roll back before withConnection's close: embedded Derby
-            // refuses to close mid-transaction and that secondary error
-            // would SUPERSEDE the root cause (review r7)
-            try conn.rollback() catch { case _: SQLException => () }
-            throw e
-          } finally { upd.close(); ins.close() }
-        }
-      }
-  }
-
-  def read(project: String, view: FeatureView, joinKeys: Seq[String],
-      entityKeys: Seq[Seq[(String, Any)]],
-      features: Seq[String]): Seq[(Option[Timestamp], Map[String, FeatureValue])] = {
-    val t = tableId(project, view.name)
-    val keyBytes = entityKeys.map(EntityKeyCodec.referenceSerializeEntityKey)
-    // ISO-8859-1 keys the byte arrays in a map (byte-bijective)
-    def iso(b: Array[Byte]) = new String(b, java.nio.charset.StandardCharsets.ISO_8859_1)
-    val found: Map[String, (Option[Timestamp], Map[String, Any])] =
-      try withConnection(url) { conn =>
-        val utc = utcCalendar()
-        keyBytes.map(iso).distinct.grouped(ReadChunk).flatMap { chunk =>
-          val in = chunk.map(_ => "?").mkString(",")
-          val st = conn.prepareStatement(
-            s"SELECT entity_key, feature_name, value, event_ts FROM $t " +
-              s"WHERE entity_key IN ($in)")
-          try {
-            chunk.zipWithIndex.foreach { case (k, i) =>
-              st.setBytes(i + 1,
-                k.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
-            }
-            val rs = st.executeQuery()
-            val rows = Iterator.continually(rs).takeWhile(_.next()).map { r =>
-              (iso(r.getBytes(1)), r.getString(2), r.getBytes(3), r.getTimestamp(4, utc))
-            }.toList
-            rs.close()
-            rows.groupBy(_._1).map { case (k, grp) =>
-              val values = grp.map { case (_, f, vb, _) =>
-                f -> FeastProto.decodeValue(new ProtoWire.Reader(vb))
-              }.toMap
-              // max ts for determinism (reference: arbitrary last row);
-              // null event_ts is valid engine-wide and must not NPE —
-              // an all-null group reads back None (review r7)
-              val tss = grp.map(_._4).filter(_ != null)
-              val tsOpt = if (tss.isEmpty) None else Some(tss.maxBy(_.getTime))
-              k -> (tsOpt, values)
-            }
-          } finally st.close()
-        }.toMap
-      } catch {
-        case e: SQLException if isMissingTable(e) => Map.empty // never materialized
-      }
-    keyBytes.map { kb =>
-      found.get(iso(kb)) match {
-        case Some((ts, values)) =>
-          (ts, features.map { f =>
-            val v = values.getOrElse(f, null)
-            f -> (if (v != null) FeatureValue(v, FeatureStatus.Present)
-                  else FeatureValue(null, FeatureStatus.NotFound))
-          }.toMap)
-        case None =>
-          (None, features.map(f =>
-            f -> FeatureValue(null, FeatureStatus.NotFound)).toMap)
-      }
-    }
-  }
-
-  /** CDC tombstones: the table is per-(project, view), so deleting the
-    * key's rows is exactly the view-scoped delete. A never-materialized
-    * view is a no-op (the OnlineStore contract — a deletes-only first
-    * CDC batch must not kill the stream), statements batch per
-    * `writeBatchSize`, and parallelism is bounded like the write path
-    * (review r7). */
-  override def delete(project: String, view: FeatureView, joinKeys: Seq[String],
-      keysDf: DataFrame): Unit = {
-    val t = tableId(project, view.name)
-    val (u, keys, batch) = (url, joinKeys, writeBatchSize)
-    val viewName = view.name
-    keysDf.select(OnlineStore.guardNullKeys(keys, keys, viewName): _*)
-      .distinct()
-      .repartition(math.max(1, writeParallelism), joinKeys.map(col): _*)
-      .foreachPartition { (rows: Iterator[Row]) =>
-        if (rows.nonEmpty) {
-          try withConnection(u) { conn =>
-            conn.setAutoCommit(false)
-            val st = conn.prepareStatement(s"DELETE FROM $t WHERE entity_key = ?")
-            try {
-              rows.grouped(batch).foreach { group =>
-                group.foreach { r =>
-                  st.setBytes(1, EntityKeyCodec.referenceSerializeEntityKey(
-                    keys.map(k => k -> r.getAs[Any](k))))
-                  st.addBatch()
-                }
-                st.executeBatch()
-                conn.commit()
-              }
-            } catch { case e: Throwable =>
-              try conn.rollback() catch { case _: SQLException => () }
-              throw e
-            } finally st.close()
-          } catch {
-            case e: SQLException if JdbcOnlineStore.isMissingTable(e) => ()
-          }
-        }
-      }
-  }
-
-  def teardown(project: String, views: Seq[FeatureView]): Unit =
-    withConnection(url) { conn =>
-      views.foreach { v =>
-        val st = conn.createStatement()
-        try st.executeUpdate(s"DROP TABLE ${tableId(project, v.name)}")
-        catch { case e: SQLException if isMissingTable(e) => () }
-        finally st.close()
-      }
-    }
-}
-
-object ReferenceSqlStore {
-
-  // the JDBC plumbing (connections, UTC binds, chunk size, SQLStates)
-  // is JdbcOnlineStore's — ONE definition for both adapters
-  import JdbcOnlineStore.{utcCalendar, withConnection, isMissingTable, ReadChunk}
+object ReferenceSqlStore
+    extends JdbcStore.Layout(keyCol = "entity_key", valueCols = "feature_name, value") {
+  import JdbcStore.writeRows
 
   /** sqlite.py:198-199 `_table_id` — verbatim, including the absence of
     * sanitization: interop means using the reference's names. */
-  private[graft] def tableId(project: String, view: String): String =
+  private[online] def table(project: String, view: String): String =
     s"${project}_$view"
 
-  private def isDuplicateKey(e: SQLException): Boolean =
-    e.getSQLState == "23505"
+  // reference DDL (sqlite.py:180-184) in Derby's dialect: BLOB
+  // cannot key/index in Derby, so the byte-typed indexed column is
+  // VARCHAR FOR BIT DATA — the stored bytes are identical. 8192 is
+  // the largest declared size whose MAX-length keys Derby still
+  // indexes (probed: 2048/4096 hit the btree page limit, 8192
+  // auto-sizes pages) — far beyond any practical serialized entity
+  // key; the reference's sqlite BLOB is unbounded but 8 KB of join
+  // keys would break its serving long before this column does
+  private[online] def ddl(t: String): Seq[String] = Seq(
+    s"""CREATE TABLE $t (
+       |  entity_key VARCHAR (8192) FOR BIT DATA NOT NULL,
+       |  feature_name VARCHAR (256) NOT NULL,
+       |  value BLOB,
+       |  event_ts TIMESTAMP,
+       |  created_ts TIMESTAMP,
+       |  PRIMARY KEY (entity_key, feature_name))""".stripMargin,
+    s"CREATE INDEX ${t}_ek ON $t (entity_key)")
 
-  private def ensureTable(conn: Connection, t: String): Unit =
-    try {
-      val st = conn.createStatement()
-      // reference DDL (sqlite.py:180-184) in Derby's dialect: BLOB
-      // cannot key/index in Derby, so the byte-typed indexed column is
-      // VARCHAR FOR BIT DATA — the stored bytes are identical. 8192 is
-      // the largest declared size whose MAX-length keys Derby still
-      // indexes (probed: 2048/4096 hit the btree page limit, 8192
-      // auto-sizes pages) — far beyond any practical serialized entity
-      // key; the reference's sqlite BLOB is unbounded but 8 KB of join
-      // keys would break its serving long before this column does
-      try {
-        st.executeUpdate(
-          s"""CREATE TABLE $t (
-             |  entity_key VARCHAR (8192) FOR BIT DATA NOT NULL,
-             |  feature_name VARCHAR (256) NOT NULL,
-             |  value BLOB,
-             |  event_ts TIMESTAMP,
-             |  created_ts TIMESTAMP,
-             |  PRIMARY KEY (entity_key, feature_name))""".stripMargin)
-        st.executeUpdate(s"CREATE INDEX ${t}_ek ON $t (entity_key)")
-      } finally st.close()
-    } catch {
-      case e: SQLException if e.getSQLState == "X0Y32" => () // already exists
-    }
+  /** The table is per-(project, view), so deleting the key's rows is
+    * exactly the view-scoped delete. */
+  private[online] def key(kvs: Seq[(String, Any)]): Any =
+    EntityKeyCodec.referenceSerializeEntityKey(kvs)
+  private[online] def values(rs: ResultSet): Map[String, Any] =
+    Map(rs.getString(3) -> FeastProto.decodeValue(new ProtoWire.Reader(rs.getBytes(4))))
+
+  /** The reference's UPDATE-then-INSERT-OR-IGNORE pair per (key,
+    * feature), with the insert attempted only on a missed update (same
+    * net rows, one statement on the common path). */
+  private[online] def write(conn: Connection, t: String, cols: ExternalStore.Cols,
+      rows: Iterator[Row]): Unit =
+    writeRows(conn,
+      s"UPDATE $t SET value = ?, event_ts = ?, created_ts = ? " +
+        "WHERE entity_key = ? AND feature_name = ?",
+      s"INSERT INTO $t (entity_key, feature_name, value, event_ts, created_ts) " +
+        "VALUES (?, ?, ?, ?, ?)",
+      rows.map { r =>
+        val (k, et, ct) = (key(cols.key(r)), cols.eventTs(r), cols.createdTs(r))
+        cols.values(r).map { case (f, v) =>
+          val value = FeastProto.encodeValue(v).toBytes
+          (Seq(value, et, ct, k, f), Seq(k, f, value, et, ct))
+        }
+      })
 }

@@ -218,7 +218,7 @@ class ShardedOnlineStore(
     recheckSuperseded(mutating = true)
     if (n == 1) return children(0).upsert(project, view, joinKeys, df, tsCol, createdCol)
     val routed = df
-      .select(OnlineStore.guardNullKeys(df.columns.toSeq, joinKeys, view.name): _*)
+      .select(OnlineStore.guardNullKeys(df.columns.toSeq, joinKeys, view.name, "upsert"): _*)
       .withColumn("__shard", shardCol(joinKeys))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -324,7 +324,7 @@ class ShardedOnlineStore(
             EntityBucketExpr.keyHex(joinKeys), sz, salt)): _*))
       else array(shardCol(joinKeys))
     val routed = keysDf
-      .select(OnlineStore.guardNullKeys(joinKeys, joinKeys, view.name): _*)
+      .select(OnlineStore.guardNullKeys(joinKeys, joinKeys, view.name, "delete"): _*)
       .distinct()
       .withColumn("__shard", explode(shardIds))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

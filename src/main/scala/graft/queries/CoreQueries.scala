@@ -684,7 +684,7 @@ object CoreQueries {
     * as a codegen'd HashAggregate — r16's JFR attributed the map task
     * to ObjectHashAggregate machinery around the previous
     * BoundedMinK heap (same semantics, pinned equal by
-    * PipelineSpec's TopKSlots-vs-window tests). Ranks are the
+    * TopKSlotsSpec's TopKSlots-vs-window tests). Ranks are the
     * positions of the sorted slot output; (-price, orderkey)
     * ascending IS (price DESC, orderkey ASC) — double negation is
     * IEEE-exact. */

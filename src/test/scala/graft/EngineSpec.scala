@@ -1309,14 +1309,83 @@ class EngineSpec extends AnyFunSuite {
     store.teardown("p", Seq(view))
   }
 
-  test("OnlineStore.delete: keyed tombstones across all three stores; absent keys no-op") {
+  /** The five external stores (three over JDBC on fresh Derby
+    * databases, two over RESP on `mini`), labelled for messages. */
+  private def externalStores(mini: MiniRedis): Seq[(String, graft.online.OnlineStore)] = {
+    def derby(prefix: String) = graft.online.JdbcOnlineStore.derbyUrl(
+      java.nio.file.Files.createTempDirectory(prefix).toString + "/db")
+    Seq(
+      "jdbc" -> new graft.online.JdbcOnlineStore(derby("graftxjdbc")),
+      "reference-sql" -> new graft.online.ReferenceSqlStore(derby("graftxsql")),
+      "reference-doc" -> new graft.online.ReferenceDocStore(derby("graftxdoc")),
+      "redis" -> new graft.online.RedisOnlineStore("127.0.0.1", mini.port),
+      "reference-redis" -> new graft.online.ReferenceRedisStore("127.0.0.1", mini.port))
+  }
+
+  test("external stores: a re-upsert with one fewer feature keeps or replaces the dropped one per layout grain") {
+    import spark.implicits._
+    val mini = new MiniRedis()
+    val wide = FeatureView("pg", Seq("driver"),
+      Seq(Feature("a", GraftType.Dbl), Feature("b", GraftType.Dbl)), Duration.ZERO,
+      DataFrameSource(Seq.empty[(Long, Timestamp, Double, Double)]
+        .toDF("driver_id", "et", "a", "b"), "et"))
+    val narrow = wide.copy(features = wide.features.take(1))
+    // per-feature rows (sqlite layout) and per-feature hash fields
+    // (reference redis layout) leave an unmentioned feature in place; a
+    // whole-entity payload or document replaces it
+    val keepsDropped = Set("reference-sql", "reference-redis")
+    externalStores(mini).foreach { case (name, store) =>
+      store.upsert("p", wide, Seq("driver_id"),
+        Seq((1L, ts("2024-01-01 00:00:00"), 1.0, 2.0)).toDF("driver_id", "et", "a", "b"),
+        "et", None)
+      // newer ts, so the LWW stores accept it too
+      store.upsert("p", narrow, Seq("driver_id"),
+        Seq((1L, ts("2024-01-02 00:00:00"), 3.0)).toDF("driver_id", "et", "a"), "et", None)
+      val m = store.read("p", wide, Seq("driver_id"),
+        Seq(Seq("driver_id" -> 1L)), Seq("a", "b")).head._2
+      assert(m("a").status == "PRESENT" && m("a").value == 3.0, s"$name: re-upsert must land")
+      if (keepsDropped(name))
+        assert(m("b").status == "PRESENT" && m("b").value == 2.0,
+          s"$name: per-feature grain keeps the dropped feature, got ${m("b")}")
+      else
+        assert(m("b").status == "NOT_FOUND",
+          s"$name: whole-entity grain replaces the dropped feature, got ${m("b")}")
+      store.teardown("p", Seq(wide))
+    }
+    assert(mini.keyCount == 0)
+    mini.stop()
+  }
+
+  test("external stores: a null join key fails with the guard's message in upsert and delete") {
+    import spark.implicits._
+    val mini = new MiniRedis()
+    val view = FeatureView("nk", Seq("driver"), Seq(Feature("v", GraftType.Dbl)),
+      Duration.ZERO, DataFrameSource(Seq.empty[(Long, Timestamp, Double)]
+        .toDF("driver_id", "et", "v"), "et"))
+    val rows = Seq((Option(1L), ts("2024-01-01 00:00:00"), 1.0),
+      (Option.empty[Long], ts("2024-01-01 00:00:00"), 2.0)).toDF("driver_id", "et", "v")
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    externalStores(mini).foreach { case (name, store) =>
+      Seq[(String, () => Unit)](
+        "upsert" -> (() => store.upsert("p", view, Seq("driver_id"), rows, "et", None)),
+        "delete" -> (() => store.delete("p", view, Seq("driver_id"), rows.select("driver_id")))
+      ).foreach { case (op, call) =>
+        val msg = messages(intercept[Exception](call()))
+        assert(msg.contains(s"null join key 'driver_id' in $op for view 'nk'"), s"$name $op: $msg")
+      }
+      store.teardown("p", Seq(view))
+    }
+    mini.stop()
+  }
+
+  test("OnlineStore.delete: keyed tombstones across all seven stores; absent keys no-op") {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graftdel").toString
+    val mini = new MiniRedis()
     val stores: Seq[(String, graft.online.OnlineStore)] = Seq(
       "parquet" -> new ParquetOnlineStore(s"$base/pq", numBuckets = 4, smallStoreBytes = 0L),
-      "memory" -> new InMemoryOnlineStore(),
-      "jdbc" -> new graft.online.JdbcOnlineStore(
-        s"jdbc:derby:$base/derby;create=true"))
+      "memory" -> new InMemoryOnlineStore()) ++ externalStores(mini)
     val df = (0L until 20L).map(k => (k, ts("2024-01-01 00:00:00"), k.toDouble))
       .toDF("driver_id", "et", "v")
     val view = FeatureView("dv", Seq("driver"), Seq(Feature("v", GraftType.Dbl)),
@@ -1333,6 +1402,7 @@ class EngineSpec extends AnyFunSuite {
         s"$name: neighbor must survive")
       store.teardown("p", Seq(view))
     }
+    mini.stop()
   }
 
   test("ParquetOnlineStore: small-store rewrite preserves the ADOPTED bucket marker (review r12)") {
