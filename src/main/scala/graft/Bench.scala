@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Benchmark harness: the BASELINE.md workloads (PIT-join historical
   * retrieval, materialize, online multi-get, streaming materialize)
@@ -13,35 +13,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Bench {
   /** Queries the bench runs with AQE off (static plans — see the long
-    * policy comment in [[main]]). Shared with tools/FormattedPlans and
-    * probes so dumped plans cannot silently diverge from what the
-    * bench executes (ADVICE r16). */
+    * policy comment in [[main]]). Toggled through [[Sessions.staticPlan]],
+    * which tools/FormattedPlans shares, so dumped plans cannot silently
+    * diverge from what the bench executes (ADVICE r16). */
   val StaticPlanQueries: Set[String] =
     Set("q_agg_pushdown", "q_window_topk", "q_ann_brute_force")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // Coalesce post-shuffle partitions by SIZE, not core count: with
-      // the default parallelismFirst=true AQE refuses to merge below
-      // defaultParallelism, so every tiny shuffle at bench sf runs 32
-      // dispatch-bound tasks (~5-10 ms each — measured to dominate the
-      // job wall). Size-based coalescing is also the 100 TB setting:
-      // there every shuffle dwarfs the advisory size and nothing
-      // under-parallelizes, while misestimated small stages stop
-      // fragmenting. 8 MB advisory keeps reduce tasks ~tens of ms.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8MB")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.sources.Tables.configure(spark)
+    val spark = Sessions.local(benchAqe = true)
 
     // BASELINE.md workload mapping:
     //   get_historical_features -> q_pit_join_single / q_pit_join_multi
@@ -144,17 +124,18 @@ object Bench {
     // split; its exchanges are dictated by requiredChildDistribution).
     // Running it adaptively only serializes each stage behind an AQE
     // replan round: measured on identical plans, ~0.56 s AQE-off vs
-    // ~0.8-1.1 s AQE-on at sf0.1 (tools/AqeProbe). This is the conf any
-    // deployment guide would ship for the operator, applied here the
-    // same way a production job would (per-job runtime conf); every
+    // ~0.8-1.1 s AQE-on at sf0.1 (BENCH_NOTES.md "Per-query execution
+    // policy"). This is the conf any deployment guide would ship for
+    // the operator, applied here the same way a production job would
+    // (per-job runtime conf); every
     // other headline keeps session AQE on, which wins net for the
     // multi-stage adaptive shapes (dedup pipeline, multi-view PIT).
     // Both PIT queries since r8's all-eligible CHAIN: the multi-view
     // query is now a linear chain of AsOfJoinExec merges — as static as
     // the single-view plan (no row-id stamp, no join-backs, no
     // broadcast candidates for AQE to pick). Same argument, probed
-    // per-query with tools/AqeProbe, admits three more members whose
-    // physical plan AQE cannot change: q_agg_pushdown and
+    // per-query (same BENCH_NOTES.md section), admits three more
+    // members whose physical plan AQE cannot change: q_agg_pushdown and
     // q_window_topk are scan -> partial agg -> ONE exchange -> final
     // agg with no join at all, and q_ann_brute_force's only join is an
     // explicit broadcast() hint (Similarity.bruteForceTopK) feeding
@@ -172,11 +153,11 @@ object Bench {
     // members are generic DataFrame queries with no engine operator to
     // own the policy; the per-job conf here is the documented
     // deployment conf, same as before.)
-    val staticPlan = StaticPlanQueries
-    // Prepared-plan reuse (PlanReuseProbe-measured: ~0.2 s/run of pure
-    // Catalyst re-construction + re-analysis on ann/window_topk, ~0.05 s
-    // on the PIT pair): the side-effect-free declarative queries build
-    // their DataFrame ONCE — the cold run pays construction, steady runs
+    // Prepared-plan reuse (BENCH_NOTES.md "Round 9: prepared-plan
+    // reuse": ~0.2 s/run of pure Catalyst re-construction + re-analysis
+    // on ann/window_topk, ~0.05 s on the PIT pair): the side-effect-free
+    // declarative queries build their DataFrame ONCE — the cold run pays
+    // construction, steady runs
     // re-execute the prepared plan, exactly a resident engine's prepared
     // statement (same policy as the codegen/JIT floor: once per plan
     // shape, not per execution). Every re-execution still runs the FULL
@@ -303,7 +284,6 @@ object Bench {
       // was measured billing it up to ~4 s of alien garbage
       // (q_text_stats: 0.9 s isolated, 3-4.8 s when timed last).
       System.gc()
-      if (staticPlan(name)) spark.conf.set("spark.sql.adaptive.enabled", "false")
       def once(fresh: Boolean): Double = {
         val r = repeat.getOrElse(name, 1)
         val t0 = System.nanoTime()
@@ -322,47 +302,47 @@ object Bench {
             System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
         if (ok) (System.nanoTime() - t0) / 1e9 / r else -1.0
       }
-      if (pass == 0) {
-        st.cold = once(fresh = false)
-        if (st.cold < 0) st.failed = true
-        else {
-          val timed = Seq(once(false), once(false)).filter(_ >= 0)
-          st.passMins += (st.cold +: timed).min
-          // No-reuse counterpart (r9 VERDICT #1: the artifact carries
-          // BOTH accountings): runs that re-CONSTRUCT the DataFrame so
-          // Catalyst re-analysis is billed per run exactly as DuckDB
-          // re-parses per execute(). Non-reusable queries construct
-          // fresh every run — steady IS their no-reuse number.
-          if (reusablePlan(name)) {
-            val nr = Seq(once(fresh = true), once(fresh = true)).filter(_ >= 0)
-            st.noreuseMin = (st.cold +: nr).min
-          }
-        }
-      } else {
-        val isLast = pass == passes - 1
-        if (isLast) {
-          // floor accounting: count jobs/batches across ONE warm run
-          // (listener events are async — drain briefly; the sleep sits
-          // outside every timed region)
-          val j0 = jobCounter.get; val b0 = batchCounter.get
-          val w = once(false)
-          Thread.sleep(200)
-          st.jobs = jobCounter.get - j0
-          st.batches = batchCounter.get - b0
-          val w2 = once(false)
-          Seq(w, w2).filter(_ >= 0) match {
-            case Nil => ()
-            case ws => st.passMins += ws.min
+      Sessions.staticPlan(spark, name) {
+        if (pass == 0) {
+          st.cold = once(fresh = false)
+          if (st.cold < 0) st.failed = true
+          else {
+            val timed = Seq(once(false), once(false)).filter(_ >= 0)
+            st.passMins += (st.cold +: timed).min
+            // No-reuse counterpart (r9 VERDICT #1: the artifact carries
+            // BOTH accountings): runs that re-CONSTRUCT the DataFrame so
+            // Catalyst re-analysis is billed per run exactly as DuckDB
+            // re-parses per execute(). Non-reusable queries construct
+            // fresh every run — steady IS their no-reuse number.
+            if (reusablePlan(name)) {
+              val nr = Seq(once(fresh = true), once(fresh = true)).filter(_ >= 0)
+              st.noreuseMin = (st.cold +: nr).min
+            }
           }
         } else {
-          Seq(once(false), once(false)).filter(_ >= 0) match {
-            case Nil => ()
-            case ws => st.passMins += ws.min
+          val isLast = pass == passes - 1
+          if (isLast) {
+            // floor accounting: count jobs/batches across ONE warm run
+            // (listener events are async — drain briefly; the sleep sits
+            // outside every timed region)
+            val j0 = jobCounter.get; val b0 = batchCounter.get
+            val w = once(false)
+            Thread.sleep(200)
+            st.jobs = jobCounter.get - j0
+            st.batches = batchCounter.get - b0
+            val w2 = once(false)
+            Seq(w, w2).filter(_ >= 0) match {
+              case Nil => ()
+              case ws => st.passMins += ws.min
+            }
+          } else {
+            Seq(once(false), once(false)).filter(_ >= 0) match {
+              case Nil => ()
+              case ws => st.passMins += ws.min
+            }
           }
         }
       }
-      if (staticPlan(name)) spark.conf.set("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
     }
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted

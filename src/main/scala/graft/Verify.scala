@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. The dump core
@@ -11,21 +10,12 @@ object Verify {
   }
 
   /** Run the queries (all, or `names` only) at `sfDir`, write each
-    * result under `outDir`, and dump the matching oracle SQL map.
-    * `defaultCpus` is only the SPARK_GRAFT_CPUS fallback — the driver
-    * gate keeps 4, VerifySome its historical 8; `verbose` prints a
+    * result under `outDir`, and dump the matching oracle SQL map, on a
+    * `local[SPARK_GRAFT_CPUS]` session (default 4). `verbose` prints a
     * per-query done-line (off for the driver: its stdout is parsed). */
   def dump(sfDir: String, outDir: String, names: Option[Seq[String]],
-      defaultCpus: String = "4", verbose: Boolean = false): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.sources.Tables.configure(spark)
+      verbose: Boolean = false): Unit = {
+    val spark = Sessions.local(defaultCpus = 4)
     new java.io.File(outDir).mkdirs()
     names.foreach(_.filterNot(SparkEntry.queries.contains)
       .foreach(n => System.err.println(s"[verify] unknown query $n")))

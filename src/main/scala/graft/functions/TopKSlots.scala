@@ -4,6 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
+import org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
@@ -40,13 +41,15 @@ import org.apache.spark.sql.types._
   * can further be restricted to a PREFIX of the fields (`cmpFields`)
   * when the remaining fields are functionally determined by the
   * prefix (q_window_topk: price = -np), which is the caller's claim
-  * to uphold — with a non-determining prefix, ties may carry either
-  * tied tuple's trailing fields.
+  * to uphold — with a non-determining prefix, tuples equal on the
+  * prefix are interchangeable: which one's trailing fields a slot keeps
+  * may depend on the partitioning. The comparison-prefix children must
+  * be non-nullable: analysis rejects a nullable one (see
+  * [[TopKSlots.nonNull]] for a column whose nulls were filtered).
   *
   * Semantics match BoundedMinK over a struct of the same fields:
   * tuples compare lexicographically field-by-field with SQL ordering
-  * (nulls FIRST ascending — the `GenerateOrdering` convention — and
-  * the same NaN/-0.0 handling, since `LessThan`/`EqualTo` and
+  * (the same NaN/-0.0 handling, since `LessThan`/`EqualTo` and
   * `GenerateOrdering` share the comparator codegen); every input row
   * participates; the result is the ascending array of the k smallest
   * tuples as structs (fewer if the group is smaller).
@@ -85,18 +88,23 @@ case class TopKSlots(
 
   override def checkInputDataTypes(): TypeCheckResult = {
     val bad = fieldChildren.map(_.dataType).filterNot(TopKSlots.supportedFieldType)
-    if (bad.isEmpty) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
+    val nullable = fieldNames.zip(fieldChildren).take(cmpFields)
+      .collect { case (n, c) if c.nullable => n }
+    if (bad.nonEmpty) TypeCheckResult.TypeCheckFailure(
       s"top_k_slots requires UnsafeRow-mutable orderable field types, got ${bad.mkString(", ")}")
+    else if (nullable.nonEmpty) TypeCheckResult.TypeCheckFailure(
+      s"top_k_slots comparison field(s) ${nullable.mkString(", ")} must be non-nullable: " +
+        "filter their nulls and wrap them in TopKSlots.nonNull")
+    else TypeCheckResult.TypeCheckSuccess
   }
 
   // ---- buffer: k × (occupied flag + flattened fields) -------------
-  // comparison-prefix fields are NON-NULLABLE (the cmpFields contract:
-  // the caller filters nulls; a null smuggled in reads as the type's
-  // default) — this halves nothing semantically but cuts each field
-  // comparison from ~16 expression nodes of null plumbing to ONE
-  // LessThan/EqualTo, which is what keeps per-planning codegen time
-  // (the binding cost, see class doc) near a plain aggregate's
+  // comparison-prefix fields are NON-NULLABLE (checkInputDataTypes
+  // rejects a nullable prefix child) — this halves nothing semantically
+  // but cuts each field comparison from ~16 expression nodes of null
+  // plumbing to ONE LessThan/EqualTo, which is what keeps per-planning
+  // codegen time (the binding cost, see class doc) near a plain
+  // aggregate's
   @transient private lazy val occ: IndexedSeq[AttributeReference] =
     (0 until k).map(i => AttributeReference(s"occ$i", BooleanType, nullable = false)())
   @transient private lazy val slotFields: IndexedSeq[IndexedSeq[AttributeReference]] =
@@ -114,17 +122,9 @@ case class TopKSlots(
       case (t, f) => if (f >= cmpFields) Literal(null, t) else Literal.default(t)
     })
 
-  /** Input fields with the comparison prefix pinned non-null (the
-    * cmpFields contract), so comparisons and buffer writes carry no
-    * null plumbing. */
-  @transient private lazy val inputFields: IndexedSeq[Expression] =
-    fieldChildren.zipWithIndex.map { case (c, f) =>
-      if (f < cmpFields && c.nullable) KnownNotNull(c) else c
-    }.toIndexedSeq
-
   // ---- expression-level tuple comparison (SQL ordering) -----------
-  // lexicographic on the first cmpFields fields, all non-null by
-  // contract; LessThan/EqualTo share GenerateOrdering's comparator
+  // lexicographic on the first cmpFields fields, all non-null (checked
+  // at analysis); LessThan/EqualTo share GenerateOrdering's comparator
   // codegen (NaN/-0.0 handling identical to BoundedMinK's ordering)
   private def tupleLt(a: Seq[Expression], b: Seq[Expression]): Expression = {
     val pairs = a.take(cmpFields).zip(b.take(cmpFields))
@@ -145,7 +145,7 @@ case class TopKSlots(
   override lazy val updateExpressions: Seq[Expression] = {
     val cur = (0 until k).map(i =>
       Slot(occ(i), slotFields(i).map(a => a: Expression)))
-    val v = inputFields
+    val v = fieldChildren.toIndexedSeq
     // guarded shift: admission c_i = slot-empty ∨ v < slot_i is
     // monotone in i (occupied slots are a sorted prefix), so slot i
     // keeps its value (¬c_i), receives old slot i−1 (c_{i−1}), or
@@ -241,16 +241,23 @@ object TopKSlots {
     case _ => false
   }
 
-  /** `fields` in comparison order (lexicographic, ascending, nulls
-    * first); result column is the ascending array of the k smallest
-    * tuples as structs named per `fields`. `cmpFields` restricts the
-    * comparison to the first m fields — only sound for deterministic
-    * output when they functionally determine the rest (or when any
-    * tied tuple is an acceptable pick). */
+  /** `fields` in comparison order (lexicographic, ascending); result
+    * column is the ascending array of the k smallest tuples as structs
+    * named per `fields`. `cmpFields` restricts the comparison to the
+    * first m fields — only sound for deterministic output when they
+    * functionally determine the rest (or when any tied tuple is an
+    * acceptable pick). Those m fields must be non-nullable columns, or
+    * the query fails analysis; the rest may hold nulls. */
   def column(fields: Seq[(String, Column)], k: Int,
       cmpFields: Int = Int.MaxValue): Column =
     ColumnShim.column(TopKSlots(
       fields.map(f => ColumnShim.expression(f._2)),
       fields.map(_._1), k, math.min(cmpFields, fields.size))
       .toAggregateExpression())
+
+  /** `c` typed non-nullable, for a comparison field whose nulls the
+    * caller has filtered: Spark keeps a filtered column nullable in the
+    * analyzed plan. A null that still arrives fails the task. */
+  def nonNull(c: Column): Column =
+    ColumnShim.column(AssertNotNull(ColumnShim.expression(c)))
 }

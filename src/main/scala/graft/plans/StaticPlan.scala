@@ -11,7 +11,8 @@ import org.apache.spark.sql.graftshim.ColumnShim
   * there is no join-strategy switch, no skew split, nothing AQE can
   * re-plan. Running them adaptively only serializes each stage behind
   * an AQE re-plan round: measured ~0.56 s AQE-off vs ~0.8–1.1 s AQE-on
-  * on identical plans at sf0.1 (tools/AqeProbe). That policy used to
+  * on identical plans at sf0.1 (BENCH_NOTES.md "Per-query execution
+  * policy"). That policy used to
   * live in the BENCH harness (per-job conf), which meant a library
   * user calling [[graft.operators.PointInTimeJoin.join]] in a
   * default AQE-on session paid the adaptive tax for a plan the engine

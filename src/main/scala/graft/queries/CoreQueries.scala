@@ -696,10 +696,15 @@ object CoreQueries {
       // filter Quota.topKPerKey applies (review r6; no null prices in
       // this data, but the equivalence claim must not depend on that)
       .filter(col("o_totalprice").isNotNull)
+      // the comparison fields must be non-null (TopKSlots rejects a
+      // nullable one at analysis); no null keys in this data either
+      .filter(col("o_orderkey").isNotNull)
       // pre-projected fields: the scan stage's codegen negates once;
       // the aggregate's children are bound attributes
-      .select(col("o_custkey"), (-col("o_totalprice")).as("np"),
-        col("o_orderkey").as("ok"), col("o_totalprice").as("price"))
+      .select(col("o_custkey"),
+        graft.functions.TopKSlots.nonNull(-col("o_totalprice")).as("np"),
+        graft.functions.TopKSlots.nonNull(col("o_orderkey")).as("ok"),
+        col("o_totalprice").as("price"))
       .groupBy(col("o_custkey"))
       // comparison on (np, ok) only — price = -np exactly, so the
       // 2-field prefix totally orders the tuples (cmpFields contract)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Sort-merge vs broadcast as-of route at scale (VERDICT r11 #1): the
@@ -21,16 +20,7 @@ object AsofScale {
     val feat1 = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val feat10 = args.lift(2).getOrElse("/tmp/graft_scale10")
     val feat100 = args.lift(3).getOrElse("/tmp/graft_scale100")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8MB")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.sources.Tables.configure(spark)
+    val spark = graft.Sessions.local(benchAqe = true)
 
     // shuffle accounting: wall time on local[32] hides the exchange cost
     // (shuffles are RAM-speed in one JVM); at cluster scale shuffled

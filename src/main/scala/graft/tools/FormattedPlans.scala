@@ -1,14 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool (r16 optimization round): dump `.explain("formatted")` for a
   * list of SparkEntry queries to one file each under an output dir —
   * the plan evidence the round's OPTIMIZATION_r16.md claims are checked
-  * against. Mirrors the bench session's conf (AQE on, size-based
-  * coalescing) so the captured plan is the one the bench executes;
-  * queries the bench runs AQE-off (its staticPlan set) are dumped with
-  * AQE off the same way.
+  * against. Builds the bench's session ([[graft.Sessions.local]] with
+  * its AQE policy, so `SPARK_GRAFT_AQE` applies here too) so the
+  * captured plan is the one the bench executes; queries the bench runs
+  * AQE-off (its static-plan set) are dumped with AQE off the same way
+  * ([[graft.Sessions.staticPlan]]).
   *
   *   runMain graft.tools.FormattedPlans <sfDir> <outDir> [query ...]
   */
@@ -24,26 +23,13 @@ object FormattedPlans {
         "q_materialize_roundtrip", "q_online_multiget",
         "q_stream_materialize", "q_agg_pushdown", "q_window_topk",
         "q_dedup_minhash", "q_ann_brute_force", "q_text_stats")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8MB")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.sources.Tables.configure(spark)
-    // same per-query AQE policy as the bench session (shared constant,
+    // the bench's session and per-query AQE policy (shared code,
     // ADVICE r16: a drifted copy would dump plans the bench never runs)
-    val staticPlan = graft.Bench.StaticPlanQueries
+    val spark = graft.Sessions.local(benchAqe = true)
     new java.io.File(outDir).mkdirs()
     var failed = 0
     names.foreach { n =>
-      try {
-        if (staticPlan(n)) spark.conf.set("spark.sql.adaptive.enabled", "false")
+      try graft.Sessions.staticPlan(spark, n) {
         val df = graft.SparkEntry.queries(n)(spark, sfDir)
         val txt = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
@@ -55,8 +41,6 @@ object FormattedPlans {
         // as "zero failures" — count, name the class, and exit non-zero
         failed += 1
         System.err.println(s"[plans] $n failed: ${e.getClass.getName}: ${e.getMessage}")
-      } finally {
-        if (staticPlan(n)) spark.conf.set("spark.sql.adaptive.enabled", "true")
       }
     }
     println(s"[plans] done: ${names.size - failed}/${names.size} dumped, $failed failed")

@@ -53,19 +53,10 @@ object ScaleCheck {
     val baseDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val outDir = args.lift(1).getOrElse("/tmp/graft_scale10")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      // At N× data a deployment sizes shuffle partitions to the data
-      // (AQE coalesces small ones back); pinning 32 at 100× starves
-      // wide aggregations into spill
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.sources.Tables.configure(spark)
+    // At N× data a deployment sizes shuffle partitions to the data
+    // (AQE coalesces small ones back); pinning 32 at 100× starves
+    // wide aggregations into spill
+    val spark = graft.Sessions.local(shufflePartitions = Some(32))
 
     def scaled(table: String, keys: Seq[String],
         textCols: Seq[String] = Nil): Unit =
@@ -197,7 +188,8 @@ object ScaleCheck {
       // rerank (candidate fetch join must stay |Q|·R-bounded), and the
       // persisted IVF-PQ probe (staged artifacts rebuilt per dataset by
       // the query itself; probe must stay partition-pruned). The trained
-      // lifecycle's train/encode/probe SPLIT is tools/TrainedAnnScale.
+      // lifecycle's train/encode/probe SPLIT is in BENCH_NOTES.md
+      // "Trained-ANN lifecycle split".
       "q_pit_broadcast", "q_ann_ivfpq_rerank", "q_ann_ivfpq_persisted",
       // r16: the residual twin of the persisted probe — same staged-
       // artifact + partition-pruned shape; the per-(query, cell)
@@ -232,7 +224,8 @@ object ScaleCheck {
       // r14: pruned train (same shape + a per-round bounded prune) and
       // the PERSISTED encodes — these amortize train into a staged
       // artifact, so their N× wall must track the encode join alone;
-      // the train/encode split has its own tool (TokenizerScale)
+      // the train/encode split is in BENCH_NOTES.md "Tokenizer
+      // train/encode split"
       "q_unigram_lm_pruned", "q_unigram_encode_persisted",
       "q_bpe_encode_persisted",
       // CDC chunk dedup: explode + doc-keyed window + two hash aggs +
@@ -269,8 +262,8 @@ object ScaleCheck {
     // cells/codebooks, the persisted code table) must warm the SCALED
     // dir too, or the one-time N× artifact build lands inside the
     // timed run and the ratio measures the build, not the query (the
-    // q_dedup_index_persisted lesson; the builds have their own split
-    // rows via IndexScale / TrainedAnnScale)
+    // q_dedup_index_persisted lesson; the builds' own split rows are in
+    // SURVEY.md §8.8)
     val staged = Set("q_ann_ivfpq_persisted", "q_ann_ivfpq_trained",
       "q_ann_pq_trained", "q_dedup_simhash", "q_ann_opq", "q_ann_opq_ivf",
       "q_ann_ivfpq_residual", "q_ann_opq_ivfpq_residual",

@@ -5,8 +5,6 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.sql.Timestamp
 import java.time.Duration
 
-import org.apache.spark.sql.SparkSession
-
 import graft.model._
 import graft.online.ParquetOnlineStore
 import graft.registry.Registry
@@ -41,15 +39,7 @@ object ServingSlo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.sources.Tables.configure(spark)
+    val spark = graft.Sessions.local()
 
     val tmp = s"/tmp/graft_slo_${java.util.UUID.randomUUID().toString.take(8)}"
     graft.queries.TmpSweeper.register(tmp)

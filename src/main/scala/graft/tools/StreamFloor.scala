@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.Trigger
 
 /** Dev probe: wall time of an AvailableNow foreachBatch(noop) over the
@@ -10,15 +10,7 @@ import org.apache.spark.sql.streaming.Trigger
 object StreamFloor {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.sources.Tables.configure(spark)
+    val spark = graft.Sessions.local()
 
     val input = s"/tmp/graft_stream_in8_${sfDir.replaceAll("[^A-Za-z0-9]", "_")}"
     if (!new java.io.File(s"$input/_SUCCESS").exists()) {
@@ -64,9 +56,10 @@ object StreamFloor {
       run(s"count-8batch run=$i", Some(1), b => { b.count(); () })
       run(s"lww-1batch run=$i", None, lww)
       locally {
+        val own = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", "8")
         try run(s"lww-1batch-sp8 run=$i", None, lww)
-        finally spark.conf.set("spark.sql.shuffle.partitions", cpus)
+        finally spark.conf.set("spark.sql.shuffle.partitions", own)
       }
       locally {
         val t0 = System.nanoTime()

@@ -10,7 +10,6 @@ package graft.tools
 object VerifySome {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: VerifySome <sfDir> <outDir> <q1> [q2 ...]")
-    graft.Verify.dump(args(0), args(1), Some(args.drop(2).toSeq),
-      defaultCpus = "8", verbose = true)
+    graft.Verify.dump(args(0), args(1), Some(args.drop(2).toSeq), verbose = true)
   }
 }

@@ -732,6 +732,22 @@ class PlanSpec extends AnyFunSuite {
       s"novelty must stay an equi-join of doc-keyed aggregates:\n$plan")
   }
 
+  test("Sessions.staticPlan restores the session's own AQE value, static-plan member or not") {
+    val aqe = "spark.sql.adaptive.enabled"
+    val own = spark.conf.get(aqe)
+    spark.conf.set(aqe, "false")
+    try {
+      val member = "q_window_topk"
+      assert(Bench.StaticPlanQueries(member))
+      assert(Sessions.staticPlan(spark, member)(spark.conf.get(aqe)) == "false")
+      assert(spark.conf.get(aqe) == "false", s"AQE after the toggle for $member")
+      val other = "q_pit_join_single"
+      assert(!Bench.StaticPlanQueries(other))
+      Sessions.staticPlan(spark, other)(())
+      assert(spark.conf.get(aqe) == "false", s"AQE after the toggle for $other")
+    } finally spark.conf.set(aqe, own)
+  }
+
   test("BPE pair counting partial-aggregates; merge application plans no shuffle") {
     import spark.implicits._
     val df = Seq("aaab aaab ab").toDF("text")

@@ -14,8 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * many-partition execution (the partial → selection-network merge
   * path). Plus the plan property that motivated it: a codegen'd
   * HashAggregate, never ObjectHashAggregate, one exchange, no window.
-  * (Comparison-prefix fields are non-null by contract — callers filter
-  * nulls first, as q_window_topk's price filter does.)
+  * (Comparison-prefix fields must be non-nullable: analysis rejects a
+  * nullable one, so q_window_topk filters its nulls and wraps those
+  * fields in TopKSlots.nonNull.)
   */
 class TopKSlotsSpec extends AnyFunSuite {
 
@@ -87,6 +88,16 @@ class TopKSlotsSpec extends AnyFunSuite {
       .select(col("key"), col("col.v"), col("col.id"), col("col.p"), col("pos"))
     assert(got.exceptAll(want).count() === 0L, "extra rows vs BoundedMinK")
     assert(want.exceptAll(got).count() === 0L, "missing rows vs BoundedMinK")
+  }
+
+  test("TopKSlots rejects a nullable comparison field at analysis, naming it") {
+    import spark.implicits._
+    val df = Seq((1L, Option(2.0), 10L), (1L, None, 11L)).toDF("key", "v", "id")
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      df.groupBy(col("key")).agg(graft.functions.TopKSlots.column(
+        Seq("v" -> col("v"), "id" -> col("id")), 2).as("top"))
+    }
+    assert(e.getMessage.contains("comparison field(s) v must be non-nullable"), e.getMessage)
   }
 
   test("q_window_topk plans a codegen HashAggregate partial: no ObjectHashAggregate, one exchange, no window") {
