@@ -7,13 +7,17 @@ import scala.collection.mutable
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.schema.{GroupType, LogicalTypeAnnotation, MessageType, PrimitiveType}
 import org.apache.parquet.schema.LogicalTypeAnnotation.{StringLogicalTypeAnnotation, TimestampLogicalTypeAnnotation}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Driver-side parquet reads via parquet-mr — NO Spark job. The online
   * point-read path must not pay job scheduling (SURVEY §3.3); a bucket
@@ -23,6 +27,25 @@ import org.apache.parquet.schema.LogicalTypeAnnotation.{StringLogicalTypeAnnotat
   * FLOAT/DOUBLE, BOOLEAN, BINARY (utf8 or raw), and one-level LIST
   * groups. */
 object ParquetPointReader {
+
+  /** Open `f` with `conf` for its read options too. The one-argument
+    * `ParquetFileReader.open(InputFile)` builds its options from a
+    * `new Configuration()`, which re-parses Hadoop's XML defaults on
+    * every open (~75% of a 19 ms bucket-file decode). */
+  def open(conf: Configuration, f: Path): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(f, conf),
+      HadoopReadOptions.builder(conf).build())
+
+  /** The schema `spark.read.parquet` infers from `f`'s footer (Spark's
+    * own schema metadata when present, else the converted parquet
+    * schema, under the session's parquet settings), read on the driver
+    * without a Spark job. */
+  def sparkSchema(spark: SparkSession, f: Path): StructType = {
+    val reader = open(spark.sparkContext.hadoopConfiguration, f)
+    try ParquetFileFormat.readSchemaFromFooter(new Footer(f, reader.getFooter),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    finally reader.close()
+  }
 
   /** All rows of the given parquet files as (column -> value) maps;
     * missing optional fields map to null. `prune` = (column, requested
@@ -40,7 +63,7 @@ object ParquetPointReader {
     val out = mutable.Buffer[Map[String, Any]]()
     var skipped = 0
     files.foreach { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      val reader = open(conf, f)
       try {
         val schema = reader.getFooter.getFileMetaData.getSchema
         val columnIO = new ColumnIOFactory().getColumnIO(schema)

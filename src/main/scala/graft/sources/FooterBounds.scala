@@ -5,8 +5,6 @@ import java.sql.Timestamp
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.DataFrame
@@ -15,6 +13,8 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Subque
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.{DayTimeIntervalType, LongType, TimestampType}
+
+import graft.online.ParquetPointReader
 
 /** Metadata-only timestamp bounds: min/max of a column straight from
   * parquet footer statistics, with NO Spark job.
@@ -164,7 +164,7 @@ object FooterBounds {
           val conf = df.sparkSession.sessionState.newHadoopConf()
           var rows = 0L
           files.foreach { f =>
-            val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf))
+            val reader = ParquetPointReader.open(conf, new Path(f))
             try rows += reader.getRecordCount
             finally reader.close()
           }
@@ -215,7 +215,7 @@ object FooterBounds {
     val bytes = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
     var alive = phys // (outCol -> physName) still measurable
     files.foreach { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf))
+      val reader = ParquetPointReader.open(conf, new Path(f))
       try {
         val schema = reader.getFooter.getFileMetaData.getSchema
         alive = alive.filter { case (_, pn) => schema.containsField(pn) }
@@ -347,7 +347,7 @@ object FooterBounds {
     var mx = Long.MinValue
     var seen = false
     files.foreach { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf))
+      val reader = ParquetPointReader.open(conf, new Path(f))
       try {
         val schema = reader.getFooter.getFileMetaData.getSchema
         if (!schema.containsField(colName)) return None

@@ -17,6 +17,9 @@ import org.apache.spark.sql.types._
 object Tables {
 
   def configure(spark: SparkSession): Unit = {
+    // first: the session's first spark.conf call below initializes its
+    // shared state, which caches the JVM's `file:` filesystem
+    graft.util.ForkFreeFs.register(spark.sparkContext.hadoopConfiguration)
     Seq(
       "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false",
       "spark.sql.legacy.parquet.nanosAsLong" -> "true",

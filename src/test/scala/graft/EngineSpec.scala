@@ -2071,6 +2071,112 @@ class EngineSpec extends AnyFunSuite {
     }
   }
 
+  /** Jobs started while `body` runs under a job group of its own. A
+    * sentinel job in another group, run after `body`, orders the count:
+    * the listener bus delivers the earlier job starts before it. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"count-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(g) if g == group + "-sentinel" => sentinel.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(group + "-sentinel", "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(sentinel.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      jobs.get()
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("ParquetOnlineStore: a small-store upsert runs exactly one Spark job") {
+    import spark.implicits._
+    val path = s"/tmp/graft_one_job_${java.util.UUID.randomUUID().toString.take(8)}"
+    val store = new ParquetOnlineStore(path, numBuckets = 4)
+    val view = FeatureView("v", Seq("user"), Seq(Feature("value", GraftType.Dbl)),
+      Duration.ZERO, DataFrameSource(spark.emptyDataFrame, eventTimestampColumn = "ts"))
+    def batch(n: Int) = (0 until 50).map(i =>
+      (i.toLong, ts("2024-01-01 00:00:00"), n * 100.0 + i)).toDF("user_id", "ts", "value")
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    // AQE off: with it on, the merge's shuffle map stage runs as a job
+    // of its own, which is the write's, not the read-back's
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      store.upsert("p", view, Seq("user_id"), batch(1), "ts", None)
+      // the stored table merges with the incoming batch: old ∪ new,
+      // latest-per-key and the swap are one job; reading the stored
+      // table back launches none
+      assert(jobsOf(store.upsert("p", view, Seq("user_id"), batch(2), "ts", None)) === 1)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert(store.read("p", view, Seq("user_id"), Seq(Seq("user_id" -> 7L)), Seq("value"))
+      .head._2("value").value === 207.0)
+    store.teardown("p", Seq(view))
+  }
+
+  test("ParquetOnlineStore: the footer-read table schema equals Spark's inferred one") {
+    import spark.implicits._
+    val path = s"/tmp/graft_footer_schema_${java.util.UUID.randomUUID().toString.take(8)}"
+    val store = new ParquetOnlineStore(path, numBuckets = 4)
+    val view = FeatureView("v", Seq("user"),
+      Seq(Feature("n", GraftType.Int64), Feature("x", GraftType.Dbl),
+        Feature("s", GraftType.Str), Feature("t", GraftType.UnixTimestamp),
+        Feature("maybe", GraftType.Dbl)),
+      Duration.ZERO, DataFrameSource(spark.emptyDataFrame, eventTimestampColumn = "ts"))
+    val rows = Seq(
+      (1L, ts("2024-01-01 00:00:00"), 10L, 1.5, "a", ts("2023-12-31 00:00:00"), Some(0.5)),
+      (2L, ts("2024-01-02 00:00:00"), 20L, 2.5, null, ts("2023-12-30 00:00:00"), None))
+      .toDF("user_id", "ts", "n", "x", "s", "t", "maybe")
+    store.upsert("p", view, Seq("user_id"), rows, "ts", None)
+    val p = s"$path/p/v"
+    val fs = new org.apache.hadoop.fs.Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val inferred = spark.read.parquet(p).schema
+    assert(store.readTable(spark, fs, p).schema === inferred)
+    assert(inferred.fieldNames.toSeq ===
+      Seq("user_id", "ts", "n", "x", "s", "t", "maybe", ParquetOnlineStore.BucketCol))
+    assert(store.tableDf(spark, "p", "v").schema ===
+      org.apache.spark.sql.types.StructType(inferred.fields.dropRight(1)))
+    // no data file (an empty store dir): the inferring read, and its error
+    val empty = s"$path/p/none"
+    fs.mkdirs(new org.apache.hadoop.fs.Path(empty))
+    intercept[org.apache.spark.sql.AnalysisException](store.readTable(spark, fs, empty))
+    store.teardown("p", Seq(view))
+  }
+
+  test("ParquetOnlineStore: an upsert adding a feature the stored files lack fails unresolved, store kept") {
+    import spark.implicits._
+    def view(feats: String*) = FeatureView("v", Seq("user"), feats.map(Feature(_, GraftType.Dbl)),
+      Duration.ZERO, DataFrameSource(spark.emptyDataFrame, eventTimestampColumn = "ts"))
+    // both write paths: the small-store rewrite and (smallStoreBytes 0)
+    // the touched-bucket merge
+    Seq(64L << 20, 0L).foreach { small =>
+      val path = s"/tmp/graft_add_feature_${java.util.UUID.randomUUID().toString.take(8)}"
+      val store = new ParquetOnlineStore(path, numBuckets = 4, smallStoreBytes = small)
+      store.upsert("p", view("a"), Seq("user_id"),
+        Seq((1L, ts("2024-01-01 00:00:00"), 1.0)).toDF("user_id", "ts", "a"), "ts", None)
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        store.upsert("p", view("a", "b"), Seq("user_id"),
+          Seq((1L, ts("2024-01-02 00:00:00"), 2.0, 3.0), (2L, ts("2024-01-02 00:00:00"), 4.0, 5.0))
+            .toDF("user_id", "ts", "a", "b"), "ts", None)
+      }
+      assert(e.getMessage.contains("`b`"), e.getMessage)
+      val got = store.read("p", view("a", "b"), Seq("user_id"),
+        Seq(Seq("user_id" -> 1L), Seq("user_id" -> 2L)), Seq("a", "b"))
+      assert(got.map(_._2.map { case (f, v) => f -> v.status }) === Seq(
+        Map("a" -> "PRESENT", "b" -> "NOT_FOUND"), Map("a" -> "NOT_FOUND", "b" -> "NOT_FOUND")))
+      assert(got.head._2("a").value === 1.0)
+      store.teardown("p", Seq(view("a", "b")))
+    }
+  }
+
   test("ParquetOnlineStore: an empty FIRST upsert creates no table; later upserts still work") {
     import spark.implicits._
     import graft.model._

@@ -774,4 +774,42 @@ class PlanSpec extends AnyFunSuite {
     assert(appliedExchanges == baseExchanges,
       s"mergeApply must add no exchange:\n$appliedPlan")
   }
+
+  test("sort-removed queries: no range exchange directly above an expensive per-row map") {
+    import org.apache.spark.sql.catalyst.expressions.{HigherOrderFunction, ScalaUDF}
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.{GenerateExec, ObjectConsumerExec, ProjectExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+    // These six ended in an ORDER BY whose range-partition sampling pass
+    // ran the map a second time; they now return unordered rows. A sort
+    // creeping back (here or in a helper they share) must fail here.
+    val sortRemoved = Seq("q_random_projection", "q_image_decode", "q_audio_decode",
+      "q_image_resize", "q_image_phash", "q_span_corruption")
+    val aqe = new AdaptiveSparkPlanHelper {}
+    // a per-row map: typed object operators, generators, and projections
+    // through a Scala UDF, a lambda over an array or a graft expression
+    def perRowMap(p: SparkPlan): Boolean = p match {
+      case _: ObjectConsumerExec | _: GenerateExec => true
+      case pr: ProjectExec => pr.projectList.exists(_.exists(e =>
+        e.isInstanceOf[ScalaUDF] || e.isInstanceOf[HigherOrderFunction] ||
+          e.getClass.getName.startsWith("graft.")))
+      case _ => false
+    }
+    // the exchange's own map side: its child down to the next exchange
+    def mapSide(p: SparkPlan): Seq[SparkPlan] =
+      p +: p.children.filterNot(_.isInstanceOf[Exchange]).flatMap(mapSide)
+    def tripped(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      aqe.collect(df.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] &&
+            mapSide(e.child).exists(perRowMap) => e.simpleString(200)
+      }
+    sortRemoved.foreach { q =>
+      val df = Sessions.staticPlan(spark, q)(SparkEntry.queries(q)(spark, sfDir))
+      assert(tripped(df).isEmpty, s"$q:\n${df.queryExecution.executedPlan}")
+      // the wire is live: the same query ordered again trips it
+      assert(tripped(df.orderBy(df.columns.map(col): _*)).nonEmpty,
+        s"$q ordered: no range exchange above a per-row map found")
+    }
+  }
 }
