@@ -11,6 +11,7 @@ import org.apache.spark.sql.functions._
 
 import graft.model.FeatureView
 import graft.operators.PullLatest
+import graft.util.RenameAside
 
 /** A materialized row headed to the online store (O10's pivot target):
   * entity key values by join key, feature values by name, event/created
@@ -245,12 +246,11 @@ object InMemoryOnlineStore {
   *
   * Upsert only touches the buckets containing incoming keys: read those
   * buckets (directory-pruned), merge latest-per-key with the incoming
-  * batch, and swap in the rewritten buckets one directory at a time via
-  * rename-aside (old -> .old, new -> live, delete .old) — a crash never
-  * leaves a bucket half-written, and untouched buckets are never read
-  * or rewritten. At 100 TB an incremental materialize or streaming
-  * micro-batch therefore costs O(touched buckets), not a full-store
-  * rewrite.
+  * batch, and swap in the rewritten buckets one directory at a time
+  * with [[graft.util.RenameAside.swap]] — a crash never leaves a bucket
+  * half-written, and untouched buckets are never read or rewritten. At
+  * 100 TB an incremental materialize or streaming micro-batch therefore
+  * costs O(touched buckets), not a full-store rewrite.
   *
   * The bucket id is computed from EntityKeyCodec.hashKey on BOTH paths —
   * as a UDF over the key struct on the write path and in pure Scala on
@@ -446,22 +446,16 @@ class ParquetOnlineStore(
   /** Ring marker = a `_graft_ring` JSON file in the shard's base dir
     * (underscore prefix: invisible to parquet partition discovery). */
   def readRingMarker(): Option[(Int, Int, String)] =
-    ShardedOnlineStore.readRingMarker(
-      hp(basePath).getFileSystem(ShardedOnlineStore.hadoopConf()), basePath)
+    ShardedOnlineStore.readRingMarker(baseFs, basePath)
   def writeRingMarker(position: Int, size: Int, salt: String): Unit =
-    ShardedOnlineStore.writeRingMarker(
-      hp(basePath).getFileSystem(ShardedOnlineStore.hadoopConf()),
-      basePath, position, size, salt)
+    ShardedOnlineStore.writeRingMarker(baseFs, basePath, position, size, salt)
   def readPendingSize(): Option[(Int, String)] =
-    ShardedOnlineStore.readPendingSize(
-      hp(basePath).getFileSystem(ShardedOnlineStore.hadoopConf()), basePath)
+    ShardedOnlineStore.readPendingSize(baseFs, basePath)
   def writePendingSize(pending: Int, salt: String): Unit =
-    ShardedOnlineStore.writePendingSize(
-      hp(basePath).getFileSystem(ShardedOnlineStore.hadoopConf()),
-      basePath, pending, salt)
+    ShardedOnlineStore.writePendingSize(baseFs, basePath, pending, salt)
   def clearPendingSize(): Unit =
-    ShardedOnlineStore.clearPendingSize(
-      hp(basePath).getFileSystem(ShardedOnlineStore.hadoopConf()), basePath)
+    ShardedOnlineStore.clearPendingSize(baseFs, basePath)
+  private def baseFs = hp(basePath).getFileSystem(ShardedOnlineStore.hadoopConf())
 
   /** upsert reduces internally ((bucket, keys) max_by with map-side
     * combine) — callers need not PullLatest first. */
@@ -540,28 +534,73 @@ class ParquetOnlineStore(
     try out.write(count.toString.getBytes("UTF-8")) finally out.close()
   }
 
-  /** Crash recovery, run ONLY from the write path (upsert/teardown own
-    * the table; reads must never mutate — a point read racing an
-    * in-flight upsert would mistake the upsert's live rename-aside dir
-    * for crash leftovers and "restore" it mid-swap, corrupting the
+  /** Crash recovery, run ONLY from the write path (the mutating entry
+    * points own the table; reads must never mutate — a point read racing
+    * an in-flight upsert would mistake the upsert's live rename-aside
+    * dir for crash leftovers and "restore" it mid-swap, corrupting the
     * layout; ADVICE r2). A crash between the rename-aside and the
-    * rename-in leaves data in `p.old` — restore anything the live tree
-    * is missing, then clear the leftovers. Without this the next
-    * upsert's swap would DELETE the only surviving copy. */
+    * rename-in leaves data in `p.old`: [[RenameAside.heal]] restores the
+    * whole table, or each bucket the live tree is missing, then the
+    * leftovers clear. Without this the next upsert's swap would DELETE
+    * the only surviving copy. */
   private def recover(fs: org.apache.hadoop.fs.FileSystem, p: String): Unit = {
     val oldRoot = hp(p + ".old")
-    if (!fs.exists(oldRoot)) return
-    if (!fs.exists(hp(p))) {
-      // whole-table swap crashed after moving live aside
-      fs.rename(oldRoot, hp(p))
-    } else {
-      // per-bucket swap crashed: restore buckets missing from live
-      fs.listStatus(oldRoot).foreach { st =>
-        val live = hp(s"$p/${st.getPath.getName}")
-        if (!fs.exists(live)) fs.rename(st.getPath, live)
+    if (fs.exists(oldRoot)) {
+      if (!fs.exists(hp(p))) RenameAside.heal(fs, hp(p), oldRoot) // whole-table swap
+      else {
+        fs.listStatus(oldRoot).foreach(st =>
+          RenameAside.heal(fs, hp(s"$p/${st.getPath.getName}"), st.getPath))
+        fs.delete(oldRoot, true)
       }
-      fs.delete(oldRoot, true)
     }
+  }
+
+  /** The shared preamble of the mutating entry points (upsert, both
+    * deletes, expire, teardown): resolve the table's path and
+    * filesystem, hold the writer lease, heal a crashed swap FIRST
+    * (after a crashed whole-table swap the live tree is absent and the
+    * data sits in `p.old` — an exists-first return made CDC deletes
+    * silent no-ops while reads kept serving the rows via the .old
+    * fallback, and the next upsert's heal resurrected the tombstoned
+    * keys permanently; review r12), and drop the table's serving cache
+    * however `body` ends. */
+  private def mutate[A](spark: SparkSession, project: String, view: String)(
+      body: (org.apache.hadoop.fs.FileSystem, String) => A): A = {
+    val p = path(project, view)
+    try {
+      val fs = hp(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      withWriterLease(fs, p) { recover(fs, p); body(fs, p) }
+    } finally ParquetOnlineStore.invalidateCache(p)
+  }
+
+  /** Replace the `touched` buckets of table `p` with the rows of
+    * `frame` (a touched bucket with no rows in it is dropped, which reads
+    * tolerate): stage `frame` into `p.tmp` in the bucket layout, then
+    * [[RenameAside.swap]] each touched bucket through `p.old` — the old
+    * bucket moves OUT of the dataset tree (a `bucket=3.old` dir inside
+    * it would corrupt partition discovery), and `p.old` existing is the
+    * readers' mid-swap signal. recover() left `p.old` empty. A table
+    * left with no data file at all is dropped: its marker-only dir
+    * failed every later read-back with 'Unable to infer schema', so a
+    * delete or expire of the last rows wedged the table for good. */
+  private def rewriteBuckets(fs: org.apache.hadoop.fs.FileSystem, p: String,
+      touched: Seq[Int], joinKeys: Seq[String], frame: DataFrame): Unit = {
+    val tmp = p + ".tmp"
+    // BucketCol must LEAD the sort (mergedFrame's layout): without it
+    // FileFormatWriter inserts its own sort on the partition column,
+    // discarding the within-bucket key order the point reader's min/max
+    // skipping relies on (review r12)
+    frame.sortWithinPartitions(col(BucketCol) +: joinKeys.map(col): _*)
+      .write.mode("overwrite").partitionBy(BucketCol).parquet(tmp)
+    val oldRoot = hp(p + ".old")
+    fs.mkdirs(oldRoot)
+    touched.foreach { b =>
+      RenameAside.swap(fs, hp(s"$tmp/$BucketCol=$b"), hp(s"$p/$BucketCol=$b"),
+        hp(s"$oldRoot/$BucketCol=$b"))
+    }
+    fs.delete(oldRoot, true)
+    fs.delete(hp(tmp), true)
+    if (firstDataFile(fs, hp(p)).isEmpty) fs.delete(hp(p), true)
   }
 
   private def bucketOf(keys: Seq[(String, Any)], buckets: Int): Int =
@@ -591,15 +630,39 @@ class ParquetOnlineStore(
     * per call on 4 cores); this reads the same footer on the driver and
     * hands the schema, plus the int `__bucket` partition column, to
     * `spark.read.schema`. A table with no data file, or whose file
-    * vanished under a concurrent swap, takes the inferring read. */
+    * vanished under a concurrent swap, takes the inferring read.
+    *
+    * Each `want` field the footer lacks joins the read schema, nullable:
+    * the parquet reader reads it from the files that have it and fills
+    * null in the files that do not. That is how an upsert adds a feature
+    * to a view whose stored files predate it — and why one footer is
+    * enough even after the touched-bucket path has written the new
+    * column into only some buckets. */
   private[graft] def readTable(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
-      p: String): DataFrame = {
+      p: String, want: org.apache.spark.sql.types.StructType =
+        new org.apache.spark.sql.types.StructType()): DataFrame = {
+    val resolver = spark.sessionState.conf.resolver
     val schema =
-      try firstDataFile(fs, hp(p)).map(f => ParquetPointReader.sparkSchema(spark, f)
-        .add(BucketCol, org.apache.spark.sql.types.IntegerType))
-      catch { case _: java.io.FileNotFoundException => None }
+      try firstDataFile(fs, hp(p)).map { f =>
+        val stored = ParquetPointReader.sparkSchema(spark, f)
+          .add(BucketCol, org.apache.spark.sql.types.IntegerType)
+        want.filterNot(w => stored.exists(s => resolver(s.name, w.name)))
+          .foldLeft(stored)((acc, w) => acc.add(w.copy(nullable = true)))
+      } catch { case _: java.io.FileNotFoundException => None }
     schema.fold(spark.read.parquet(p))(spark.read.schema(_).parquet(p))
   }
+
+  /** Every column of the `touched` buckets' files: the read-back
+    * schema of a delete or expire, which must keep a column the
+    * touched-bucket upsert wrote into only some buckets (one footer of
+    * the whole table would drop it from every rewritten bucket whose
+    * files have it). A bucket is always rewritten whole by one job, so
+    * one footer per bucket covers it. */
+  private def touchedSchema(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
+      p: String, touched: Seq[Int]): org.apache.spark.sql.types.StructType =
+    new org.apache.spark.sql.types.StructType(
+      touched.flatMap(b => firstDataFile(fs, hp(s"$p/$BucketCol=$b")))
+        .flatMap(ParquetPointReader.sparkSchema(spark, _).fields).distinctBy(_.name).toArray)
 
   /** Evict this table's decoded-bucket serving blocks. Bench/dev hook
     * for COLD-cache latency measurement (tools/ServingSlo); production
@@ -610,17 +673,8 @@ class ParquetOnlineStore(
 
   def upsert(project: String, view: FeatureView, joinKeys: Seq[String],
       df: DataFrame, tsCol: String, createdCol: Option[String]): Unit =
-    try upsertImpl(project, view, joinKeys, df, tsCol, createdCol)
-    finally ParquetOnlineStore.invalidateCache(path(project, view.name))
-
-  private def upsertImpl(project: String, view: FeatureView, joinKeys: Seq[String],
-      df: DataFrame, tsCol: String, createdCol: Option[String]): Unit = {
+    mutate(df.sparkSession, project, view.name) { (fs, p) =>
     val spark = df.sparkSession
-    val p = path(project, view.name)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = hp(p).getFileSystem(hconf)
-    withWriterLease(fs, p) {
-    recover(fs, p)
     val buckets = effectiveBuckets(fs, p)
 
     val cols = (joinKeys ++ Seq(tsCol) ++ createdCol.toSeq ++ view.featureNames).distinct
@@ -646,10 +700,15 @@ class ParquetOnlineStore(
     // min/max stats for point-read skipping; reads list every file in
     // a bucket dir, so several files per bucket (the cluster-scale
     // shape — write parallelism within a bucket) are fine.
-    def stage(d: DataFrame): Unit =
+    def merged(d: DataFrame): DataFrame =
       ParquetOnlineStore.mergedFrame(d, joinKeys, tsCol, createdCol,
-          view.featureNames, buckets)
-        .write.mode("overwrite").partitionBy(BucketCol).parquet(tmp)
+        view.featureNames, buckets)
+    def stage(d: DataFrame): Unit =
+      merged(d).write.mode("overwrite").partitionBy(BucketCol).parquet(tmp)
+    // the stored rows in the incoming columns; a feature added to the
+    // view since the stored files were written reads as null
+    def stored(): DataFrame =
+      readTable(spark, fs, p, incoming.schema).select((cols :+ BucketCol).map(col): _*)
 
     val liveBytes =
       if (fs.exists(hp(p))) fs.getContentSummary(hp(p)).getLength else -1L
@@ -662,21 +721,19 @@ class ParquetOnlineStore(
       // ('Unable to infer schema') — detected by a driver-side listing
       // for data files, not a per-batch isEmpty Spark job (review r6).
       stage(incoming)
-      if (firstDataFile(fs, hp(tmp)).isEmpty) { fs.delete(hp(tmp), true); return }
-      writeBucketsMarker(fs, tmp, buckets)
-      fs.rename(hp(tmp), hp(p))
+      if (firstDataFile(fs, hp(tmp)).isEmpty) fs.delete(hp(tmp), true)
+      else {
+        writeBucketsMarker(fs, tmp, buckets)
+        RenameAside.renameOrThrow(fs, hp(tmp), hp(p), "online store publish")
+      }
     } else if (liveBytes <= smallStoreBytes) {
       // Small store: one-job full rewrite (old ∪ incoming), whole-dir
-      // rename-aside swap. recover() above restores any earlier crash's
-      // .old before the swap reuses that name. Marker is staged with the
-      // data, so the swap can't leave a marker-less bucketed table.
-      val old = readTable(spark, fs, p).select((cols :+ BucketCol).map(col): _*)
-      stage(old.unionByName(incoming))
+      // swap. recover() restored any earlier crash's .old before the
+      // swap reuses that name. Marker is staged with the data, so the
+      // swap can't leave a marker-less bucketed table.
+      stage(stored().unionByName(incoming))
       writeBucketsMarker(fs, tmp, buckets)
-      val oldRoot = hp(p + ".old")
-      fs.rename(hp(p), oldRoot)
-      fs.rename(hp(tmp), hp(p))
-      fs.delete(oldRoot, true)
+      RenameAside.swap(fs, hp(tmp), hp(p), hp(p + ".old"))
     } else {
       // Incremental write: merge only the buckets containing incoming
       // keys. incoming is read twice (touched-bucket discovery + the
@@ -685,30 +742,13 @@ class ParquetOnlineStore(
       try {
         val touched: Seq[Int] =
           cached.select(BucketCol).distinct().collect().map(_.getInt(0)).toSeq
-        if (touched.isEmpty) return
         // Partition pruning limits the read-back to touched buckets.
-        val oldTouched = readTable(spark, fs, p)
-          .filter(col(BucketCol).isin(touched: _*))
-          .select((cols :+ BucketCol).map(col): _*)
-        stage(oldTouched.unionByName(cached))
-        // Per-bucket rename-aside swap: old bucket moves OUT of the
-        // dataset tree first (a `bucket=3.old` dir inside it would
-        // corrupt partition discovery), then staged bucket renames in.
-        // recover() above guarantees .old is empty of prior state.
-        val oldRoot = hp(p + ".old")
-        fs.mkdirs(oldRoot)
-        touched.foreach { b =>
-          val live = hp(s"$p/$BucketCol=$b")
-          val staged = hp(s"$tmp/$BucketCol=$b")
-          if (fs.exists(live)) fs.rename(live, hp(s"${p + ".old"}/$BucketCol=$b"))
-          if (fs.exists(staged)) fs.rename(staged, live)
-        }
-        fs.delete(oldRoot, true)
-        fs.delete(hp(tmp), true)
+        if (touched.nonEmpty)
+          rewriteBuckets(fs, p, touched, joinKeys,
+            merged(stored().filter(col(BucketCol).isin(touched: _*)).unionByName(cached)))
       } finally cached.unpersist()
     }
     }
-  }
 
   /** Snapshot of a view's store table (batch serving / debugging). */
   def tableDf(spark: SparkSession, project: String, view: String): DataFrame = {
@@ -720,13 +760,11 @@ class ParquetOnlineStore(
   /** Keyed delete (CDC tombstones): drop the stored rows for the keys
     * in `keysDf`. Same touched-bucket discipline as upsert/expire —
     * the incoming keys route to their buckets, only those buckets
-    * rewrite (left-anti on the key columns), per-bucket rename-aside
-    * swap; a bucket emptied by the delete disappears, which reads
-    * tolerate. */
+    * rewrite (left-anti on the key columns) through [[rewriteBuckets]];
+    * a bucket emptied by the delete disappears, which reads tolerate. */
   override def delete(project: String, view: FeatureView, joinKeys: Seq[String],
       keysDf: DataFrame): Unit =
-    try deleteMatchingImpl(project, view, joinKeys, joinKeys, keysDf)
-    finally ParquetOnlineStore.invalidateCache(path(project, view.name))
+    deleteMatching(project, view, joinKeys, joinKeys, keysDf)
 
   /** VERSION-CONDITIONAL delete: remove a stored row only if it still
     * matches (joinKeys, tsCol, createdCol) EXACTLY (null-safe) —
@@ -737,67 +775,41 @@ class ParquetOnlineStore(
   private[graft] def deleteVersions(project: String, view: FeatureView,
       joinKeys: Seq[String], versionsDf: DataFrame, tsCol: String,
       createdCol: Option[String]): Unit =
-    try deleteMatchingImpl(project, view, joinKeys,
+    deleteMatching(project, view, joinKeys,
       (joinKeys ++ Seq(tsCol) ++ createdCol.toSeq).distinct, versionsDf)
-    finally ParquetOnlineStore.invalidateCache(path(project, view.name))
 
   /** Shared bucket-rewrite delete: drops stored rows matching `df` on
     * ALL `matchCols` (null-safe equality; matchCols == joinKeys is the
-    * plain keyed delete). Touched-bucket discipline + per-bucket
-    * rename-aside swap as ever. */
-  private def deleteMatchingImpl(project: String, view: FeatureView,
-      joinKeys: Seq[String], matchCols: Seq[String], df: DataFrame): Unit = {
-    val spark = df.sparkSession
-    val p = path(project, view.name)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = hp(p).getFileSystem(hconf)
-    withWriterLease(fs, p) {
-    // recover FIRST: after a crashed whole-table swap the live tree is
-    // absent and the data sits in `p.old` — an exists-first return made
-    // CDC deletes silent no-ops while reads kept serving the rows via
-    // the .old fallback, and the next upsert's heal resurrected the
-    // tombstoned keys permanently (review r12)
-    recover(fs, p)
-    if (!fs.exists(hp(p))) return
-    val buckets = effectiveBuckets(fs, p)
-    val keys = df
-      .select(OnlineStore.guardNullKeys(matchCols, joinKeys, view.name, "delete"): _*)
-      .distinct()
-      .withColumn(BucketCol, bucketExpr(joinKeys, buckets))
-    val cached = keys.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val touched: Seq[Int] =
-        cached.select(BucketCol).distinct().collect().map(_.getInt(0)).toSeq
-      if (touched.isEmpty) return
-      val tmp = p + ".tmp"
-      // null-safe anti-join over the match columns (a keyed delete
-      // matches on keys alone; a version delete additionally pins the
-      // exact (ts, created), where created may legitimately be null)
-      val probe = cached.select(matchCols.map(c => col(c).as(s"__m_$c")): _*)
-      val cond = matchCols.map(c => col(c) <=> col(s"__m_$c")).reduce(_ && _)
-      readTable(spark, fs, p)
-        .filter(col(BucketCol).isin(touched: _*))
-        .join(probe, cond, "left_anti")
-        .repartition(touched.size, col(BucketCol))
-        // BucketCol must LEAD the sort (mergedFrame's layout): without
-        // it FileFormatWriter inserts its own sort on the partition
-        // column, discarding the within-bucket key order the point
-        // reader's min/max skipping relies on (review r12)
-        .sortWithinPartitions(col(BucketCol) +: joinKeys.map(col): _*)
-        .write.mode("overwrite").partitionBy(BucketCol).parquet(tmp)
-      val oldRoot = hp(p + ".old")
-      fs.mkdirs(oldRoot)
-      touched.foreach { b =>
-        val live = hp(s"$p/$BucketCol=$b")
-        val staged = hp(s"$tmp/$BucketCol=$b")
-        if (fs.exists(live)) fs.rename(live, hp(s"${p + ".old"}/$BucketCol=$b"))
-        if (fs.exists(staged)) fs.rename(staged, live)
-      }
-      fs.delete(oldRoot, true)
-      fs.delete(hp(tmp), true)
-    } finally cached.unpersist()
+    * plain keyed delete). */
+  private def deleteMatching(project: String, view: FeatureView,
+      joinKeys: Seq[String], matchCols: Seq[String], df: DataFrame): Unit =
+    mutate(df.sparkSession, project, view.name) { (fs, p) =>
+    if (fs.exists(hp(p))) {
+      val buckets = effectiveBuckets(fs, p)
+      val keys = df
+        .select(OnlineStore.guardNullKeys(matchCols, joinKeys, view.name, "delete"): _*)
+        .distinct()
+        .withColumn(BucketCol, bucketExpr(joinKeys, buckets))
+      val cached = keys.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val touched: Seq[Int] =
+          cached.select(BucketCol).distinct().collect().map(_.getInt(0)).toSeq
+        if (touched.nonEmpty) {
+          // null-safe anti-join over the match columns (a keyed delete
+          // matches on keys alone; a version delete additionally pins
+          // the exact (ts, created), where created may legitimately be
+          // null)
+          val probe = cached.select(matchCols.map(c => col(c).as(s"__m_$c")): _*)
+          val cond = matchCols.map(c => col(c) <=> col(s"__m_$c")).reduce(_ && _)
+          rewriteBuckets(fs, p, touched, joinKeys,
+            readTable(df.sparkSession, fs, p, touchedSchema(df.sparkSession, fs, p, touched))
+            .filter(col(BucketCol).isin(touched: _*))
+            .join(probe, cond, "left_anti")
+            .repartition(touched.size, col(BucketCol)))
+        }
+      } finally cached.unpersist()
     }
-  }
+    }
 
   /** TTL retention sweep: delete rows whose `tsCol` is strictly older
     * than `cutoff` — the online half of [[graft.sources.DatePartition.vacuum]]
@@ -806,51 +818,32 @@ class ParquetOnlineStore(
     * keeps the STORE from growing without bound). Only buckets that
     * actually contain expired rows are rewritten (discovered from one
     * column-pruned scan of (bucket, ts)); survivors re-stage key-sorted
-    * and swap in with the upsert path's per-bucket rename-aside, so
-    * concurrent point reads stay safe. A bucket left with no survivors
-    * is dropped — reads already tolerate absent bucket dirs. Returns
-    * the number of expired rows. */
+    * and swap in through [[rewriteBuckets]], so concurrent point reads
+    * stay safe. A bucket left with no survivors is dropped — reads
+    * already tolerate absent bucket dirs. Returns the number of expired
+    * rows. */
   def expire(spark: SparkSession, project: String, view: FeatureView,
       joinKeys: Seq[String], tsCol: String, cutoff: Timestamp): Long =
-    try expireImpl(spark, project, view, joinKeys, tsCol, cutoff)
-    finally ParquetOnlineStore.invalidateCache(path(project, view.name))
-
-  private def expireImpl(spark: SparkSession, project: String, view: FeatureView,
-      joinKeys: Seq[String], tsCol: String, cutoff: Timestamp): Long = {
-    val p = path(project, view.name)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = hp(p).getFileSystem(hconf)
-    withWriterLease(fs, p) {
-    recover(fs, p) // before the exists check — see deleteImpl
-    if (!fs.exists(hp(p))) return 0L
-    val store = readTable(spark, fs, p)
-    val perBucket = store.filter(col(tsCol) < lit(cutoff))
-      .groupBy(col(BucketCol)).agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    if (perBucket.isEmpty) return 0L
-    val touched = perBucket.keys.toSeq
-    val tmp = p + ".tmp"
-    store.filter(col(BucketCol).isin(touched: _*))
-      // negation of the discovery predicate, not (ts >= cutoff): a
-      // NULL-ts row is "not expired" on discovery and must survive the
-      // rewrite too, or it silently vanishes uncounted (review r6)
-      .filter(col(tsCol) >= lit(cutoff) || col(tsCol).isNull)
-      .repartition(touched.size, col(BucketCol))
-      .sortWithinPartitions(col(BucketCol) +: joinKeys.map(col): _*)
-      .write.mode("overwrite").partitionBy(BucketCol).parquet(tmp)
-    val oldRoot = hp(p + ".old")
-    fs.mkdirs(oldRoot)
-    touched.foreach { b =>
-      val live = hp(s"$p/$BucketCol=$b")
-      val staged = hp(s"$tmp/$BucketCol=$b")
-      if (fs.exists(live)) fs.rename(live, hp(s"${p + ".old"}/$BucketCol=$b"))
-      if (fs.exists(staged)) fs.rename(staged, live)
+    mutate(spark, project, view.name) { (fs, p) =>
+    if (!fs.exists(hp(p))) 0L
+    else {
+      val store = readTable(spark, fs, p)
+      val perBucket = store.filter(col(tsCol) < lit(cutoff))
+        .groupBy(col(BucketCol)).agg(count(lit(1)).as("n"))
+        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+      val touched = perBucket.keys.toSeq
+      if (touched.nonEmpty)
+        rewriteBuckets(fs, p, touched, joinKeys,
+          readTable(spark, fs, p, touchedSchema(spark, fs, p, touched))
+          .filter(col(BucketCol).isin(touched: _*))
+          // negation of the discovery predicate, not (ts >= cutoff): a
+          // NULL-ts row is "not expired" on discovery and must survive
+          // the rewrite too, or it silently vanishes uncounted (review r6)
+          .filter(col(tsCol) >= lit(cutoff) || col(tsCol).isNull)
+          .repartition(touched.size, col(BucketCol)))
+      perBucket.values.sum
     }
-    fs.delete(oldRoot, true)
-    fs.delete(hp(tmp), true)
-    perBucket.values.sum
     }
-  }
 
   def read(project: String, view: FeatureView, joinKeys: Seq[String],
       entityKeys: Seq[Seq[(String, Any)]],
@@ -1009,12 +1002,8 @@ class ParquetOnlineStore(
     }
   }
 
-  def teardown(project: String, views: Seq[FeatureView]): Unit = {
-    val spark = SparkSession.active
-    val hconf = spark.sparkContext.hadoopConfiguration
-    views.foreach { v =>
-      val p = path(project, v.name)
-      val fs = new org.apache.hadoop.fs.Path(p).getFileSystem(hconf)
+  def teardown(project: String, views: Seq[FeatureView]): Unit =
+    views.foreach(v => mutate(SparkSession.active, project, v.name) { (fs, p) =>
       // Delete crash leftovers too: a `.old` tree surviving teardown
       // would resurrect torn-down rows through the read fallback, and
       // its stale bucket-count marker would override the configured one
@@ -1022,11 +1011,6 @@ class ParquetOnlineStore(
       // path — a teardown racing an in-flight upsert's swap would
       // otherwise leave the upsert's staged tree as the resurrected
       // table.
-      withWriterLease(fs, p) {
-        Seq(p, p + ".old", p + ".tmp").foreach(d =>
-          fs.delete(new org.apache.hadoop.fs.Path(d), true))
-      }
-      ParquetOnlineStore.invalidateCache(p)
-    }
-  }
+      Seq(p, p + ".old", p + ".tmp").foreach(d => fs.delete(hp(d), true))
+    })
 }

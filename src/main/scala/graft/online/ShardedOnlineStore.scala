@@ -615,8 +615,40 @@ object ShardedOnlineStore {
   }
 
   private[graft] def readRingMarker(fs: org.apache.hadoop.fs.FileSystem,
-      base: String): Option[(Int, Int, String)] = {
-    val p = new org.apache.hadoop.fs.Path(s"$base/$RingMarker")
+      base: String): Option[(Int, Int, String)] =
+    readMarker(fs, base, RingMarker, "ring").map(o =>
+      (graft.util.Json.toLong(o("position")).toInt,
+        graft.util.Json.toLong(o("size")).toInt,
+        o("salt").asInstanceOf[graft.util.JValue.JStr].v))
+
+  private[graft] def writeRingMarker(fs: org.apache.hadoop.fs.FileSystem,
+      base: String, pos: Int, size: Int, salt: String): Unit = {
+    import graft.util.JValue._
+    writeMarker(fs, base, RingMarker,
+      JObj(Vector("position" -> JInt(pos), "size" -> JInt(size), "salt" -> JStr(salt))))
+  }
+
+  /** Grow-pending marker file — see [[RingMarkedStore.readPendingSize]]. */
+  val PendingMarker = "_graft_ring_pending"
+
+  private[graft] def readPendingSize(fs: org.apache.hadoop.fs.FileSystem,
+      base: String): Option[(Int, String)] =
+    readMarker(fs, base, PendingMarker, "grow-pending").map(o =>
+      (graft.util.Json.toLong(o("pending")).toInt,
+        o("salt").asInstanceOf[graft.util.JValue.JStr].v))
+
+  private[graft] def writePendingSize(fs: org.apache.hadoop.fs.FileSystem,
+      base: String, pending: Int, salt: String): Unit = {
+    import graft.util.JValue._
+    writeMarker(fs, base, PendingMarker,
+      JObj(Vector("pending" -> JInt(pending), "salt" -> JStr(salt))))
+  }
+
+  /** The JSON object in marker file `name` under `base`, None when there
+    * is none. A corrupt marker fails loudly. */
+  private def readMarker(fs: org.apache.hadoop.fs.FileSystem, base: String,
+      name: String, what: String): Option[graft.util.JValue.JObj] = {
+    val p = new org.apache.hadoop.fs.Path(s"$base/$name")
     if (!fs.exists(p)) None
     else {
       val txt =
@@ -626,82 +658,32 @@ object ShardedOnlineStore {
           finally in.close()
         } catch {
           // a marker vanishing between exists() and open() is a
-          // concurrent refresh's delete+rename window — absence is the
-          // already-handled state, never a failure (review r15)
+          // concurrent refresh's delete+rename window or a clear —
+          // absence is the already-handled state, never a failure
+          // (review r15)
           case _: java.io.FileNotFoundException => return None
         }
-      val o =
-        try graft.util.Json.parse(txt).asInstanceOf[graft.util.JValue.JObj]
-        catch {
-          case e: Exception => throw new IllegalStateException(
-            s"unreadable ring marker at $p: '$txt' — a corrupt marker " +
-              "must be investigated, not silently re-routed over", e)
-        }
-      Some((graft.util.Json.toLong(o("position")).toInt,
-        graft.util.Json.toLong(o("size")).toInt,
-        o("salt").asInstanceOf[graft.util.JValue.JStr].v))
+      try Some(graft.util.Json.parse(txt).asInstanceOf[graft.util.JValue.JObj])
+      catch {
+        case e: Exception => throw new IllegalStateException(
+          s"unreadable $what marker at $p: '$txt' — a corrupt marker " +
+            "must be investigated, not silently re-routed over", e)
+      }
     }
   }
 
-  private[graft] def writeRingMarker(fs: org.apache.hadoop.fs.FileSystem,
-      base: String, pos: Int, size: Int, salt: String): Unit = {
-    import graft.util.JValue._
-    val dest = new org.apache.hadoop.fs.Path(s"$base/$RingMarker")
-    val tmp = new org.apache.hadoop.fs.Path(s"$base/$RingMarker.tmp-" +
+  /** Write marker file `name` under `base`: a UUID-named tmp file, then
+    * publish by rename; on a pre-existing marker (a refresh, or a
+    * concurrent twin's identical first write) replace it — the moment
+    * of absence reads as "unmarked", which validation treats as
+    * pass-through, never as a misroute. */
+  private def writeMarker(fs: org.apache.hadoop.fs.FileSystem, base: String,
+      name: String, body: graft.util.JValue.JObj): Unit = {
+    val dest = new org.apache.hadoop.fs.Path(s"$base/$name")
+    val tmp = new org.apache.hadoop.fs.Path(s"$base/$name.tmp-" +
       java.util.UUID.randomUUID().toString.take(8))
     val out = fs.create(tmp, true)
-    try out.write(graft.util.Json.render(JObj(Vector(
-      "position" -> JInt(pos), "size" -> JInt(size),
-      "salt" -> JStr(salt)))).getBytes("UTF-8"))
-    finally out.close()
-    // publish by rename; on a pre-existing marker (a refresh, or a
-    // concurrent twin's identical first write) replace it — the
-    // moment of absence reads as "unmarked", which validation treats
-    // as pass-through, never as a misroute
-    if (!fs.rename(tmp, dest)) {
-      fs.delete(dest, false)
-      if (!fs.rename(tmp, dest)) fs.delete(tmp, false)
-    }
-  }
-
-  /** Grow-pending marker file — see [[RingMarkedStore.readPendingSize]]. */
-  val PendingMarker = "_graft_ring_pending"
-
-  private[graft] def readPendingSize(fs: org.apache.hadoop.fs.FileSystem,
-      base: String): Option[(Int, String)] = {
-    val p = new org.apache.hadoop.fs.Path(s"$base/$PendingMarker")
-    if (!fs.exists(p)) None
-    else {
-      val txt =
-        try {
-          val in = fs.open(p)
-          try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-          finally in.close()
-        } catch {
-          // absence between exists() and open() = a concurrent clear
-          case _: java.io.FileNotFoundException => return None
-        }
-      val o =
-        try graft.util.Json.parse(txt).asInstanceOf[graft.util.JValue.JObj]
-        catch {
-          case e: Exception => throw new IllegalStateException(
-            s"unreadable grow-pending marker at $p: '$txt' — a corrupt " +
-              "marker must be investigated, not silently re-routed over", e)
-        }
-      Some((graft.util.Json.toLong(o("pending")).toInt,
-        o("salt").asInstanceOf[graft.util.JValue.JStr].v))
-    }
-  }
-
-  private[graft] def writePendingSize(fs: org.apache.hadoop.fs.FileSystem,
-      base: String, pending: Int, salt: String): Unit = {
-    import graft.util.JValue._
-    val dest = new org.apache.hadoop.fs.Path(s"$base/$PendingMarker")
-    val tmp = new org.apache.hadoop.fs.Path(s"$base/$PendingMarker.tmp-" +
-      java.util.UUID.randomUUID().toString.take(8))
-    val out = fs.create(tmp, true)
-    try out.write(graft.util.Json.render(JObj(Vector(
-      "pending" -> JInt(pending), "salt" -> JStr(salt)))).getBytes("UTF-8"))
+    try out.write(graft.util.Json.render(body).getBytes("UTF-8"))
     finally out.close()
     if (!fs.rename(tmp, dest)) {
       fs.delete(dest, false)
@@ -710,10 +692,8 @@ object ShardedOnlineStore {
   }
 
   private[graft] def clearPendingSize(fs: org.apache.hadoop.fs.FileSystem,
-      base: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$base/$PendingMarker")
-    if (fs.exists(p)) fs.delete(p, false)
-  }
+      base: String): Unit =
+    fs.delete(new org.apache.hadoop.fs.Path(s"$base/$PendingMarker"), false)
 
   // one digest per serving thread, reset per use — getInstance per
   // (key × shard) was a provider lookup + allocation on the point-read

@@ -179,13 +179,14 @@ class Registry(path: Option[String] = None, cacheTtl: Duration = Duration.ofSeco
     (hp.getFileSystem(conf), hp)
   }
 
-  /** Crash-safe swap: write tmp, move the live file ASIDE (not delete),
-    * rename tmp into place, then drop the old copy. A crash between the
-    * two renames leaves `.old` recoverable; load() falls back to it.
-    * The `.old` fallback is deleted only while a NEWER durable copy
-    * exists (live before the swap, the fresh install after) — deleting
-    * it up front made the post-crash-recovery persist a double-crash
-    * data-loss window (review r6); renames are checked. */
+  /** Crash-safe publish: write `.tmp`, then
+    * [[graft.util.RenameAside.swap]] it in with `.old` as the aside
+    * copy. A crash between the two renames leaves `.old` recoverable;
+    * load() falls back to it. The `.old` fallback is deleted only while
+    * a NEWER durable copy exists (a live copy in the heal, the fresh
+    * install in the swap) — deleting it up front made the
+    * post-crash-recovery persist a double-crash data-loss window
+    * (review r6). */
   private def persist(toWrite: RegistryState): Unit = path.foreach { p =>
     val (fs, hp) = hadoopFs(p)
     val tmp = new org.apache.hadoop.fs.Path(p + ".tmp")
@@ -193,21 +194,8 @@ class Registry(path: Option[String] = None, cacheTtl: Duration = Duration.ofSeco
     val out = fs.create(tmp, true)
     out.write(RegistryCodec.encode(toWrite).render.getBytes("UTF-8"))
     out.close()
-    def renameOrThrow(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Unit =
-      if (!fs.rename(src, dst))
-        throw new java.io.IOException(s"registry persist: rename $src -> $dst failed")
-    if (fs.exists(hp)) {
-      // live copy present: it covers the .old fallback for the swap
-      fs.delete(old, false)
-      renameOrThrow(hp, old)
-      renameOrThrow(tmp, hp)
-      fs.delete(old, false)
-    } else {
-      // recovering from a crashed swap (or first write): install the
-      // new copy FIRST, only then drop the .old fallback
-      renameOrThrow(tmp, hp)
-      fs.delete(old, false)
-    }
+    graft.util.RenameAside.heal(fs, hp, old)
+    graft.util.RenameAside.swap(fs, tmp, hp, old)
   }
 
   private def load(): Option[RegistryState] = path.flatMap { p =>

@@ -43,8 +43,8 @@ object Bucketing {
     // task output is visible before job commit — a crash mid-write
     // destroyed the only copy and left a torn file set readable
     // (review r11). Data is written to a staged dir under a staging
-    // catalog name, the dir is swapped in with CHECKED renames
-    // (the StagedWrite dance), then the catalog entry swaps —
+    // catalog name, the dir is swapped in by
+    // [[graft.util.RenameAside.swap]], then the catalog entry swaps —
     // metadata-only, the bucket spec rides along. The only crash
     // residue is a staging table/dir (inspectable) or a brief
     // table-name gap between DROP and RENAME; the data dir is never
@@ -63,11 +63,10 @@ object Bucketing {
     // publish window (between the data rename and ALTER SET LOCATION
     // the live stage table's dir is already gone), so entries younger
     // than the stale window are never touched.
+    val dest = new org.apache.hadoop.fs.Path(path)
+    val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
     locally {
-      val hconf0 = spark.sparkContext.hadoopConfiguration
-      val dest0 = new org.apache.hadoop.fs.Path(path)
-      val fs0 = dest0.getFileSystem(hconf0)
-      StagedWrite.sweepStaleStages(fs0, dest0)
+      StagedWrite.sweepStaleStages(fs, dest)
       val cat = spark.sessionState.catalog
       val (db, bare) = table.lastIndexOf('.') match {
         case -1 => (cat.getCurrentDatabase, table)
@@ -78,7 +77,7 @@ object Bucketing {
           val meta = cat.getTableMetadata(ident)
           val loc = new org.apache.hadoop.fs.Path(meta.location)
           val old = System.currentTimeMillis() - meta.createTime > StagedWrite.stageStaleMs
-          if (old && !fs0.exists(loc))
+          if (old && !fs.exists(loc))
             cat.dropTable(ident, ignoreIfNotExists = true, purge = false)
         } catch { case _: Exception => () } // raced: someone else handled it
       } catch { case _: Exception => () }   // db listing unavailable: skip sweep
@@ -90,25 +89,9 @@ object Bucketing {
       .sortBy(keys.head, keys.tail: _*)
       .format("parquet")
       .saveAsTable(stageTable)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val dest = new org.apache.hadoop.fs.Path(path)
-    val stage = new org.apache.hadoop.fs.Path(stagePathS)
     val aside = new org.apache.hadoop.fs.Path(path + ".old")
-    val fs = dest.getFileSystem(hconf)
-    def renameOrThrow(src: org.apache.hadoop.fs.Path,
-        dst: org.apache.hadoop.fs.Path, what: String): Unit =
-      if (!fs.rename(src, dst))
-        throw new java.io.IOException(s"writeBucketed: $what rename $src -> $dst failed")
-    if (fs.exists(aside)) { // heal a crashed predecessor's swap
-      if (!fs.exists(dest)) renameOrThrow(aside, dest, "crash-heal")
-      else fs.delete(aside, true)
-    }
-    if (fs.exists(dest)) {
-      renameOrThrow(dest, aside, "move-aside")
-      try renameOrThrow(stage, dest, "publish")
-      catch { case e: Throwable => fs.rename(aside, dest); throw e }
-      fs.delete(aside, true)
-    } else renameOrThrow(stage, dest, "publish")
+    graft.util.RenameAside.heal(fs, dest, aside) // a crashed predecessor's swap
+    graft.util.RenameAside.swap(fs, new org.apache.hadoop.fs.Path(stagePathS), dest, aside)
     def q(n: String) = n.split('.').map(p => s"`$p`").mkString(".")
     spark.sql(s"ALTER TABLE ${q(stageTable)} SET LOCATION '${path.replace("'", "''")}'")
     spark.sql(s"DROP TABLE IF EXISTS ${q(table)}")

@@ -59,15 +59,13 @@ object DatePartition {
     * the other half of lake maintenance next to [[vacuum]]. Streaming
     * ingest (a file per micro-batch per writer) degrades scans via
     * listing cost and tiny row groups; compaction restores
-    * row-group-sized files. Each partition rewrites INDEPENDENTLY
-    * (write-aside to `_compact_tmp`, then a rename-aside swap): the old
-    * directory renames aside BEFORE the new one moves in and is deleted
-    * only after both renames succeed, so at every instant the rows
-    * exist in the live dir or the `_compact_old` dir — a crash loses at
-    * most one partition's rewrite, never data, and a failed rename
-    * restores the original and aborts loudly (the ParquetOnlineStore
-    * bucket-swap discipline). Returns (partition, filesBefore,
-    * filesAfter) for the rewritten partitions. */
+    * row-group-sized files. Each partition rewrites INDEPENDENTLY:
+    * write-aside to `_compact_tmp_<part>`, then
+    * [[graft.util.RenameAside.swap]] with `_compact_old_<part>` as the
+    * aside copy — a crash loses at most one partition's rewrite, never
+    * data, and a failed rename restores the original and aborts
+    * loudly. Returns (partition, filesBefore, filesAfter) for the
+    * rewritten partitions. */
   def compact(spark: org.apache.spark.sql.SparkSession, path: String,
       dateCol: String, targetBytes: Long = 128L << 20,
       maxFiles: Int = 4): Seq[(String, Int, Int)] = {
@@ -75,21 +73,14 @@ object DatePartition {
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(root)) return Nil
     val prefix = s"$dateCol="
-    // heal a crashed swap FIRST: a death between the two renames below
+    // heal a crashed swap FIRST: a death between the swap's two renames
     // leaves the partition's only copy in the underscore-hidden
-    // _compact_old_ dir, which every scan ignores — restore it when the
-    // live dir is missing, drop it as a stale duplicate otherwise
-    // (review r6; the StagedWrite/.old discipline, per partition)
+    // _compact_old_ dir, which every scan ignores (review r6)
     fs.listStatus(root).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"_compact_old_$prefix"))
       .foreach { orphan =>
-        val live = new org.apache.hadoop.fs.Path(root,
-          orphan.getPath.getName.stripPrefix("_compact_old_"))
-        if (!fs.exists(live)) {
-          if (!fs.rename(orphan.getPath, live))
-            throw new java.io.IOException(
-              s"compact: failed to restore crashed partition ${orphan.getPath}")
-        } else fs.delete(orphan.getPath, true)
+        graft.util.RenameAside.heal(fs, new org.apache.hadoop.fs.Path(root,
+          orphan.getPath.getName.stripPrefix("_compact_old_")), orphan.getPath)
       }
     fs.listStatus(root).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
@@ -105,18 +96,11 @@ object DatePartition {
             s"_compact_tmp_${part.getPath.getName}")
           val old = new org.apache.hadoop.fs.Path(parent,
             s"_compact_old_${part.getPath.getName}")
-          fs.delete(tmp, true); fs.delete(old, true)
+          fs.delete(tmp, true) // the heal above already cleared `old`
           spark.read.parquet(part.getPath.toString)
             .repartition(nOut)
             .write.mode("overwrite").parquet(tmp.toString)
-          // rename-aside swap: data is always in live OR old, never gone
-          if (!fs.rename(part.getPath, old))
-            throw new java.io.IOException(s"compact: failed to move ${part.getPath} aside")
-          if (!fs.rename(tmp, part.getPath)) {
-            fs.rename(old, part.getPath) // restore; tmp is left for inspection
-            throw new java.io.IOException(s"compact: failed to install $tmp; original restored")
-          }
-          fs.delete(old, true)
+          graft.util.RenameAside.swap(fs, tmp, part.getPath, old)
           Some((part.getPath.getName, dataFiles.length, nOut))
         }
       }

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 
+import graft.util.RenameAside
+
 /** Crash-safe publication for writes that target a LIVE dataset
   * directory, independent of the committer algorithm: the job writes
   * into a private staging dir next to the destination, and only after
@@ -15,8 +17,8 @@ import org.apache.spark.sql.DataFrame
   *    committer's commitJob gave direct appends (and the same residual
   *    window: a driver crash mid-rename-loop), restored on top of the
   *    session-wide v2 committer.
-  *  - `overwrite`: whole-dir rename-aside swap (dest → dest.old,
-  *    staging → dest, delete .old) — STRICTLY stronger than either
+  *  - `overwrite`: whole-dir [[graft.util.RenameAside.swap]] with
+  *    `dest.old` as the aside copy — STRICTLY stronger than either
   *    committer version, which both delete the old data before the
   *    new write lands; here a crash at any point leaves a complete
   *    copy (old or new) discoverable on disk.
@@ -83,25 +85,14 @@ object StagedWrite {
     val hconf = df.sparkSession.sparkContext.hadoopConfiguration
     val dest = new Path(destPath)
     val fs = dest.getFileSystem(hconf)
-    // renames are CHECKED: Hadoop rename signals failure by returning
-    // false, and blowing past a false return destroyed data — e.g.
-    // deleting the .old copy after the staging->dest move silently
-    // failed (review r6)
-    def renameOrThrow(src: Path, dst: Path, what: String): Unit =
-      if (!fs.rename(src, dst))
-        throw new java.io.IOException(
-          s"StagedWrite: $what rename $src -> $dst failed")
     // heal a crashed overwrite swap; sweep crashed staging dirs. The
-    // heal rename is CHECKED like every other rename here: ignoring a
-    // false return let an append that followed a crashed overwrite
-    // conclude "dest missing" and publish the append batch as the
-    // ENTIRE dataset, after which the next heal deleted the .old copy
-    // — the only surviving pre-crash data (review r11).
+    // heal is CHECKED like every other rename here: ignoring a false
+    // return let an append that followed a crashed overwrite conclude
+    // "dest missing" and publish the append batch as the ENTIRE
+    // dataset, after which the next heal deleted the .old copy — the
+    // only surviving pre-crash data (review r11).
     val aside = new Path(destPath + ".old")
-    if (fs.exists(aside)) {
-      if (!fs.exists(dest)) renameOrThrow(aside, dest, "crash-heal")
-      else fs.delete(aside, true)
-    }
+    RenameAside.heal(fs, dest, aside)
     sweepStaleStages(fs, dest)
 
     val staging = new Path(destPath + ".stage-" +
@@ -110,18 +101,10 @@ object StagedWrite {
     val w = if (partitionBy.nonEmpty) w0.partitionBy(partitionBy: _*) else w0
     w.parquet(staging.toString)
 
-    if (mode == "overwrite" || !fs.exists(dest)) {
-      if (fs.exists(dest)) {
-        renameOrThrow(dest, aside, "move-aside")
-        try renameOrThrow(staging, dest, "publish")
-        catch { case e: Throwable =>
-          // restore the old copy so the dataset never disappears; the
-          // new data stays in the staging dir for inspection
-          fs.rename(aside, dest); throw e
-        }
-        fs.delete(aside, true)
-      } else renameOrThrow(staging, dest, "publish")
-    } else {
+    if (mode == "overwrite") RenameAside.swap(fs, staging, dest, aside)
+    else if (!fs.exists(dest))
+      RenameAside.renameOrThrow(fs, staging, dest, "StagedWrite publish")
+    else {
       // append: move data files (and partition dirs) in; `_`-prefixed
       // metadata files stay behind with the staging dir. Part-file
       // names embed the write's job UUID, so cross-job collisions
@@ -132,7 +115,8 @@ object StagedWrite {
           val name = st.getPath.getName
           if (!name.startsWith("_")) {
             if (st.isDirectory) move(st.getPath, new Path(dst, name))
-            else renameOrThrow(st.getPath, new Path(dst, name), "append")
+            else RenameAside.renameOrThrow(fs, st.getPath, new Path(dst, name),
+              "StagedWrite append")
           }
         }
       }

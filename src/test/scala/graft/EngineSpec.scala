@@ -2151,7 +2151,7 @@ class EngineSpec extends AnyFunSuite {
     store.teardown("p", Seq(view))
   }
 
-  test("ParquetOnlineStore: an upsert adding a feature the stored files lack fails unresolved, store kept") {
+  test("ParquetOnlineStore: an upsert adding a feature the stored files lack reads it back as absent for older rows") {
     import spark.implicits._
     def view(feats: String*) = FeatureView("v", Seq("user"), feats.map(Feature(_, GraftType.Dbl)),
       Duration.ZERO, DataFrameSource(spark.emptyDataFrame, eventTimestampColumn = "ts"))
@@ -2161,20 +2161,81 @@ class EngineSpec extends AnyFunSuite {
       val path = s"/tmp/graft_add_feature_${java.util.UUID.randomUUID().toString.take(8)}"
       val store = new ParquetOnlineStore(path, numBuckets = 4, smallStoreBytes = small)
       store.upsert("p", view("a"), Seq("user_id"),
-        Seq((1L, ts("2024-01-01 00:00:00"), 1.0)).toDF("user_id", "ts", "a"), "ts", None)
-      val e = intercept[org.apache.spark.sql.AnalysisException] {
-        store.upsert("p", view("a", "b"), Seq("user_id"),
-          Seq((1L, ts("2024-01-02 00:00:00"), 2.0, 3.0), (2L, ts("2024-01-02 00:00:00"), 4.0, 5.0))
-            .toDF("user_id", "ts", "a", "b"), "ts", None)
-      }
-      assert(e.getMessage.contains("`b`"), e.getMessage)
+        Seq((1L, ts("2024-01-01 00:00:00"), 1.0), (3L, ts("2024-01-01 00:00:00"), 6.0))
+          .toDF("user_id", "ts", "a"), "ts", None)
+      store.upsert("p", view("a", "b"), Seq("user_id"),
+        Seq((1L, ts("2024-01-02 00:00:00"), 2.0, 3.0), (2L, ts("2024-01-02 00:00:00"), 4.0, 5.0))
+          .toDF("user_id", "ts", "a", "b"), "ts", None)
       val got = store.read("p", view("a", "b"), Seq("user_id"),
-        Seq(Seq("user_id" -> 1L), Seq("user_id" -> 2L)), Seq("a", "b"))
+        Seq(Seq("user_id" -> 1L), Seq("user_id" -> 2L), Seq("user_id" -> 3L)), Seq("a", "b"))
       assert(got.map(_._2.map { case (f, v) => f -> v.status }) === Seq(
-        Map("a" -> "PRESENT", "b" -> "NOT_FOUND"), Map("a" -> "NOT_FOUND", "b" -> "NOT_FOUND")))
-      assert(got.head._2("a").value === 1.0)
+        Map("a" -> "PRESENT", "b" -> "PRESENT"), Map("a" -> "PRESENT", "b" -> "PRESENT"),
+        Map("a" -> "PRESENT", "b" -> "NOT_FOUND")), s"smallStoreBytes=$small")
+      assert(got.map(_._2.map { case (f, v) => f -> v.value }) === Seq(
+        Map("a" -> 2.0, "b" -> 3.0), Map("a" -> 4.0, "b" -> 5.0),
+        Map("a" -> 6.0, "b" -> null)), s"smallStoreBytes=$small")
+      // a later write into key 1's bucket keeps key 1's b, whichever
+      // bucket's file (with or without b) the read-back takes its
+      // schema from
+      def bucket(k: Long) = graft.online.EntityKeyCodec.hashKey(Seq("user_id" -> k)) % 4
+      val k = Iterator.from(4).map(_.toLong).find(k => bucket(k) == bucket(1L)).get
+      store.upsert("p", view("a", "b"), Seq("user_id"),
+        Seq((k, ts("2024-01-03 00:00:00"), 7.0, 8.0)).toDF("user_id", "ts", "a", "b"), "ts", None)
+      assert(store.read("p", view("a", "b"), Seq("user_id"), Seq(Seq("user_id" -> 1L)),
+        Seq("a", "b")).head._2.map { case (f, v) => f -> v.value } === Map("a" -> 2.0, "b" -> 3.0),
+        s"smallStoreBytes=$small")
       store.teardown("p", Seq(view("a", "b")))
     }
+  }
+
+  test("ParquetOnlineStore: delete and expire keep a feature column only some buckets' files have") {
+    import spark.implicits._
+    def view(feats: String*) = FeatureView("v", Seq("user"), feats.map(Feature(_, GraftType.Dbl)),
+      Duration.ZERO, DataFrameSource(spark.emptyDataFrame, eventTimestampColumn = "ts"))
+    def bucket(k: Long) = graft.online.EntityKeyCodec.hashKey(Seq("user_id" -> k)) % 4
+    // the touched-bucket path writes `b` into one bucket only; every
+    // bucket takes a turn, so in most rounds the table's first file
+    // (whose footer readTable uses) lacks `b`
+    for (target <- 0L until 4L; expire <- Seq(false, true)) {
+      val Seq(k, other) = Iterator.from(1).map(_.toLong).filter(bucket(_) == target).take(2).toSeq
+      val path = s"/tmp/graft_mixed_${java.util.UUID.randomUUID().toString.take(8)}"
+      val store = new ParquetOnlineStore(path, numBuckets = 4, smallStoreBytes = 0L)
+      store.upsert("p", view("a"), Seq("user_id"),
+        (1L to 12L).map(i => (i, ts("2024-01-01 00:00:00"), i.toDouble)).toDF("user_id", "ts", "a"), "ts", None)
+      store.upsert("p", view("a", "b"), Seq("user_id"),
+        Seq((k, ts("2024-01-02 00:00:00"), 1.0, 9.0)).toDF("user_id", "ts", "a", "b"), "ts", None)
+      if (expire)
+        assert(store.expire(spark, "p", view("a", "b"), Seq("user_id"), "ts", ts("2024-01-02 00:00:00")) === 12L - 1)
+      else store.delete("p", view("a", "b"), Seq("user_id"), Seq(other).toDF("user_id"))
+      val got = store.read("p", view("a", "b"), Seq("user_id"), Seq(Seq("user_id" -> k)), Seq("b"))
+      assert(got.head._2("b").value === 9.0, s"bucket $target, expire=$expire")
+      store.teardown("p", Seq(view("a", "b")))
+    }
+  }
+
+  test("ParquetOnlineStore: a delete or expire of the last rows drops the table; later writes still work") {
+    import spark.implicits._
+    val view = FeatureView("v", Seq("user"), Seq(Feature("a", GraftType.Dbl)),
+      Duration.ZERO, DataFrameSource(spark.emptyDataFrame, eventTimestampColumn = "ts"))
+    val t = ts("2024-01-01 00:00:00")
+    val path = s"/tmp/graft_emptied_${java.util.UUID.randomUUID().toString.take(8)}"
+    val store = new ParquetOnlineStore(path, numBuckets = 4)
+    def put(k: Long, at: Timestamp): Unit = store.upsert("p", view, Seq("user_id"),
+      Seq((k, at, k.toDouble)).toDF("user_id", "ts", "a"), "ts", None)
+    def a(k: Long) = store.read("p", view, Seq("user_id"), Seq(Seq("user_id" -> k)), Seq("a")).head._2("a")
+    put(1L, t)
+    store.delete("p", view, Seq("user_id"), Seq(1L).toDF("user_id"))
+    assert(!new java.io.File(s"$path/p/v").exists(), "a table with no rows left must be dropped")
+    store.delete("p", view, Seq("user_id"), Seq(1L).toDF("user_id"))
+    assert(store.expire(spark, "p", view, Seq("user_id"), "ts", t) === 0L)
+    put(2L, t)
+    assert(a(2L).value === 2.0)
+    assert(store.expire(spark, "p", view, Seq("user_id"), "ts", ts("2024-01-02 00:00:00")) === 1L)
+    assert(!new java.io.File(s"$path/p/v").exists(), "an expire of the last rows must drop the table")
+    put(3L, t)
+    assert(a(3L).value === 3.0)
+    assert(a(2L).status === "NOT_FOUND")
+    store.teardown("p", Seq(view))
   }
 
   test("ParquetOnlineStore: an empty FIRST upsert creates no table; later upserts still work") {
