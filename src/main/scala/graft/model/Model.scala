@@ -35,6 +35,10 @@ final case class FeatureView(
     online: Boolean = true,
     tags: Map[String, String] = Map.empty) {
   require(name.nonEmpty, "feature view name must be non-empty")
+  // checked here, not per join route, so every route (and a registry
+  // load) refuses it alike: on the declarative route a negative window
+  // matches nothing and would read as all-null features
+  require(!ttl.isNegative, s"feature view $name: ttl must be >= 0 (0 = unbounded), got $ttl")
   def featureNames: Seq[String] = features.map(_.name)
 
   /** Subset projection, the reference's FeatureView.__getitem__

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Forward as-of (label) join — the time-reversed dual of
@@ -13,12 +13,11 @@ import org.apache.spark.sql.functions._
   * backward join is inclusive for exactly the symmetric reason,
   * bigquery.py:613-617).
   *
-  * Same scale shape as the backward join: narrow candidate projection,
-  * equi join on keys + range predicate, then a min_by partial
-  * aggregation per entity row — map-side combinable, no window, so a
-  * hot key collapses per map task before the shuffle. The label scan is
-  * bounded by [min(entity_ts), max(entity_ts) + horizon] literals,
-  * pushed to parquet row-group skipping.
+  * Same scale shape as the backward join: the shared winner kernel
+  * ([[PointInTimeJoin.winners]]) with `min_by`, so the earliest outcome
+  * wins and a hot key collapses per map task before the shuffle. The
+  * label scan is bounded by [min(entity_ts), max(entity_ts) + horizon]
+  * literals, pushed to parquet row-group skipping.
   */
 object LabelJoin {
 
@@ -49,11 +48,7 @@ object LabelJoin {
     require(outClash.isEmpty,
       s"entity df already has output column(s) ${outClash.mkString(", ")} — " +
         "rename or drop them before the label join")
-    val rowId = "__graft_row_id"
-    val stampedRaw = entityDf.withColumn(rowId, monotonically_increasing_id())
-    val stamped =
-      if (PointInTimeJoin.needsRowIdPinning(entityDf)) stampedRaw.localCheckpoint()
-      else stampedRaw
+    val (stamped, rowId) = PointInTimeJoin.stamp(entityDf)
 
     // Scan bounds, computed once (the forward mirror of the backward
     // join's O5 pruning): labels live in (min_ts, max_ts + horizon].
@@ -63,35 +58,20 @@ object LabelJoin {
     // never drops a match.
     val (mnTs, mxTs) = PointInTimeJoin.entityBounds(stamped, entityTsCol)
 
-    val left = stamped
-      .select((rowId +: entityTsCol +: joinKeys).distinct.map(col): _*).alias("__l")
-    def L(c: String): Column = col(s"__l.$c")
-    def R(c: String): Column = col(s"__r.$c")
-
     val ordCols = (labelTsCol +: tieBreaks).distinct
     var lab = labelDf.select((joinKeys ++ ordCols ++ labelCols).distinct.map(col): _*)
     if (mnTs != null) lab = lab.filter(col(labelTsCol) > lit(mnTs))
     if (mxTs != null) lab = lab.filter(col(labelTsCol) <=
       lit(java.sql.Timestamp.from(mxTs.toInstant.plus(horizon))))
-    val labAliased = lab.alias("__r")
-
     val horizonInterval = PointInTimeJoin.durationInterval(horizon)
-    val window: Column = R(labelTsCol) > L(entityTsCol) &&
-      R(labelTsCol) <= L(entityTsCol) + horizonInterval
-    val keyCond = joinKeys.map(k => L(k) <=> R(k)).reduce(_ && _)
-    val candidates = left.join(labAliased, keyCond && window, "inner")
-
-    // Earliest-outcome winner per entity row: min_by over (label_ts,
-    // tiebreaks, payload) — the payload tail pins determinism even
-    // without user tiebreaks, mirroring the backward join's max_by.
-    val payload = struct((labelCols.map(R) :+ R(labelTsCol).as("__label_ts")): _*)
-    val ordKey = struct((ordCols.map(R) :+ payload.as("__payload")): _*)
-    val winners = candidates
-      .groupBy(L(rowId).as(rowId))
-      .agg(min_by(payload, ordKey).as("__win"))
-      .select(col(rowId) +:
-        labelCols.map(f => col(s"__win.$f").as(f)) :+
-        col("__win.__label_ts").as("label_ts"): _*)
+    // earliest outcome strictly after the anchor: (label_ts, tiebreaks)
+    // ascending, the payload tail pinning determinism
+    val winners = PointInTimeJoin.winners(stamped, rowId, entityTsCol, joinKeys,
+      lab, labelTsCol,
+      (l, r) => r(labelTsCol) > l(entityTsCol) &&
+        r(labelTsCol) <= l(entityTsCol) + horizonInterval,
+      (_, r) => ordCols.map(r),
+      labelCols.map(f => f -> f) :+ ("label_ts" -> labelTsCol), min_by)
 
     stamped.join(winners, Seq(rowId), "left").drop(rowId)
   }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Nearest as-of join — the third direction of the as-of family next
@@ -13,10 +13,9 @@ import org.apache.spark.sql.functions._
   *
   * Same scale shape as its two siblings: the feature scan is bounded
   * by [min(entity_ts) − tolerance, max(entity_ts) + tolerance]
-  * literals (pushed to parquet), candidates come from one equi join on
-  * the keys plus the range predicate, and the winner per entity row is
-  * a min_by partial aggregation — map-side combinable, no window, no
-  * sort of the feature table.
+  * literals (pushed to parquet), and the winner per entity row comes
+  * from the shared kernel ([[PointInTimeJoin.winners]]) with `min_by`
+  * over a (distance, direction) order prefix.
   */
 object NearestJoin {
 
@@ -37,20 +36,11 @@ object NearestJoin {
     require(outClash.isEmpty,
       s"entity df already has output column(s) ${outClash.mkString(", ")} — " +
         "rename or drop them before the nearest join")
-    val rowId = "__graft_row_id"
-    val stampedRaw = entityDf.withColumn(rowId, monotonically_increasing_id())
-    val stamped =
-      if (PointInTimeJoin.needsRowIdPinning(entityDf)) stampedRaw.localCheckpoint()
-      else stampedRaw
+    val (stamped, rowId) = PointInTimeJoin.stamp(entityDf)
 
     // shared zero-job footer-bounds path (agg fallback) — a footer
     // SUPERSET of the true bounds only widens the ±tolerance window
     val (mnTs, mxTs) = PointInTimeJoin.entityBounds(stamped, entityTsCol)
-
-    val left = stamped
-      .select((rowId +: entityTsCol +: joinKeys).distinct.map(col): _*).alias("__l")
-    def L(c: String): Column = col(s"__l.$c")
-    def R(c: String): Column = col(s"__r.$c")
 
     val ordCols = (featureTsCol +: tieBreaks).distinct
     var feat = featureDf.select((joinKeys ++ ordCols ++ featureCols).distinct.map(col): _*)
@@ -58,28 +48,19 @@ object NearestJoin {
       lit(java.sql.Timestamp.from(mnTs.toInstant.minus(tolerance))))
     if (mxTs != null) feat = feat.filter(col(featureTsCol) <=
       lit(java.sql.Timestamp.from(mxTs.toInstant.plus(tolerance))))
-    val featAliased = feat.alias("__r")
-
     val tolInterval = PointInTimeJoin.durationInterval(tolerance)
-    val window: Column =
-      R(featureTsCol) >= L(entityTsCol) - tolInterval &&
-        R(featureTsCol) <= L(entityTsCol) + tolInterval
-    val keyCond = joinKeys.map(k => L(k) <=> R(k)).reduce(_ && _)
-    val candidates = left.join(featAliased, keyCond && window, "inner")
-
-    // winner order: distance, then direction (backward first), then the
-    // user tiebreaks, then the payload tail that pins determinism
-    val absDiff = abs(unix_micros(R(featureTsCol)) - unix_micros(L(entityTsCol)))
-    val dirFlag = when(R(featureTsCol) <= L(entityTsCol), 0).otherwise(1)
-    val payload = struct((featureCols.map(R) :+ R(featureTsCol).as("__matched_ts")): _*)
-    val ordKey = struct(
-      absDiff +: dirFlag +: ordCols.map(R) :+ payload.as("__payload"): _*)
-    val winners = candidates
-      .groupBy(L(rowId).as(rowId))
-      .agg(min_by(payload, ordKey).as("__win"))
-      .select(col(rowId) +:
-        featureCols.map(f => col(s"__win.$f").as(f)) :+
-        col("__win.__matched_ts").as("matched_ts"): _*)
+    val winners = PointInTimeJoin.winners(stamped, rowId, entityTsCol, joinKeys,
+      feat, featureTsCol,
+      (l, r) => r(featureTsCol) >= l(entityTsCol) - tolInterval &&
+        r(featureTsCol) <= l(entityTsCol) + tolInterval,
+      // winner order: distance, then direction (backward first), then
+      // the user tiebreaks; the kernel appends the payload tail
+      (l, r) => {
+        val absDiff = abs(unix_micros(r(featureTsCol)) - unix_micros(l(entityTsCol)))
+        val dirFlag = when(r(featureTsCol) <= l(entityTsCol), 0).otherwise(1)
+        absDiff +: dirFlag +: ordCols.map(r)
+      },
+      featureCols.map(f => f -> f) :+ ("matched_ts" -> featureTsCol), min_by)
 
     stamped.join(winners, Seq(rowId), "left").drop(rowId)
   }

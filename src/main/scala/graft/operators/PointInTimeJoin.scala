@@ -16,27 +16,15 @@ import graft.model._
   * join keys; ties on event_ts broken by max created_ts; unmatched
   * entity rows keep null features (left outer).
   *
-  * Spark-first formulation, chosen for 100 TB scale:
-  *
-  *   1. Stamp the entity df with a synthetic row id (the BQ template's
-  *      entity_row_unique_id CONCAT at bigquery.py:559-569 is a row
-  *      fingerprint; a generated id is safe under duplicate entity rows).
-  *   2. Compute the entity df's (min,max) event-ts once and prune the
-  *      feature scan to [min - ttl, max] (O5, bigquery.py:418-437 +
-  *      590-603). The filter lands in the parquet scan as a pushed
-  *      predicate / row-group skip — at 100 TB this is the difference
-  *      between scanning a week and scanning years.
-  *   3. Equi-join on the entity keys with the per-row as-of range as a
-  *      post-join predicate — Catalyst plans a hash/sort-merge join on
-  *      the keys (NOT a theta join), with AQE free to broadcast the
-  *      smaller side.
-  *   4. Reduce candidates to the as-of row per entity row with
-  *      groupBy(rowId).agg(max_by(features, orderKey)). max_by is a
-  *      declarative aggregate with map-side partial aggregation — unlike
-  *      the row_number() window used by the reference's SQL template,
-  *      candidates collapse to one row per group *before* the shuffle,
-  *      so a hot entity with 10^6 candidate rows ships one row.
-  *   5. Left-join the winners back to the entity df by row id.
+  * Spark-first formulation, chosen for 100 TB scale: compute the
+  * entity df's (min,max) event-ts once and prune the feature scan to
+  * [min - ttl, max] (O5, bigquery.py:418-437 + 590-603) — the filter
+  * lands in the parquet scan as a pushed predicate / row-group skip, at
+  * 100 TB the difference between scanning a week and scanning years.
+  * All-TimestampType views then chain full-width sort-merge as-of
+  * merges ([[graft.plans.AsOfJoin]]); the rest stamp a row id
+  * ([[stamp]]), compute each view's winners ([[winners]]) and
+  * left-join them back by row id.
   *
   * Determinism: the reference is nondeterministic under duplicate
   * (entity, event_ts, created_ts) rows (BQ ANY_VALUE,
@@ -178,20 +166,7 @@ object PointInTimeJoin {
       }
     }
 
-    val rowId = "__graft_row_id"
-    // monotonically_increasing_id is evaluated independently in every plan
-    // branch that references it; if the entity df's plan can produce rows
-    // in a different order across re-executions (any shuffle's reduce-side
-    // arrival order, round-robin repartition, limit, sample, or a
-    // nondeterministic expression) the candidate projection and the final
-    // join-back could disagree on ids. localCheckpoint pins the ids once —
-    // both branches read the same materialized blocks. For the common
-    // replay-stable shape (file/local scan + filter + project + union) the
-    // ids are already reproducible and the materialization is skipped.
-    val stampedRaw = entityDf.withColumn(rowId, monotonically_increasing_id())
-    val stamped =
-      if (needsRowIdPinning(entityDf)) stampedRaw.localCheckpoint()
-      else stampedRaw
+    val (stamped, rowId) = stamp(entityDf)
 
     // O5 bounds (bigquery.py:418-437): computed ONCE from the entity df —
     // they are over entityTsCol, which is invariant across the fold;
@@ -206,23 +181,21 @@ object PointInTimeJoin {
     // views, so the per-view subtrees are independent: Spark schedules
     // their candidate joins as parallel stages, and view N's plan does
     // not re-traverse views 1..N-1's join-backs.
+    val hinted = strat == graft.plans.AsOfJoin.Broadcast
     val enriched = views.foldLeft(stamped) { (acc, vj) =>
       val w = viewWinners(stamped, vj, entityTsCol, rowId, fullFeatureNames,
-        mnTs, mxTs, strat)
+        mnTs, mxTs, hinted)
       // winners are entity-cardinality: under the broadcast route the
       // join-backs are hinted broadcast hash joins, so the whole
       // enrichment is ONE codegen pipeline over the stamped frame —
       // scan → BHJ(w1) → BHJ(w2) → … with zero exchanges
-      acc.join(
-        if (strat == graft.plans.AsOfJoin.Broadcast) broadcast(w) else w,
-        Seq(rowId), "left")
+      acc.join(if (hinted) broadcast(w) else w, Seq(rowId), "left")
     }
     val result = enriched.drop(rowId)
     // the all-eligible broadcast shape is as static as the chain (every
     // join hinted, the only exchanges are the tiny per-view winner
     // reductions): engine-owned AQE policy applies (StaticPlan)
-    if (chainable && strat == graft.plans.AsOfJoin.Broadcast)
-      graft.plans.StaticPlan.applyPolicy(result)
+    if (chainable && hinted) graft.plans.StaticPlan.applyPolicy(result)
     else result
   }
 
@@ -337,7 +310,12 @@ object PointInTimeJoin {
   }
 
   /** One view's as-of winners keyed by row id (O1/O4/O5/O6): the caller
-    * left-joins the result back to the accumulated frame. */
+    * left-joins the result back to the accumulated frame. Eligible views
+    * under the held sort-merge strategy ride the sort-merge exec on the
+    * NARROW (rowId, ts, keys) entity projection — no candidate rows
+    * shuffle; every other view runs [[winners]], hinted under the held
+    * broadcast strategy so the candidate join is a build-on-entity BHJ
+    * and the feature scan is never exchanged. */
   private def viewWinners(
       stamped: DataFrame,
       vj: ViewJoin,
@@ -346,96 +324,139 @@ object PointInTimeJoin {
       fullFeatureNames: Boolean,
       mnTs: java.sql.Timestamp,
       mxTs: java.sql.Timestamp,
-      strat: String = graft.plans.AsOfJoin.SortMerge): DataFrame = {
+      hinted: Boolean): DataFrame = {
     val ViewJoin(view, joinKeys, features, _, tieBreaks) = vj
-    val ttl = view.ttl
     val (featPrepared, tsCol, createdCol) = prepareFeature(vj, mnTs, mxTs)
     val outName: String => String =
       f => if (fullFeatureNames) s"${view.name}__$f" else f
+    val ord = (createdCol.toSeq ++ tieBreaks).distinct.filterNot(_ == tsCol)
 
-    // Eligible views ride an as-of winner computation on the NARROW
-    // (rowId, ts, keys) entity projection: no candidate rows shuffle,
-    // and the winners join back by rowId exactly like the declarative
-    // branch (unmatched rows carry nulls, which the left join-back
-    // preserves identically). Route by the held strategy: broadcast
-    // (feature scan never exchanged or sorted — see
-    // AsOfJoin.broadcastWinners) or the sort-merge exec.
-    if (sortMergeEligible(stamped, vj, entityTsCol) &&
+    if (!hinted && sortMergeEligible(stamped, vj, entityTsCol) &&
         features.intersect((rowId +: entityTsCol +: joinKeys).distinct).isEmpty) {
       val leftNarrow =
         stamped.select((rowId +: entityTsCol +: joinKeys).distinct.map(col): _*)
-      val ord = (createdCol.toSeq ++ tieBreaks).distinct.filterNot(_ == tsCol)
-      if (strat == graft.plans.AsOfJoin.Broadcast)
-        return graft.plans.AsOfJoin.broadcastWinners(leftNarrow, featPrepared,
-          joinKeys, entityTsCol, tsCol, ttl, ord, features, rowId, outName)
       // join0: the winner frame is a SUBTREE of the outer enrichment —
       // the OUTER join() owns the AQE policy for the final frame
       // (review r12)
-      val out = graft.plans.AsOfJoin.join0(leftNarrow, featPrepared, joinKeys,
-        entityTsCol, tsCol, ttl, ord, features,
-        strategy = graft.plans.AsOfJoin.SortMerge)
-      return out.select(col(rowId) +: features.map(f => col(f).as(outName(f))): _*)
+      graft.plans.AsOfJoin.join0(leftNarrow, featPrepared, joinKeys,
+          entityTsCol, tsCol, view.ttl, ord, features,
+          strategy = graft.plans.AsOfJoin.SortMerge)
+        .select(col(rowId) +: features.map(f => col(f).as(outName(f))): _*)
+    } else {
+      // NOTE (measured twice, rounds 3+4): do NOT rebalance() either join
+      // side here. The single-row-group test files do serialize the
+      // candidate join into one ~1.4 s task, but inserting a round-robin
+      // exchange costs MORE (+1.3-1.9 s/query) — an extra shuffle, a
+      // broken scan→join codegen pipeline, and an extra AQE replan per
+      // view. On a production many-file table the scan parallelizes by
+      // itself; the single-task stage is a toy-data artifact, not a plan
+      // defect.
+      winners(stamped, rowId, entityTsCol, joinKeys, featPrepared, tsCol,
+        backwardWindow(entityTsCol, tsCol, view.ttl),
+        (_, r) => (tsCol +: ord).map(r),
+        features.map(f => outName(f) -> f), max_by, hinted)
     }
+  }
 
-    // Candidate generation only needs (rowId, keys, ts) — shuffle the
-    // narrow projection, not the whole entity row. Alias both sides so
-    // self-joins (entity df built from the feature table itself)
-    // resolve unambiguously.
-    val left = stamped.select((rowId +: entityTsCol +: joinKeys).distinct.map(col): _*).alias("__l")
-    def L(c: String): Column = col(s"__l.$c")
-    def R(c: String): Column = col(s"__r.$c")
-
-    val ordCols: Seq[String] = ((tsCol +: createdCol.toSeq) ++ tieBreaks).distinct
-    // NOTE (measured twice, rounds 3+4): do NOT rebalance() either join
-    // side here. The single-row-group test files do serialize the
-    // candidate join into one ~1.4 s task, but inserting a round-robin
-    // exchange costs MORE (+1.3-1.9 s/query) — an extra shuffle, a
-    // broken scan→join codegen pipeline, and an extra AQE replan per
-    // view. On a production many-file table the scan parallelizes by
-    // itself; the single-task stage is a toy-data artifact, not a plan
-    // defect.
-    val featAliased = featPrepared.alias("__r")
-
-    // Per-row as-of predicate (inclusive on both edges — the reference's
-    // SQL semantics, bigquery.py:613-617).
-    val asOf: Column = {
-      val upper = R(tsCol) <= L(entityTsCol)
+  /** Backward as-of window: `ts <= entity_ts` and, when ttl is nonzero,
+    * `ts >= entity_ts - ttl` — inclusive on both edges (the reference's
+    * SQL semantics, bigquery.py:613-617). Micros, not whole seconds: a
+    * sub-second TTL must bound the window identically here and on the
+    * sort-merge exec (which compares raw micros), or the routes disagree
+    * on winners. */
+  private[graft] def backwardWindow(
+      entityTsCol: String, featureTsCol: String, ttl: Duration): (Side, Side) => Column =
+    (l, r) => {
+      val upper = r(featureTsCol) <= l(entityTsCol)
       if (ttl.isZero) upper
-      // micros, not whole seconds: a sub-second TTL must bound the
-      // window identically here and on the sort-merge path (which
-      // compares raw micros), or the two paths disagree on winners
-      else upper && R(tsCol) >= (L(entityTsCol) - durationInterval(ttl))
+      else upper && r(featureTsCol) >= (l(entityTsCol) - durationInterval(ttl))
     }
-    val keyCond = joinKeys.map(k => L(k) <=> R(k)).reduce(_ && _)
-    // held broadcast route: hint the narrow entity side so the candidate
-    // join is a build-on-entity BHJ (no feature-side exchange) even when
-    // this view fell to the declarative branch
-    val leftHinted =
-      if (strat == graft.plans.AsOfJoin.Broadcast) broadcast(left) else left
-    val candidates = leftHinted.join(featAliased, keyCond && asOf, "inner")
 
-    // As-of winner per entity row: max_by over a lexicographic struct
-    // (event_ts desc, created_ts desc, tiebreaks desc, then the feature
-    // payload itself as a stable final tiebreak — the reference's
-    // ANY_VALUE here is nondeterministic, bigquery.py:645-660; we pin
-    // max-payload). Partial-agg friendly — no window, no second wide
-    // shuffle.
-    // payload = the feature columns ONLY: tsCol is the first ordCol, so
-    // candidates tying on ordCols always tie on it too — a __feat_ts
-    // member could never discriminate and was dead weight in every
-    // map-side partial, and it made this total order STRUCTURALLY
-    // different from the sort-merge exec's (ordCols, featureCols)
-    // suffix for no reason (review r12). Kept only for the degenerate
-    // zero-feature view, where struct() would be invalid.
-    val payload =
-      if (features.isEmpty) struct(R(tsCol).as("__feat_ts"))
-      else struct(features.map(R): _*)
-    val ordKey = struct((ordCols.map(R) :+ payload.as("__payload")): _*)
-    val winners = candidates
-      .groupBy(L(rowId).as(rowId))
-      .agg(max_by(payload, ordKey).as("__w"))
+  /** A column accessor for one side of the [[winners]] candidate join. */
+  private[graft] type Side = String => Column
 
-    winners.select(
-      (col(rowId) +: features.map(f => col(s"__w.$f").as(outName(f)))): _*)
+  /** `entity` plus a fresh row-id column, and that column's name — the
+    * id every winner frame is keyed by (the BQ template's
+    * entity_row_unique_id CONCAT at bigquery.py:559-569 is a row
+    * fingerprint; a generated id is safe under duplicate entity rows).
+    *
+    * monotonically_increasing_id is evaluated independently in every
+    * plan branch that references it; if the entity df's plan can produce
+    * rows in a different order across re-executions (any shuffle's
+    * reduce-side arrival order, round-robin repartition, limit, sample,
+    * or a nondeterministic expression) the candidate projection and the
+    * join-back could disagree on ids. localCheckpoint pins the ids once —
+    * both branches read the same materialized blocks. For the common
+    * replay-stable shape ([[needsRowIdPinning]]) the ids are already
+    * reproducible and the materialization is skipped. This is the only
+    * place in the engine that stamps row ids. */
+  private[graft] def stamp(entity: DataFrame): (DataFrame, String) = {
+    val rowId = Iterator.from(0).map(i => s"__graft_row_id$i")
+      .find(n => !entity.columns.contains(n)).get
+    val raw = entity.withColumn(rowId, monotonically_increasing_id())
+    (if (needsRowIdPinning(entity)) raw.localCheckpoint() else raw, rowId)
+  }
+
+  /** The as-of family's winner kernel: for each row of `stamped`
+    * (identified by its `rowId` column, from [[stamp]]), the `feature`
+    * row with the same `keys` inside `window` that `pick` (`max_by` or
+    * `min_by`) selects under the order `order ++ payload`. Emits
+    * (rowId, payload output names…) — one row per MATCHED entity row;
+    * the caller left-joins it back.
+    *
+    * Plan shape (the 100 TB argument):
+    *   - the candidate join takes only the NARROW (rowId, ts, keys)
+    *     entity projection and is an equi-join on the keys with the
+    *     window as a post-join predicate — Catalyst plans a hash or
+    *     sort-merge join, not a theta join. Keys match with `<=>`, so
+    *     null keys match null keys (the sort-merge exec's natural
+    *     ordering does the same). `hint` broadcasts the narrow entity
+    *     side: the feature scan then streams through a BHJ and is never
+    *     exchanged or sorted.
+    *   - the reduction is `groupBy(rowId).agg(pick(payload, struct(order,
+    *     payload)))`, a declarative aggregate with map-side partial
+    *     aggregation — unlike the reference SQL template's row_number()
+    *     window, candidates collapse per map task before the shuffle, so
+    *     a hot entity with 10^6 candidate rows ships one row.
+    *   - the payload is the last member of the order key, so residual
+    *     ties on `order` resolve to the payload-max (or -min) row instead
+    *     of the reference's nondeterministic ANY_VALUE
+    *     (bigquery.py:645-660). It is the same total order the sort-merge
+    *     exec's required right ordering realizes, so every route returns
+    *     the same rows.
+    *
+    * `feature` gets fresh `__r_*` expression ids, so self-joins (an
+    * entity df built from the feature table) resolve unambiguously.
+    * `payload` pairs each output name with its feature column (extra
+    * outputs such as `label_ts` ride here). A zero-column payload
+    * carries the feature ts instead: struct() would be invalid. */
+  private[graft] def winners(
+      stamped: DataFrame,
+      rowId: String,
+      entityTsCol: String,
+      keys: Seq[String],
+      feature: DataFrame,
+      featureTsCol: String,
+      window: (Side, Side) => Column,
+      order: (Side, Side) => Seq[Column],
+      payload: Seq[(String, String)],
+      pick: (Column, Column) => Column,
+      hint: Boolean = false): DataFrame = {
+    val left = stamped.select((rowId +: entityTsCol +: keys).distinct.map(col): _*)
+    val right = feature.select(feature.columns.toSeq.map(c => col(c).as(s"__r_$c")): _*)
+    val l: Side = c => left(c)
+    val r: Side = c => right(s"__r_$c")
+    val keyCond = keys.map(k => l(k) <=> r(k)).reduce(_ && _)
+    val candidates = (if (hint) broadcast(left) else left)
+      .join(right, keyCond && window(l, r), "inner")
+    val fields =
+      if (payload.isEmpty) Seq(r(featureTsCol).as("__feat_ts"))
+      else payload.zipWithIndex.map { case ((_, c), i) => r(c).as(s"_$i") }
+    val value = struct(fields: _*)
+    candidates
+      .groupBy(l(rowId).as(rowId))
+      .agg(pick(value, struct(order(l, r) :+ value.as("__payload"): _*)).as("__w"))
+      .select(col(rowId) +: payload.zipWithIndex.map { case ((out, _), i) =>
+        col(s"__w._$i").as(out) }: _*)
   }
 }

@@ -233,11 +233,13 @@ case class AsOfJoinExec(
   *  - `broadcast` — for the dominant production shape, entity frame ≪
   *    feature table (reference `bigquery.py:605-622` uploads the tiny
   *    entity table and joins it against the warehouse fact table).
-  *    The feature table is NEVER shuffled and NEVER sorted: the narrow
-  *    entity projection (rowId, ts, keys) is broadcast, the feature
-  *    scan streams through a broadcast hash join whose candidates
-  *    collapse map-side into per-rowId `max_by` partials, and the only
-  *    exchange moves ≤ |entity| × partitions pre-reduced winner rows.
+  *    The feature table is NEVER shuffled and NEVER sorted: the
+  *    family's winner kernel ([[graft.operators.PointInTimeJoin.winners]],
+  *    hinted) broadcasts the narrow entity projection (rowId, ts, keys),
+  *    the feature scan streams through a broadcast hash join whose
+  *    candidates collapse map-side into per-rowId `max_by` partials, and
+  *    the only exchange moves ≤ |entity| × partitions pre-reduced winner
+  *    rows.
   *    At 100 TB this strictly dominates the sort-merge shape whenever
   *    the entity frame fits the broadcast threshold — shuffling and
   *    sorting the accumulated 100 TB feature scan vs not touching it.
@@ -260,56 +262,29 @@ case class AsOfJoinExec(
   * StaticPlan).
   */
 object AsOfJoin {
-  import org.apache.spark.sql.functions.{broadcast, col, max_by, monotonically_increasing_id, struct}
+  import org.apache.spark.sql.functions.{broadcast, col, max_by}
   import org.apache.spark.sql.graftshim.ColumnShim
+  import graft.operators.PointInTimeJoin
 
   val Auto = "auto"
   val SortMerge = "sortmerge"
   val Broadcast = "broadcast"
 
-  /** Route for a given (left, right) pair: session override via
-    * `graft.asof.strategy`, else plan-stat gated broadcast. Stats are
-    * the OPTIMIZED plans' sizeInBytes — for file scans that is file
-    * size scaled by column pruning, the same signal Spark's own
-    * broadcast planning uses; unknown/huge estimates fall to sortmerge
-    * (never an OOM-risking broadcast on a guess).
-    *
-    * TWO gates, both required, both measured (BENCH_NOTES r12):
-    *  - left ≤ `graft.asof.broadcastThreshold` (default: the session's
-    *    autoBroadcastJoinThreshold) — the broadcast must fit executor
-    *    memory, same bound Spark applies to hinted joins;
-    *  - right ≥ `graft.asof.broadcastRightMin` (default 1 GB) — the
-    *    route's win is the feature-side exchange+sort it deletes, and
-    *    that win must exceed its fixed costs (TWO broadcast builds and
-    *    extra serialized stages, ~0.5–0.9 s measured). Calibrated on
-    *    tools/AsofScale (150k-row entity held fixed, feature side
-    *    grown through the ScaleCheck replicas, min-of-3 on local[32]):
-    *      1×   (11 MB):  sortmerge 0.59 s / 17.5 MB shuffled,
-    *                     broadcast 1.07 s /  2.3 MB shuffled
-    *      10×  (110 MB): sortmerge 1.03 s / 155 MB shuffled,
-    *                     broadcast 1.26 s /  3.4 MB shuffled
-    *      100× (1.1 GB): sortmerge 5.3 s / 1566 MB shuffled,
-    *                     broadcast 6.5 s /  3.4 MB shuffled (465×
-    *                     fewer bytes; partials bound = |entity|×tasks)
-    *    On a single-JVM local master the deleted exchange is RAM-speed
-    *    so sortmerge keeps a wall edge at every bench scale — but the
-    *    shuffled-bytes column is what crosses the NETWORK on a real
-    *    cluster, where this operator's 100 TB deployments live. The
-    *    1 GB default is where the deleted shuffle decisively dominates
-    *    the fixed costs under any disk/network-backed shuffle while
-    *    local walls stay within ~20%; single-node-only users can raise
-    *    it (or pin `graft.asof.strategy=sortmerge`). */
   /** The session's pinned strategy, if `graft.asof.strategy` names one
     * — lets callers skip the plan-stat probes entirely when the route
     * is forced (the stats require an analyze+optimize pass per frame,
     * wasted work under a pinned session). */
   def pinnedStrategy(spark: org.apache.spark.sql.SparkSession): Option[String] =
-    spark.conf.get("graft.asof.strategy", Auto).toLowerCase match {
+    parseStrategy("graft.asof.strategy", spark.conf.get("graft.asof.strategy", Auto))
+
+  /** `auto` → None, a named route → Some(route); anything else fails
+    * loudly, naming the setting or parameter `what` it came from. */
+  private def parseStrategy(what: String, value: String): Option[String] =
+    value.toLowerCase match {
       case Auto => None
-      case s =>
-        require(s == SortMerge || s == Broadcast,
-          s"graft.asof.strategy must be auto|sortmerge|broadcast, got $s")
-        Some(s)
+      case s @ (SortMerge | Broadcast) => Some(s)
+      case s => throw new IllegalArgumentException(
+        s"$what must be auto|sortmerge|broadcast, got $s")
     }
 
   /** Per-payload-column broadcast width: fixed-width types answer from
@@ -356,11 +331,42 @@ object AsOfJoin {
     out.toIndexedSeq
   }
 
+  /** Route for a given (left, right) pair: session override via
+    * `graft.asof.strategy`, else plan-stat gated broadcast. Stats are
+    * the OPTIMIZED plans' sizeInBytes — for file scans that is file
+    * size scaled by column pruning, the same signal Spark's own
+    * broadcast planning uses; unknown/huge estimates fall to sortmerge
+    * (never an OOM-risking broadcast on a guess).
+    *
+    * TWO gates, both required, both measured (BENCH_NOTES r12):
+    *  - left ≤ `graft.asof.broadcastThreshold` (default: the session's
+    *    autoBroadcastJoinThreshold) — the broadcast must fit executor
+    *    memory, same bound Spark applies to hinted joins;
+    *  - right ≥ `graft.asof.broadcastRightMin` (default 1 GB) — the
+    *    route's win is the feature-side exchange+sort it deletes, and
+    *    that win must exceed its fixed costs (TWO broadcast builds and
+    *    extra serialized stages, ~0.5–0.9 s measured). Calibrated on
+    *    tools/AsofScale (150k-row entity held fixed, feature side
+    *    grown through the ScaleCheck replicas, min-of-3 on local[32]):
+    *      1×   (11 MB):  sortmerge 0.59 s / 17.5 MB shuffled,
+    *                     broadcast 1.07 s /  2.3 MB shuffled
+    *      10×  (110 MB): sortmerge 1.03 s / 155 MB shuffled,
+    *                     broadcast 1.26 s /  3.4 MB shuffled
+    *      100× (1.1 GB): sortmerge 5.3 s / 1566 MB shuffled,
+    *                     broadcast 6.5 s /  3.4 MB shuffled (465×
+    *                     fewer bytes; partials bound = |entity|×tasks)
+    *    On a single-JVM local master the deleted exchange is RAM-speed
+    *    so sortmerge keeps a wall edge at every bench scale — but the
+    *    shuffled-bytes column is what crosses the NETWORK on a real
+    *    cluster, where this operator's 100 TB deployments live. The
+    *    1 GB default is where the deleted shuffle decisively dominates
+    *    the fixed costs under any disk/network-backed shuffle while
+    *    local walls stay within ~20%; single-node-only users can raise
+    *    it (or pin `graft.asof.strategy=sortmerge`). */
   def chooseStrategy(left: DataFrame, right: DataFrame,
       broadcastPayload: Seq[(DataFrame, String)] = Nil): String = {
     val spark = left.sparkSession
-    spark.conf.get("graft.asof.strategy", Auto).toLowerCase match {
-      case Auto =>
+    pinnedStrategy(spark).getOrElse {
         val thrStr = spark.conf.get("graft.asof.broadcastThreshold",
           spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB"))
         val thr = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(thrStr)
@@ -414,71 +420,7 @@ object AsOfJoin {
         if (thr > 0 && size > 0 && bSize.exists(_ <= thr) && rsize >= rightMin)
           Broadcast
         else SortMerge
-      case s =>
-        require(s == SortMerge || s == Broadcast,
-          s"graft.asof.strategy must be auto|sortmerge|broadcast, got $s")
-        s
     }
-  }
-
-  /** Broadcast-route winner computation, shared with
-    * [[graft.operators.PointInTimeJoin]]'s winner subtree: per left
-    * row (identified by the caller-guaranteed-unique `rowId` column of
-    * `leftNarrow`), the feature row with the largest (featureTs,
-    * orderCols…, featureCols…) within the as-of window. Emits
-    * (rowId, outName(featureCol)…) — one row per MATCHED left row; the
-    * caller left-joins it back (a broadcast hash join: the winners are
-    * entity-cardinality).
-    *
-    * Plan shape (the 100 TB argument): feature scan → broadcast hash
-    * join against the narrow entity projection → map-side partial
-    * max_by keyed by rowId (candidates never ship: a hot entity key
-    * with 10^6 candidates reduces to one partial per task) → one tiny
-    * exchange of ≤ |entity| × tasks partials → final max_by. The
-    * feature table is scanned exactly once, with the ts-window and key
-    * filters still pushed to parquet, and is never exchanged or
-    * sorted. Null join keys match null keys (<=>, same as the merge's
-    * natural ordering); the max_by order key is
-    * struct(ts, orderCols…, payload) — the identical total order the
-    * sort-merge exec's required right ordering realizes, so the two
-    * routes are result-identical including residual ties. */
-  private[graft] def broadcastWinners(
-      leftNarrow: DataFrame,
-      feature: DataFrame,
-      keys: Seq[String],
-      entityTsCol: String,
-      featureTsCol: String,
-      ttl: java.time.Duration,
-      orderCols: Seq[String],
-      featureCols: Seq[String],
-      rowId: String,
-      outName: String => String = identity): DataFrame = {
-    // the same loud rejection AsOfJoin.join applies — without it a
-    // negative TTL silently meant UNBOUNDED here while the exec route
-    // errors and the declarative fallback yields an empty window, so
-    // results would flip with the routing stats (review r12)
-    require(ttl != null && !ttl.isNegative, "ttl must be >= 0 (0 = unbounded)")
-    // fresh expression ids on the right so self-joins resolve
-    val rightNeeded = (keys ++ (featureTsCol +: orderCols) ++ featureCols).distinct
-    val r = feature.select(rightNeeded.map(c => col(c).as(s"__r_$c")): _*)
-    def R(c: String) = r(s"__r_$c")
-    def L(c: String) = leftNarrow(c)
-    val keyCond = keys.map(k => L(k) <=> R(k)).reduce(_ && _)
-    val upper = R(featureTsCol) <= L(entityTsCol)
-    // micros, not whole seconds — the same window arithmetic as the
-    // merge exec's raw-micros compare and the declarative fallback
-    val asOf =
-      if (ttl.isZero) upper
-      else upper && R(featureTsCol) >=
-        (L(entityTsCol) - graft.operators.PointInTimeJoin.durationInterval(ttl))
-    val candidates = r.join(broadcast(leftNarrow), keyCond && asOf, "inner")
-    val ordNames = (featureTsCol +: orderCols).distinct
-    val payload = struct(featureCols.map(f => R(f).as(f)): _*)
-    val ordKey = struct(ordNames.map(R) :+ payload.as("__payload"): _*)
-    candidates
-      .groupBy(L(rowId).as(rowId))
-      .agg(max_by(payload, ordKey).as("__w"))
-      .select(col(rowId) +: featureCols.map(f => col(s"__w.`$f`").as(outName(f))): _*)
   }
 
   /** Idempotently install [[AsOfJoinStrategy]] into the session's
@@ -501,11 +443,7 @@ object AsOfJoin {
     *
     * `strategy`: [[Auto]] (plan-stat gate), [[SortMerge]], or
     * [[Broadcast]] — see the object doc; both routes share this
-    * method's semantics exactly. `uniqueIdCol`: callers that already
-    * carry a unique, replay-stable per-row id column may name it to
-    * let the broadcast route skip its own row-id stamp (and the
-    * pinning localCheckpoint a shuffle-derived entity frame would
-    * otherwise need). */
+    * method's semantics exactly. */
   def join(
       entity: DataFrame,
       feature: DataFrame,
@@ -515,10 +453,9 @@ object AsOfJoin {
       ttl: java.time.Duration,
       orderCols: Seq[String],
       featureCols: Seq[String],
-      strategy: String = Auto,
-      uniqueIdCol: Option[String] = None): DataFrame =
+      strategy: String = Auto): DataFrame =
     StaticPlan.applyPolicy(join0(entity, feature, keys, entityTsCol,
-      featureTsCol, ttl, orderCols, featureCols, strategy, uniqueIdCol))
+      featureTsCol, ttl, orderCols, featureCols, strategy))
 
   /** [[join]] WITHOUT the engine-owned AQE policy applied — for callers
     * that embed the result as a SUBTREE of a larger plan they build on
@@ -537,8 +474,7 @@ object AsOfJoin {
       ttl: java.time.Duration,
       orderCols: Seq[String],
       featureCols: Seq[String],
-      strategy: String = Auto,
-      uniqueIdCol: Option[String] = None): DataFrame = {
+      strategy: String = Auto): DataFrame = {
     val spark = entity.sparkSession
     ensureStrategy(spark)
     // fresh expression ids on the right side so self-joins (entity df
@@ -570,43 +506,22 @@ object AsOfJoin {
         s"as-of join key '$kName' type mismatch: entity side $lt vs feature " +
           s"side $rt — cast the sides to a common type before joining")
     }
-    val route = strategy.toLowerCase match {
-      case Auto =>
-        chooseStrategy(entity, feature, featureCols.map(c => (feature, c)))
-      case s =>
-        require(s == SortMerge || s == Broadcast,
-          s"strategy must be auto|sortmerge|broadcast, got $strategy")
-        s
-    }
+    val route = parseStrategy("strategy", strategy).getOrElse(
+      chooseStrategy(entity, feature, featureCols.map(c => (feature, c))))
 
     if (route == Broadcast) {
       // ---- broadcast route: small entity frame, untouched feature scan
-      val (stamped, rowId) = uniqueIdCol match {
-        case Some(c) =>
-          require(entity.columns.contains(c), s"uniqueIdCol $c not in entity df")
-          (entity, c)
-        case None =>
-          val rid = Iterator.from(0).map(i => s"__graft_asof_rid$i")
-            .find(n => !entity.columns.contains(n)).get
-          val raw = entity.withColumn(rid, monotonically_increasing_id())
-          // same id-stability rule as PointInTimeJoin: the stamped frame
-          // feeds TWO plan branches (candidates + join-back), so ids must
-          // reproduce across re-executions
-          val pinned =
-            if (graft.operators.PointInTimeJoin.needsRowIdPinning(entity))
-              raw.localCheckpoint()
-            else raw
-          (pinned, rid)
-      }
-      val leftNarrow =
-        stamped.select((rowId +: entityTsCol +: keys).distinct.map(col): _*)
-      val winners = broadcastWinners(leftNarrow, feature, keys, entityTsCol,
-        featureTsCol, ttl, orderCols, featureCols, rowId)
+      val (stamped, rowId) = PointInTimeJoin.stamp(entity)
+      val winners = PointInTimeJoin.winners(stamped, rowId, entityTsCol, keys,
+        feature.select(rightNeeded.map(col): _*), featureTsCol,
+        PointInTimeJoin.backwardWindow(entityTsCol, featureTsCol, ttl),
+        (_, r) => (featureTsCol +: orderCols).distinct.map(r),
+        featureCols.map(f => f -> f), max_by, hint = true)
       // join-back by rowId: winners are entity-cardinality — broadcast
-      // hash join, no shuffle of the entity frame either
-      // per-side attribute refs: unambiguous even if a feature column
-      // shares a name with an entity column (the exec path emits
-      // duplicate names in that case; this matches)
+      // hash join, no shuffle of the entity frame either. Per-side
+      // attribute refs: unambiguous even if a feature column shares a
+      // name with an entity column (the exec path emits duplicate names
+      // in that case; this matches)
       return stamped.join(broadcast(winners), Seq(rowId), "left")
         .select(entity.columns.map(c => stamped(c)).toIndexedSeq ++
           featureCols.map(f => winners(f)): _*)

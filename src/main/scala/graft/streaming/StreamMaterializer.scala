@@ -268,18 +268,10 @@ object StreamMaterializer {
       windowDuration: String,
       aggs: Seq[org.apache.spark.sql.Column],
       queryName: String): DataFrame = {
-    val spark = stream.sparkSession
     val agg = stream
       .groupBy((window(col(tsCol), windowDuration) +: keyCols.map(col)): _*)
       .agg(aggs.head, aggs.tail: _*)
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
+    runToMemory(agg, "complete", queryName)
   }
 
   /** Sessionization over a stream: gap-based session windows per key
@@ -296,18 +288,10 @@ object StreamMaterializer {
       keyCols: Seq[String],
       aggs: Seq[org.apache.spark.sql.Column],
       queryName: String): DataFrame = {
-    val spark = stream.sparkSession
     val agg = stream
       .groupBy((session_window(col(tsCol), gap) +: keyCols.map(col)): _*)
       .agg(aggs.head, aggs.tail: _*)
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
+    runToMemory(agg, "complete", queryName)
   }
 
   /** Streaming count-min sketch: aggregate a stream into the
@@ -328,21 +312,13 @@ object StreamMaterializer {
       depth: Int,
       width: Int,
       queryName: String): DataFrame = {
-    val spark = stream.sparkSession
     val cells = stream
       .select(posexplode(
         graft.functions.Sketch.cellBuckets(col(itemCol), depth, width))
         .as(Seq("row", "bucket")))
       .groupBy("row", "bucket")
       .agg(count(lit(1)).as("cnt"))
-    val q = cells.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
+    runToMemory(cells, "complete", queryName)
   }
 
   /** Stateful streaming deduplication: drop records whose `keyCols`
@@ -369,18 +345,10 @@ object StreamMaterializer {
     require(keyCols.contains(tsCol),
       s"streaming dedup keyCols must include the event-time column '$tsCol' " +
         "so watermark eviction bounds the state")
-    val spark = stream.sparkSession
     val deduped = stream
       .withWatermark(tsCol, watermarkDelay)
       .dropDuplicates(keyCols)
-    val q = deduped.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
+    runToMemory(deduped, "append", queryName)
   }
 
   /** [[Changelog.derive]] driven to completion on available input into
@@ -393,19 +361,10 @@ object StreamMaterializer {
       valueCols: Seq[String],
       watermarkDelay: String,
       stateTtl: java.time.Duration,
-      queryName: String): DataFrame = {
-    val spark = stream.sparkSession
-    val q = Changelog
-      .derive(stream, tsCol, keyCols, orderCols, valueCols, watermarkDelay, stateTtl)
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
+      queryName: String): DataFrame =
+    runToMemory(
+      Changelog.derive(stream, tsCol, keyCols, orderCols, valueCols, watermarkDelay, stateTtl),
+      "append", queryName)
 
   /** Stream-static (dimension) join: each streaming row enriched with
     * a batch dimension table — the standard micro-batch enrichment in
@@ -420,18 +379,10 @@ object StreamMaterializer {
       static: DataFrame,
       joinKeys: Seq[(String, String)],
       queryName: String): DataFrame = {
-    val spark = stream.sparkSession
     val cond = joinKeys
       .map { case (a, b) => stream(a) === static(b) }
       .reduce(_ && _)
-    val q = stream.join(broadcast(static), cond, "inner").writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
+    runToMemory(stream.join(broadcast(static), cond, "inner"), "append", queryName)
   }
 
   /** Stream-stream LEFT OUTER forward (label) join: pair each left row
@@ -456,7 +407,6 @@ object StreamMaterializer {
       horizon: String,
       watermarkDelay: String,
       queryName: String): DataFrame = {
-    val spark = left.sparkSession
     val l = left.withWatermark(leftTsCol, watermarkDelay).alias("l")
     val r = right.withWatermark(rightTsCol, watermarkDelay).alias("r")
     val keyCond = joinKeys
@@ -464,14 +414,7 @@ object StreamMaterializer {
       .reduce(_ && _)
     val timeCond = col(s"r.$rightTsCol") > col(s"l.$leftTsCol") &&
       col(s"r.$rightTsCol") <= col(s"l.$leftTsCol") + expr(s"INTERVAL $horizon")
-    val q = l.join(r, keyCond && timeCond, "left_outer").writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
+    runToMemory(l.join(r, keyCond && timeCond, "left_outer"), "append", queryName)
   }
 
   /** Stream-stream inner interval join: pair each left-stream row with
@@ -492,7 +435,6 @@ object StreamMaterializer {
       lookback: String,
       watermarkDelay: String,
       queryName: String): DataFrame = {
-    val spark = left.sparkSession
     val l = left.withWatermark(leftTsCol, watermarkDelay).alias("l")
     val r = right.withWatermark(rightTsCol, watermarkDelay).alias("r")
     val keyCond = joinKeys
@@ -500,13 +442,20 @@ object StreamMaterializer {
       .reduce(_ && _)
     val timeCond = col(s"r.$rightTsCol") <= col(s"l.$leftTsCol") &&
       col(s"r.$rightTsCol") >= col(s"l.$leftTsCol") - expr(s"INTERVAL $lookback")
-    val q = l.join(r, keyCond && timeCond, "inner").writeStream
-      .outputMode("append")
+    runToMemory(l.join(r, keyCond && timeCond, "inner"), "append", queryName)
+  }
+
+  /** The synchronous harness every `run*ToCompletion` shares: run `df`
+    * on available input into a memory sink named `queryName`, block
+    * until it finishes, and return the sink's table. */
+  private def runToMemory(df: DataFrame, outputMode: String, queryName: String): DataFrame = {
+    df.writeStream
+      .outputMode(outputMode)
       .format("memory")
       .queryName(queryName)
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
-    spark.table(queryName)
+      .awaitTermination()
+    df.sparkSession.table(queryName)
   }
 }

@@ -145,6 +145,37 @@ class EngineSpec extends AnyFunSuite {
     assert(native === decl)
   }
 
+  test("a negative view TTL fails loudly on every PIT route, not as null features") {
+    import spark.implicits._
+    import graft.registry.RegistryCodec
+    import graft.util.{JValue, Json}
+    // a DATE-typed source takes the declarative route, where the window
+    // ts >= entity_ts + 1h && ts <= entity_ts matched nothing: every
+    // feature came back null while the TIMESTAMP routes threw
+    val dated = Seq((1L, java.sql.Date.valueOf("2024-01-01"), 10.0)).toDF("k", "et", "v")
+    val timed = Seq((1L, ts("2024-01-01 00:00:00"), 10.0)).toDF("k", "et", "v")
+    val entityDf = Seq((1L, ts("2024-01-02 00:00:00"))).toDF("k", "event_timestamp")
+    for (featDf <- Seq(dated, timed)) {
+      val e = intercept[IllegalArgumentException] {
+        val view = FeatureView("neg", Seq("e"), Seq(Feature("v", GraftType.Dbl)),
+          Duration.ofHours(-1), DataFrameSource(featDf, "et"))
+        PointInTimeJoin.join(entityDf, Seq(ViewJoin(view, Seq("k"), Seq("v"), featDf)))
+          .collect()
+      }
+      assert(e.getMessage.contains("neg") && e.getMessage.contains("ttl must be >= 0"),
+        e.getMessage)
+    }
+    // a persisted registry goes through the same constructor
+    val ok = RegistryCodec.encodeView(FeatureView("neg", Seq("e"),
+      Seq(Feature("v", GraftType.Dbl)), Duration.ofHours(1),
+      FileSource("/nonexistent.parquet", eventTimestampColumn = "et")))
+    val bad = JValue.JObj(ok.fields.map {
+      case ("ttl_seconds", _) => "ttl_seconds" -> Json.num(-3600L)
+      case f => f
+    })
+    intercept[IllegalArgumentException](RegistryCodec.decodeView(bad))
+  }
+
   test("AsOfJoin rejects mismatched join-key types loudly (review r6)") {
     import spark.implicits._
     val ent = Seq((1, ts("2024-01-01 00:00:00"))).toDF("k", "event_timestamp")  // int key

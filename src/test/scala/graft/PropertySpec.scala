@@ -151,6 +151,82 @@ class PropertySpec extends AnyFunSuite {
     runCheck(prop, minTests = 8)
   }
 
+  test("every PIT join route and both AsOfJoin routes agree with the nested-loop oracle (ScalaCheck)") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, lit}
+    import graft.plans.AsOfJoin
+    // One generated case, every route PointInTimeJoin.join can take,
+    // with the entity frame at 1 and 4 partitions. Times are UTC
+    // midnights, so a DATE-typed copy of the feature ts (the declarative
+    // route) is exact; tiny (et, ct, v) domains make ties that only the
+    // payload tail breaks.
+    val day = 86400000L
+    val dayBase = java.time.Instant.parse("2024-01-01T00:00:00Z").toEpochMilli
+    val genCase = for {
+      nKeys <- Gen.choose(1, 4)
+      nRows <- Gen.choose(0, 60)
+      nEnt <- Gen.choose(1, 25)
+      ttlD <- Gen.oneOf(0, 1, 3, 10)
+      seed <- Gen.choose(0L, 1000000L)
+    } yield (nKeys, nRows, nEnt, ttlD, seed)
+
+    def pinned[A](strategy: Option[String])(body: => A): A = strategy match {
+      case None => body
+      case Some(s) =>
+        spark.conf.set("graft.asof.strategy", s)
+        try body finally spark.conf.unset("graft.asof.strategy")
+    }
+    def values(df: DataFrame, c: String): Map[Long, Option[Double]] =
+      df.select("eid", c).collect()
+        .map(r => r.getLong(0) -> Option(r.get(1)).map(_.asInstanceOf[Double])).toMap
+
+    val prop = Prop.forAllNoShrink(genCase) { case (nKeys, nRows, nEnt, ttlD, seed) =>
+      val rnd = new scala.util.Random(seed)
+      def t(days: Int): Timestamp = new Timestamp(dayBase + rnd.nextInt(days) * day)
+      val rows = (0 until nRows).map(_ =>
+        (rnd.nextInt(nKeys).toLong, t(20), t(3), rnd.nextInt(4).toDouble))
+      val ents = (0 until nEnt).map(i => (rnd.nextInt(nKeys).toLong, t(20), i.toLong))
+      val ttl = Duration.ofDays(ttlD.toLong)
+      val expected = ents.map { case (key, ts, eid) =>
+        val c = rows.filter { case (k, et, _, _) =>
+          k == key && et.getTime <= ts.getTime &&
+            (ttl.isZero || et.getTime >= ts.getTime - ttl.toMillis)
+        }
+        eid -> (if (c.isEmpty) None
+          else Some(c.maxBy { case (_, et, ct, v) => (et.getTime, ct.getTime, v) }._4))
+      }.toMap
+
+      val featTs = rows.toDF("k", "et", "ct", "v")
+      val featDate = featTs.withColumn("et", col("et").cast("date"))
+      def pit(entity: DataFrame, feat: DataFrame, strategy: Option[String]) = {
+        val view = FeatureView("pv", Seq("e"), Seq(Feature("v", GraftType.Dbl)),
+          ttl, DataFrameSource(feat, "et", createdTimestampColumn = Some("ct")))
+        pinned(strategy)(values(PointInTimeJoin.join(entity,
+          Seq(ViewJoin(view, Seq("k"), Seq("v"), feat)), fullFeatureNames = true), "pv__v"))
+      }
+      val byParts = Seq(1, 4).map { parts =>
+        val entity = ents.toDF("k", "event_timestamp", "eid").repartition(parts)
+        def asOf(strategy: String) = values(AsOfJoin.join(entity, featTs, Seq("k"),
+          "event_timestamp", "et", ttl, orderCols = Seq("ct"), featureCols = Seq("v"),
+          strategy = strategy), "v")
+        val runs = Seq(
+          "chain" -> pit(entity, featTs, None),
+          "forced broadcast" -> pit(entity, featTs, Some(AsOfJoin.Broadcast)),
+          // an entity column named like the feature breaks the chain
+          "sort-merge winner subtree" -> pit(entity.withColumn("v", lit(-1.0)), featTs, None),
+          "declarative" -> pit(entity, featDate, None),
+          "declarative, hinted" -> pit(entity, featDate, Some(AsOfJoin.Broadcast)),
+          "AsOfJoin sortmerge" -> asOf(AsOfJoin.SortMerge),
+          "AsOfJoin broadcast" -> asOf(AsOfJoin.Broadcast))
+        Prop.all(runs.map { case (route, got) =>
+          (got == expected) :| s"$route, $parts partition(s): $got != $expected" }: _*)
+      }
+      Prop.all(byParts: _*)
+    }
+    runCheck(prop, minTests = 6)
+  }
+
   test("native text-scan counters equal their regex formulations (ScalaCheck)") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
