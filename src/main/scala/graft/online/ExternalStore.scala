@@ -22,13 +22,10 @@ import graft.operators.PullLatest
   * row, and each non-empty partition opens one client. An upsert first
   * reduces to one row per key: a map-side-combining aggregation costs
   * less than a round-trip per duplicate, and it leaves at most one write
-  * per key per batch (so a caller-side PullLatest would only duplicate
-  * the exchange). A delete of an absent key, or of a never-materialized
-  * view, is a no-op. */
+  * per key per batch. A delete of an absent key, or of a
+  * never-materialized view, is a no-op. */
 private[online] abstract class ExternalStore extends OnlineStore {
   import ExternalStore._
-
-  override def wantsPreReduced: Boolean = false
 
   /** Driver-side setup of one upsert, returning the task-side writer of
     * one partition; like [[openDelete]]'s, the returned function runs

@@ -45,17 +45,14 @@ trait OnlineStore extends Serializable {
 
   /** Upsert one view's materialized rows. `df` must contain the view's
     * join key columns, feature columns, event-ts and optional created-ts
-    * columns. DataFrame-level so implementations can write distributed. */
+    * columns, at any grain: the store reduces it to the latest row per
+    * key ([[PullLatest.latestPerKey]]) before it writes. DataFrame-level
+    * so implementations can write distributed. */
   def upsert(project: String, view: FeatureView, joinKeys: Seq[String],
       df: DataFrame, tsCol: String, createdCol: Option[String]): Unit
 
-  /** Whether callers should reduce to latest-per-key BEFORE upsert.
-    * Stores that materialize the frame driver-side (collect) need the
-    * pre-reduction so the collect carries key-grain rows; a store whose
-    * upsert already reduces distributedly with map-side combine
-    * (ParquetOnlineStore) overrides to false, and materialize then
-    * runs ONE exchange total instead of two. */
-  def wantsPreReduced: Boolean = true
+  /** Unused: the library no longer reads it, since every store reduces its own upsert input. */
+  def wantsPreReduced: Boolean = false
 
   /** Point multi-get (O14): for each entity key, the requested features.
     * Missing key -> all NOT_FOUND. Latency path — must not require a
@@ -154,7 +151,7 @@ class InMemoryOnlineStore extends OnlineStore {
       df: DataFrame, tsCol: String, createdCol: Option[String]): Unit = {
     val feats = view.featureNames
     val viewName = view.name
-    df.collect().foreach { row =>
+    PullLatest.latestPerKey(df, joinKeys, tsCol, createdCol, feats).collect().foreach { row =>
       val key = joinKeys.map(k => k -> row.getAs[Any](k))
       val ts = row.getAs[Timestamp](tsCol)
       val created = createdCol.map(row.getAs[Timestamp])
@@ -276,21 +273,13 @@ object ParquetOnlineStore {
       d: DataFrame, joinKeys: Seq[String], tsCol: String,
       createdCol: Option[String], featureNames: Seq[String],
       buckets: Int): DataFrame = {
-    // ONE definition of the LWW total order, shared with PullLatest
-    // and the CDC stream collapse (review r6: three hand-built copies
-    // could silently diverge)
-    val (payload, ordKey, _) =
-      graft.operators.PullLatest.lwwKeys(tsCol, createdCol, featureNames)
     // reuse an already-computed bucket id (upsert's incoming frame and
     // the read-back of old rows both carry one) instead of re-hashing
     // the canonical key serialization for every row
     val withBucket =
       if (d.columns.contains(BucketCol)) d
       else d.withColumn(BucketCol, EntityBucketExpr.bucketId(joinKeys, buckets))
-    withBucket
-      .groupBy(col(BucketCol) +: joinKeys.map(col): _*)
-      .agg(max_by(payload, ordKey).as("__row"))
-      .select((joinKeys.map(col) :+ col("__row.*")) :+ col(BucketCol): _*)
+    PullLatest.latestPerKey(withBucket, BucketCol +: joinKeys, tsCol, createdCol, featureNames)
       .sortWithinPartitions(col(BucketCol) +: joinKeys.map(col): _*)
   }
   /** Marker file inside each table dir recording the bucket count the
@@ -456,10 +445,6 @@ class ParquetOnlineStore(
   def clearPendingSize(): Unit =
     ShardedOnlineStore.clearPendingSize(baseFs, basePath)
   private def baseFs = hp(basePath).getFileSystem(ShardedOnlineStore.hadoopConf())
-
-  /** upsert reduces internally ((bucket, keys) max_by with map-side
-    * combine) — callers need not PullLatest first. */
-  override def wantsPreReduced: Boolean = false
 
   /** The store's root directory — the per-shard identity the sharded
     * composite's ring marker is keyed on. */
@@ -686,20 +671,17 @@ class ParquetOnlineStore(
     // the keys, so the grain is unchanged — plans a map-side partial
     // max_by before the exchange, so the shuffle carries key-grain
     // combiners even for input-grain callers (streaming micro-batches,
-    // raw materialize windows). The order key is the exact
-    // latest-per-key total order ((ts, created, payload) — payload as
-    // the stable final tiebreak, PullLatest's contract), so the max_by
-    // winner IS the LWW row. Because of this internal reduction,
-    // `wantsPreReduced` is false and materialize skips its own
-    // PullLatest exchange — ONE shuffle end to end where there were
-    // two. HashAggregate spills to sort-based automatically, so a
-    // bucket bigger than memory still merges. After the final agg a
-    // zero-shuffle sortWithinPartitions((bucket, keys)) clusters each
-    // task's output so dynamic partitionBy emits one file per
-    // (task, touched bucket) with key-sorted row groups — selective
-    // min/max stats for point-read skipping; reads list every file in
-    // a bucket dir, so several files per bucket (the cluster-scale
-    // shape — write parallelism within a bucket) are fine.
+    // raw materialize windows). The max_by struct buffer is not
+    // UnsafeRow-mutable, so both aggregates plan as SortAggregate over
+    // a full Sort on (bucket, keys), not HashAggregate (`explain`
+    // shows it); the sort spills, so a bucket bigger than memory still
+    // merges. After the final agg a zero-shuffle
+    // sortWithinPartitions((bucket, keys)) clusters each task's output
+    // so dynamic partitionBy emits one file per (task, touched bucket)
+    // with key-sorted row groups — selective min/max stats for
+    // point-read skipping; reads list every file in a bucket dir, so
+    // several files per bucket (the cluster-scale shape — write
+    // parallelism within a bucket) are fine.
     def merged(d: DataFrame): DataFrame =
       ParquetOnlineStore.mergedFrame(d, joinKeys, tsCol, createdCol,
         view.featureNames, buckets)

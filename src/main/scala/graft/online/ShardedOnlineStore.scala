@@ -198,11 +198,6 @@ class ShardedOnlineStore(
     }
   }
 
-  /** Pre-reduce if ANY child wants it: pre-reduction is correct for
-    * every store (it is the LWW collapse itself), merely redundant for
-    * children that reduce internally. */
-  override def wantsPreReduced: Boolean = children.exists(_.wantsPreReduced)
-
   private[graft] def shardOf(key: Seq[(String, Any)]): Int =
     ShardedOnlineStore.shardOf(EntityKeyCodec.hexKey(key), n, salt)
 

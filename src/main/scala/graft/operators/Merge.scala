@@ -10,18 +10,12 @@ import org.apache.spark.sql.functions._
   * semantics row-at-a-time on write, `online_stores/sqlite.py:76-128`;
   * this is the set-oriented offline form).
   *
-  * Semantics: per key, the changelog collapses to its LATEST row in
-  * `orderCols` order (last-write-wins — intermediate changes never
-  * matter), with residual ties resolved by the max payload — the SAME
-  * [[PullLatest.lwwKeys]] total order every other LWW site uses, so a
-  * feed with duplicate orderCols values collapses identically here and
-  * on the streaming CDC path (a bare struct(orderCols) order left the
-  * winner to partitioning luck). If that row's op is `deleteOp` the
-  * key is dropped (even if absent from the base: a delete for an
+  * Semantics: per key, the changelog collapses to its net change
+  * ([[netChanges]]: the LATEST row in `orderCols` order — last-write-wins,
+  * intermediate changes never matter). If that row's op is `deleteOp`
+  * the key is dropped (even if absent from the base: a delete for an
   * unseen key is a no-op); otherwise its values replace the base row
   * (or insert a new key). Keys without changes pass through unchanged.
-  * A NULL op fails the job loudly (the streaming dual's contract): it
-  * would otherwise insert a phantom all-null row for unseen keys.
   *
   * Shape at 100 TB: the changelog reduces map-side (max_by partial
   * aggregation) BEFORE its shuffle — a billion-row feed for a key
@@ -41,20 +35,7 @@ object Merge {
       valueCols: Seq[String],
       deleteOp: String = "D"): DataFrame = {
     require(keys.nonEmpty, "keys must be non-empty")
-    require(orderCols.nonEmpty, "orderCols must be non-empty (LWW needs a total order)")
-
-    val guarded = changes.withColumn(opCol,
-      when(col(opCol).isNull,
-        raise_error(lit("cdcApply: NULL op — every changelog row must carry " +
-          "an op code"))).otherwise(col(opCol)))
-    // latest change per key via the shared LWW order (op rides in the
-    // payload, like the streaming collapse)
-    val (payload, ord, _) = PullLatest.lwwKeys(
-      orderCols.head, None, opCol +: valueCols, tieBreakCols = orderCols.tail)
-    val net = guarded
-      .groupBy(keys.map(col): _*)
-      .agg(max_by(payload, ord).as("__net"))
-      .select(keys.map(col) :+ col("__net.*"): _*)
+    val net = netChanges(changes, keys, opCol, orderCols, valueCols)
       .withColumnRenamed(opCol, "__op")
       .alias("__n")
 
@@ -69,5 +50,29 @@ object Merge {
       .select(
         keys.map(k => coalesce(N(k), B(k)).as(k)) ++
           valueCols.map(c => when(hasNet, N(c)).otherwise(B(c)).as(c)): _*)
+  }
+
+  /** The net change per key of a changelog: its LATEST row by
+    * `orderCols`, carrying its op — [[PullLatest.latestPerKey]] with the
+    * op first in the payload, so at an exact `orderCols` tie the
+    * greater op wins (an upsert `U` beats a delete `D`) before any value
+    * is compared. Shared by [[cdcApply]] and the CDC stream
+    * ([[graft.streaming.StreamMaterializer.materializeCdcStream]]), so
+    * one feed collapses identically on both. Every row must carry an op:
+    * a NULL op fails the job loudly, even on a row a later change would
+    * supersede. Output: `keys`, `orderCols`, `opCol`, then `valueCols`. */
+  def netChanges(
+      changes: DataFrame,
+      keys: Seq[String],
+      opCol: String,
+      orderCols: Seq[String],
+      valueCols: Seq[String]): DataFrame = {
+    require(orderCols.nonEmpty, "orderCols must be non-empty (LWW needs a total order)")
+    val guarded = changes.withColumn(opCol,
+      when(col(opCol).isNull,
+        raise_error(lit("NULL op — every changelog row must carry an op code")))
+        .otherwise(col(opCol)))
+    PullLatest.latestPerKey(guarded, keys, orderCols.head, None, opCol +: valueCols,
+      tieBreakCols = orderCols.tail)
   }
 }

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * row per entity-key combination ordered by
   * (event_ts DESC, created_ts DESC, tieBreaks DESC).
   *
-  * Implementation: groupBy(keys).agg(max_by(payload, orderKey)) — a
+  * Implementation: groupBy(keys) with max_by(payload, orderKey) — a
   * declarative aggregate with map-side partial aggregation, so each
   * map task pre-collapses its rows to one candidate per key before the
   * shuffle. The reference's ROW_NUMBER() window formulation shuffles
@@ -30,18 +30,13 @@ object PullLatest {
       featureCols: Seq[String],
       start: Timestamp,
       end: Timestamp,
-      tieBreakCols: Seq[String] = Nil): DataFrame = {
-
-    val filtered = df.filter(col(tsCol) >= lit(start) && col(tsCol) <= lit(end))
-    latestPerKey(filtered, joinKeys, tsCol, createdCol, featureCols, tieBreakCols)
-  }
+      tieBreakCols: Seq[String] = Nil): DataFrame =
+    latestPerKey(windowOnly(df, joinKeys, tsCol, createdCol, featureCols ++ tieBreakCols,
+      start, end), joinKeys, tsCol, createdCol, featureCols, tieBreakCols)
 
   /** The materialization window WITHOUT the reduction: the ts BETWEEN
-    * filter and column projection only. For stores whose upsert is
-    * itself a map-side-combinable latest-per-key aggregation
-    * ([[graft.online.OnlineStore.wantsPreReduced]] = false) — running
-    * the full pullLatest first would add a second exchange carrying
-    * the same key-grain rows. */
+    * filter and column projection only. Every online store reduces its
+    * own upsert input, so materialize hands it this raw window. */
   def windowOnly(
       df: DataFrame,
       joinKeys: Seq[String],
@@ -55,23 +50,19 @@ object PullLatest {
       .select(cols.map(col): _*)
   }
 
-  /** THE latest-per-key total order, shared by every LWW site (this
-    * operator, the parquet store's one-exchange upsert merge, the CDC
-    * stream's net-change collapse): winners order by
+  /** THE latest-per-key total order: winners order by
     * (ts, created?, tieBreaks?, payload) with the feature payload
     * appended as a stable final tiebreak — exact (ts, created)
     * duplicates resolve to the max payload instead of the reference's
-    * nondeterministic ANY_VALUE (bigquery.py:645-660). One definition
-    * so the contract cannot silently diverge between the batch path
-    * and the store/stream paths.
+    * nondeterministic ANY_VALUE (bigquery.py:645-660).
     *
     * @return (payload struct, order-key struct, payload column names)
     */
-  def lwwKeys(
+  private def lwwKeys(
       tsCol: String,
       createdCol: Option[String],
       featureCols: Seq[String],
-      tieBreakCols: Seq[String] = Nil): (Column, Column, Seq[String]) = {
+      tieBreakCols: Seq[String]): (Column, Column, Seq[String]) = {
     val ordCols: Seq[String] = ((tsCol +: createdCol.toSeq) ++ tieBreakCols).distinct
     val payloadCols: Seq[String] = (ordCols ++ featureCols).distinct
     val payload: Column = struct(payloadCols.map(col): _*)
@@ -79,8 +70,12 @@ object PullLatest {
     (payload, ordKey, payloadCols)
   }
 
-  /** Newest row per key without the range filter (used by streaming
-    * micro-batches and online reads over a batch-serving table). */
+  /** Newest row per key without the range filter: the one last-write-wins
+    * collapse in the library. Every online store's upsert, the parquet
+    * store's bucketed merge ([[graft.online.ParquetOnlineStore.mergedFrame]])
+    * and the CDC net change ([[Merge.netChanges]]) reduce through it, so
+    * batch, stream and store paths cannot drift apart. Output columns:
+    * `joinKeys`, then ts, created, tieBreaks and features (each once). */
   def latestPerKey(
       df: DataFrame,
       joinKeys: Seq[String],

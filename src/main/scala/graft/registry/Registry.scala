@@ -393,7 +393,9 @@ object RegistryCodec {
     "entities" -> Json.arr(v.entities.map(jstr)),
     "features" -> Json.arr(v.features.map(f => Json.obj(
       "name" -> jstr(f.name), "dtype" -> jstr(f.dtype.name)))),
+    // seconds + nanos, like protobuf Duration, so a sub-second TTL survives a reload
     "ttl_seconds" -> Json.num(v.ttl.getSeconds),
+    "ttl_nanos" -> Json.num(v.ttl.getNano.toLong),
     "batch_source" -> encodeSource(v.batchSource),
     "stream_source" -> v.streamSource.map(encodeSource).getOrElse(JNull),
     "online" -> Json.bool(v.online))
@@ -407,7 +409,9 @@ object RegistryCodec {
         val fo = f.asInstanceOf[JObj]
         Feature(fo("name").asInstanceOf[JStr].v, GraftType.fromName(fo("dtype").asInstanceOf[JStr].v))
       } },
-      ttl = Duration.ofSeconds(Json.toLong(o("ttl_seconds"))),
+      // ttl_nanos is absent in registries written before it existed
+      ttl = Duration.ofSeconds(Json.toLong(o("ttl_seconds")),
+        o.get("ttl_nanos").map(Json.toLong).getOrElse(0L)),
       batchSource = decodeSource(o("batch_source")),
       streamSource = o.get("stream_source").filter(_ != JNull).map(decodeSource),
       online = o.get("online").collect { case JBool(b) => b }.getOrElse(true))

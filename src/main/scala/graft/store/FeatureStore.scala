@@ -139,7 +139,7 @@ class FeatureStore(
     * are commutative (`newer` keeps the max (ts, created)), so the
     * union's per-key maximum is the fixpoint either way; the union
     * form resolves exact (ts, created) cross-window ties by the
-    * engine's single documented total order ([[PullLatest.lwwKeys]])
+    * engine's single documented total order ([[PullLatest.latestPerKey]])
     * rather than by upsert arrival order. Each window is still
     * recorded as its own materialization interval. */
   def materializeWindows(
@@ -161,21 +161,11 @@ class FeatureStore(
         else pruned.filter(windows.map { case (s0, e0) =>
           tsc >= lit(s0) && tsc <= lit(e0) }.reduce(_ || _))
       val keys = joinKeysOf(view)
-      // Stores whose upsert reduces distributedly (wantsPreReduced =
-      // false) get the raw window — their internal (bucket, keys)
-      // max_by agg is the reduction, and running PullLatest first
-      // would just add a second exchange carrying the same key-grain
-      // rows. Driver-collecting stores still pre-reduce so the
-      // collect is key-grain.
-      val latest =
-        if (onlineStore.wantsPreReduced)
-          PullLatest.pullLatest(
-            df, keys, src.eventTimestampColumn, src.createdTimestampColumn,
-            view.featureNames, lo, hi)
-        else PullLatest.windowOnly(
-          df, keys, src.eventTimestampColumn, src.createdTimestampColumn,
-          view.featureNames, lo, hi)
-      onlineStore.upsert(project, view, keys, castKeyColumns(latest, view),
+      // the raw window: the store's upsert is the latest-per-key reduction
+      val window = PullLatest.windowOnly(
+        df, keys, src.eventTimestampColumn, src.createdTimestampColumn,
+        view.featureNames, lo, hi)
+      onlineStore.upsert(project, view, keys, castKeyColumns(window, view),
         src.eventTimestampColumn, src.createdTimestampColumn)
       windows.foreach { case (s0, e0) =>
         registry.applyMaterialization(view.name, s0, e0) }

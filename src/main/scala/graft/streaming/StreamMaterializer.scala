@@ -20,9 +20,10 @@ import graft.store.FeatureStore
 object StreamMaterializer {
 
   /** Start continuous materialization of a view's stream source into the
-    * feature store's online store. The per-batch reduction is the same
-    * PullLatest operator the batch path uses — one code path for both
-    * semantics (kappa-style). */
+    * feature store's online store. Each micro-batch goes to the store's
+    * upsert raw; the store reduces it with the same
+    * [[graft.operators.PullLatest.latestPerKey]] the batch path reaches —
+    * one code path for both semantics (kappa-style). */
   def materializeStream(
       fs: FeatureStore,
       viewName: String,
@@ -40,29 +41,14 @@ object StreamMaterializer {
       .outputMode("update")
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // Stores that reduce distributedly inside upsert
-        // (wantsPreReduced = false, e.g. the bucketed parquet store)
-        // get the raw batch: their one-shuffle sorted merge IS the
-        // latest-per-key reduction, and an extra hash-agg exchange per
-        // micro-batch was measured net-negative. Stores that consume
-        // input at key grain (wantsPreReduced = true — the trait
-        // default; InMemory collects driver-side) are pre-reduced with
-        // the shared LWW collapse first, mirroring
-        // FeatureStore.materialize — otherwise every micro-batch ships
-        // its full duplication to the store (review r6). No isEmpty
-        // pre-check: it cost a scan job + plan cycle on EVERY batch to
-        // save work only on the rare empty ones. Keys cast to entity
-        // dtypes so bucket routing matches coerced reads.
-        val toUpsert =
-          if (fs.onlineStore.wantsPreReduced)
-            // THE batch-path operator, not an inline re-statement of it
-            // — one definition of the LWW collapse means the streaming
-            // and batch materialize paths cannot drift (review r11)
-            graft.operators.PullLatest.latestPerKey(
-              batch, keys, tsCol, createdCol, view.featureNames)
-          else batch
+        // The raw batch: every store reduces its own upsert input
+        // (PullLatest.latestPerKey), so a caller-side collapse would
+        // only add an exchange. No isEmpty pre-check: it cost a scan
+        // job + plan cycle on EVERY batch to save work only on the rare
+        // empty ones. Keys cast to entity dtypes so bucket routing
+        // matches coerced reads.
         fs.onlineStore.upsert(fs.project, view, keys,
-          fs.castKeyColumns(toUpsert, view), tsCol, createdCol)
+          fs.castKeyColumns(batch, view), tsCol, createdCol)
         ()
       }
     checkpointDir.fold(writer)(d => writer.option("checkpointLocation", d)).start()
@@ -70,9 +56,9 @@ object StreamMaterializer {
 
   /** CDC stream materialization: the stream carries an op column
     * (upserts + delete tombstones). Each micro-batch first collapses
-    * to its NET change per key — max_by over (event_ts[, created_ts]),
-    * map-side combinable, so intermediate changes never reach the
-    * store — then applies upserts through the store's LWW merge and
+    * to its NET change per key — [[graft.operators.Merge.netChanges]]
+    * over (event_ts[, created_ts]), map-side combinable, so intermediate
+    * changes never reach the store — then applies upserts through the store's LWW merge and
     * tombstones through [[OnlineStore.delete]].
     *
     * ORDERING CONTRACT: within a micro-batch, out-of-order records are
@@ -114,31 +100,19 @@ object StreamMaterializer {
         // that pipeline for nothing, and non-empty batches amortize
         // the probe against real store I/O.
         if (!batch.isEmpty) {
-          // net change per key WITHIN the batch: latest row wins,
-          // carrying its op — the shared LWW total order (PullLatest
-          // .lwwKeys), with the op column riding in the payload
-          val (payload, ord, _) = graft.operators.PullLatest.lwwKeys(
-            tsCol, createdCol, view.featureNames :+ opCol)
+          // net change per key WITHIN the batch: cdcApply's collapse,
+          // which fails on a NULL op in any row.
           // persist, NOT localCheckpoint (review r13): checkpoint
           // blocks are unreplicated and lineage-truncated, so losing
           // one executor between the fill and the ups/dels consumers
           // failed the batch unrecoverably and terminated the query;
           // a persist recomputes the collapse from the batch source on
           // block loss — same dedup benefit, cluster-survivable
-          val net = batch
-            .groupBy(keys.map(col): _*)
-            .agg(max_by(payload, ord).as("__net"))
-            .select(keys.map(col) :+ col("__net.*"): _*)
+          val net = graft.operators.Merge.netChanges(
+              batch, keys, opCol, tsCol +: createdCol.toSeq, view.featureNames)
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           try {
-            // strict two-way classification: a NULL op makes both plain
-            // predicates null, silently dropping the key's net change
-            // from BOTH branches — fail loudly instead (the
-            // null-join-key analog of OnlineStore.guardNullKeys)
-            val isDel = when(col(opCol).isNull,
-              raise_error(lit("materializeCdcStream: NULL op column — " +
-                "every CDC record must carry an op code")).cast("boolean"))
-              .otherwise(col(opCol) === lit(deleteOp))
+            val isDel = col(opCol) === lit(deleteOp)
             val ups = net.filter(!isDel).drop(opCol)
             val dels = net.filter(isDel).select(keys.map(col): _*)
             if (!ups.isEmpty)

@@ -43,11 +43,8 @@ object StreamFloor {
     // driver collect, run (a) inside the stream, (b) as the identical
     // batch plan — the delta is pure streaming-scan overhead
     def lww(b: DataFrame): Unit = {
-      val (payload, ord, _) = graft.operators.PullLatest.lwwKeys(
-        "ts", None, Seq("event_type", "value"))
-      b.groupBy(org.apache.spark.sql.functions.col("user_id"))
-        .agg(org.apache.spark.sql.functions.max_by(payload, ord).as("__w"))
-        .collect()
+      graft.operators.PullLatest.latestPerKey(
+        b, Seq("user_id"), "ts", None, Seq("event_type", "value")).collect()
       ()
     }
     (0 until 3).foreach { i =>

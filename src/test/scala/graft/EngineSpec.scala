@@ -1436,6 +1436,72 @@ class EngineSpec extends AnyFunSuite {
     mini.stop()
   }
 
+  test("OnlineStore.upsert: all seven stores reduce a raw frame to the latestPerKey winners") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graftraw").toString
+    val mini = new MiniRedis()
+    // parquet twice: the whole-table rewrite (default smallStoreBytes)
+    // and the touched-bucket merge (smallStoreBytes = 0)
+    val stores: Seq[(String, graft.online.OnlineStore)] = Seq(
+      "parquet-bucket-merge" -> new ParquetOnlineStore(s"$base/pqb", numBuckets = 4,
+        smallStoreBytes = 0L),
+      "parquet-rewrite" -> new ParquetOnlineStore(s"$base/pqr", numBuckets = 4),
+      "memory" -> new InMemoryOnlineStore()) ++ externalStores(mini)
+    val t10 = ts("2024-01-01 10:00:00")
+    // every raw key also holds an older stored row; key 9 only a stored one
+    val seed = ((1L to 6L) :+ 9L).map(k =>
+      (k, ts("2023-06-01 00:00:00"), ts("2023-06-01 00:00:00"), Some(-1.0), Some(-1.0)))
+    val raw = Seq[(Long, Timestamp, Timestamp, Option[Double], Option[Double])](
+      // in-batch duplicates
+      (1L, t10, t10, Some(1.0), Some(1.0)), (1L, t10, t10, Some(1.0), Some(1.0)),
+      (1L, ts("2024-01-01 09:00:00"), t10, Some(9.0), Some(9.0)),
+      // out-of-order ts
+      (2L, ts("2024-01-01 12:00:00"), t10, Some(2.0), Some(2.0)),
+      (2L, ts("2024-01-01 11:00:00"), t10, Some(3.0), Some(3.0)),
+      (2L, ts("2024-01-01 13:00:00"), t10, Some(4.0), Some(4.0)),
+      (2L, ts("2024-01-01 12:30:00"), t10, Some(5.0), Some(5.0)),
+      // exact (ts, created) ties, the larger payload first: the payload
+      // decides, not the arrival order
+      (3L, t10, t10, Some(6.0), Some(2.0)), (3L, t10, t10, Some(6.0), Some(1.0)),
+      (3L, t10, t10, Some(5.0), Some(9.0)),
+      // created breaks an event-ts tie
+      (4L, t10, ts("2024-01-01 10:05:00"), Some(1.0), Some(1.0)),
+      (4L, t10, ts("2024-01-01 10:01:00"), Some(7.0), Some(7.0)),
+      // null features: the newest row's null wins; at a tie a value beats null
+      (5L, ts("2024-01-01 14:00:00"), t10, None, Some(3.0)),
+      (5L, ts("2024-01-01 13:00:00"), t10, Some(8.0), Some(8.0)),
+      (6L, t10, t10, Some(8.0), None), (6L, t10, t10, None, None))
+    val cols = Seq("driver_id", "et", "created", "v", "w")
+    val seedDf = seed.toDF(cols: _*)
+    val rawDf = raw.toDF(cols: _*)
+    val view = FeatureView("rw", Seq("driver"),
+      Seq(Feature("v", GraftType.Dbl), Feature("w", GraftType.Dbl)), Duration.ZERO,
+      DataFrameSource(rawDf, "et", Some("created")))
+    val want: Map[Long, (Timestamp, Any, Any)] = graft.operators.PullLatest
+      .latestPerKey(seedDf.unionByName(rawDf), Seq("driver_id"), "et", Some("created"),
+        Seq("v", "w"))
+      .collect().map(r => r.getLong(0) -> ((r.getTimestamp(1), r.get(3), r.get(4)))).toMap
+    assert(want(3L) === ((t10, 6.0, 2.0)) && want(5L)._2 == null && want(6L)._2 === 8.0,
+      s"fixture: $want")
+    val keys = ((1L to 6L) :+ 9L).map(k => Seq("driver_id" -> k))
+    stores.foreach { case (name, store) =>
+      store.upsert("p", view, Seq("driver_id"), seedDf, "et", Some("created"))
+      store.upsert("p", view, Seq("driver_id"), rawDf, "et", Some("created"))
+      val got = store.read("p", view, Seq("driver_id"), keys, Seq("v", "w"))
+      keys.map(_.head._2.asInstanceOf[Long]).zip(got).foreach { case (k, (eventTs, vals)) =>
+        val (wantTs, wantV, wantW) = want(k)
+        assert(eventTs === Some(wantTs), s"$name: key $k event ts")
+        Seq("v" -> wantV, "w" -> wantW).foreach { case (f, x) =>
+          val fv = vals(f)
+          if (x == null) assert(fv.status == "NOT_FOUND", s"$name: key $k $f must be null, got $fv")
+          else assert(fv.status == "PRESENT" && fv.value == x, s"$name: key $k $f: want $x, got $fv")
+        }
+      }
+      store.teardown("p", Seq(view))
+    }
+    mini.stop()
+  }
+
   test("ParquetOnlineStore: small-store rewrite preserves the ADOPTED bucket marker (review r12)") {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graftmk").toString

@@ -482,4 +482,19 @@ class PureSpec extends AnyFunSuite {
       assert(new String(reparsed("42.json"), "UTF-8") == """{"lang":"de"}""")
     } finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
   }
+
+  test("Registry codec: sub-second view TTLs round-trip; a ttl_seconds-only view still loads") {
+    def view(ttl: Duration) = FeatureView("sub", Seq("e"), Seq(Feature("v", GraftType.Dbl)),
+      ttl, FileSource("/nonexistent.parquet", eventTimestampColumn = "et"))
+    Seq(Duration.ofMillis(1500), Duration.ofNanos(1), Duration.ofHours(2), Duration.ZERO)
+      .foreach { ttl =>
+        val text = RegistryCodec.encodeView(view(ttl)).render
+        assert(RegistryCodec.decodeView(Json.parse(text)).ttl === ttl, text)
+      }
+    // a view written before ttl_nanos existed carries whole seconds only
+    val text = Json.obj(RegistryCodec.encodeView(view(Duration.ofSeconds(90))).fields
+      .filterNot(_._1 == "ttl_nanos"): _*).render
+    assert(!text.contains("ttl_nanos") && text.contains("\"ttl_seconds\":90"), text)
+    assert(RegistryCodec.decodeView(Json.parse(text)).ttl === Duration.ofSeconds(90))
+  }
 }

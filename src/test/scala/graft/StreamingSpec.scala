@@ -501,4 +501,67 @@ class StreamingSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("no total order"))
   }
+
+  /** A CDC view over one parquet file: one AvailableNow batch of
+    * `(user_id, ts, op, v)` rows into a fresh in-memory store. */
+  private def cdcStream(project: String, rows: Seq[(Long, Timestamp, Option[String], Option[Double])])
+      : (FeatureStore, FeatureView, org.apache.spark.sql.streaming.StreamingQuery, String) = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("cdc_").toString
+    rows.toDF("user_id", "ts", "op", "v").coalesce(1).write.parquet(s"$dir/in")
+    val fs = new FeatureStore(project, new Registry(), new InMemoryOnlineStore(), spark)
+    fs.applyEntity(Entity("user", GraftType.Int64, Some("user_id")))
+    val view = FeatureView("uv", Seq("user"), Seq(Feature("v", GraftType.Dbl)), Duration.ZERO,
+      batchSource = FileSource(s"$dir/in", eventTimestampColumn = "ts"),
+      streamSource = Some(FileStreamSource(s"$dir/in", "parquet", "ts")))
+    fs.applyFeatureView(view)
+    val q = StreamMaterializer.materializeCdcStream(fs, "uv", "op",
+      trigger = Trigger.AvailableNow(), checkpointDir = Some(s"$dir/ckpt"))
+    (fs, view, q, dir)
+  }
+
+  test("materializeCdcStream: a superseded NULL-op record fails the stream, like cdcApply") {
+    // the NULL op is older than the key's upsert, so a check after the
+    // collapse never sees it
+    val (fs, view, q, dir) = cdcStream("cdc_nullop_t", Seq(
+      (1L, ts("2024-01-01 00:00:01"), None, Some(1.0)),
+      (1L, ts("2024-01-01 00:00:02"), Some("U"), Some(2.0))))
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.awaitTermination())
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(messages.exists(m => m != null && m.contains("NULL op")), e.getMessage)
+    val r = fs.onlineStore.read(fs.project, view, Seq("user_id"), Seq(Seq("user_id" -> 1L)), Seq("v"))
+    assert(r.head._2("v").status == "NOT_FOUND", "a failed batch must write nothing")
+    fs.teardown()
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
+  test("materializeCdcStream and cdcApply collapse one changelog to the same keys and values") {
+    import spark.implicits._
+    val t1 = ts("2024-01-01 00:00:01")
+    val t2 = ts("2024-01-01 00:00:02")
+    val feed = Seq[(Long, Timestamp, Option[String], Option[Double])](
+      // exact ts tie: the upsert beats the delete, whatever the values
+      (1L, t1, Some("U"), Some(1.0)), (1L, t1, Some("D"), Some(2.0)),
+      (2L, t1, Some("U"), Some(5.0)), (2L, t2, Some("U"), Some(6.0)),
+      (3L, t1, Some("U"), Some(3.0)), (3L, t2, Some("D"), None),
+      // out of order: the later upsert wins over an earlier delete
+      (4L, t2, Some("U"), Some(7.0)), (4L, t1, Some("D"), Some(8.0)),
+      (5L, t1, Some("D"), None))
+    val empty = Seq.empty[(Long, Double)].toDF("user_id", "v")
+    val applied = graft.operators.Merge.cdcApply(empty,
+        feed.toDF("user_id", "ts", "op", "v"), Seq("user_id"), "op", Seq("ts"), Seq("v"))
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(applied === Map(1L -> 1.0, 2L -> 6.0, 4L -> 7.0))
+
+    val (fs, view, q, dir) = cdcStream("cdc_agree_t", feed)
+    q.awaitTermination()
+    val keys = (1L to 5L).map(k => Seq("user_id" -> k))
+    val streamed = keys.zip(fs.onlineStore.read(fs.project, view, Seq("user_id"), keys, Seq("v")))
+      .collect { case (k, (_, vals)) if vals("v").status == "PRESENT" =>
+        k.head._2.asInstanceOf[Long] -> vals("v").value }
+      .toMap
+    assert(streamed === applied, "the CDC stream must leave what cdcApply leaves")
+    fs.teardown()
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
 }
