@@ -151,7 +151,8 @@ class InMemoryOnlineStore extends OnlineStore {
       df: DataFrame, tsCol: String, createdCol: Option[String]): Unit = {
     val feats = view.featureNames
     val viewName = view.name
-    PullLatest.latestPerKey(df, joinKeys, tsCol, createdCol, feats).collect().foreach { row =>
+    val guarded = df.select(OnlineStore.guardNullKeys(df.columns.toSeq, joinKeys, viewName, "upsert"): _*)
+    PullLatest.latestPerKey(guarded, joinKeys, tsCol, createdCol, feats).collect().foreach { row =>
       val key = joinKeys.map(k => k -> row.getAs[Any](k))
       val ts = row.getAs[Timestamp](tsCol)
       val created = createdCol.map(row.getAs[Timestamp])
@@ -194,7 +195,8 @@ class InMemoryOnlineStore extends OnlineStore {
 
   override def delete(project: String, view: FeatureView, joinKeys: Seq[String],
       keysDf: DataFrame): Unit =
-    keysDf.select(joinKeys.map(col): _*).distinct().collect().foreach { row =>
+    keysDf.select(OnlineStore.guardNullKeys(joinKeys, joinKeys, view.name, "delete"): _*)
+      .distinct().collect().foreach { row =>
       val key = joinKeys.map(k => k -> row.getAs[Any](k))
       table.remove(storeKey(project, view.name, key))
     }

@@ -77,7 +77,7 @@ import graft.model.FeatureView
   */
 class ShardedOnlineStore(
     val children: IndexedSeq[OnlineStore],
-    salt: String = "rdv") extends OnlineStore {
+    salt: String = "rdv") extends OnlineStore with ExpirableOnlineStore {
   require(children.nonEmpty, "at least one shard required")
 
   private def n = children.size
@@ -667,23 +667,25 @@ object ShardedOnlineStore {
     }
   }
 
-  /** Write marker file `name` under `base`: a UUID-named tmp file, then
-    * publish by rename; on a pre-existing marker (a refresh, or a
-    * concurrent twin's identical first write) replace it — the moment
-    * of absence reads as "unmarked", which validation treats as
-    * pass-through, never as a misroute. */
+  /** Write marker file `name` under `base`: a UUID-named tmp file,
+    * published over any pre-existing marker (a refresh, or a concurrent
+    * twin's identical first write) by [[graft.util.RenameAside.swap]]
+    * with `$name.old` as the aside copy. The moment of absence between
+    * its renames reads as "unmarked", which validation treats as
+    * pass-through, never as a misroute; a failed publish puts the old
+    * marker back and throws, so the shard is never left unmarked
+    * silently. */
   private def writeMarker(fs: org.apache.hadoop.fs.FileSystem, base: String,
       name: String, body: graft.util.JValue.JObj): Unit = {
     val dest = new org.apache.hadoop.fs.Path(s"$base/$name")
+    val aside = new org.apache.hadoop.fs.Path(s"$base/$name.old")
     val tmp = new org.apache.hadoop.fs.Path(s"$base/$name.tmp-" +
       java.util.UUID.randomUUID().toString.take(8))
     val out = fs.create(tmp, true)
     try out.write(graft.util.Json.render(body).getBytes("UTF-8"))
     finally out.close()
-    if (!fs.rename(tmp, dest)) {
-      fs.delete(dest, false)
-      if (!fs.rename(tmp, dest)) fs.delete(tmp, false)
-    }
+    graft.util.RenameAside.heal(fs, dest, aside)
+    graft.util.RenameAside.swap(fs, tmp, dest, aside)
   }
 
   private[graft] def clearPendingSize(fs: org.apache.hadoop.fs.FileSystem,

@@ -115,7 +115,7 @@ object PointInTimeJoin {
     // columns and feature-name collisions.
     val chainOutName: ViewJoin => String => String =
       vj => f => if (fullFeatureNames) s"${vj.view.name}__$f" else f
-    val chainable = views.nonEmpty && {
+    val chainable = {
       var cols = entityDf.columns.toSet
       views.forall { vj =>
         val outNames = vj.features.map(chainOutName(vj))
@@ -126,41 +126,13 @@ object PointInTimeJoin {
         ok
       }
     }
-    // Route decision, made ONCE from the ORIGINAL entity frame and held
-    // for every view: the as-of output is row-for-row the entity frame,
-    // so if the entity fits the broadcast gate, so does every
-    // accumulated intermediate — but the intermediates' own OPTIMIZER
-    // stats (join-estimate inflated) would flip later links to
-    // sortmerge mid-plan if re-consulted. One decision, one shape. The
-    // right-side gate uses the LARGEST view source (pre-pruning — an
-    // over-estimate, the safe direction: the broadcast route's win
-    // scales with the feature shuffle it deletes).
-    val strat =
-      if (views.isEmpty) graft.plans.AsOfJoin.SortMerge
-      else graft.plans.AsOfJoin.pinnedStrategy(entityDf.sparkSession).getOrElse {
-        // stats only when the route is actually open: the maxBy runs the
-        // optimizer over every view's source, wasted under a pinned
-        // session (review r12)
-        val biggest = views.map(_.featureDf).maxBy(
-          _.queryExecution.optimizedPlan.stats.sizeInBytes)
-        // the broadcast route ships each view's WINNERS (entity rows ×
-        // that view's feature payload) — gate on the union of all
-        // views' feature widths, the conservative bound (review r12);
-        // each column rides with its source frame so variable-width
-        // payloads can answer from footer actuals (review r13)
-        val payload = views.flatMap(vj =>
-          vj.features.map(f => (vj.featureDf, f)))
-        graft.plans.AsOfJoin.chooseStrategy(entityDf, biggest, payload)
-      }
-
-    if (chainable && strat == graft.plans.AsOfJoin.SortMerge) {
+    if (chainable) {
       val (mn0, mx0) = entityBounds(entityDf, entityTsCol)
       return views.foldLeft(entityDf) { (acc, vj) =>
         val (feat, tsCol, createdCol) = prepareFeature(vj, mn0, mx0)
         val ord = (createdCol.toSeq ++ vj.tieBreakCols).distinct.filterNot(_ == tsCol)
         val joined = graft.plans.AsOfJoin.join(acc, feat, vj.joinKeys,
-          entityTsCol, tsCol, vj.view.ttl, ord, vj.features,
-          strategy = graft.plans.AsOfJoin.SortMerge)
+          entityTsCol, tsCol, vj.view.ttl, ord, vj.features)
         joined.select(acc.columns.map(col).toIndexedSeq ++
           vj.features.map(f => col(f).as(chainOutName(vj)(f))): _*)
       }
@@ -181,22 +153,10 @@ object PointInTimeJoin {
     // views, so the per-view subtrees are independent: Spark schedules
     // their candidate joins as parallel stages, and view N's plan does
     // not re-traverse views 1..N-1's join-backs.
-    val hinted = strat == graft.plans.AsOfJoin.Broadcast
-    val enriched = views.foldLeft(stamped) { (acc, vj) =>
-      val w = viewWinners(stamped, vj, entityTsCol, rowId, fullFeatureNames,
-        mnTs, mxTs, hinted)
-      // winners are entity-cardinality: under the broadcast route the
-      // join-backs are hinted broadcast hash joins, so the whole
-      // enrichment is ONE codegen pipeline over the stamped frame —
-      // scan → BHJ(w1) → BHJ(w2) → … with zero exchanges
-      acc.join(if (hinted) broadcast(w) else w, Seq(rowId), "left")
-    }
-    val result = enriched.drop(rowId)
-    // the all-eligible broadcast shape is as static as the chain (every
-    // join hinted, the only exchanges are the tiny per-view winner
-    // reductions): engine-owned AQE policy applies (StaticPlan)
-    if (chainable && hinted) graft.plans.StaticPlan.applyPolicy(result)
-    else result
+    views.foldLeft(stamped) { (acc, vj) =>
+      acc.join(viewWinners(stamped, vj, entityTsCol, rowId, fullFeatureNames,
+        mnTs, mxTs), Seq(rowId), "left")
+    }.drop(rowId)
   }
 
   /** Entity-df (min, max) event-ts for the O5 pruning window:
@@ -311,11 +271,9 @@ object PointInTimeJoin {
 
   /** One view's as-of winners keyed by row id (O1/O4/O5/O6): the caller
     * left-joins the result back to the accumulated frame. Eligible views
-    * under the held sort-merge strategy ride the sort-merge exec on the
-    * NARROW (rowId, ts, keys) entity projection — no candidate rows
-    * shuffle; every other view runs [[winners]], hinted under the held
-    * broadcast strategy so the candidate join is a build-on-entity BHJ
-    * and the feature scan is never exchanged. */
+    * ride the sort-merge exec on the NARROW (rowId, ts, keys) entity
+    * projection — no candidate rows shuffle; every other view runs
+    * [[winners]]. */
   private def viewWinners(
       stamped: DataFrame,
       vj: ViewJoin,
@@ -323,15 +281,14 @@ object PointInTimeJoin {
       rowId: String,
       fullFeatureNames: Boolean,
       mnTs: java.sql.Timestamp,
-      mxTs: java.sql.Timestamp,
-      hinted: Boolean): DataFrame = {
+      mxTs: java.sql.Timestamp): DataFrame = {
     val ViewJoin(view, joinKeys, features, _, tieBreaks) = vj
     val (featPrepared, tsCol, createdCol) = prepareFeature(vj, mnTs, mxTs)
     val outName: String => String =
       f => if (fullFeatureNames) s"${view.name}__$f" else f
     val ord = (createdCol.toSeq ++ tieBreaks).distinct.filterNot(_ == tsCol)
 
-    if (!hinted && sortMergeEligible(stamped, vj, entityTsCol) &&
+    if (sortMergeEligible(stamped, vj, entityTsCol) &&
         features.intersect((rowId +: entityTsCol +: joinKeys).distinct).isEmpty) {
       val leftNarrow =
         stamped.select((rowId +: entityTsCol +: joinKeys).distinct.map(col): _*)
@@ -339,8 +296,7 @@ object PointInTimeJoin {
       // the OUTER join() owns the AQE policy for the final frame
       // (review r12)
       graft.plans.AsOfJoin.join0(leftNarrow, featPrepared, joinKeys,
-          entityTsCol, tsCol, view.ttl, ord, features,
-          strategy = graft.plans.AsOfJoin.SortMerge)
+          entityTsCol, tsCol, view.ttl, ord, features)
         .select(col(rowId) +: features.map(f => col(f).as(outName(f))): _*)
     } else {
       // NOTE (measured twice, rounds 3+4): do NOT rebalance() either join
@@ -354,7 +310,7 @@ object PointInTimeJoin {
       winners(stamped, rowId, entityTsCol, joinKeys, featPrepared, tsCol,
         backwardWindow(entityTsCol, tsCol, view.ttl),
         (_, r) => (tsCol +: ord).map(r),
-        features.map(f => outName(f) -> f), max_by, hinted)
+        features.map(f => outName(f) -> f), max_by)
     }
   }
 
@@ -410,9 +366,7 @@ object PointInTimeJoin {
     *     window as a post-join predicate — Catalyst plans a hash or
     *     sort-merge join, not a theta join. Keys match with `<=>`, so
     *     null keys match null keys (the sort-merge exec's natural
-    *     ordering does the same). `hint` broadcasts the narrow entity
-    *     side: the feature scan then streams through a BHJ and is never
-    *     exchanged or sorted.
+    *     ordering does the same).
     *   - the reduction is `groupBy(rowId).agg(pick(payload, struct(order,
     *     payload)))`, a declarative aggregate with map-side partial
     *     aggregation — unlike the reference SQL template's row_number()
@@ -440,15 +394,13 @@ object PointInTimeJoin {
       window: (Side, Side) => Column,
       order: (Side, Side) => Seq[Column],
       payload: Seq[(String, String)],
-      pick: (Column, Column) => Column,
-      hint: Boolean = false): DataFrame = {
+      pick: (Column, Column) => Column): DataFrame = {
     val left = stamped.select((rowId +: entityTsCol +: keys).distinct.map(col): _*)
     val right = feature.select(feature.columns.toSeq.map(c => col(c).as(s"__r_$c")): _*)
     val l: Side = c => left(c)
     val r: Side = c => right(s"__r_$c")
     val keyCond = keys.map(k => l(k) <=> r(k)).reduce(_ && _)
-    val candidates = (if (hint) broadcast(left) else left)
-      .join(right, keyCond && window(l, r), "inner")
+    val candidates = left.join(right, keyCond && window(l, r), "inner")
     val fields =
       if (payload.isEmpty) Seq(r(featureTsCol).as("__feat_ts"))
       else payload.zipWithIndex.map { case ((_, c), i) => r(c).as(s"_$i") }

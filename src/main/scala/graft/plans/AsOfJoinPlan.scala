@@ -222,206 +222,19 @@ case class AsOfJoinExec(
     copy(left = newLeft, right = newRight)
 }
 
-/** User-facing API over the custom plan machinery, with STRATEGY
-  * routing between two physical shapes that share one total order
-  * (and therefore one oracle):
+/** User-facing API over the custom plan machinery: [[AsOfJoinExec]],
+  * both sides hash-clustered on the join keys and sorted, O(1)-state
+  * merge. Each side shuffles exactly once and no candidate rows
+  * materialize.
   *
-  *  - `sortmerge` — [[AsOfJoinExec]]: both sides hash-clustered on the
-  *    join keys and sorted, O(1)-state merge. The right shape when the
-  *    two sides are comparable in size: each side shuffles exactly
-  *    once and no candidate rows materialize.
-  *  - `broadcast` — for the dominant production shape, entity frame ≪
-  *    feature table (reference `bigquery.py:605-622` uploads the tiny
-  *    entity table and joins it against the warehouse fact table).
-  *    The feature table is NEVER shuffled and NEVER sorted: the
-  *    family's winner kernel ([[graft.operators.PointInTimeJoin.winners]],
-  *    hinted) broadcasts the narrow entity projection (rowId, ts, keys),
-  *    the feature scan streams through a broadcast hash join whose
-  *    candidates collapse map-side into per-rowId `max_by` partials, and
-  *    the only exchange moves ≤ |entity| × partitions pre-reduced winner
-  *    rows.
-  *    At 100 TB this strictly dominates the sort-merge shape whenever
-  *    the entity frame fits the broadcast threshold — shuffling and
-  *    sorting the accumulated 100 TB feature scan vs not touching it.
-  *    (A custom "BroadcastAsOfJoinExec" physical node was considered
-  *    and rejected: a single exec node must either keep the feature
-  *    side clustered — paying exactly the exchange this route exists
-  *    to kill — or emit per-partition partials anyway; the declarative
-  *    join + partial-agg composition expresses the same dataflow in
-  *    whole-stage-codegen'd built-ins, which the brief's operator
-  *    preference order ranks first.)
-  *  - `auto` (default) — broadcast when the left's optimizer-estimated
-  *    bytes fit `graft.asof.broadcastThreshold` (default: the
-  *    session's `spark.sql.autoBroadcastJoinThreshold`), else
-  *    sortmerge. Overridable per session via `graft.asof.strategy`.
-  *
-  * Both routes return a frame re-rooted on the AQE-off static-plan
-  * session ([[StaticPlan]]) unless `graft.asof.aqe=on`: every exchange
-  * in both shapes is dictated by required distributions or explicit
-  * hints, so AQE can only add re-plan rounds (measured, see
-  * StaticPlan).
+  * The result is re-rooted on the AQE-off static-plan session
+  * ([[StaticPlan]]) unless `graft.asof.aqe=on`: every exchange in the
+  * plan is dictated by required distributions, so AQE can only add
+  * re-plan rounds (measured, see StaticPlan).
   */
 object AsOfJoin {
-  import org.apache.spark.sql.functions.{broadcast, col, max_by}
+  import org.apache.spark.sql.functions.col
   import org.apache.spark.sql.graftshim.ColumnShim
-  import graft.operators.PointInTimeJoin
-
-  val Auto = "auto"
-  val SortMerge = "sortmerge"
-  val Broadcast = "broadcast"
-
-  /** The session's pinned strategy, if `graft.asof.strategy` names one
-    * — lets callers skip the plan-stat probes entirely when the route
-    * is forced (the stats require an analyze+optimize pass per frame,
-    * wasted work under a pinned session). */
-  def pinnedStrategy(spark: org.apache.spark.sql.SparkSession): Option[String] =
-    parseStrategy("graft.asof.strategy", spark.conf.get("graft.asof.strategy", Auto))
-
-  /** `auto` → None, a named route → Some(route); anything else fails
-    * loudly, naming the setting or parameter `what` it came from. */
-  private def parseStrategy(what: String, value: String): Option[String] =
-    value.toLowerCase match {
-      case Auto => None
-      case s @ (SortMerge | Broadcast) => Some(s)
-      case s => throw new IllegalArgumentException(
-        s"$what must be auto|sortmerge|broadcast, got $s")
-    }
-
-  /** Per-payload-column broadcast width: fixed-width types answer from
-    * the schema (`defaultSize` is exact there); variable-width types
-    * (String/Binary/Array/Map/var-Struct) answer from the FEATURE
-    * side's parquet footer actuals ([[graft.sources.FooterBounds
-    * .avgRowBytes]]) — `StringType.defaultSize` is a flat 20 bytes, so
-    * a document-text payload (the routine LLM-retrieval shape) would
-    * under-estimate the shipped winners frame by two orders of
-    * magnitude and approve a multi-GB broadcast (VERDICT r12 #1, the
-    * same estimate-vs-actual class BroadcastAudit closed for the
-    * corpus operators). None = unmeasurable variable width → the
-    * caller refuses the broadcast route. */
-  private def varWidth(dt: org.apache.spark.sql.types.DataType): Boolean = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case _: StringType => true
-      case BinaryType => true
-      case _: ArrayType => true
-      case _: MapType => true
-      case st: StructType => st.exists(f => varWidth(f.dataType))
-      case _ => false
-    }
-  }
-
-  /** Widths for every payload column, ONE footer sweep per distinct
-    * source frame (a view with many variable-width features would
-    * otherwise re-parse the same footers once per column). None =
-    * variable width the footers can't answer. */
-  private def payloadWidths(payload: Seq[(DataFrame, String)]): Seq[Option[Double]] = {
-    val out = new Array[Option[Double]](payload.size)
-    payload.zipWithIndex.groupBy(_._1._1).foreach { case (src, entries) =>
-      val varCols = entries.collect {
-        case ((_, c), _) if varWidth(src.schema(c).dataType) => c
-      }
-      val measured =
-        if (varCols.isEmpty) Map.empty[String, Double]
-        else graft.sources.FooterBounds.avgRowBytes(src, varCols)
-      entries.foreach { case ((_, c), i) =>
-        val dt = src.schema(c).dataType
-        out(i) = if (!varWidth(dt)) Some(dt.defaultSize.toDouble) else measured.get(c)
-      }
-    }
-    out.toIndexedSeq
-  }
-
-  /** Route for a given (left, right) pair: session override via
-    * `graft.asof.strategy`, else plan-stat gated broadcast. Stats are
-    * the OPTIMIZED plans' sizeInBytes — for file scans that is file
-    * size scaled by column pruning, the same signal Spark's own
-    * broadcast planning uses; unknown/huge estimates fall to sortmerge
-    * (never an OOM-risking broadcast on a guess).
-    *
-    * TWO gates, both required, both measured (BENCH_NOTES r12):
-    *  - left ≤ `graft.asof.broadcastThreshold` (default: the session's
-    *    autoBroadcastJoinThreshold) — the broadcast must fit executor
-    *    memory, same bound Spark applies to hinted joins;
-    *  - right ≥ `graft.asof.broadcastRightMin` (default 1 GB) — the
-    *    route's win is the feature-side exchange+sort it deletes, and
-    *    that win must exceed its fixed costs (TWO broadcast builds and
-    *    extra serialized stages, ~0.5–0.9 s measured). Calibrated on
-    *    tools/AsofScale (150k-row entity held fixed, feature side
-    *    grown through the ScaleCheck replicas, min-of-3 on local[32]):
-    *      1×   (11 MB):  sortmerge 0.59 s / 17.5 MB shuffled,
-    *                     broadcast 1.07 s /  2.3 MB shuffled
-    *      10×  (110 MB): sortmerge 1.03 s / 155 MB shuffled,
-    *                     broadcast 1.26 s /  3.4 MB shuffled
-    *      100× (1.1 GB): sortmerge 5.3 s / 1566 MB shuffled,
-    *                     broadcast 6.5 s /  3.4 MB shuffled (465×
-    *                     fewer bytes; partials bound = |entity|×tasks)
-    *    On a single-JVM local master the deleted exchange is RAM-speed
-    *    so sortmerge keeps a wall edge at every bench scale — but the
-    *    shuffled-bytes column is what crosses the NETWORK on a real
-    *    cluster, where this operator's 100 TB deployments live. The
-    *    1 GB default is where the deleted shuffle decisively dominates
-    *    the fixed costs under any disk/network-backed shuffle while
-    *    local walls stay within ~20%; single-node-only users can raise
-    *    it (or pin `graft.asof.strategy=sortmerge`). */
-  def chooseStrategy(left: DataFrame, right: DataFrame,
-      broadcastPayload: Seq[(DataFrame, String)] = Nil): String = {
-    val spark = left.sparkSession
-    pinnedStrategy(spark).getOrElse {
-        val thrStr = spark.conf.get("graft.asof.broadcastThreshold",
-          spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB"))
-        val thr = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(thrStr)
-        val rightMin = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-          spark.conf.get("graft.asof.broadcastRightMin", "1GB"))
-        val size = left.queryExecution.optimizedPlan.stats.sizeInBytes
-        val rsize = right.queryExecution.optimizedPlan.stats.sizeInBytes
-        // what the route actually BROADCASTS is the winners frame:
-        // entity CARDINALITY × (rowId + feature payload) width. Gating
-        // the entity frame's own bytes let a narrow 9 MB entity with
-        // 100 wide feature columns approve a ~240 MB broadcast
-        // (review r12) — scale the estimate by the width ratio.
-        // Fixed-width columns answer at schema grain; variable-width
-        // payload columns use MEASURED parquet-footer widths, and an
-        // UNMEASURABLE variable width refuses the route outright
-        // (review r13: defaultSize rated document text at a flat
-        // 20 bytes/row, so a borderline entity frame could approve a
-        // multi-GB winners broadcast).
-        val widths = payloadWidths(broadcastPayload)
-        // Entity CARDINALITY (VERDICT r13 #4): sizeInBytes / Σ
-        // defaultSize mis-priced a wide-string entity frame through the
-        // same flat-20-bytes assumption the payload side just escaped —
-        // prefer real row counts. The parquet footers' record count
-        // comes FIRST: it is an upper bound under traced-through
-        // filters (over-counting prices the broadcast LARGER, the safe
-        // direction), while CBO's stats.rowCount is a POST-FILTER
-        // selectivity estimate that can under-count by orders of
-        // magnitude on a mis-estimated predicate — the same
-        // under-pricing mode this change closes (review r14); it is
-        // consulted only when no footer answer exists (non-parquet or
-        // shape-rejected plans, where an estimate beats the flat
-        // division). The defaultSize division survives only for
-        // all-fixed-width schemas, where it is exact; a var-width
-        // entity frame with no measurable row count REFUSES the route
-        // like an unmeasurable payload does.
-        // lazy: the footer sweep (up to 64 file opens) must only run on
-        // the one branch that consults cardinality — the no-payload and
-        // unmeasurable-width branches never pay plan-time I/O for it
-        lazy val card: Option[BigInt] =
-          graft.sources.FooterBounds.rowCount(left).map(BigInt(_))
-            .orElse(left.queryExecution.optimizedPlan.stats.rowCount)
-            .orElse {
-              if (left.schema.exists(f => varWidth(f.dataType))) None
-              else Some(size /
-                BigInt(math.max(1, left.schema.map(_.dataType.defaultSize).sum)))
-            }
-        val bSize: Option[BigInt] =
-          if (broadcastPayload.isEmpty) Some(size)
-          else if (widths.exists(_.isEmpty)) None
-          else card.map(_ * BigInt(math.ceil(8 + widths.flatten.sum).toLong))
-        if (thr > 0 && size > 0 && bSize.exists(_ <= thr) && rsize >= rightMin)
-          Broadcast
-        else SortMerge
-    }
-  }
 
   /** Idempotently install [[AsOfJoinStrategy]] into the session's
     * planner (experimental.extraStrategies is the public live-session
@@ -439,11 +252,7 @@ object AsOfJoin {
     * residual ties (fully-duplicate (keys, ts, orderCols) rows) resolve
     * to the payload-max row, the same total order the declarative
     * PointInTimeJoin path maximizes. Emits all entity columns plus
-    * `featureCols`.
-    *
-    * `strategy`: [[Auto]] (plan-stat gate), [[SortMerge]], or
-    * [[Broadcast]] — see the object doc; both routes share this
-    * method's semantics exactly. */
+    * `featureCols`. */
   def join(
       entity: DataFrame,
       feature: DataFrame,
@@ -452,10 +261,9 @@ object AsOfJoin {
       featureTsCol: String,
       ttl: java.time.Duration,
       orderCols: Seq[String],
-      featureCols: Seq[String],
-      strategy: String = Auto): DataFrame =
+      featureCols: Seq[String]): DataFrame =
     StaticPlan.applyPolicy(join0(entity, feature, keys, entityTsCol,
-      featureTsCol, ttl, orderCols, featureCols, strategy))
+      featureTsCol, ttl, orderCols, featureCols))
 
   /** [[join]] WITHOUT the engine-owned AQE policy applied — for callers
     * that embed the result as a SUBTREE of a larger plan they build on
@@ -473,8 +281,7 @@ object AsOfJoin {
       featureTsCol: String,
       ttl: java.time.Duration,
       orderCols: Seq[String],
-      featureCols: Seq[String],
-      strategy: String = Auto): DataFrame = {
+      featureCols: Seq[String]): DataFrame = {
     val spark = entity.sparkSession
     ensureStrategy(spark)
     // fresh expression ids on the right side so self-joins (entity df
@@ -506,28 +313,6 @@ object AsOfJoin {
         s"as-of join key '$kName' type mismatch: entity side $lt vs feature " +
           s"side $rt — cast the sides to a common type before joining")
     }
-    val route = parseStrategy("strategy", strategy).getOrElse(
-      chooseStrategy(entity, feature, featureCols.map(c => (feature, c))))
-
-    if (route == Broadcast) {
-      // ---- broadcast route: small entity frame, untouched feature scan
-      val (stamped, rowId) = PointInTimeJoin.stamp(entity)
-      val winners = PointInTimeJoin.winners(stamped, rowId, entityTsCol, keys,
-        feature.select(rightNeeded.map(col): _*), featureTsCol,
-        PointInTimeJoin.backwardWindow(entityTsCol, featureTsCol, ttl),
-        (_, r) => (featureTsCol +: orderCols).distinct.map(r),
-        featureCols.map(f => f -> f), max_by, hint = true)
-      // join-back by rowId: winners are entity-cardinality — broadcast
-      // hash join, no shuffle of the entity frame either. Per-side
-      // attribute refs: unambiguous even if a feature column shares a
-      // name with an entity column (the exec path emits duplicate names
-      // in that case; this matches)
-      return stamped.join(broadcast(winners), Seq(rowId), "left")
-        .select(entity.columns.map(c => stamped(c)).toIndexedSeq ++
-          featureCols.map(f => winners(f)): _*)
-    }
-
-    // ---- sort-merge route: the custom exec
     // float/double keys: Spark's NormalizeFloatingNumbers rule rewrites
     // join keys of known Join nodes only, not this custom node — without
     // it -0.0 and 0.0 (equal under the merge ordering) hash to different

@@ -5,11 +5,9 @@ import org.apache.spark.sql.graftshim.ColumnShim
 
 /** Engine-owned execution policy for STATIC plans (VERDICT r11 #4).
   *
-  * The as-of family's eligible plans are static by construction: every
-  * exchange is dictated by `requiredChildDistribution` (the sort-merge
-  * chain) or by an explicit `broadcast()` hint (the broadcast route) —
-  * there is no join-strategy switch, no skew split, nothing AQE can
-  * re-plan. Running them adaptively only serializes each stage behind
+  * The sort-merge as-of plans are static by construction: every
+  * exchange is dictated by `requiredChildDistribution` — there is no
+  * join-strategy switch, no skew split, nothing AQE can re-plan. Running them adaptively only serializes each stage behind
   * an AQE re-plan round: measured ~0.56 s AQE-off vs ~0.8–1.1 s AQE-on
   * on identical plans at sf0.1 (BENCH_NOTES.md "Per-query execution
   * policy"). That policy used to

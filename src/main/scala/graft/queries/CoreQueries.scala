@@ -95,30 +95,23 @@ object CoreQueries {
       .select(col("l_orderkey").as("o_orderkey"), col("l_shipdate"),
         col("l_linenumber"), col("l_quantity"), col("l_extendedprice"),
         col("l_returnflag"))
-    // strategy PINNED: this query's whole purpose is to gate the
-    // sort-merge exec against its oracle — the Auto default could
-    // silently route it to the broadcast path under a session override
-    // or threshold change (review r12)
     graft.plans.AsOfJoin.join(entity, feat, Seq("o_orderkey"),
         "event_timestamp", "l_shipdate", Duration.ofDays(400),
         orderCols = Seq("l_linenumber"),
-        featureCols = Seq("l_quantity", "l_extendedprice", "l_returnflag"),
-        strategy = graft.plans.AsOfJoin.SortMerge)
+        featureCols = Seq("l_quantity", "l_extendedprice", "l_returnflag"))
       .select(col("o_orderkey"), col("o_custkey"),
         unix_millis(col("event_timestamp")).as("event_ts_ms"),
         col("l_quantity"), col("l_extendedprice"), col("l_returnflag"))
   }
 
-  /** The SAME single-view as-of workload as [[pitJoinSingle]], executed
-    * through the BROADCAST route ([[graft.plans.AsOfJoin]] strategy
-    * `broadcast`, r12): the narrow entity projection is broadcast, the
-    * feature scan streams through a broadcast hash join whose
-    * candidates collapse map-side into per-row max_by partials, and
-    * the feature table is never exchanged or sorted — the 100 TB shape
-    * for entity ≪ feature retrievals. Shares [[pitJoinSingleSql]] as
-    * its oracle, so the route is hash-pinned against the same DuckDB
-    * replay as the sort-merge and declarative paths at both scale
-    * factors regardless of where the auto gate routes. */
+  /** The SAME single-view as-of workload as [[pitJoinSingle]], through
+    * [[graft.plans.AsOfJoin.join]] — since the as-of broadcast route was
+    * retired this pins the same sort-merge plan as [[pitJoinSortMerge]].
+    * The route measured slower than sort-merge at every calibrated
+    * scale (BENCH_NOTES "Broadcast as-of route — measured
+    * calibration"), so `AsOfJoin` has one physical shape. The query
+    * keeps its name because the oracle set is fixed; it shares
+    * [[pitJoinSingleSql]] as its oracle. */
   def pitJoinBroadcast(s: SparkSession, dir: String): DataFrame = {
     val entity = pq(s, dir, "orders").select(
       col("o_orderkey"), col("o_custkey"),
@@ -130,8 +123,7 @@ object CoreQueries {
     graft.plans.AsOfJoin.join(entity, feat, Seq("o_orderkey"),
         "event_timestamp", "l_shipdate", Duration.ofDays(400),
         orderCols = Seq("l_linenumber"),
-        featureCols = Seq("l_quantity", "l_extendedprice", "l_returnflag"),
-        strategy = graft.plans.AsOfJoin.Broadcast)
+        featureCols = Seq("l_quantity", "l_extendedprice", "l_returnflag"))
       .select(col("o_orderkey"), col("o_custkey"),
         unix_millis(col("event_timestamp")).as("event_ts_ms"),
         col("l_quantity"), col("l_extendedprice"), col("l_returnflag"))

@@ -87,155 +87,6 @@ object FooterBounds {
     }
   }
 
-  /** Measured average bytes-per-ROW of `colName` over `df`'s backing
-    * parquet files, from footer metadata alone (no job): the sum of
-    * the column's chunk `totalUncompressedSize` across every leaf
-    * under the column, divided by total file rows. This is the
-    * broadcast-width signal the as-of gate needs for variable-width
-    * payloads — `StringType.defaultSize` is a flat 20 bytes, so a
-    * document-text payload under-estimates the shipped winners frame
-    * by orders of magnitude (VERDICT r12 #1); footer bytes are the
-    * column's ACTUALS. The column is traced through alias-only
-    * Project/SubqueryAlias/Filter layers (no arithmetic — widths of
-    * computed columns are not a footer fact); None whenever the plan
-    * shape, relation kind, or file count doesn't support a
-    * metadata-only answer, and the caller must treat None as
-    * unmeasurable (refuse, or fall back to its own bound). Filters are
-    * traced through, so the returned width is the FILE's average, not
-    * the filtered subset's — an estimate by contract. */
-  def avgRowBytes(df: DataFrame, colName: String): Option[Double] =
-    avgRowBytes(df, Seq(colName)).get(colName)
-
-  /** Multi-column variant: ONE footer sweep measures every requested
-    * column (the as-of gate asks about every payload column of a view —
-    * a per-column sweep re-parsed the same footers once per column,
-    * review r13). Returns only the measurable columns; a column whose
-    * trace fails or whose field is absent from any file is simply not
-    * in the map. */
-  def avgRowBytes(df: DataFrame, colNames: Seq[String]): Map[String, Double] = {
-    try {
-      val plan = df.queryExecution.analyzed
-      leafRelation(plan) match {
-        case None => Map.empty
-        case Some(rel) =>
-          val phys: Map[String, String] = colNames.distinct.flatMap { c =>
-            for {
-              attr0 <- plan.output.find(_.name == c)
-              attr <- traceAlias(plan, attr0)
-              if rel.dataSchema.fieldNames.contains(attr.name) &&
-                !rel.partitionSchema.fieldNames.contains(attr.name)
-            } yield c -> attr.name
-          }.toMap
-          if (phys.isEmpty) Map.empty
-          else footerAvgRowBytes(df, rel, phys)
-      }
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        if (sys.env.contains("GRAFT_FOOTER_DEBUG")) e.printStackTrace()
-        Map.empty
-    }
-  }
-
-  /** Total data-file ROW COUNT of `df`'s backing parquet relation from
-    * footer metadata alone (no job) — valid as an UPPER BOUND on the
-    * frame's cardinality when the plan between root and scan is only
-    * Project/SubqueryAlias/Filter layers: filters are traced through,
-    * not applied, so the count is the FILES', a superset — callers
-    * must only use it where over-counting is the safe direction (the
-    * as-of broadcast gate's entity cardinality: more rows → bigger
-    * priced broadcast → refusal, VERDICT r13 #4). Row-multiplying or
-    * row-reducing operators (Generate/Join/Aggregate/Limit…) reject →
-    * None, as does a non-parquet or many-file relation. */
-  def rowCount(df: DataFrame): Option[Long] = {
-    try {
-      val plan = df.queryExecution.analyzed
-      def shapeOk(p: LogicalPlan): Boolean = p match {
-        case pr: Project => shapeOk(pr.child)
-        case s: SubqueryAlias => shapeOk(s.child)
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => shapeOk(f.child)
-        case _: LogicalRelation => true
-        case _ => false
-      }
-      if (!shapeOk(plan)) return None
-      leafRelation(plan).flatMap { rel =>
-        val files = rel.location.inputFiles
-        if (files.isEmpty || files.length > MaxFooterFiles) None
-        else {
-          val conf = df.sparkSession.sessionState.newHadoopConf()
-          var rows = 0L
-          files.foreach { f =>
-            val reader = ParquetPointReader.open(conf, new Path(f))
-            try rows += reader.getRecordCount
-            finally reader.close()
-          }
-          Some(rows)
-        }
-      }
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        if (sys.env.contains("GRAFT_FOOTER_DEBUG")) e.printStackTrace()
-        None
-    }
-  }
-
-  /** Alias-only variant of [[trace]]: walk `attr` to the relation's own
-    * attribute through Project (attr / Alias-of-attr only),
-    * SubqueryAlias and Filter layers. */
-  @annotation.tailrec
-  private def traceAlias(plan: LogicalPlan, attr: Attribute): Option[Attribute] =
-    plan match {
-      case p: Project =>
-        p.projectList.find(_.exprId == attr.exprId) match {
-          case Some(a: AttributeReference) => traceAlias(p.child, a)
-          case Some(Alias(a: AttributeReference, _)) => traceAlias(p.child, a)
-          case _ => None
-        }
-      case s: SubqueryAlias => traceAlias(s.child, attr)
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        traceAlias(f.child, attr)
-      case _: LogicalRelation =>
-        if (plan.output.exists(_.exprId == attr.exprId)) Some(attr) else None
-      case _ => None
-    }
-
-  /** Σ totalUncompressedSize of every leaf chunk under each requested
-    * top-level column, over Σ file rows, in ONE sweep — nested columns
-    * (arrays/structs) fan out into several leaves that all share the
-    * top-level path head, so summing by path head covers exactly the
-    * column's bytes (repetition/definition levels included — the right
-    * side of the estimate for an in-memory row representation). A
-    * column absent from any file's schema drops out of the result
-    * (schema evolution — no per-file answer would bound it). */
-  private def footerAvgRowBytes(df: DataFrame, rel: HadoopFsRelation,
-      phys: Map[String, String]): Map[String, Double] = {
-    val files = rel.location.inputFiles
-    if (files.isEmpty || files.length > MaxFooterFiles) return Map.empty
-    val conf = df.sparkSession.sessionState.newHadoopConf()
-    var rows = 0L
-    val bytes = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
-    var alive = phys // (outCol -> physName) still measurable
-    files.foreach { f =>
-      val reader = ParquetPointReader.open(conf, new Path(f))
-      try {
-        val schema = reader.getFooter.getFileMetaData.getSchema
-        alive = alive.filter { case (_, pn) => schema.containsField(pn) }
-        if (alive.isEmpty) return Map.empty
-        val byPhys = alive.groupMap(_._2)(_._1)
-        reader.getFooter.getBlocks.asScala.foreach { block =>
-          rows += block.getRowCount
-          block.getColumns.asScala.foreach { c =>
-            val p = c.getPath.toArray
-            if (p.nonEmpty) byPhys.get(p(0)).foreach(_.foreach { outCol =>
-              bytes(outCol) += c.getTotalUncompressedSize
-            })
-          }
-        }
-      } finally reader.close()
-    }
-    if (rows > 0) alive.keys.map(c => c -> bytes(c).toDouble / rows).toMap
-    else Map.empty
-  }
-
   /** Exact micros-since-epoch → Timestamp (sub-ms precision kept via
     * setNanos — truncating to ms would shrink the upper bound). */
   private def tsOf(micros: Long): Timestamp = {

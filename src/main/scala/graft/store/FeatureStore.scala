@@ -377,14 +377,9 @@ class FeatureStore(
     if (view.ttl.isZero) return 0L
     val cutoff = Timestamp.from(asOf.toInstant.minus(view.ttl))
     onlineStore match {
-      // the sharded composite fans the sweep out to its children —
-      // without this arm a sharded_parquet deployment could never
-      // expire and every shard grew without bound (review r14)
-      case s: graft.online.ShardedOnlineStore =>
-        s.expire(spark, project, view, joinKeysOf(view),
-          view.batchSource.eventTimestampColumn, cutoff)
-      // any store with storage-level expiry: parquet (bucket rewrite)
-      // or jdbc (transactional DELETE — VERDICT r14 #3)
+      // any store with storage-level expiry: parquet (bucket rewrite),
+      // jdbc (transactional DELETE — VERDICT r14 #3), or the sharded
+      // composite, which fans the sweep out to its children
       case p: graft.online.ExpirableOnlineStore =>
         p.expire(spark, project, view, joinKeysOf(view),
           view.batchSource.eventTimestampColumn, cutoff)

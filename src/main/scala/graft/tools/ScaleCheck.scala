@@ -182,9 +182,8 @@ object ScaleCheck {
       // grow N²·nProbe/nCells, with the probe frame shuffled on the
       // cell key (never broadcast: the query side IS the corpus)
       "q_label_noise_ivf",
-      // driver-round-12 additions: the broadcast as-of route (feature
-      // scan never exchanged — wall must track the scan, and
-      // tools/AsofScale pins the shuffle-byte story), the exact-refine
+      // round-12 additions: q_pit_broadcast (a sort-merge as-of
+      // plan: wall must track the feature scan), the exact-refine
       // rerank (candidate fetch join must stay |Q|·R-bounded), and the
       // persisted IVF-PQ probe (staged artifacts rebuilt per dataset by
       // the query itself; probe must stay partition-pruned). The trained

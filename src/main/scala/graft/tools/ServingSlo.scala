@@ -190,8 +190,6 @@ object ServingSlo {
           if (i % 3 == 2) {
             val cutoff = Timestamp.valueOf("2021-01-01 00:00:00")
             store match {
-              case s: graft.online.ShardedOnlineStore =>
-                s.expire(spark, "slo", vv, Seq("user_id"), "ts", cutoff)
               case e: graft.online.ExpirableOnlineStore =>
                 e.expire(spark, "slo", vv, Seq("user_id"), "ts", cutoff)
               case _ => ()

@@ -1397,7 +1397,14 @@ class EngineSpec extends AnyFunSuite {
       (Option.empty[Long], ts("2024-01-01 00:00:00"), 2.0)).toDF("driver_id", "et", "v")
     def messages(t: Throwable): String =
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
-    externalStores(mini).foreach { case (name, store) =>
+    // the in-process stores too; each store first holds the non-null
+    // row, so the parquet store's delete has a table to guard
+    val base = java.nio.file.Files.createTempDirectory("graftnk").toString
+    val stores = externalStores(mini) ++ Seq(
+      "memory" -> new InMemoryOnlineStore(),
+      "parquet" -> new ParquetOnlineStore(s"$base/pq", numBuckets = 4))
+    stores.foreach { case (name, store) =>
+      store.upsert("p", view, Seq("driver_id"), rows.filter(col("driver_id").isNotNull), "et", None)
       Seq[(String, () => Unit)](
         "upsert" -> (() => store.upsert("p", view, Seq("driver_id"), rows, "et", None)),
         "delete" -> (() => store.delete("p", view, Seq("driver_id"), rows.select("driver_id")))

@@ -43,154 +43,6 @@ class PlanSpec extends AnyFunSuite {
       s"single-view tie-broken PIT should ride the sort-merge as-of plan:\n$plan")
   }
 
-  test("broadcast as-of route: feature side never exchanged, one winner exchange, static plan") {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    val df = graft.queries.CoreQueries.pitJoinBroadcast(spark, sfDir)
-    // engine-owned AQE policy (StaticPlan): the result rides the AQE-off
-    // clone even though the PARENT session runs adaptive
-    assert(df.sparkSession.conf.get("graft.internal.staticSession", "false") == "true",
-      "broadcast as-of result must ride the static-plan session")
-    val exec = df.queryExecution.executedPlan
-    assert(!exec.isInstanceOf[AdaptiveSparkPlanExec],
-      "static-plan session must yield a non-adaptive physical plan")
-    val plan = exec.toString
-    assert(plan.contains("BroadcastHashJoin"),
-      s"broadcast route must plan broadcast hash joins:\n$plan")
-    assert(!plan.contains("AsOfJoin"),
-      s"forced broadcast must not fall back to the sort-merge exec:\n$plan")
-    // exactly ONE hash exchange in the whole plan — the tiny per-rowId
-    // winner reduction; the feature scan itself is never exchanged
-    // (that deleted exchange is the route's 100 TB win: 1566 MB -> 3 MB
-    // shuffled per run at the 100x replica, tools/AsofScale)
-    val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).size
-    assert(exchanges == 1,
-      s"expected exactly the winner-reduction exchange, found $exchanges:\n$plan")
-    assert(!plan.contains("Window"), s"no window operator:\n$plan")
-  }
-
-  test("as-of auto gate: small feature side routes to sortmerge, huge estimates to broadcast") {
-    import java.time.Duration
-    val entity = spark.read.parquet(s"$sfDir/orders.parquet").select(
-      col("o_orderkey"), (col("o_orderdate") + expr("INTERVAL 365 DAY")).as("event_timestamp"))
-    val feat = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .select(col("l_orderkey").as("o_orderkey"), col("l_shipdate"), col("l_quantity"))
-    // sf0.001 lineitem is kilobytes: right-side gate keeps the merge route
-    assert(graft.plans.AsOfJoin.chooseStrategy(entity, feat)
-      == graft.plans.AsOfJoin.SortMerge)
-    // drop the right-side floor and the same pair routes broadcast
-    spark.conf.set("graft.asof.broadcastRightMin", "1b")
-    try assert(graft.plans.AsOfJoin.chooseStrategy(entity, feat)
-      == graft.plans.AsOfJoin.Broadcast)
-    finally spark.conf.unset("graft.asof.broadcastRightMin")
-    // a left above the broadcast threshold never broadcasts
-    spark.conf.set("graft.asof.broadcastThreshold", "1b")
-    try assert(graft.plans.AsOfJoin.chooseStrategy(entity, feat)
-      == graft.plans.AsOfJoin.SortMerge)
-    finally spark.conf.unset("graft.asof.broadcastThreshold")
-    // session override wins over stats
-    spark.conf.set("graft.asof.strategy", "broadcast")
-    try assert(graft.plans.AsOfJoin.chooseStrategy(entity, feat)
-      == graft.plans.AsOfJoin.Broadcast)
-    finally spark.conf.unset("graft.asof.strategy")
-  }
-
-  test("as-of broadcast gate: variable-width payloads answer from measured footer widths") {
-    val entity = spark.read.parquet(s"$sfDir/orders.parquet").select(
-      col("o_orderkey"), (col("o_orderdate") + expr("INTERVAL 365 DAY")).as("event_timestamp"))
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    // footer actuals for the text column sit far above the flat
-    // 20-byte StringType.defaultSize the pre-r13 gate used
-    val w = graft.sources.FooterBounds.avgRowBytes(docs, "text")
-    assert(w.exists(_ > 100), s"expected measured text width > 100 B/row, got $w")
-    val est = entity.queryExecution.optimizedPlan.stats.sizeInBytes
-    val leftWidth = BigInt(entity.schema.map(_.dataType.defaultSize).sum)
-    // a threshold the defaultSize grain (8 + 20 B for the text payload)
-    // would APPROVE but the measured width must refuse: the r12 gate
-    // under-estimated a wide-text winners frame by an order of
-    // magnitude and let a borderline entity approve a multi-GB
-    // broadcast (VERDICT r12 #1)
-    val thrBetween = est * 100 / leftWidth
-    assert(est * 28 / leftWidth < thrBetween &&
-      thrBetween < est * BigInt(8 + w.get.toLong) / leftWidth,
-      "fixture: threshold must sit between the blind and measured estimates")
-    // ONE try/finally for the whole conf-mutating block: an assert
-    // failing mid-way must not leak either conf into the shared session
-    // (a leaked rightMin=1b flips routes in later tests — review r13)
-    spark.conf.set("graft.asof.broadcastRightMin", "1b")
-    spark.conf.set("graft.asof.broadcastThreshold", s"${thrBetween}b")
-    try {
-      assert(graft.plans.AsOfJoin.chooseStrategy(entity, docs,
-        Seq((docs, "text"))) == graft.plans.AsOfJoin.SortMerge,
-        "wide-text payload must pin sortmerge under a width-blind-approving threshold")
-      spark.conf.unset("graft.asof.broadcastThreshold")
-      // a genuinely small measured payload still passes the default gate
-      assert(graft.plans.AsOfJoin.chooseStrategy(entity, docs,
-        Seq((docs, "lang"))) == graft.plans.AsOfJoin.Broadcast,
-        "measured-narrow string payload keeps the broadcast route open")
-      // UNMEASURABLE variable width (in-memory frame, no parquet
-      // footers) refuses the route outright; fixed-width stays open
-      import spark.implicits._
-      val mem = Seq((1L, "x")).toDF("k", "s")
-      assert(graft.plans.AsOfJoin.chooseStrategy(entity, mem,
-        Seq((mem, "k"))) == graft.plans.AsOfJoin.Broadcast)
-      assert(graft.plans.AsOfJoin.chooseStrategy(entity, mem,
-        Seq((mem, "s"))) == graft.plans.AsOfJoin.SortMerge,
-        "unmeasurable variable-width payload must refuse the broadcast route")
-    } finally {
-      spark.conf.unset("graft.asof.broadcastThreshold")
-      spark.conf.unset("graft.asof.broadcastRightMin")
-    }
-  }
-
-  test("as-of broadcast gate: entity cardinality from footer row counts, not sizeInBytes/defaultSize") {
-    // VERDICT r13 #4 (the width gate's last defaultSize residue): a
-    // string-carrying entity frame prices its CARDINALITY as
-    // stats.sizeInBytes / Σ defaultSize — short compressed strings
-    // make the on-disk bytes per row far SMALLER than the flat 20-byte
-    // defaultSize, so the division UNDER-counts rows and the gate
-    // could approve a broadcast whose true winners frame is larger
-    // than the threshold. The fixed gate derives cardinality from
-    // stats.rowCount / parquet footer record counts.
-    val entity = spark.read.parquet(s"$sfDir/orders.parquet")
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val cardNew = graft.sources.FooterBounds.rowCount(entity)
-    assert(cardNew.contains(entity.count()),
-      s"footer row count must equal the table's actual rows, got $cardNew")
-    val sizeEst = entity.queryExecution.optimizedPlan.stats.sizeInBytes
-    val defaultSum = BigInt(entity.schema.map(_.dataType.defaultSize).sum)
-    val cardOld = sizeEst / defaultSum
-    // fixture: the compressed string columns make the old division
-    // under-count rows — exactly the over-approval residue
-    assert(cardOld < BigInt(cardNew.get),
-      s"fixture needs defaultSize to under-count cardinality: $cardOld vs $cardNew")
-    val w = graft.sources.FooterBounds.avgRowBytes(docs, "lang").get
-    val perRow = BigInt(math.ceil(8 + w).toLong)
-    // threshold BETWEEN the two pricings: the old formula approves,
-    // the row-count formula must refuse
-    val thr = (cardOld * perRow + BigInt(cardNew.get) * perRow) / 2
-    assert(cardOld * perRow < thr && thr < BigInt(cardNew.get) * perRow)
-    spark.conf.set("graft.asof.broadcastRightMin", "1b")
-    spark.conf.set("graft.asof.broadcastThreshold", s"${thr}b")
-    try {
-      assert(graft.plans.AsOfJoin.chooseStrategy(entity, docs,
-        Seq((docs, "lang"))) == graft.plans.AsOfJoin.SortMerge,
-        "row-count cardinality must refuse what the defaultSize division approved")
-      // derived-but-shape-traceable entity (projection + filter) still
-      // resolves a footer row count (a SUPERSET under the filter — the
-      // conservative direction); explode-derived frames must NOT
-      val filtered = entity.select(col("o_orderkey"), col("o_orderpriority"))
-        .filter(col("o_orderkey") % 2 === 0)
-      assert(graft.sources.FooterBounds.rowCount(filtered) == cardNew,
-        "filters trace through to the files' count (superset bound)")
-      val exploded = docs.select(explode(split(col("lang"), ",")).as("l"))
-      assert(graft.sources.FooterBounds.rowCount(exploded).isEmpty,
-        "row-multiplying plans must refuse a footer row count")
-    } finally {
-      spark.conf.unset("graft.asof.broadcastThreshold")
-      spark.conf.unset("graft.asof.broadcastRightMin")
-    }
-  }
-
   test("engine-owned AQE policy: PIT chain is static through the public API in an AQE-on session") {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     // the r11 verdict's #3 'what's wrong': the static-plan policy lived
@@ -291,27 +143,6 @@ class PlanSpec extends AnyFunSuite {
     val mem = Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00")))
       .toDF("id", "ts")
     assert(FooterBounds.tsBounds(mem, "ts").isEmpty)
-  }
-
-  test("FooterBounds.avgRowBytes: one sweep measures many columns; schema evolution drops, never guesses") {
-    import graft.sources.FooterBounds
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graftfw").toString
-    // two files with EVOLVED schemas: 'extra' exists only in the second
-    Seq((1L, "aaaaaaaaaa")).toDF("id", "s").write.parquet(s"$dir/t/p1")
-    Seq((2L, "bbbbbbbbbb", "cc")).toDF("id", "s", "extra").write.parquet(s"$dir/t/p2")
-    val df = spark.read.option("mergeSchema", "true").parquet(s"$dir/t/p1", s"$dir/t/p2")
-    val m = FooterBounds.avgRowBytes(df, Seq("id", "s", "extra", "nope"))
-    // measurable columns answer; a column absent from ANY file has no
-    // per-file bound and must DROP from the result (not default)
-    assert(m.contains("id") && m.contains("s"),
-      s"id/s must measure, got $m")
-    assert(!m.contains("extra"), s"evolved column must drop, got $m")
-    assert(!m.contains("nope"), s"unknown column must drop, got $m")
-    assert(m("s") > m("id") / 2, s"string bytes should register, got $m")
-    // single-column facade agrees with the sweep
-    assert(FooterBounds.avgRowBytes(df, "s").contains(m("s")))
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
   test("FooterBounds: leaf-path chunk lookup survives a struct column before ts; pre-1970 nanos truncate like div") {

@@ -171,12 +171,6 @@ class PropertySpec extends AnyFunSuite {
       seed <- Gen.choose(0L, 1000000L)
     } yield (nKeys, nRows, nEnt, ttlD, seed)
 
-    def pinned[A](strategy: Option[String])(body: => A): A = strategy match {
-      case None => body
-      case Some(s) =>
-        spark.conf.set("graft.asof.strategy", s)
-        try body finally spark.conf.unset("graft.asof.strategy")
-    }
     def values(df: DataFrame, c: String): Map[Long, Option[Double]] =
       df.select("eid", c).collect()
         .map(r => r.getLong(0) -> Option(r.get(1)).map(_.asInstanceOf[Double])).toMap
@@ -199,26 +193,21 @@ class PropertySpec extends AnyFunSuite {
 
       val featTs = rows.toDF("k", "et", "ct", "v")
       val featDate = featTs.withColumn("et", col("et").cast("date"))
-      def pit(entity: DataFrame, feat: DataFrame, strategy: Option[String]) = {
+      def pit(entity: DataFrame, feat: DataFrame) = {
         val view = FeatureView("pv", Seq("e"), Seq(Feature("v", GraftType.Dbl)),
           ttl, DataFrameSource(feat, "et", createdTimestampColumn = Some("ct")))
-        pinned(strategy)(values(PointInTimeJoin.join(entity,
-          Seq(ViewJoin(view, Seq("k"), Seq("v"), feat)), fullFeatureNames = true), "pv__v"))
+        values(PointInTimeJoin.join(entity,
+          Seq(ViewJoin(view, Seq("k"), Seq("v"), feat)), fullFeatureNames = true), "pv__v")
       }
       val byParts = Seq(1, 4).map { parts =>
         val entity = ents.toDF("k", "event_timestamp", "eid").repartition(parts)
-        def asOf(strategy: String) = values(AsOfJoin.join(entity, featTs, Seq("k"),
-          "event_timestamp", "et", ttl, orderCols = Seq("ct"), featureCols = Seq("v"),
-          strategy = strategy), "v")
         val runs = Seq(
-          "chain" -> pit(entity, featTs, None),
-          "forced broadcast" -> pit(entity, featTs, Some(AsOfJoin.Broadcast)),
+          "chain" -> pit(entity, featTs),
           // an entity column named like the feature breaks the chain
-          "sort-merge winner subtree" -> pit(entity.withColumn("v", lit(-1.0)), featTs, None),
-          "declarative" -> pit(entity, featDate, None),
-          "declarative, hinted" -> pit(entity, featDate, Some(AsOfJoin.Broadcast)),
-          "AsOfJoin sortmerge" -> asOf(AsOfJoin.SortMerge),
-          "AsOfJoin broadcast" -> asOf(AsOfJoin.Broadcast))
+          "sort-merge winner subtree" -> pit(entity.withColumn("v", lit(-1.0)), featTs),
+          "declarative" -> pit(entity, featDate),
+          "AsOfJoin sortmerge" -> values(AsOfJoin.join(entity, featTs, Seq("k"),
+            "event_timestamp", "et", ttl, orderCols = Seq("ct"), featureCols = Seq("v")), "v"))
         Prop.all(runs.map { case (route, got) =>
           (got == expected) :| s"$route, $parts partition(s): $got != $expected" }: _*)
       }
@@ -733,16 +722,12 @@ class PropertySpec extends AnyFunSuite {
 
         val featDf = rows.toDF("k", "et", "ct", "fid", "v").repartition(rParts)
         val entityDf = ents.toDF("k", "event_timestamp", "eid").repartition(lParts)
-        def run(strategy: String): Map[Long, Option[Long]] =
+        val got: Map[Long, Option[Long]] =
           graft.plans.AsOfJoin.join(entityDf, featDf, Seq("k"),
               "event_timestamp", "et", ttl, orderCols = Seq("ct", "fid"),
-              featureCols = Seq("fid", "v"), strategy = strategy)
+              featureCols = Seq("fid", "v"))
             .select("eid", "fid").collect()
             .map(r => r.getLong(0) -> Option(r.get(1)).map(_.asInstanceOf[Long])).toMap
-        val got = run(graft.plans.AsOfJoin.SortMerge)
-        // the broadcast route must realize the SAME total order across
-        // the same partition layouts (r12)
-        val gotB = run(graft.plans.AsOfJoin.Broadcast)
 
         def oracle(key: Long, ts: Timestamp): Option[Long] = {
           val lower = ts.getTime - ttl.toMillis
@@ -753,11 +738,8 @@ class PropertySpec extends AnyFunSuite {
           else Some(c.maxBy { case (_, et, ct, fid, _) => (et.getTime, ct.getTime, fid) }._4)
         }
 
-        got.size == ents.length && gotB.size == ents.length &&
-          ents.forall { case (k, ts, eid) =>
-            val o = oracle(k, ts)
-            got(eid) == o && gotB(eid) == o
-          }
+        got.size == ents.length &&
+          ents.forall { case (k, ts, eid) => got(eid) == oracle(k, ts) }
     }
     runCheck(prop, minTests = 12)
   }
@@ -801,18 +783,14 @@ class PropertySpec extends AnyFunSuite {
 
         val featDf = rows.toDF("k", "et", "ct", "fid", "v").repartition(rParts)
         val entityDf = ents.toDF("k", "event_timestamp", "eid").repartition(lParts)
-        def run(strategy: String): Map[Long, Option[(Long, Any)]] =
+        val got: Map[Long, Option[(Long, Any)]] =
           graft.plans.AsOfJoin.join(entityDf, featDf, Seq("k"),
               "event_timestamp", "et", ttl, orderCols = Seq("ct"),
-              featureCols = Seq("fid", "v"), strategy = strategy)
+              featureCols = Seq("fid", "v"))
             .select("eid", "fid", "v").collect()
             .map(r => r.getLong(0) ->
               Option(r.get(1)).map(_ =>
                 (r.getLong(1), if (r.isNullAt(2)) null else r.get(2)))).toMap
-        val got = run(graft.plans.AsOfJoin.SortMerge)
-        // broadcast route: same duplicate-collision classes, same
-        // payload-max winner rule, same partition layouts (r12)
-        val gotB = run(graft.plans.AsOfJoin.Broadcast)
 
         def oracle(key: Long, ts: Timestamp): Option[(Long, Any)] = {
           val lower = ts.getTime - ttl.toMillis
@@ -829,11 +807,8 @@ class PropertySpec extends AnyFunSuite {
           } match { case (_, _, _, fid, v) => (fid, v) })
         }
 
-        got.size == ents.length && gotB.size == ents.length &&
-          ents.forall { case (k, ts, eid) =>
-            val o = oracle(k, ts)
-            got(eid) == o && gotB(eid) == o
-          }
+        got.size == ents.length &&
+          ents.forall { case (k, ts, eid) => got(eid) == oracle(k, ts) }
     }
     runCheck(prop, minTests = 12)
   }

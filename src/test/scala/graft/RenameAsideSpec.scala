@@ -118,4 +118,19 @@ class RenameAsideSpec extends AnyFunSuite {
     assert(text(fs, aside) === "old")
     assert(!fs.exists(live))
   }
+
+  test("a sharded ring marker whose publish fails throws and keeps the old marker") {
+    import graft.online.ShardedOnlineStore
+    // the local filesystem, except that a staged marker (`.tmp-`) never
+    // renames into place
+    val fs = new FilterFileSystem(FileSystem.getLocal(new Configuration())) {
+      override def rename(src: Path, dst: Path): Boolean =
+        !src.getName.contains(".tmp-") && super.rename(src, dst)
+    }
+    val base = java.nio.file.Files.createTempDirectory("ring_marker").toString
+    val local = FileSystem.getLocal(new Configuration())
+    ShardedOnlineStore.writeRingMarker(local, base, 0, 2, "rdv")
+    intercept[IOException](ShardedOnlineStore.writeRingMarker(fs, base, 1, 3, "rdv"))
+    assert(ShardedOnlineStore.readRingMarker(local, base) === Some((0, 2, "rdv")))
+  }
 }

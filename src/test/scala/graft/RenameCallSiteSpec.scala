@@ -13,8 +13,7 @@ class RenameCallSiteSpec extends AnyFunSuite {
     "util/RenameAside.scala" -> 3,      // the checked swap and heal
     "util/FileLease.scala" -> 4,        // tombstone breaks and restores
     "functions/TfRecord.scala" -> 1,    // per-shard commit
-    "functions/WebDataset.scala" -> 1,  // per-shard commit
-    "online/ShardedOnlineStore.scala" -> 2) // marker replace
+    "functions/WebDataset.scala" -> 1)  // per-shard commit
 
   test("fs.rename call sites in src/main outside queries/ are exactly the allow-list") {
     val root = new java.io.File("src/main/scala/graft")
