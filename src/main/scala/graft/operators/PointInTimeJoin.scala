@@ -21,10 +21,11 @@ import graft.model._
   * [min - ttl, max] (O5, bigquery.py:418-437 + 590-603) — the filter
   * lands in the parquet scan as a pushed predicate / row-group skip, at
   * 100 TB the difference between scanning a week and scanning years.
-  * All-TimestampType views then chain full-width sort-merge as-of
-  * merges ([[graft.plans.AsOfJoin]]); the rest stamp a row id
-  * ([[stamp]]), compute each view's winners ([[winners]]) and
-  * left-join them back by row id.
+  * Then two routes, chosen per view by its own types: a view whose
+  * timestamps are TimestampType and whose key types match is a link of
+  * a full-width sort-merge as-of chain ([[graft.plans.AsOfJoin]]); any
+  * other view has its [[winners]] left-joined back by a row id that
+  * [[stamp]] adds only when some view needs it.
   *
   * Determinism: the reference is nondeterministic under duplicate
   * (entity, event_ts, created_ts) rows (BQ ANY_VALUE,
@@ -54,8 +55,10 @@ object PointInTimeJoin {
       featureDf: DataFrame,             // source already read + field-mapped
       tieBreakCols: Seq[String] = Nil)  // extra deterministic ordering
 
-  /** Multi-view PIT join (O2): sequentially enrich the entity df.
-    * Reference loop: file.py:108-204 / CTE chain bigquery.py:686-697. */
+  /** Multi-view PIT join (O2): sequentially enrich the entity df, each
+    * view on one of two routes chosen per view — a sort-merge chain link
+    * or declarative winners joined back by row id. Reference loop:
+    * file.py:108-204 / one CTE per view, bigquery.py:554-698. */
   def join(
       entityDf: DataFrame,
       views: Seq[ViewJoin],
@@ -71,13 +74,14 @@ object PointInTimeJoin {
     // declarative join-back would otherwise emit DUPLICATE column names
     // and downstream selects die with AMBIGUOUS_REFERENCE far from the
     // cause. (Distinct from a view's SOURCE feature name matching an
-    // entity column under fullFeatureNames=true — that is legal and
-    // routes to the declarative path, which renames on output.)
+    // entity column under fullFeatureNames=true — that is legal: both
+    // routes read the source column and emit the output name.)
+    val outName: (ViewJoin, String) => String =
+      (vj, f) => if (fullFeatureNames) s"${vj.view.name}__$f" else f
     locally {
       var seen = entityDf.columns.toSet
       val clashes = views.flatMap { vj =>
-        vj.features.map(f =>
-          if (fullFeatureNames) s"${vj.view.name}__$f" else f).flatMap { o =>
+        vj.features.map(outName(vj, _)).flatMap { o =>
           if (seen.contains(o)) Some(o) else { seen += o; None }
         }
       }
@@ -86,59 +90,23 @@ object PointInTimeJoin {
           "entity column or another view's feature — set " +
           "fullFeatureNames=true or rename the feature")
     }
-    // zero views = the input unchanged: the declarative path below
-    // would otherwise stamp row ids, possibly localCheckpoint the whole
-    // entity frame (an eager job, and the LogicalRDD swap loses source
-    // pushdown), and run the bounds job — for a no-op (review r12)
+    // zero views = the input unchanged: the fold below would otherwise
+    // run the bounds job and re-root the frame on the static session —
+    // for a no-op (review r12)
     if (views.isEmpty) return entityDf
 
-    // All views on TimestampType columns with collision-free feature
-    // names: CHAIN full-width sort-merge as-of merges ([[graft.plans
-    // .AsOfJoin]]) — entity asof view1 asof view2 … — with no row-id
-    // stamp, no candidate rows, and no winners join-back. Shuffle
-    // accounting per view: the chain exchanges the accumulated frame
-    // once and the feature table once; the winner-subtree alternative
-    // below exchanges a narrow entity projection AND the feature table
-    // AND — for the join-back — the accumulated frame and the winners
-    // (both entity-cardinality) on rowId. The chain strictly moves
-    // fewer bytes at every scale, needs no monotonically_increasing_id
-    // pinning (acc flows linearly through one plan — no cross-branch
-    // id-identity hazard, no localCheckpoint job), and the whole chain
-    // is one STATIC plan (exchanges dictated by
-    // requiredChildDistribution — nothing for AQE to re-plan). Since r8
-    // the exec's right-side ordering carries the feature payload
-    // suffix, so it reproduces the declarative max_by(payload,
-    // struct(ordCols, payload)) total order exactly — including on
-    // fully-duplicate (key, ts, created, tiebreak) rows — and no
-    // tie-break/uniqueness precondition gates this route. The
-    // declarative winner-subtree path remains for non-timestamp ts
-    // columns and feature-name collisions.
-    val chainOutName: ViewJoin => String => String =
-      vj => f => if (fullFeatureNames) s"${vj.view.name}__$f" else f
-    val chainable = {
-      var cols = entityDf.columns.toSet
-      views.forall { vj =>
-        val outNames = vj.features.map(chainOutName(vj))
-        val ok = sortMergeEligible(entityDf, vj, entityTsCol) &&
-          vj.features.forall(!cols.contains(_)) &&
-          outNames.forall(!cols.contains(_))
-        cols ++= outNames
-        ok
-      }
-    }
-    if (chainable) {
-      val (mn0, mx0) = entityBounds(entityDf, entityTsCol)
-      return views.foldLeft(entityDf) { (acc, vj) =>
-        val (feat, tsCol, createdCol) = prepareFeature(vj, mn0, mx0)
-        val ord = (createdCol.toSeq ++ vj.tieBreakCols).distinct.filterNot(_ == tsCol)
-        val joined = graft.plans.AsOfJoin.join(acc, feat, vj.joinKeys,
-          entityTsCol, tsCol, vj.view.ttl, ord, vj.features)
-        joined.select(acc.columns.map(col).toIndexedSeq ++
-          vj.features.map(f => col(f).as(chainOutName(vj)(f))): _*)
-      }
-    }
-
-    val (stamped, rowId) = stamp(entityDf)
+    // The route is chosen per view by its own types ([[sortMergeEligible]]).
+    // A chain link exchanges the accumulated frame and the feature table
+    // once each, with no row id, no candidate rows and no join-back, so it
+    // moves strictly fewer bytes than a winners join-back at every scale
+    // (BENCH_NOTES "Per-query execution policy"). Since r8 the exec's
+    // right-side ordering carries the payload suffix, so both routes pick
+    // the same winner, fully-duplicate rows included.
+    val linked = views.map(sortMergeEligible(entityDf, _, entityTsCol))
+    // row ids only when some view joins back; an all-link call is one
+    // STATIC plan (every exchange dictated by requiredChildDistribution)
+    val allLinked = linked.forall(identity)
+    val (stamped, rowId) = if (allLinked) (entityDf, "") else stamp(entityDf)
 
     // O5 bounds (bigquery.py:418-437): computed ONCE from the entity df —
     // they are over entityTsCol, which is invariant across the fold;
@@ -147,16 +115,30 @@ object PointInTimeJoin {
     // over the checkpointed blocks.
     val (mnTs, mxTs) = entityBounds(stamped, entityTsCol)
 
-    // Each view's as-of winners are computed from the CHECKPOINTED
-    // entity df directly — never from the accumulated join chain. The
-    // narrow candidate projection (rowId, ts, keys) is invariant across
-    // views, so the per-view subtrees are independent: Spark schedules
-    // their candidate joins as parallel stages, and view N's plan does
-    // not re-traverse views 1..N-1's join-backs.
-    views.foldLeft(stamped) { (acc, vj) =>
-      acc.join(viewWinners(stamped, vj, entityTsCol, rowId, fullFeatureNames,
-        mnTs, mxTs), Seq(rowId), "left")
-    }.drop(rowId)
+    // Declarative winners are computed from the CHECKPOINTED entity df
+    // directly — never from the accumulated frame — so view N's
+    // candidate join does not re-traverse views 1..N-1.
+    val joined = views.zip(linked).foldLeft(stamped) { case (acc, (vj, link)) =>
+      val (feat, tsCol, createdCol) = prepareFeature(vj, mnTs, mxTs)
+      val ord = (createdCol.toSeq ++ vj.tieBreakCols).distinct.filterNot(_ == tsCol)
+      val payload = vj.features.map(f => outName(vj, f) -> f)
+      if (link)
+        graft.plans.AsOfJoin.join0(acc, feat, vj.joinKeys, entityTsCol, tsCol,
+          vj.view.ttl, ord, payload)
+      else
+        // NOTE (measured twice, rounds 3+4): do NOT rebalance() either
+        // join side here. The single-row-group test files do serialize
+        // the candidate join into one ~1.4 s task, but inserting a
+        // round-robin exchange costs MORE (+1.3-1.9 s/query) — an extra
+        // shuffle, a broken scan→join codegen pipeline, and an extra AQE
+        // replan per view. On a production many-file table the scan
+        // parallelizes by itself; the single-task stage is a toy-data
+        // artifact, not a plan defect.
+        acc.join(winners(stamped, rowId, entityTsCol, vj.joinKeys, feat, tsCol,
+          backwardWindow(entityTsCol, tsCol, vj.view.ttl),
+          (_, r) => (tsCol +: ord).map(r), payload, max_by), Seq(rowId), "left")
+    }
+    if (allLinked) graft.plans.StaticPlan.applyPolicy(joined) else joined.drop(rowId)
   }
 
   /** Entity-df (min, max) event-ts for the O5 pruning window:
@@ -214,8 +196,8 @@ object PointInTimeJoin {
     !(stableShape && deterministic)
   }
 
-  /** True when a view's winner computation can run on the custom
-    * sort-merge as-of plan: both timestamps are real TimestampType.
+  /** True when a view is a link of the sort-merge as-of chain: both
+    * timestamps are real TimestampType and the join-key types match.
     * No tie-break precondition since r8 — the exec sorts the right side
     * by (keys, ts, ordCols, payload), the same total order the
     * declarative max_by maximizes, so residual ties resolve identically
@@ -267,51 +249,6 @@ object PointInTimeJoin {
       lowerTs.foreach(l => feat = feat.filter(col(tsCol) >= lit(l)))
     }
     (feat, tsCol, createdCol)
-  }
-
-  /** One view's as-of winners keyed by row id (O1/O4/O5/O6): the caller
-    * left-joins the result back to the accumulated frame. Eligible views
-    * ride the sort-merge exec on the NARROW (rowId, ts, keys) entity
-    * projection — no candidate rows shuffle; every other view runs
-    * [[winners]]. */
-  private def viewWinners(
-      stamped: DataFrame,
-      vj: ViewJoin,
-      entityTsCol: String,
-      rowId: String,
-      fullFeatureNames: Boolean,
-      mnTs: java.sql.Timestamp,
-      mxTs: java.sql.Timestamp): DataFrame = {
-    val ViewJoin(view, joinKeys, features, _, tieBreaks) = vj
-    val (featPrepared, tsCol, createdCol) = prepareFeature(vj, mnTs, mxTs)
-    val outName: String => String =
-      f => if (fullFeatureNames) s"${view.name}__$f" else f
-    val ord = (createdCol.toSeq ++ tieBreaks).distinct.filterNot(_ == tsCol)
-
-    if (sortMergeEligible(stamped, vj, entityTsCol) &&
-        features.intersect((rowId +: entityTsCol +: joinKeys).distinct).isEmpty) {
-      val leftNarrow =
-        stamped.select((rowId +: entityTsCol +: joinKeys).distinct.map(col): _*)
-      // join0: the winner frame is a SUBTREE of the outer enrichment —
-      // the OUTER join() owns the AQE policy for the final frame
-      // (review r12)
-      graft.plans.AsOfJoin.join0(leftNarrow, featPrepared, joinKeys,
-          entityTsCol, tsCol, view.ttl, ord, features)
-        .select(col(rowId) +: features.map(f => col(f).as(outName(f))): _*)
-    } else {
-      // NOTE (measured twice, rounds 3+4): do NOT rebalance() either join
-      // side here. The single-row-group test files do serialize the
-      // candidate join into one ~1.4 s task, but inserting a round-robin
-      // exchange costs MORE (+1.3-1.9 s/query) — an extra shuffle, a
-      // broken scan→join codegen pipeline, and an extra AQE replan per
-      // view. On a production many-file table the scan parallelizes by
-      // itself; the single-task stage is a toy-data artifact, not a plan
-      // defect.
-      winners(stamped, rowId, entityTsCol, joinKeys, featPrepared, tsCol,
-        backwardWindow(entityTsCol, tsCol, view.ttl),
-        (_, r) => (tsCol +: ord).map(r),
-        features.map(f => outName(f) -> f), max_by)
-    }
   }
 
   /** Backward as-of window: `ts <= entity_ts` and, when ttl is nonzero,

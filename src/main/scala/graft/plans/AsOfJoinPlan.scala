@@ -263,16 +263,13 @@ object AsOfJoin {
       orderCols: Seq[String],
       featureCols: Seq[String]): DataFrame =
     StaticPlan.applyPolicy(join0(entity, feature, keys, entityTsCol,
-      featureTsCol, ttl, orderCols, featureCols))
+      featureTsCol, ttl, orderCols, featureCols.map(c => c -> c)))
 
-  /** [[join]] WITHOUT the engine-owned AQE policy applied — for callers
-    * that embed the result as a SUBTREE of a larger plan they build on
-    * the parent session (PointInTimeJoin's per-view winners): applying
-    * the policy per view re-analyzed each winner frame on the static
-    * clone only for the outer join-back to rebuild the tree on the
-    * parent session anyway — one wasted analysis pass per view and a
-    * misleading cross-session plan (review r12). The OUTER caller owns
-    * the policy for its final frame. */
+  /** [[join]] WITHOUT the engine-owned AQE policy applied, emitting each
+    * `(output name, feature column)` pair of `payload` — for
+    * [[graft.operators.PointInTimeJoin]]'s chain links, which name their
+    * outputs per view and build one frame on the caller's session; that
+    * caller owns the policy for its final frame (review r12). */
   private[graft] def join0(
       entity: DataFrame,
       feature: DataFrame,
@@ -281,12 +278,12 @@ object AsOfJoin {
       featureTsCol: String,
       ttl: java.time.Duration,
       orderCols: Seq[String],
-      featureCols: Seq[String]): DataFrame = {
+      payload: Seq[(String, String)]): DataFrame = {
     val spark = entity.sparkSession
     ensureStrategy(spark)
     // fresh expression ids on the right side so self-joins (entity df
     // derived from the feature table) resolve unambiguously
-    val rightNeeded = (keys ++ (featureTsCol +: orderCols) ++ featureCols).distinct
+    val rightNeeded = (keys ++ (featureTsCol +: orderCols) ++ payload.map(_._2)).distinct
     val rightAliased = feature.select(rightNeeded.map(c => col(c).as(s"__r_$c")): _*)
     val lplan = entity.queryExecution.analyzed
     val rplan = rightAliased.queryExecution.analyzed
@@ -330,11 +327,11 @@ object AsOfJoin {
       leftTs = lAttr(entityTsCol),
       rightTs = rAttr(featureTsCol),
       rightOrder = orderCols.map(rAttr),
-      rightProject = featureCols.map(rAttr),
+      rightProject = payload.map(p => rAttr(p._2)),
       ttlMicros = ttl.getSeconds * 1000000L + ttl.getNano / 1000L)
     val out = ColumnShim.dataFrame(spark, node)
-    // drop the alias prefix on the emitted feature columns
+    // name the emitted feature columns
     out.select(entity.columns.map(col).toIndexedSeq ++
-      featureCols.map(c => col(s"__r_$c").as(c)): _*)
+      payload.map { case (o, c) => col(s"__r_$c").as(o) }: _*)
   }
 }

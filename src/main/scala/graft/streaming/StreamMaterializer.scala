@@ -28,31 +28,14 @@ object StreamMaterializer {
       fs: FeatureStore,
       viewName: String,
       trigger: Trigger = Trigger.ProcessingTime("10 seconds"),
-      checkpointDir: Option[String] = None): StreamingQuery = {
-    val view = fs.registry.getFeatureView(viewName)
-    val src = view.streamSource.getOrElse(throw new IllegalArgumentException(
-      s"view $viewName has no stream source"))
-    val keys = fs.joinKeysOf(view)
-    val tsCol = src.eventTimestampColumn
-    val createdCol = src.createdTimestampColumn
-
-    val stream = SourceReader.readStream(fs.spark, src)
-    val writer = stream.writeStream
-      .outputMode("update")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // The raw batch: every store reduces its own upsert input
-        // (PullLatest.latestPerKey), so a caller-side collapse would
-        // only add an exchange. No isEmpty pre-check: it cost a scan
-        // job + plan cycle on EVERY batch to save work only on the rare
-        // empty ones. Keys cast to entity dtypes so bucket routing
-        // matches coerced reads.
-        fs.onlineStore.upsert(fs.project, view, keys,
-          fs.castKeyColumns(batch, view), tsCol, createdCol)
-        ()
-      }
-    checkpointDir.fold(writer)(d => writer.option("checkpointLocation", d)).start()
-  }
+      checkpointDir: Option[String] = None): StreamingQuery =
+    // The raw batch: every store reduces its own upsert input
+    // (PullLatest.latestPerKey), so a caller-side collapse would only
+    // add an exchange. No isEmpty pre-check: it cost a scan job + plan
+    // cycle on EVERY batch to save work only on the rare empty ones.
+    startOnline(fs, viewName, "update", trigger, checkpointDir) { s =>
+      (SourceReader.readStream(fs.spark, s.src), s.upsert)
+    }
 
   /** CDC stream materialization: the stream carries an op column
     * (upserts + delete tombstones). Each micro-batch first collapses
@@ -80,19 +63,9 @@ object StreamMaterializer {
       opCol: String,
       deleteOp: String = "D",
       trigger: Trigger = Trigger.ProcessingTime("10 seconds"),
-      checkpointDir: Option[String] = None): StreamingQuery = {
-    val view = fs.registry.getFeatureView(viewName)
-    val src = view.streamSource.getOrElse(throw new IllegalArgumentException(
-      s"view $viewName has no stream source"))
-    val keys = fs.joinKeysOf(view)
-    val tsCol = src.eventTimestampColumn
-    val createdCol = src.createdTimestampColumn
-
-    val stream = SourceReader.readStream(fs.spark, src)
-    val writer = stream.writeStream
-      .outputMode("update")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      checkpointDir: Option[String] = None): StreamingQuery =
+    startOnline(fs, viewName, "update", trigger, checkpointDir) { s =>
+      (SourceReader.readStream(fs.spark, s.src), batch => {
         // UNLIKE materializeStream (whose r6 measurement dropped its
         // pre-check as net-negative), this body runs a cache fill +
         // up to four probe/consume actions — on an IDLE CDC feed at a
@@ -109,23 +82,19 @@ object StreamMaterializer {
           // a persist recomputes the collapse from the batch source on
           // block loss — same dedup benefit, cluster-survivable
           val net = graft.operators.Merge.netChanges(
-              batch, keys, opCol, tsCol +: createdCol.toSeq, view.featureNames)
+              batch, s.keys, opCol, s.tsCol +: s.createdCol.toSeq, s.view.featureNames)
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           try {
             val isDel = col(opCol) === lit(deleteOp)
             val ups = net.filter(!isDel).drop(opCol)
-            val dels = net.filter(isDel).select(keys.map(col): _*)
-            if (!ups.isEmpty)
-              fs.onlineStore.upsert(fs.project, view, keys,
-                fs.castKeyColumns(ups, view), tsCol, createdCol)
+            val dels = net.filter(isDel).select(s.keys.map(col): _*)
+            if (!ups.isEmpty) s.upsert(ups)
             if (!dels.isEmpty)
-              fs.onlineStore.delete(fs.project, view, keys, fs.castKeyColumns(dels, view))
+              fs.onlineStore.delete(fs.project, s.view, s.keys, fs.castKeyColumns(dels, s.view))
           } finally { net.unpersist(); () }
         }
-        ()
-      }
-    checkpointDir.fold(writer)(d => writer.option("checkpointLocation", d)).start()
-  }
+      })
+    }
 
   /** [[materializeStream]] with [[Changelog.derive]] in front of the
     * sink: only rows whose FEATURE VALUES changed reach the store — a
@@ -143,30 +112,52 @@ object StreamMaterializer {
       watermarkDelay: String,
       stateTtl: java.time.Duration,
       trigger: Trigger = Trigger.ProcessingTime("10 seconds"),
-      checkpointDir: Option[String] = None): StreamingQuery = {
-    val view = fs.registry.getFeatureView(viewName)
-    val src = view.streamSource.getOrElse(throw new IllegalArgumentException(
-      s"view $viewName has no stream source"))
-    val keys = fs.joinKeysOf(view)
-    val tsCol = src.eventTimestampColumn
-    val createdCol = src.createdTimestampColumn
+      checkpointDir: Option[String] = None): StreamingQuery =
+    // the batch holds transition rows only (possibly several per key);
+    // the store's LWW merge keeps the newest, and replays straddling
+    // restarts are absorbed the same way — no extra reduction needed at
+    // transition-grain volume
+    startOnline(fs, viewName, "append", trigger, checkpointDir) { s =>
+      (Changelog.derive(SourceReader.readStream(fs.spark, s.src), s.tsCol, s.keys,
+        orderCols = s.createdCol.toSeq, valueCols = s.view.featureNames,
+        watermarkDelay = watermarkDelay, stateTtl = stateTtl), s.upsert)
+    }
 
-    val stream = SourceReader.readStream(fs.spark, src)
-    val changed = Changelog.derive(stream, tsCol, keys,
-      orderCols = createdCol.toSeq, valueCols = view.featureNames,
-      watermarkDelay = watermarkDelay, stateTtl = stateTtl)
-    val writer = changed.writeStream
-      .outputMode("append")
+  /** A view's stream source, resolved for an online sink. */
+  private final case class Streamed(
+      fs: FeatureStore, view: FeatureView, src: DataSource, keys: Seq[String]) {
+    def tsCol: String = src.eventTimestampColumn
+    def createdCol: Option[String] = src.createdTimestampColumn
+    /** One micro-batch into the online store, keys cast to the entity
+      * dtypes so bucket routing matches coerced reads. */
+    def upsert(batch: DataFrame): Unit =
+      fs.onlineStore.upsert(fs.project, view, keys,
+        fs.castKeyColumns(batch, view), tsCol, createdCol)
+  }
+
+  /** The view named `viewName` and its stream source — the one lookup
+    * and error every stream materializer starts with. */
+  private def streamSourceOf(fs: FeatureStore, viewName: String): (FeatureView, DataSource) = {
+    val view = fs.registry.getFeatureView(viewName)
+    view -> view.streamSource.getOrElse(throw new IllegalArgumentException(
+      s"view $viewName has no stream source"))
+  }
+
+  /** Start an online materializer: `build` turns the resolved view into
+    * the stream to run and the body each micro-batch goes through. */
+  private def startOnline(
+      fs: FeatureStore,
+      viewName: String,
+      outputMode: String,
+      trigger: Trigger,
+      checkpointDir: Option[String])(
+      build: Streamed => (DataFrame, DataFrame => Unit)): StreamingQuery = {
+    val (view, src) = streamSourceOf(fs, viewName)
+    val (stream, body) = build(Streamed(fs, view, src, fs.joinKeysOf(view)))
+    val writer = stream.writeStream
+      .outputMode(outputMode)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // the batch holds transition rows only (possibly several per
-        // key); the store's LWW merge keeps the newest, and replays
-        // straddling restarts are absorbed the same way — no extra
-        // reduction needed at transition-grain volume
-        fs.onlineStore.upsert(fs.project, view, keys,
-          fs.castKeyColumns(batch, view), tsCol, createdCol)
-        ()
-      }
+      .foreachBatch { (batch: DataFrame, _: Long) => body(batch) }
     checkpointDir.fold(writer)(d => writer.option("checkpointLocation", d)).start()
   }
 
@@ -182,9 +173,7 @@ object StreamMaterializer {
       viewName: String,
       trigger: Trigger = Trigger.ProcessingTime("10 seconds"),
       checkpointDir: String): StreamingQuery = {
-    val view = fs.registry.getFeatureView(viewName)
-    val src = view.streamSource.getOrElse(throw new IllegalArgumentException(
-      s"view $viewName has no stream source"))
+    val (view, src) = streamSourceOf(fs, viewName)
     val sink = view.batchSource match {
       case f: FileSource if f.format == "parquet" => f
       case other => throw new IllegalArgumentException(

@@ -131,11 +131,15 @@ class EngineSpec extends AnyFunSuite {
     val entityDf = Seq((1L, entityTs), (2L, entityTs)).toDF("k", "event_timestamp")
     val ttl = Duration.ofMillis(1500)
 
-    // declarative path (no tie-break columns)
+    // declarative path: an int entity key against the bigint feature key
+    // fails key-type parity, so the view runs `winners` on TIMESTAMP ts
     val view = FeatureView("fv", Seq("e"), Seq(Feature("v", GraftType.Dbl)),
       ttl, DataFrameSource(featDf, "et", createdTimestampColumn = Some("ct")))
-    val decl = PointInTimeJoin.join(entityDf, Seq(ViewJoin(view, Seq("k"), Seq("v"), featDf)))
-      .select("k", "v").collect().map(r => r.getLong(0) -> Option(r.get(1))).toMap
+    val declDf = PointInTimeJoin.join(entityDf.withColumn("k", $"k".cast("int")),
+      Seq(ViewJoin(view, Seq("k"), Seq("v"), featDf)))
+    assert(!declDf.queryExecution.executedPlan.toString.contains("AsOfJoin"))
+    val decl = declDf.select($"k".cast("long"), $"v").collect()
+      .map(r => r.getLong(0) -> Option(r.get(1))).toMap
     assert(decl(1L) === Some(11.0) && decl(2L) === None)
 
     // native sort-merge path

@@ -90,6 +90,26 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("partial_max_by"),
       s"declarative PIT candidate reduction must be a partial-aggregating max_by:\n$plan")
     assert(!plan.contains("Window") && !plan.contains("AsOfJoin"))
+
+    // routes are chosen per view by types alone: an entity column named
+    // like the source feature keeps an all-TIMESTAMP call on the chain
+    val featTs = spark.read.parquet(s"$sfDir/lineitem.parquet")
+      .select(col("l_orderkey").as("o_orderkey"), col("l_shipdate"), col("l_quantity"))
+    val tsView = PointInTimeJoin.ViewJoin(view, Seq("o_orderkey"), Seq("l_quantity"), featTs)
+    val named = PointInTimeJoin.join(entity.withColumn("l_quantity", lit(-1.0)),
+        Seq(tsView), fullFeatureNames = true)
+      .queryExecution.executedPlan.toString
+    assert(named.contains("AsOfJoin") && !named.contains("__graft_row_id") &&
+      !named.contains("max_by"), s"a named-like-the-feature call must chain:\n$named")
+
+    // a mixed call: the TIMESTAMP view links, the DATE view joins back
+    val dateView = PointInTimeJoin.ViewJoin(
+      view.copy(name = "li_d"), Seq("o_orderkey"), Seq("l_quantity"), feat)
+    val mixed = PointInTimeJoin.join(entity, Seq(tsView, dateView), fullFeatureNames = true)
+      .queryExecution.executedPlan.toString
+    def count(p: String, s: String) = p.split(java.util.regex.Pattern.quote(s), -1).length - 1
+    assert(count(mixed, "AsOfJoin") == 1 && count(mixed, "partial_max_by") == 1,
+      s"a mixed call must plan one chain link and one declarative reduction:\n$mixed")
   }
 
   test("pullLatest: partial aggregation before the shuffle") {

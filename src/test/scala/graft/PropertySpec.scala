@@ -193,19 +193,27 @@ class PropertySpec extends AnyFunSuite {
 
       val featTs = rows.toDF("k", "et", "ct", "v")
       val featDate = featTs.withColumn("et", col("et").cast("date"))
-      def pit(entity: DataFrame, feat: DataFrame) = {
-        val view = FeatureView("pv", Seq("e"), Seq(Feature("v", GraftType.Dbl)),
-          ttl, DataFrameSource(feat, "et", createdTimestampColumn = Some("ct")))
-        values(PointInTimeJoin.join(entity,
-          Seq(ViewJoin(view, Seq("k"), Seq("v"), feat)), fullFeatureNames = true), "pv__v")
-      }
+      def viewJoin(name: String, feat: DataFrame) = ViewJoin(
+        FeatureView(name, Seq("e"), Seq(Feature("v", GraftType.Dbl)),
+          ttl, DataFrameSource(feat, "et", createdTimestampColumn = Some("ct"))),
+        Seq("k"), Seq("v"), feat)
+      def pit(entity: DataFrame, feat: DataFrame) = values(PointInTimeJoin.join(entity,
+        Seq(viewJoin("pv", feat)), fullFeatureNames = true), "pv__v")
       val byParts = Seq(1, 4).map { parts =>
         val entity = ents.toDF("k", "event_timestamp", "eid").repartition(parts)
+        // one call, a TIMESTAMP view on the chain and a DATE view declarative
+        val mixed = PointInTimeJoin.join(entity,
+          Seq(viewJoin("pv", featTs), viewJoin("pd", featDate)), fullFeatureNames = true)
         val runs = Seq(
           "chain" -> pit(entity, featTs),
-          // an entity column named like the feature breaks the chain
-          "sort-merge winner subtree" -> pit(entity.withColumn("v", lit(-1.0)), featTs),
+          // an entity column named like the source feature stays on the chain
+          "chain, entity column named like the feature" ->
+            pit(entity.withColumn("v", lit(-1.0)), featTs),
           "declarative" -> pit(entity, featDate),
+          // key-type parity fails, so TIMESTAMP ts runs the declarative route
+          "declarative, int entity key" -> pit(entity.withColumn("k", col("k").cast("int")), featTs),
+          "mixed, chain view" -> values(mixed, "pv__v"),
+          "mixed, declarative view" -> values(mixed, "pd__v"),
           "AsOfJoin sortmerge" -> values(AsOfJoin.join(entity, featTs, Seq("k"),
             "event_timestamp", "et", ttl, orderCols = Seq("ct"), featureCols = Seq("v")), "v"))
         Prop.all(runs.map { case (route, got) =>
