@@ -76,20 +76,6 @@ private[online] object ExternalStore {
     def createdTs(r: Row): Timestamp = created.map(r.getAs[Timestamp]).orNull
     def values(r: Row): Seq[(String, Any)] = feats.map(f => f -> r.getAs[Any](f))
   }
-
-  /** One key's read answer: a requested feature is PRESENT with a
-    * non-null stored value, else NOT_FOUND; a missing key (None) reads
-    * all NOT_FOUND with no ts. */
-  def readBack(stored: Option[(Option[Timestamp], Map[String, Any])],
-      features: Seq[String]): (Option[Timestamp], Map[String, FeatureValue]) = {
-    val (ts, values) = stored.getOrElse((None, Map.empty[String, Any]))
-    (ts, features.map { f =>
-      f -> (values.get(f) match {
-        case Some(v) if v != null => FeatureValue(v, FeatureStatus.Present)
-        case _ => FeatureValue(null, FeatureStatus.NotFound)
-      })
-    }.toMap)
-  }
 }
 
 /** The JDBC transport of [[JdbcOnlineStore]], [[ReferenceSqlStore]] and
@@ -130,7 +116,7 @@ private[online] abstract class JdbcStore(url: String, layout: JdbcStore.Layout)
       // one row per feature in the sqlite layout: max non-null ts
       ((ts1 ++ ts2).maxByOption(_.getTime), v1 ++ v2)
     }
-    keys.map(k => readBack(found.get(idOf(k)), features))
+    keys.map(k => OnlineStore.readBack(found.get(idOf(k)), features))
   }
 
   /** Storage-level TTL sweep (VERDICT r14 #3): one transactional
@@ -336,8 +322,8 @@ private[online] abstract class RespStore(host: String, port: Int, layout: RespSt
             val fields = items.grouped(2).collect {
               case Vector(Bulk(f), Bulk(v)) => new String(f, ISO_8859_1) -> v
             }.toMap
-            readBack(Some(decode(fields)), features)
-          case _ => readBack(None, features)
+            OnlineStore.readBack(Some(decode(fields)), features)
+          case _ => OnlineStore.readBack(None, features)
         }
     }
   }

@@ -136,6 +136,20 @@ object OnlineStore {
             s"filter or fill null-keyed rows before the $op"))).otherwise(col(k)).as(k)
       case c => col(c)
     }
+
+  /** One key's read answer, shared by every store's `read`: a requested
+    * feature is PRESENT with a non-null stored value, else NOT_FOUND; a
+    * missing key (None) reads all NOT_FOUND with no ts. */
+  def readBack(stored: Option[(Option[Timestamp], Map[String, Any])],
+      features: Seq[String]): (Option[Timestamp], Map[String, FeatureValue]) = {
+    val (ts, values) = stored.getOrElse((None, Map.empty[String, Any]))
+    (ts, features.map { f =>
+      f -> (values.get(f) match {
+        case Some(v) if v != null => FeatureValue(v, FeatureStatus.Present)
+        case _ => FeatureValue(null, FeatureStatus.NotFound)
+      })
+    }.toMap)
+  }
 }
 
 /** Executor-shared in-memory KV store — the sqlite analog
@@ -155,7 +169,9 @@ class InMemoryOnlineStore extends OnlineStore {
     PullLatest.latestPerKey(guarded, joinKeys, tsCol, createdCol, feats).collect().foreach { row =>
       val key = joinKeys.map(k => k -> row.getAs[Any](k))
       val ts = row.getAs[Timestamp](tsCol)
-      val created = createdCol.map(row.getAs[Timestamp])
+      // a null created ts is None, not Some(null): newer() orders it
+      // smallest, as the parquet merge does, instead of NPE-ing
+      val created = createdCol.flatMap(c => Option(row.getAs[Timestamp](c)))
       val values = feats.map(f => f -> row.getAs[Any](f)).toMap
       put(storeKey(project, viewName, key), StoredRow(ts, created, values, key))
     }
@@ -176,22 +192,11 @@ class InMemoryOnlineStore extends OnlineStore {
   def read(project: String, view: FeatureView, joinKeys: Seq[String],
       entityKeys: Seq[Seq[(String, Any)]],
       features: Seq[String]): Seq[(Option[Timestamp], Map[String, FeatureValue])] =
-    entityKeys.map { key =>
-      table.get(storeKey(project, view.name, key)) match {
-        case Some(StoredRow(ts, _, values, _)) =>
-          // Option(ts), not Some(ts): a stored null ts must read as
-          // ts-less (staleness gate skipped), not Some(null) that NPEs
-          // the gate's ts.before(cutoff) at serve time
-          (Option(ts), features.map { f =>
-            f -> (values.get(f) match {
-              case Some(v) if v != null => FeatureValue(v, FeatureStatus.Present)
-              case _ => FeatureValue(null, FeatureStatus.NotFound)
-            })
-          }.toMap)
-        case None =>
-          (None, features.map(f => f -> FeatureValue(null, FeatureStatus.NotFound)).toMap)
-      }
-    }
+    // Option(ts), not Some(ts): a stored null ts must read as ts-less
+    // (staleness gate skipped), not Some(null) that NPEs the gate's
+    // ts.before(cutoff) at serve time
+    entityKeys.map(key => OnlineStore.readBack(
+      table.get(storeKey(project, view.name, key)).map(r => (Option(r.ts), r.values)), features))
 
   override def delete(project: String, view: FeatureView, joinKeys: Seq[String],
       keysDf: DataFrame): Unit =
@@ -243,24 +248,29 @@ object InMemoryOnlineStore {
   * row per entity key, hash-partitioned into `numBuckets` directories
   * by entity key (`__bucket=<hash(key) % N>`).
   *
-  * Upsert only touches the buckets containing incoming keys: read those
-  * buckets (directory-pruned), merge latest-per-key with the incoming
-  * batch, and swap in the rewritten buckets one directory at a time
-  * with [[graft.util.RenameAside.swap]] — a crash never leaves a bucket
-  * half-written, and untouched buckets are never read or rewritten. At
-  * 100 TB an incremental materialize or streaming micro-batch therefore
-  * costs O(touched buckets), not a full-store rewrite.
+  * Two commits, per-bucket swaps plus one first publish. The first
+  * write stages the table with its bucket-count marker inside and
+  * publishes it with one rename. After that every mutation (upsert,
+  * delete, expire) reads back the buckets it touches (directory-pruned),
+  * rewrites them, and swaps each one in with
+  * [[graft.util.RenameAside.swap]] — a crash never leaves a bucket
+  * half-written, and the table dir and its marker are never re-staged.
+  * An upsert touches the buckets holding incoming keys, so at 100 TB an
+  * incremental materialize or streaming micro-batch costs O(touched
+  * buckets), not a full-store rewrite; below `smallStoreBytes` it
+  * touches every bucket instead, to skip the discovery job.
   *
   * The bucket id is computed from EntityKeyCodec.hashKey on BOTH paths —
-  * as a UDF over the key struct on the write path and in pure Scala on
-  * the read path — so reads prune to exactly the requested buckets.
+  * as a native expression over the key columns on the write path and in
+  * pure Scala on the read path — so reads prune to exactly the requested
+  * buckets.
   * Reads are filtered scans (partition pruning on bucket + pushdown on
   * key columns). Suited to bulk serving and training-time joins; for
   * ms-latency point reads front it with InMemoryOnlineStore or an
   * external KV.
   *
-  * `numBuckets` is fixed at store creation — changing it for an existing
-  * store path misroutes keys (no rehashing is performed).
+  * `numBuckets` is fixed at table creation: a table's marker wins over
+  * the configured count (no rehashing is performed).
   */
 object ParquetOnlineStore {
   /** Hash-partition directory column (`__bucket=<n>` dirs). */
@@ -420,13 +430,11 @@ object ParquetOnlineStore {
   }
 }
 
-/* Below `smallStoreBytes` the upsert takes a one-job full-rewrite path
- * (read all ∪ incoming -> latest-per-key -> swap the whole table, still
- * bucket-partitioned): for a store that fits comfortably in executor
- * memory the incremental machinery (touched-bucket discovery job,
- * pruned read-back, per-bucket swap) costs more than rewriting the
- * table. The incremental path takes over exactly where it starts
- * winning — when the store is too big to rewrite per batch. */
+/* Below `smallStoreBytes` an upsert passes every bucket as touched: for
+ * a store that fits comfortably in executor memory the touched-bucket
+ * discovery job costs more than reading the whole table back, and the
+ * merge stays one Spark job. Either way the commit is the same
+ * per-bucket swap; the gate only chooses which buckets it covers. */
 class ParquetOnlineStore(
     basePath: String,
     numBuckets: Int = 32,
@@ -510,13 +518,10 @@ class ParquetOnlineStore(
       found.getOrElse(numBuckets)
     }
 
+  /** Written once, into the first write's staged table: later commits
+    * swap buckets under it and never re-stage it. */
   private def writeBucketsMarker(fs: org.apache.hadoop.fs.FileSystem, dir: String,
       count: Int): Unit = {
-    // the EFFECTIVE count, never the configured default: the small-store
-    // rewrite re-stages a table whose adopted marker may differ from this
-    // instance's numBuckets, and writing the default would publish a
-    // mod-adopted-bucketed table with a lying marker — every later read
-    // then hashes into the wrong dirs (review r12)
     val out = fs.create(hp(s"$dir/$BucketsMarker"), true)
     try out.write(count.toString.getBytes("UTF-8")) finally out.close()
   }
@@ -526,14 +531,16 @@ class ParquetOnlineStore(
     * an in-flight upsert would mistake the upsert's live rename-aside
     * dir for crash leftovers and "restore" it mid-swap, corrupting the
     * layout; ADVICE r2). A crash between the rename-aside and the
-    * rename-in leaves data in `p.old`: [[RenameAside.heal]] restores the
-    * whole table, or each bucket the live tree is missing, then the
-    * leftovers clear. Without this the next upsert's swap would DELETE
-    * the only surviving copy. */
+    * rename-in leaves data in `p.old`: [[RenameAside.heal]] restores
+    * each bucket the live tree is missing, then the leftovers clear.
+    * Without this the next upsert's swap would DELETE the only surviving
+    * copy. The whole-table branch heals a table whose live tree is gone
+    * entirely: earlier builds swapped small tables whole, and a crash
+    * mid-swap left exactly that. */
   private def recover(fs: org.apache.hadoop.fs.FileSystem, p: String): Unit = {
     val oldRoot = hp(p + ".old")
     if (fs.exists(oldRoot)) {
-      if (!fs.exists(hp(p))) RenameAside.heal(fs, hp(p), oldRoot) // whole-table swap
+      if (!fs.exists(hp(p))) RenameAside.heal(fs, hp(p), oldRoot) // an earlier build's whole-table swap
       else {
         fs.listStatus(oldRoot).foreach(st =>
           RenameAside.heal(fs, hp(s"$p/${st.getPath.getName}"), st.getPath))
@@ -545,7 +552,7 @@ class ParquetOnlineStore(
   /** The shared preamble of the mutating entry points (upsert, both
     * deletes, expire, teardown): resolve the table's path and
     * filesystem, hold the writer lease, heal a crashed swap FIRST
-    * (after a crashed whole-table swap the live tree is absent and the
+    * (after an earlier build's crashed whole-table swap the live tree is absent and the
     * data sits in `p.old` — an exists-first return made CDC deletes
     * silent no-ops while reads kept serving the rows via the .old
     * fallback, and the next upsert's heal resurrected the tombstoned
@@ -560,25 +567,32 @@ class ParquetOnlineStore(
     } finally ParquetOnlineStore.invalidateCache(p)
   }
 
-  /** Replace the `touched` buckets of table `p` with the rows of
-    * `frame` (a touched bucket with no rows in it is dropped, which reads
-    * tolerate): stage `frame` into `p.tmp` in the bucket layout, then
+  /** Stage `frame` into `p.tmp` in the bucket layout. BucketCol must
+    * LEAD the sort (mergedFrame's layout): without it FileFormatWriter
+    * inserts its own sort on the partition column, discarding the
+    * within-bucket key order the point reader's min/max skipping relies
+    * on (review r12). */
+  private def stage(p: String, joinKeys: Seq[String], frame: DataFrame): String = {
+    val tmp = p + ".tmp"
+    frame.sortWithinPartitions(col(BucketCol) +: joinKeys.map(col): _*)
+      .write.mode("overwrite").partitionBy(BucketCol).parquet(tmp)
+    tmp
+  }
+
+  /** The one commit of an existing table: replace its `touched` buckets
+    * with the rows of `frame` (a touched bucket with no rows in it is
+    * dropped, which reads tolerate). [[stage]] `frame`, then
     * [[RenameAside.swap]] each touched bucket through `p.old` — the old
     * bucket moves OUT of the dataset tree (a `bucket=3.old` dir inside
     * it would corrupt partition discovery), and `p.old` existing is the
-    * readers' mid-swap signal. recover() left `p.old` empty. A table
-    * left with no data file at all is dropped: its marker-only dir
-    * failed every later read-back with 'Unable to infer schema', so a
-    * delete or expire of the last rows wedged the table for good. */
+    * readers' mid-swap signal. recover() left `p.old` empty. The table
+    * dir and its bucket marker stay where they are. A table left with no
+    * data file at all is dropped: its marker-only dir failed every later
+    * read-back with 'Unable to infer schema', so a delete or expire of
+    * the last rows wedged the table for good. */
   private def rewriteBuckets(fs: org.apache.hadoop.fs.FileSystem, p: String,
       touched: Seq[Int], joinKeys: Seq[String], frame: DataFrame): Unit = {
-    val tmp = p + ".tmp"
-    // BucketCol must LEAD the sort (mergedFrame's layout): without it
-    // FileFormatWriter inserts its own sort on the partition column,
-    // discarding the within-bucket key order the point reader's min/max
-    // skipping relies on (review r12)
-    frame.sortWithinPartitions(col(BucketCol) +: joinKeys.map(col): _*)
-      .write.mode("overwrite").partitionBy(BucketCol).parquet(tmp)
+    val tmp = stage(p, joinKeys, frame)
     val oldRoot = hp(p + ".old")
     fs.mkdirs(oldRoot)
     touched.foreach { b =>
@@ -588,6 +602,39 @@ class ParquetOnlineStore(
     fs.delete(oldRoot, true)
     fs.delete(hp(tmp), true)
     if (firstDataFile(fs, hp(p)).isEmpty) fs.delete(hp(p), true)
+  }
+
+  /** The one way an existing table changes (upsert, both deletes,
+    * expire): read back the touched buckets (directory-pruned, in
+    * `schema(touched)`), `edit` them against `probe`, and
+    * [[rewriteBuckets]] the result. `every = Some(n)` touches all n
+    * buckets with no discovery job — the small-store upsert, one Spark
+    * job in all. `None` discovers the buckets `probe`'s `__bucket` ids
+    * fall in with one job over `probe`, persisted because `edit` reads
+    * it again, and returns the probe's row count per touched bucket. A
+    * `laidOut` edit already ends in [[ParquetOnlineStore.mergedFrame]]'s
+    * exchange; any other edit is hash-partitioned by bucket, so each
+    * touched bucket is written as one file. */
+  private def editBuckets(fs: org.apache.hadoop.fs.FileSystem, p: String,
+      joinKeys: Seq[String], probe: DataFrame, every: Option[Int],
+      schema: Seq[Int] => org.apache.spark.sql.types.StructType, laidOut: Boolean = false)(
+      edit: (DataFrame, DataFrame) => DataFrame): Map[Int, Long] = {
+    val cached =
+      if (every.isEmpty) probe.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else probe
+    try {
+      val counts =
+        if (every.nonEmpty) Map.empty[Int, Long]
+        else cached.groupBy(BucketCol).count().collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+      val touched = every.fold(counts.keys.toSeq)(0 until _)
+      if (touched.nonEmpty) {
+        val edited = edit(readTable(probe.sparkSession, fs, p, schema(touched))
+          .filter(col(BucketCol).isin(touched: _*)), cached)
+        rewriteBuckets(fs, p, touched, joinKeys,
+          if (laidOut) edited else edited.repartition(touched.size, col(BucketCol)))
+      }
+      counts
+    } finally if (every.isEmpty) cached.unpersist()
   }
 
   private def bucketOf(keys: Seq[(String, Any)], buckets: Int): Int =
@@ -661,13 +708,10 @@ class ParquetOnlineStore(
   def upsert(project: String, view: FeatureView, joinKeys: Seq[String],
       df: DataFrame, tsCol: String, createdCol: Option[String]): Unit =
     mutate(df.sparkSession, project, view.name) { (fs, p) =>
-    val spark = df.sparkSession
     val buckets = effectiveBuckets(fs, p)
-
     val cols = (joinKeys ++ Seq(tsCol) ++ createdCol.toSeq ++ view.featureNames).distinct
     val incoming = df.select(OnlineStore.guardNullKeys(cols, joinKeys, view.name, "upsert"): _*)
       .withColumn(BucketCol, bucketExpr(joinKeys, buckets))
-    val tmp = p + ".tmp"
     // ONE-exchange merge + layout: the latest-per-key reduction IS the
     // upsert. Grouping on (bucket, keys) — bucket is a pure function of
     // the keys, so the grain is unchanged — plans a map-side partial
@@ -687,50 +731,30 @@ class ParquetOnlineStore(
     def merged(d: DataFrame): DataFrame =
       ParquetOnlineStore.mergedFrame(d, joinKeys, tsCol, createdCol,
         view.featureNames, buckets)
-    def stage(d: DataFrame): Unit =
-      merged(d).write.mode("overwrite").partitionBy(BucketCol).parquet(tmp)
-    // the stored rows in the incoming columns; a feature added to the
-    // view since the stored files were written reads as null
-    def stored(): DataFrame =
-      readTable(spark, fs, p, incoming.schema).select((cols :+ BucketCol).map(col): _*)
-
-    val liveBytes =
-      if (fs.exists(hp(p))) fs.getContentSummary(hp(p)).getLength else -1L
-    if (liveBytes < 0) {
-      // First write: nothing to merge — one pass, staging dir IS the
-      // store. Marker goes into the staging dir BEFORE the rename so
-      // data + marker appear atomically. An EMPTY first batch (a
-      // stream's batch 0 over a not-yet-populated dir) must NOT create
-      // the table: a data-less parquet dir poisons every later read
-      // ('Unable to infer schema') — detected by a driver-side listing
-      // for data files, not a per-batch isEmpty Spark job (review r6).
-      stage(incoming)
+    if (!fs.exists(hp(p))) {
+      // First write: nothing to merge — the staged table IS the store,
+      // published by one rename. Marker goes into the staging dir BEFORE
+      // the rename so data + marker appear atomically. An EMPTY first
+      // batch (a stream's batch 0 over a not-yet-populated dir) must NOT
+      // create the table: a data-less parquet dir poisons every later
+      // read ('Unable to infer schema') — detected by a driver-side
+      // listing for data files, not a per-batch isEmpty Spark job
+      // (review r6).
+      val tmp = stage(p, joinKeys, merged(incoming))
       if (firstDataFile(fs, hp(tmp)).isEmpty) fs.delete(hp(tmp), true)
       else {
         writeBucketsMarker(fs, tmp, buckets)
         RenameAside.renameOrThrow(fs, hp(tmp), hp(p), "online store publish")
       }
-    } else if (liveBytes <= smallStoreBytes) {
-      // Small store: one-job full rewrite (old ∪ incoming), whole-dir
-      // swap. recover() restored any earlier crash's .old before the
-      // swap reuses that name. Marker is staged with the data, so the
-      // swap can't leave a marker-less bucketed table.
-      stage(stored().unionByName(incoming))
-      writeBucketsMarker(fs, tmp, buckets)
-      RenameAside.swap(fs, hp(tmp), hp(p), hp(p + ".old"))
     } else {
-      // Incremental write: merge only the buckets containing incoming
-      // keys. incoming is read twice (touched-bucket discovery + the
-      // merge) — persist it.
-      val cached = incoming.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val touched: Seq[Int] =
-          cached.select(BucketCol).distinct().collect().map(_.getInt(0)).toSeq
-        // Partition pruning limits the read-back to touched buckets.
-        if (touched.nonEmpty)
-          rewriteBuckets(fs, p, touched, joinKeys,
-            merged(stored().filter(col(BucketCol).isin(touched: _*)).unionByName(cached)))
-      } finally cached.unpersist()
+      // The gate picks the touched buckets (see above the class). The
+      // stored rows are read in the incoming columns; a feature added to
+      // the view since the stored files were written reads as null.
+      val every =
+        if (fs.getContentSummary(hp(p)).getLength <= smallStoreBytes) Some(buckets) else None
+      editBuckets(fs, p, joinKeys, incoming, every, _ => incoming.schema, laidOut = true) {
+        (stored, in) => merged(stored.select((cols :+ BucketCol).map(col): _*).unionByName(in))
+      }
     }
     }
 
@@ -769,29 +793,18 @@ class ParquetOnlineStore(
       joinKeys: Seq[String], matchCols: Seq[String], df: DataFrame): Unit =
     mutate(df.sparkSession, project, view.name) { (fs, p) =>
     if (fs.exists(hp(p))) {
-      val buckets = effectiveBuckets(fs, p)
       val keys = df
         .select(OnlineStore.guardNullKeys(matchCols, joinKeys, view.name, "delete"): _*)
         .distinct()
-        .withColumn(BucketCol, bucketExpr(joinKeys, buckets))
-      val cached = keys.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val touched: Seq[Int] =
-          cached.select(BucketCol).distinct().collect().map(_.getInt(0)).toSeq
-        if (touched.nonEmpty) {
-          // null-safe anti-join over the match columns (a keyed delete
-          // matches on keys alone; a version delete additionally pins
-          // the exact (ts, created), where created may legitimately be
-          // null)
-          val probe = cached.select(matchCols.map(c => col(c).as(s"__m_$c")): _*)
-          val cond = matchCols.map(c => col(c) <=> col(s"__m_$c")).reduce(_ && _)
-          rewriteBuckets(fs, p, touched, joinKeys,
-            readTable(df.sparkSession, fs, p, touchedSchema(df.sparkSession, fs, p, touched))
-            .filter(col(BucketCol).isin(touched: _*))
-            .join(probe, cond, "left_anti")
-            .repartition(touched.size, col(BucketCol)))
-        }
-      } finally cached.unpersist()
+        .withColumn(BucketCol, bucketExpr(joinKeys, effectiveBuckets(fs, p)))
+      // null-safe anti-join over the match columns (a keyed delete
+      // matches on keys alone; a version delete additionally pins the
+      // exact (ts, created), where created may legitimately be null)
+      val cond = matchCols.map(c => col(c) <=> col(s"__m_$c")).reduce(_ && _)
+      editBuckets(fs, p, joinKeys, keys, None, touchedSchema(df.sparkSession, fs, p, _)) {
+        (stored, probe) =>
+          stored.join(probe.select(matchCols.map(c => col(c).as(s"__m_$c")): _*), cond, "left_anti")
+      }
     }
     }
 
@@ -810,23 +823,14 @@ class ParquetOnlineStore(
       joinKeys: Seq[String], tsCol: String, cutoff: Timestamp): Long =
     mutate(spark, project, view.name) { (fs, p) =>
     if (!fs.exists(hp(p))) 0L
-    else {
-      val store = readTable(spark, fs, p)
-      val perBucket = store.filter(col(tsCol) < lit(cutoff))
-        .groupBy(col(BucketCol)).agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val touched = perBucket.keys.toSeq
-      if (touched.nonEmpty)
-        rewriteBuckets(fs, p, touched, joinKeys,
-          readTable(spark, fs, p, touchedSchema(spark, fs, p, touched))
-          .filter(col(BucketCol).isin(touched: _*))
-          // negation of the discovery predicate, not (ts >= cutoff): a
-          // NULL-ts row is "not expired" on discovery and must survive
-          // the rewrite too, or it silently vanishes uncounted (review r6)
-          .filter(col(tsCol) >= lit(cutoff) || col(tsCol).isNull)
-          .repartition(touched.size, col(BucketCol)))
-      perBucket.values.sum
-    }
+    else editBuckets(fs, p, joinKeys,
+        readTable(spark, fs, p).filter(col(tsCol) < lit(cutoff)).select(BucketCol), None,
+        touchedSchema(spark, fs, p, _)) { (stored, _) =>
+      // negation of the discovery predicate, not (ts >= cutoff): a
+      // NULL-ts row is "not expired" on discovery and must survive the
+      // rewrite too, or it silently vanishes uncounted (review r6)
+      stored.filter(col(tsCol) >= lit(cutoff) || col(tsCol).isNull)
+    }.values.sum
     }
 
   def read(project: String, view: FeatureView, joinKeys: Seq[String],
@@ -971,19 +975,8 @@ class ParquetOnlineStore(
           Thread.sleep(1L << attempt) // 2..64 ms, ~126 ms worst case
       }
     }
-    entityKeys.map { key =>
-      hits.get(EntityKeyCodec.hexKey(key)) match {
-        case Some(m) =>
-          (tsCands.iterator.map(m.get).collectFirst { case Some(t: Timestamp) => t },
-            features.map { f =>
-            val v = m.getOrElse(f, null)
-            f -> (if (v != null) FeatureValue(v, FeatureStatus.Present)
-                  else FeatureValue(null, FeatureStatus.NotFound))
-          }.toMap)
-        case None =>
-          (None, features.map(f => f -> FeatureValue(null, FeatureStatus.NotFound)).toMap)
-      }
-    }
+    entityKeys.map(key => OnlineStore.readBack(hits.get(EntityKeyCodec.hexKey(key)).map(m =>
+      (tsCands.iterator.map(m.get).collectFirst { case Some(t: Timestamp) => t }, m)), features))
   }
 
   def teardown(project: String, views: Seq[FeatureView]): Unit =

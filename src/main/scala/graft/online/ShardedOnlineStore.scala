@@ -640,25 +640,15 @@ object ShardedOnlineStore {
   }
 
   /** The JSON object in marker file `name` under `base`, None when there
-    * is none. A corrupt marker fails loudly. */
+    * is none. Read through [[graft.util.RenameAside.readFile]], so a
+    * refresh that crashed between its renames still reads its `.old`
+    * copy instead of "unmarked". A corrupt marker fails loudly. */
   private def readMarker(fs: org.apache.hadoop.fs.FileSystem, base: String,
       name: String, what: String): Option[graft.util.JValue.JObj] = {
     val p = new org.apache.hadoop.fs.Path(s"$base/$name")
-    if (!fs.exists(p)) None
-    else {
-      val txt =
-        try {
-          val in = fs.open(p)
-          try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-          finally in.close()
-        } catch {
-          // a marker vanishing between exists() and open() is a
-          // concurrent refresh's delete+rename window or a clear —
-          // absence is the already-handled state, never a failure
-          // (review r15)
-          case _: java.io.FileNotFoundException => return None
-        }
-      try Some(graft.util.Json.parse(txt).asInstanceOf[graft.util.JValue.JObj])
+    graft.util.RenameAside.readFile(fs, p).map { bytes =>
+      val txt = new String(bytes, "UTF-8")
+      try graft.util.Json.parse(txt).asInstanceOf[graft.util.JValue.JObj]
       catch {
         case e: Exception => throw new IllegalStateException(
           s"unreadable $what marker at $p: '$txt' — a corrupt marker " +
@@ -667,30 +657,20 @@ object ShardedOnlineStore {
     }
   }
 
-  /** Write marker file `name` under `base`: a UUID-named tmp file,
-    * published over any pre-existing marker (a refresh, or a concurrent
-    * twin's identical first write) by [[graft.util.RenameAside.swap]]
-    * with `$name.old` as the aside copy. The moment of absence between
-    * its renames reads as "unmarked", which validation treats as
-    * pass-through, never as a misroute; a failed publish puts the old
-    * marker back and throws, so the shard is never left unmarked
-    * silently. */
+  /** Write marker file `name` under `base` through
+    * [[graft.util.RenameAside.publishFile]]: a refresh, or a concurrent
+    * twin's identical first write, swaps in over the old marker, which
+    * readers see at `$name.old` between the renames. A failed publish
+    * puts the old marker back and throws, so the shard is never left
+    * unmarked silently. */
   private def writeMarker(fs: org.apache.hadoop.fs.FileSystem, base: String,
-      name: String, body: graft.util.JValue.JObj): Unit = {
-    val dest = new org.apache.hadoop.fs.Path(s"$base/$name")
-    val aside = new org.apache.hadoop.fs.Path(s"$base/$name.old")
-    val tmp = new org.apache.hadoop.fs.Path(s"$base/$name.tmp-" +
-      java.util.UUID.randomUUID().toString.take(8))
-    val out = fs.create(tmp, true)
-    try out.write(graft.util.Json.render(body).getBytes("UTF-8"))
-    finally out.close()
-    graft.util.RenameAside.heal(fs, dest, aside)
-    graft.util.RenameAside.swap(fs, tmp, dest, aside)
-  }
+      name: String, body: graft.util.JValue.JObj): Unit =
+    graft.util.RenameAside.publishFile(fs, new org.apache.hadoop.fs.Path(s"$base/$name"),
+      graft.util.Json.render(body).getBytes("UTF-8"))
 
   private[graft] def clearPendingSize(fs: org.apache.hadoop.fs.FileSystem,
       base: String): Unit =
-    fs.delete(new org.apache.hadoop.fs.Path(s"$base/$PendingMarker"), false)
+    graft.util.RenameAside.deleteFile(fs, new org.apache.hadoop.fs.Path(s"$base/$PendingMarker"))
 
   // one digest per serving thread, reset per use — getInstance per
   // (key × shard) was a provider lookup + allocation on the point-read

@@ -179,65 +179,27 @@ class Registry(path: Option[String] = None, cacheTtl: Duration = Duration.ofSeco
     (hp.getFileSystem(conf), hp)
   }
 
-  /** Crash-safe publish: write `.tmp`, then
-    * [[graft.util.RenameAside.swap]] it in with `.old` as the aside
-    * copy. A crash between the two renames leaves `.old` recoverable;
-    * load() falls back to it. The `.old` fallback is deleted only while
-    * a NEWER durable copy exists (a live copy in the heal, the fresh
-    * install in the swap) — deleting it up front made the
-    * post-crash-recovery persist a double-crash data-loss window
-    * (review r6). */
+  /** Crash-safe publish through [[graft.util.RenameAside.publishFile]]:
+    * write a tmp file, then swap it in with `.old` as the aside copy. A
+    * crash between the two renames leaves `.old`, which load() reads.
+    * The `.old` copy is deleted only while a NEWER durable copy exists
+    * (a live copy in the heal, the fresh install in the swap) — deleting
+    * it up front made the post-crash-recovery persist a double-crash
+    * data-loss window (review r6). */
   private def persist(toWrite: RegistryState): Unit = path.foreach { p =>
     val (fs, hp) = hadoopFs(p)
-    val tmp = new org.apache.hadoop.fs.Path(p + ".tmp")
-    val old = new org.apache.hadoop.fs.Path(p + ".old")
-    val out = fs.create(tmp, true)
-    out.write(RegistryCodec.encode(toWrite).render.getBytes("UTF-8"))
-    out.close()
-    graft.util.RenameAside.heal(fs, hp, old)
-    graft.util.RenameAside.swap(fs, tmp, hp, old)
+    graft.util.RenameAside.publishFile(fs, hp,
+      RegistryCodec.encode(toWrite).render.getBytes("UTF-8"))
   }
 
+  /** The persisted state through [[graft.util.RenameAside.readFile]]:
+    * the live copy, else a crashed persist's `.old`, with a bounded retry
+    * through a concurrent persist's swap — a None here caches an EMPTY
+    * state for the whole TTL on the serving path (review r12, r13). */
   private def load(): Option[RegistryState] = path.flatMap { p =>
     val (fs, hp) = hadoopFs(p)
-    def attempt(): Option[RegistryState] = {
-      val target =
-        if (fs.exists(hp)) Some(hp)
-        else {
-          val old = new org.apache.hadoop.fs.Path(p + ".old")
-          if (fs.exists(old)) Some(old)
-          // BOTH missing can mean another process's persist completed
-          // its whole swap between our two looks (live renamed aside
-          // before the first check, re-installed and .old deleted
-          // before the second) — the live copy is back NOW, so look
-          // once more before concluding the registry is empty (a None
-          // here caches an EMPTY state for the whole TTL on the
-          // serving path; review r13). A genuinely fresh path stays
-          // None through all three looks.
-          else if (fs.exists(hp)) Some(hp)
-          else None
-        }
-      target.map { t =>
-        val in = fs.open(t)
-        val bytes = org.apache.commons.io.IOUtils.toByteArray(in)
-        in.close()
-        RegistryCodec.decode(Json.parse(new String(bytes, "UTF-8")))
-      }
-    }
-    // exists->open races another process's persist swap (live renamed
-    // aside between the two calls): retry through the tiny window
-    // instead of 500-ing a TTL refresh on the serving path (review r12)
-    var tries = 0
-    while (true) {
-      try return attempt()
-      catch {
-        case e: java.io.FileNotFoundException =>
-          tries += 1
-          if (tries >= 3) throw e
-          Thread.sleep(50L)
-      }
-    }
-    None // unreachable
+    graft.util.RenameAside.readFile(fs, hp).map(bytes =>
+      RegistryCodec.decode(Json.parse(new String(bytes, "UTF-8"))))
   }
 }
 

@@ -3,10 +3,12 @@ package graft.util
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** The rename-aside commit every durable directory or file publish in
-  * graft shares (StagedWrite, Bucketing.writeBucketed,
-  * DatePartition.compact, Registry.persist and the parquet online
-  * store's whole-table and per-bucket swaps): move the live copy ASIDE,
-  * rename the staged copy in, and only then drop the aside copy. At
+  * graft shares: StagedWrite, Bucketing.writeBucketed,
+  * DatePartition.compact, the small files of [[publishFile]] (the
+  * registry and the sharded ring markers), and the parquet online
+  * store's per-bucket swaps plus one first publish (a new table needs no
+  * aside copy, so that is one [[renameOrThrow]]). Move the live copy
+  * ASIDE, rename the staged copy in, and only then drop the aside copy. At
   * every instant the data exists in `live` or in `aside`, so a crash at
   * any step loses nothing, and [[heal]] on the next write puts the
   * aside copy back when `live` is missing.
@@ -55,6 +57,47 @@ object RenameAside {
     }
     if (movedAside) fs.delete(aside, true)
   }
+
+  /** Publish `bytes` as the small file `live`: write a uniquely named
+    * tmp sibling, [[heal]] a crashed predecessor's publish, then [[swap]]
+    * the tmp file in with `live.old` as the aside copy. */
+  def publishFile(fs: FileSystem, live: Path, bytes: Array[Byte]): Unit = {
+    val tmp = new Path(s"$live.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
+    val out = fs.create(tmp, true)
+    try out.write(bytes) finally out.close()
+    heal(fs, live, asideOf(live))
+    swap(fs, tmp, live, asideOf(live))
+  }
+
+  /** The bytes of a [[publishFile]] file, None when there is none. Looks
+    * at `live`, then at the aside copy a publish crashed between its
+    * renames left, then at `live` once more: a concurrent publish can
+    * finish its whole swap between the first two looks. A file that
+    * vanishes between the look and the open is the same race and is
+    * retried twice, 50 ms apart, before the FileNotFoundException
+    * propagates. */
+  def readFile(fs: FileSystem, live: Path): Option[Array[Byte]] = {
+    def attempt(tries: Int): Option[Array[Byte]] =
+      try Seq(live, asideOf(live), live).find(fs.exists).map { f =>
+        val in = fs.open(f)
+        try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
+      } catch {
+        case _: java.io.FileNotFoundException if tries < 3 =>
+          Thread.sleep(50L)
+          attempt(tries + 1)
+      }
+    attempt(1)
+  }
+
+  /** Delete a [[publishFile]] file: the aside copy first, so a crash
+    * between the two deletes leaves the live copy, never a stale aside
+    * copy that [[readFile]] would resurrect. */
+  def deleteFile(fs: FileSystem, live: Path): Unit = {
+    fs.delete(asideOf(live), false)
+    fs.delete(live, false)
+  }
+
+  private def asideOf(live: Path): Path = new Path(s"$live.old")
 
   /** True when `src` moved to `dst`, false when there was no `src` to
     * move (the local filesystem reports that as FileNotFoundException,

@@ -2594,6 +2594,26 @@ class EngineSpec extends AnyFunSuite {
           .toDF("driver_id", "et", "v1"), "et", None)
     }
     assert(eWrite.getMessage.contains("POSITIONAL"), eWrite.getMessage)
+    // a marker refresh that crashed between its two renames leaves the
+    // marker only at `_graft_ring.old`: the reorder must still be caught
+    // from that copy. Both displaced shards' markers move aside, so no
+    // live marker is left to catch it instead.
+    Seq(dirs(0), dirs(2)).foreach(d => assert(new java.io.File(s"$d/_graft_ring")
+      .renameTo(new java.io.File(s"$d/_graft_ring.old"))))
+    val reorderedAside = new graft.online.ShardedOnlineStore(
+      IndexedSeq(dirs(2), dirs(1), dirs(0)).map(d =>
+        new ParquetOnlineStore(d, numBuckets = 2)))
+    val eReadAside = intercept[IllegalArgumentException] {
+      reorderedAside.read("p", view, Seq("driver_id"),
+        Seq(Seq("driver_id" -> 1L)), Seq("v1"))
+    }
+    assert(eReadAside.getMessage.contains("POSITIONAL"), eReadAside.getMessage)
+    val eWriteAside = intercept[IllegalArgumentException] {
+      reorderedAside.upsert("p", view, Seq("driver_id"),
+        Seq((1L, ts("2024-02-02 10:00:00"), 9.0))
+          .toDF("driver_id", "et", "v1"), "et", None)
+    }
+    assert(eWriteAside.getMessage.contains("POSITIONAL"), eWriteAside.getMessage)
     // a FOREIGN salt is the same class of misroute
     val salted = new graft.online.ShardedOnlineStore(
       dirs.map(d => new ParquetOnlineStore(d, numBuckets = 2)), salt = "other")

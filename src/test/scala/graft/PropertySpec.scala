@@ -9,7 +9,7 @@ import org.scalacheck.Prop.propBoolean
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model._
-import graft.online.EntityKeyCodec
+import graft.online.{EntityKeyCodec, InMemoryOnlineStore, ParquetOnlineStore}
 import graft.operators.PointInTimeJoin
 import graft.operators.PointInTimeJoin.ViewJoin
 
@@ -1025,6 +1025,68 @@ class PropertySpec extends AnyFunSuite {
       }
     }
     runCheck(prop, 40)
+  }
+
+  test("both ParquetOnlineStore gate routes and InMemoryOnlineStore read back the same rows (ScalaCheck)") {
+    import spark.implicits._
+    // Generated sequences of raw upserts (duplicate keys within a batch,
+    // null features and created ts, whole-second timestamps) and keyed
+    // deletes, applied to the parquet store on both sides of its
+    // small-store gate and to the in-memory store. Every key must read
+    // back identically, except that a key whose live history holds one
+    // (ts, created) version in two batches is compared between the two
+    // parquet stores only: on such a cross-batch tie the in-memory store
+    // keeps the newer arrival, parquet's merge the max payload.
+    val root = java.nio.file.Files.createTempDirectory("graftroutes").toString
+    val small = new ParquetOnlineStore(s"$root/small", numBuckets = 4)
+    val touched = new ParquetOnlineStore(s"$root/touched", numBuckets = 4, smallStoreBytes = 0L)
+    val stores = Seq(small, touched, new InMemoryOnlineStore())
+    val view = FeatureView("rt", Seq("e"), Seq(Feature("a", GraftType.Dbl), Feature("b", GraftType.Dbl)),
+      Duration.ZERO, DataFrameSource(spark.emptyDataFrame, "et", createdTimestampColumn = Some("ct")))
+    val genCase = for {
+      nKeys <- Gen.choose(1, 6)
+      nBatches <- Gen.choose(1, 3)
+      parts <- Gen.oneOf(1, 4)
+      seed <- Gen.choose(0L, 1000000L)
+    } yield (nKeys, nBatches, parts, seed)
+    var caseNo = 0
+    val prop = Prop.forAllNoShrink(genCase) { case (nKeys, nBatches, parts, seed) =>
+      caseNo += 1
+      val project = s"routes$caseNo" // one project per case: the in-memory map is JVM-wide
+      val rnd = new scala.util.Random(seed)
+      def sec(n: Int): Timestamp = new Timestamp(base + rnd.nextInt(n) * 1000L)
+      def feat(): Option[Double] = Option.when(rnd.nextInt(4) > 0)(rnd.nextInt(3).toDouble)
+      // per key: (batch, (ts, created)) of every row upserted since its last delete
+      val live = scala.collection.mutable.Map.empty[Long, Seq[(Int, (Long, Option[Long]))]]
+      (0 until nBatches).foreach { b =>
+        if (rnd.nextInt(4) == 0) {
+          // key nKeys is never upserted: deleting it is the absent-key no-op
+          val keys = Seq.fill(1 + rnd.nextInt(2))(rnd.nextInt(nKeys + 1).toLong).distinct
+          stores.foreach(_.delete(project, view, Seq("k"), keys.toDF("k").repartition(parts)))
+          keys.foreach(live.remove)
+        } else {
+          val rows = Seq.fill(rnd.nextInt(9))((rnd.nextInt(nKeys).toLong, sec(3),
+            if (rnd.nextInt(3) == 0) null else sec(2), feat(), feat()))
+          val df = rows.toDF("k", "et", "ct", "a", "b").repartition(parts)
+          stores.foreach(_.upsert(project, view, Seq("k"), df, "et", Some("ct")))
+          rows.foreach { case (k, et, ct, _, _) =>
+            live(k) = live.getOrElse(k, Nil) :+ (b -> (et.getTime, Option(ct).map(_.getTime)))
+          }
+        }
+      }
+      val keys = (0L to nKeys.toLong).map(k => Seq("k" -> k))
+      val Seq(gotSmall, gotTouched, gotMem) =
+        stores.map(_.read(project, view, Seq("k"), keys, Seq("a", "b")))
+      val crossTied = live.collect {
+        case (k, vs) if vs.groupBy(_._2).values.exists(_.map(_._1).distinct.size > 1) => k
+      }.toSet
+      stores.foreach(_.teardown(project, Seq(view)))
+      (gotSmall == gotTouched &&
+        keys.indices.forall(i => crossTied(i.toLong) || gotSmall(i) == gotMem(i))) :|
+        s"small=$gotSmall touched=$gotTouched memory=$gotMem crossTied=$crossTied"
+    }
+    try runCheck(prop, minTests = 10)
+    finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
   }
 
   test("HRW shard routing: minimal disruption and spark/driver twin at arbitrary ring sizes (ScalaCheck)") {
