@@ -146,13 +146,12 @@ object Bench {
     // (ann_brute_force), 0.195->0.180 s (agg_pushdown) on identical
     // plans. Multi-stage adaptive shapes (dedup pipeline, store
     // queries, streaming) keep session AQE on, which wins net there.
-    // (r12: the PIT pair no longer needs the bench-side conf flip — the
-    // ENGINE re-roots its static as-of shapes onto an AQE-off session
-    // clone itself, graft.plans.StaticPlan, so a default-session user
-    // gets the same plan this bench measures. The three remaining
-    // members are generic DataFrame queries with no engine operator to
-    // own the policy; the per-job conf here is the documented
-    // deployment conf, same as before.)
+    // (The PIT pair needs no bench-side conf flip: AsOfJoinExec has no
+    // logical link, so Spark plans any query containing it non-adaptive
+    // on the caller's own session, and a default-session user gets the
+    // same plan this bench measures. The three remaining members are
+    // generic DataFrame queries with no engine operator to own the
+    // policy; the per-job conf here is the documented deployment conf.)
     // Prepared-plan reuse (BENCH_NOTES.md "Round 9: prepared-plan
     // reuse": ~0.2 s/run of pure Catalyst re-construction + re-analysis
     // on ann/window_topk, ~0.05 s on the PIT pair): the side-effect-free

@@ -8,19 +8,11 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.model.FeatureView
 import graft.operators.PullLatest
 import graft.util.RenameAside
-
-/** A materialized row headed to the online store (O10's pivot target):
-  * entity key values by join key, feature values by name, event/created
-  * timestamps. */
-final case class OnlineRow(
-    entityKey: Seq[(String, Any)],
-    features: Map[String, Any],
-    eventTs: Timestamp,
-    createdTs: Option[Timestamp])
 
 /** One feature read result (O14): value + status. Reference statuses
   * PRESENT / NOT_FOUND / OUTSIDE_MAX_AGE (ServingService.proto:96-115;
@@ -166,14 +158,28 @@ class InMemoryOnlineStore extends OnlineStore {
     val feats = view.featureNames
     val viewName = view.name
     val guarded = df.select(OnlineStore.guardNullKeys(df.columns.toSeq, joinKeys, viewName, "upsert"): _*)
-    PullLatest.latestPerKey(guarded, joinKeys, tsCol, createdCol, feats).collect().foreach { row =>
+    val winners = PullLatest.latestPerKey(guarded, joinKeys, tsCol, createdCol, feats)
+    // across batches, the held row stays only if latestPerKey's own order
+    // ranks it higher: a replay is idempotent, null timestamps order
+    // smallest, and an exact (ts, created) tie keeps the max payload, as
+    // the parquet merge does
+    val payload = StructType(winners.schema.drop(joinKeys.size))
+    val order = PullLatest.payloadOrdering(payload)
+    def payloadOf(r: StoredRow): Row = Row.fromSeq(payload.fieldNames.toSeq.map {
+      case `tsCol` => r.ts
+      case c if createdCol.contains(c) => r.created.orNull
+      case f => r.values.getOrElse(f, null)
+    })
+    winners.collect().foreach { row =>
       val key = joinKeys.map(k => k -> row.getAs[Any](k))
       val ts = row.getAs[Timestamp](tsCol)
-      // a null created ts is None, not Some(null): newer() orders it
-      // smallest, as the parquet merge does, instead of NPE-ing
       val created = createdCol.flatMap(c => Option(row.getAs[Timestamp](c)))
       val values = feats.map(f => f -> row.getAs[Any](f)).toMap
-      put(storeKey(project, viewName, key), StoredRow(ts, created, values, key))
+      val stored = StoredRow(ts, created, values, key)
+      val _ = table.updateWith(storeKey(project, viewName, key)) {
+        case Some(old) if order.gt(payloadOf(old), payloadOf(stored)) => Some(old)
+        case _ => Some(stored)
+      }
     }
   }
 
@@ -222,25 +228,6 @@ object InMemoryOnlineStore {
   private def storeKey(project: String, view: String, key: Seq[(String, Any)]): String =
     s"$project/$view/${EntityKeyCodec.hexKey(key)}"
 
-  /** Last-write-wins by (event_ts, created_ts) — idempotent under replay. */
-  private def put(k: String, row: StoredRow): Unit = {
-    val _ = table.updateWith(k) {
-      case Some(old) if newer(old, row) => Some(old)
-      case _ => Some(row)
-    }
-  }
-  private def tsMs(t: Timestamp): Long =
-    if (t == null) Long.MinValue else t.getTime
-  private def newer(old: StoredRow, nw: StoredRow): Boolean = {
-    // null event-ts orders SMALLEST (any timestamped row supersedes it)
-    // instead of NPE-ing the whole upsert batch — the parquet twin
-    // already keeps null-ts rows alive through expire, so the stores
-    // must agree on dirty data (review r12)
-    val c = java.lang.Long.compare(tsMs(old.ts), tsMs(nw.ts))
-    if (c != 0) c > 0
-    else (old.created.map(_.getTime).getOrElse(Long.MinValue)
-      > nw.created.map(_.getTime).getOrElse(Long.MinValue))
-  }
 }
 
 /** Parquet-backed KV table — the batch-serving / cluster-scale store:

@@ -91,8 +91,7 @@ object PointInTimeJoin {
           "fullFeatureNames=true or rename the feature")
     }
     // zero views = the input unchanged: the fold below would otherwise
-    // run the bounds job and re-root the frame on the static session —
-    // for a no-op (review r12)
+    // run the bounds job for a no-op (review r12)
     if (views.isEmpty) return entityDf
 
     // The route is chosen per view by its own types ([[sortMergeEligible]]).
@@ -103,8 +102,7 @@ object PointInTimeJoin {
     // right-side ordering carries the payload suffix, so both routes pick
     // the same winner, fully-duplicate rows included.
     val linked = views.map(sortMergeEligible(entityDf, _, entityTsCol))
-    // row ids only when some view joins back; an all-link call is one
-    // STATIC plan (every exchange dictated by requiredChildDistribution)
+    // row ids only when some view joins back
     val allLinked = linked.forall(identity)
     val (stamped, rowId) = if (allLinked) (entityDf, "") else stamp(entityDf)
 
@@ -138,7 +136,7 @@ object PointInTimeJoin {
           backwardWindow(entityTsCol, tsCol, vj.view.ttl),
           (_, r) => (tsCol +: ord).map(r), payload, max_by), Seq(rowId), "left")
     }
-    if (allLinked) graft.plans.StaticPlan.applyPolicy(joined) else joined.drop(rowId)
+    if (allLinked) joined else joined.drop(rowId)
   }
 
   /** Entity-df (min, max) event-ts for the O5 pruning window:

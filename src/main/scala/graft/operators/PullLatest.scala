@@ -2,8 +2,11 @@ package graft.operators
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Column}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Latest-per-key snapshot (O3), the materialization scan:
   * filter event_ts in [start, end] (inclusive BETWEEN — the reference's
@@ -88,5 +91,17 @@ object PullLatest {
     df.groupBy(joinKeys.map(col): _*)
       .agg(max_by(payload, ordKey).as("__w"))
       .select((joinKeys.map(col) ++ payloadCols.map(c => col(s"__w.$c").as(c))): _*)
+  }
+
+  /** [[latestPerKey]]'s winner order on the driver, for a store that
+    * merges a reduced row into one it already holds: Catalyst's ordering
+    * of the payload struct, nulls smallest. `payload` is the schema of
+    * the columns after the join keys in latestPerKey's output, and rows
+    * hold those values in that order. The payload starts with the order
+    * columns, so this is the order its `max_by` compares. */
+  def payloadOrdering(payload: StructType): Ordering[Row] = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(payload)
+    val ord = TypeUtils.getInterpretedOrdering(payload)
+    Ordering.by[Row, Any](toCatalyst)(ord)
   }
 }

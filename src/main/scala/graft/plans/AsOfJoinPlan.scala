@@ -25,8 +25,8 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
   * operator never materializes candidates: both sides arrive
   * hash-clustered on the join keys and sorted by (keys, ts[, order
   * cols]) — Spark's EnsureRequirements inserts exactly the exchanges
-  * and sorts the declared requirements demand, so AQE, codegen'd
-  * children, and reuse all still apply — and a single forward pointer
+  * and sorts the declared requirements demand, so codegen'd children
+  * and exchange reuse still apply — and a single forward pointer
   * per key tracks "latest feature row ≤ entity ts" in O(left + right)
   * time and O(1) state per partition. At 100 TB this is the difference
   * between shuffling candidate multiples of the fact table and
@@ -124,6 +124,17 @@ case class AsOfJoinExec(
   // design exists to avoid)
   override def outputPartitioning: org.apache.spark.sql.catalyst.plans.physical.Partitioning =
     left.outputPartitioning
+
+  // The engine's AQE-off policy. Every exchange under this node is
+  // dictated by requiredChildDistribution, so AQE has nothing to re-plan
+  // and only adds a re-plan round per stage (BENCH_NOTES "Static-plan AQE
+  // policy moved into the engine": 0.62 s off vs 0.8-1.1 s on). Spark's
+  // InsertAdaptiveSparkPlan wraps a query only if supportAdaptive holds
+  // on every node, and its sanityCheck is `logicalLink.isDefined`
+  // (spark-sql 4.1.2; PlanSpec pins the effect). With no link here, any
+  // query that contains this exec runs non-adaptive, on the caller's
+  // own session.
+  override def logicalLink: Option[LogicalPlan] = None
 
   override protected def doExecute(): RDD[InternalRow] = {
     val keyTypes = leftKeys.map(_.dataType)
@@ -227,10 +238,10 @@ case class AsOfJoinExec(
   * merge. Each side shuffles exactly once and no candidate rows
   * materialize.
   *
-  * The result is re-rooted on the AQE-off static-plan session
-  * ([[StaticPlan]]) unless `graft.asof.aqe=on`: every exchange in the
-  * plan is dictated by required distributions, so AQE can only add
-  * re-plan rounds (measured, see StaticPlan).
+  * A query that contains the exec runs non-adaptive on the caller's
+  * session: every exchange in the plan is dictated by required
+  * distributions, so AQE could only add re-plan rounds (see
+  * [[AsOfJoinExec]]`.logicalLink`).
   */
 object AsOfJoin {
   import org.apache.spark.sql.functions.col
@@ -262,14 +273,12 @@ object AsOfJoin {
       ttl: java.time.Duration,
       orderCols: Seq[String],
       featureCols: Seq[String]): DataFrame =
-    StaticPlan.applyPolicy(join0(entity, feature, keys, entityTsCol,
-      featureTsCol, ttl, orderCols, featureCols.map(c => c -> c)))
+    join0(entity, feature, keys, entityTsCol, featureTsCol, ttl, orderCols,
+      featureCols.map(c => c -> c))
 
-  /** [[join]] WITHOUT the engine-owned AQE policy applied, emitting each
-    * `(output name, feature column)` pair of `payload` — for
-    * [[graft.operators.PointInTimeJoin]]'s chain links, which name their
-    * outputs per view and build one frame on the caller's session; that
-    * caller owns the policy for its final frame (review r12). */
+  /** [[join]] emitting each `(output name, feature column)` pair of
+    * `payload` — for [[graft.operators.PointInTimeJoin]]'s chain links,
+    * which name their outputs per view. */
   private[graft] def join0(
       entity: DataFrame,
       feature: DataFrame,

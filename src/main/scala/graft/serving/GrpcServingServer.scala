@@ -139,11 +139,9 @@ class GrpcServingServer(fs: FeatureStore, port: Int = 0,
                 try Right(dispatch(st.path, grpcUnframe(st.body.toByteArray)))
                 catch {
                   case Unimplemented(m) => Left((12, s"unknown method $m"))
-                  case e @ (_: IllegalArgumentException | _: NoSuchElementException |
-                            _: ClassCastException | _: scala.MatchError) =>
-                    Left((3, Option(e.getMessage).getOrElse(e.getClass.getSimpleName)))
                   case e: Exception =>
-                    Left((13, Option(e.getMessage).getOrElse(e.getClass.getSimpleName)))
+                    Left((if (ServingServer.isClientError(e)) 3 else 13,
+                      Option(e.getMessage).getOrElse(e.getClass.getSimpleName)))
                 }
               ctx.channel().eventLoop().execute { () =>
                 result match {
@@ -191,7 +189,6 @@ class GrpcServingServer(fs: FeatureStore, port: Int = 0,
       .syncUninterruptibly()
     workers.shutdownGracefully(0, 1, java.util.concurrent.TimeUnit.SECONDS)
       .syncUninterruptibly()
-    dispatchPool.shutdown()
     ()
   }
 

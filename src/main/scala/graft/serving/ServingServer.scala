@@ -39,6 +39,17 @@ object ServingServer {
   // already created in this JVM.
   if (System.getProperty("sun.net.httpserver.nodelay") == null)
     System.setProperty("sun.net.httpserver.nodelay", "true")
+
+  /** A failure the caller caused (bad JSON or proto, unknown refs or
+    * features, wrong-typed keys), answered 400 over HTTP and
+    * INVALID_ARGUMENT (3) over gRPC; any other exception is a server
+    * failure (store IO, session loss), answered 500 and INTERNAL (13).
+    * One list, so the two transports cannot drift. */
+  private[serving] def isClientError(e: Throwable): Boolean = e match {
+    case _: IllegalArgumentException | _: NoSuchElementException |
+         _: ClassCastException | _: scala.MatchError => true
+    case _ => false
+  }
 }
 
 class ServingServer(fs: FeatureStore, port: Int = 0, poolSize: Int = 4) {
@@ -134,16 +145,10 @@ class ServingServer(fs: FeatureStore, port: Int = 0, poolSize: Int = 4) {
           }.toVector))
         respond(ex, 200, out.render)
       } catch {
-        // client errors (bad JSON, unknown refs/features, wrong-typed
-        // keys) -> 400; anything else is a SERVER failure (store IO,
-        // session loss) -> 500 so callers/alerting treat it as such
-        case e @ (_: IllegalArgumentException | _: NoSuchElementException |
-                  _: ClassCastException | _: scala.MatchError) =>
-          respond(ex, 400, Json.obj("error" -> Json.str(
-            Option(e.getMessage).getOrElse(e.getClass.getSimpleName))).render)
         case e: Exception =>
-          respond(ex, 500, Json.obj("error" -> Json.str(
-            Option(e.getMessage).getOrElse(e.getClass.getSimpleName))).render)
+          respond(ex, if (ServingServer.isClientError(e)) 400 else 500,
+            Json.obj("error" -> Json.str(
+              Option(e.getMessage).getOrElse(e.getClass.getSimpleName))).render)
       }
     }
   })

@@ -1,8 +1,9 @@
-/* Shim in the org.apache.spark.sql namespace: ExpressionUtils (the
- * Column <-> catalyst Expression bridge) is private[sql] in Spark 4, and
- * wrapping a custom Catalyst Expression as a user-facing Column requires
- * it. This is the library's single point of contact with Spark-private
- * API. */
+/* Shim in the org.apache.spark.sql namespace: the library's single
+ * point of contact with Spark-private API. Three private[sql] entry
+ * points: ExpressionUtils (the Column <-> Catalyst Expression bridge
+ * that wraps a custom Expression as a user-facing Column),
+ * Dataset.ofRows (a custom LogicalPlan as a DataFrame) and a live
+ * session's function registry. */
 package org.apache.spark.sql.graftshim
 
 import org.apache.spark.sql.{Column, SparkSession}
@@ -21,17 +22,6 @@ object ColumnShim {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
-
-  /** Clone a live session: shared SparkContext/SharedState (same
-    * executors, cache manager, catalog data), but an independent
-    * SessionState whose runtime conf starts as a snapshot of the
-    * parent's and can then diverge — the per-plan conf-scoping
-    * primitive (cloneSession is private[sql]). Unlike the public
-    * newSession(), the clone KEEPS the parent's runtime conf
-    * (session timezone, shuffle partitions, …), which is load-bearing
-    * for result parity. */
-  def cloneSession(spark: SparkSession): SparkSession =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
 
   /** Register a SQL function into a LIVE session's function registry
     * (sessionState is private[sql]; SparkSessionExtensions only applies

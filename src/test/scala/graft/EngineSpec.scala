@@ -1451,8 +1451,9 @@ class EngineSpec extends AnyFunSuite {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graftraw").toString
     val mini = new MiniRedis()
-    // parquet twice: the whole-table rewrite (default smallStoreBytes)
-    // and the touched-bucket merge (smallStoreBytes = 0)
+    // parquet twice: below the small-store gate every bucket counts as
+    // touched (default smallStoreBytes); above it only the buckets the
+    // incoming keys touch are rewritten (smallStoreBytes = 0)
     val stores: Seq[(String, graft.online.OnlineStore)] = Seq(
       "parquet-bucket-merge" -> new ParquetOnlineStore(s"$base/pqb", numBuckets = 4,
         smallStoreBytes = 0L),

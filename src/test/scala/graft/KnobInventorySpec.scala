@@ -13,7 +13,6 @@ class KnobInventorySpec extends AnyFunSuite {
   private val knob = """"(graft\.\w+\.\w+)"""".r
 
   private val allowed = Map(
-    "plans/StaticPlan.scala" -> Set("graft.asof.aqe", "graft.internal.staticSession"),
     "online/OnlineStore.scala" -> Set("graft.online.writerLeaseMs", "graft.online.writerAcquireMs"),
     "registry/Registry.scala" -> Set("graft.registry.lockStaleMs"),
     "functions/Multimodal.scala" -> Set("graft.video.backend"))

@@ -45,24 +45,35 @@ class PlanSpec extends AnyFunSuite {
 
   test("engine-owned AQE policy: PIT chain is static through the public API in an AQE-on session") {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    // the r11 verdict's #3 'what's wrong': the static-plan policy lived
-    // in the bench conf, so a default-session user paid the AQE re-plan
-    // tax on a plan the engine KNOWS is static. Now the engine re-roots
-    // its static shapes onto the AQE-off clone itself.
+    import spark.implicits._
+    // the sort-merge as-of exec has no logical link, so Spark's
+    // InsertAdaptiveSparkPlan leaves any query containing it
+    // non-adaptive, on the caller's own session
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true",
       "precondition: parent session runs AQE-on")
-    val df = graft.queries.CoreQueries.pitJoinSingle(spark, sfDir)
-    assert(!df.queryExecution.executedPlan.isInstanceOf[AdaptiveSparkPlanExec],
+    def adaptive(d: org.apache.spark.sql.DataFrame): Boolean =
+      d.queryExecution.executedPlan.isInstanceOf[AdaptiveSparkPlanExec]
+    assert(!adaptive(graft.queries.CoreQueries.pitJoinSingle(spark, sfDir)),
       "PIT chain through the public API must be non-adaptive by default")
-    assert(df.sparkSession.conf.get("spark.sql.adaptive.enabled") == "false")
-    // opt-out honored: graft.asof.aqe=on keeps the caller's session
-    spark.conf.set("graft.asof.aqe", "on")
-    try {
-      val df2 = graft.queries.CoreQueries.pitJoinSingle(spark, sfDir)
-      assert(df2.sparkSession.conf.get("graft.internal.staticSession", "false") == "false")
-      assert(df2.queryExecution.executedPlan.isInstanceOf[AdaptiveSparkPlanExec],
-        "opted-out plan should be adaptive in an AQE-on session")
-    } finally spark.conf.unset("graft.asof.aqe")
+
+    val t = (s: String) => java.sql.Timestamp.valueOf(s"2024-01-0$s 00:00:00")
+    val entity = Seq((1L, t("3")), (2L, t("3")), (3L, t("3"))).toDF("k", "ets")
+    val feature = Seq((1L, t("1"), 10.0), (1L, t("2"), 20.0), (2L, t("4"), 40.0))
+      .toDF("k", "fts", "v")
+    val df = graft.plans.AsOfJoin.join(entity, feature, Seq("k"), "ets", "fts",
+      java.time.Duration.ZERO, Nil, Seq("v"))
+    assert(df.sparkSession eq spark, "the result stays on the caller's session")
+    assert(!adaptive(df))
+    val derived = df.join(Seq((1L, "a"), (2L, "b")).toDF("k", "tag"), "k")
+      .groupBy("tag").agg(sum("v").as("v"))
+    assert(!adaptive(derived), "a plan that contains the exec is static")
+    df.createOrReplaceTempView("plan_spec_asof")
+    try assert(spark.sql("SELECT k, v FROM plan_spec_asof").collect()
+        .map(r => r.getLong(0) -> Option(r.get(1))).toSet ==
+      Set(1L -> Some(20.0), 2L -> None, 3L -> None))
+    finally spark.catalog.dropTempView("plan_spec_asof")
+    assert(adaptive(feature.groupBy("k").agg(max("v"))),
+      "a plain aggregate in the same session stays adaptive")
   }
 
   test("PIT join declarative fallback (date-typed feature ts): partial max_by, no window") {

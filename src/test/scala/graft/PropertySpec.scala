@@ -1033,10 +1033,8 @@ class PropertySpec extends AnyFunSuite {
     // null features and created ts, whole-second timestamps) and keyed
     // deletes, applied to the parquet store on both sides of its
     // small-store gate and to the in-memory store. Every key must read
-    // back identically, except that a key whose live history holds one
-    // (ts, created) version in two batches is compared between the two
-    // parquet stores only: on such a cross-batch tie the in-memory store
-    // keeps the newer arrival, parquet's merge the max payload.
+    // back identically, exact cross-batch (ts, created) ties included:
+    // every store keeps the max payload.
     val root = java.nio.file.Files.createTempDirectory("graftroutes").toString
     val small = new ParquetOnlineStore(s"$root/small", numBuckets = 4)
     val touched = new ParquetOnlineStore(s"$root/touched", numBuckets = 4, smallStoreBytes = 0L)
@@ -1056,34 +1054,24 @@ class PropertySpec extends AnyFunSuite {
       val rnd = new scala.util.Random(seed)
       def sec(n: Int): Timestamp = new Timestamp(base + rnd.nextInt(n) * 1000L)
       def feat(): Option[Double] = Option.when(rnd.nextInt(4) > 0)(rnd.nextInt(3).toDouble)
-      // per key: (batch, (ts, created)) of every row upserted since its last delete
-      val live = scala.collection.mutable.Map.empty[Long, Seq[(Int, (Long, Option[Long]))]]
-      (0 until nBatches).foreach { b =>
+      (0 until nBatches).foreach { _ =>
         if (rnd.nextInt(4) == 0) {
           // key nKeys is never upserted: deleting it is the absent-key no-op
           val keys = Seq.fill(1 + rnd.nextInt(2))(rnd.nextInt(nKeys + 1).toLong).distinct
           stores.foreach(_.delete(project, view, Seq("k"), keys.toDF("k").repartition(parts)))
-          keys.foreach(live.remove)
         } else {
           val rows = Seq.fill(rnd.nextInt(9))((rnd.nextInt(nKeys).toLong, sec(3),
             if (rnd.nextInt(3) == 0) null else sec(2), feat(), feat()))
           val df = rows.toDF("k", "et", "ct", "a", "b").repartition(parts)
           stores.foreach(_.upsert(project, view, Seq("k"), df, "et", Some("ct")))
-          rows.foreach { case (k, et, ct, _, _) =>
-            live(k) = live.getOrElse(k, Nil) :+ (b -> (et.getTime, Option(ct).map(_.getTime)))
-          }
         }
       }
       val keys = (0L to nKeys.toLong).map(k => Seq("k" -> k))
       val Seq(gotSmall, gotTouched, gotMem) =
         stores.map(_.read(project, view, Seq("k"), keys, Seq("a", "b")))
-      val crossTied = live.collect {
-        case (k, vs) if vs.groupBy(_._2).values.exists(_.map(_._1).distinct.size > 1) => k
-      }.toSet
       stores.foreach(_.teardown(project, Seq(view)))
-      (gotSmall == gotTouched &&
-        keys.indices.forall(i => crossTied(i.toLong) || gotSmall(i) == gotMem(i))) :|
-        s"small=$gotSmall touched=$gotTouched memory=$gotMem crossTied=$crossTied"
+      (gotSmall == gotTouched && gotSmall == gotMem) :|
+        s"small=$gotSmall touched=$gotTouched memory=$gotMem"
     }
     try runCheck(prop, minTests = 10)
     finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))

@@ -81,7 +81,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("msm_").toString
     // one file = one micro-batch; heavy in-batch duplication exercises
-    // the wantsPreReduced collapse in front of the in-memory store
+    // the in-memory store's own latestPerKey reduce of each batch
     Seq((1L, ts("2024-01-03 00:00:00"), 3.0), (1L, ts("2024-01-05 00:00:00"), 5.0),
         (1L, ts("2024-01-04 00:00:00"), 4.0), (2L, ts("2024-01-01 00:00:00"), 1.0))
       .toDF("user_id", "ts", "v").coalesce(1).write.parquet(s"$dir/in")
