@@ -130,10 +130,10 @@ object Bench {
     // (per-job runtime conf); every
     // other headline keeps session AQE on, which wins net for the
     // multi-stage adaptive shapes (dedup pipeline, multi-view PIT).
-    // Both PIT queries since r8's all-eligible CHAIN: the multi-view
-    // query is now a linear chain of AsOfJoinExec merges — as static as
-    // the single-view plan (no row-id stamp, no join-backs, no
-    // broadcast candidates for AQE to pick). Same argument, probed
+    // Both PIT queries: every PIT view is a link of a linear chain of
+    // AsOfJoinExec merges, so the multi-view query is as static as the
+    // single-view plan (no join-backs, no broadcast candidates for AQE
+    // to pick). Same argument, probed
     // per-query (same BENCH_NOTES.md section), admits three more
     // members whose physical plan AQE cannot change: q_agg_pushdown and
     // q_window_topk are scan -> partial agg -> ONE exchange -> final

@@ -52,7 +52,7 @@ object Funnel {
         case Some(g) =>
           // (seconds, nanos) → micros directly: Duration.toNanos
           // overflows at ~292 years where long micros carry to ~292k
-          // (same rationale as PointInTimeJoin.durationInterval)
+          // (the as-of window's rendering in AsOfJoin.join0)
           unix_micros(col(tsCol)) <=
             unix_micros(col("__pt")) + lit(g.getSeconds * 1000000L + g.getNano / 1000L)
         case None => lit(true)

@@ -13,11 +13,12 @@ import org.apache.spark.sql.functions._
   * backward join is inclusive for exactly the symmetric reason,
   * bigquery.py:613-617).
   *
-  * Same scale shape as the backward join: the shared winner kernel
-  * ([[PointInTimeJoin.winners]]) with `min_by`, so the earliest outcome
-  * wins and a hot key collapses per map task before the shuffle. The
-  * label scan is bounded by [min(entity_ts), max(entity_ts) + horizon]
-  * literals, pushed to parquet row-group skipping.
+  * Same scale shape as the backward join: one forward pass of the
+  * sort-merge as-of exec ([[graft.plans.AsOfJoin]]) taking the min of
+  * (label_ts, tieBreaks, payload), so no candidate rows materialize and
+  * each side shuffles once. The label scan is bounded by
+  * (min(entity_ts), max(entity_ts) + horizon] literals, pushed to parquet
+  * row-group skipping.
   */
 object LabelJoin {
 
@@ -42,13 +43,14 @@ object LabelJoin {
       "joinKeys must be non-empty (a global un-keyed label join would " +
         "cross-join the label table against every entity row — add a " +
         "constant key column deliberately if that is really intended)")
-    // the winners join back by name: a pre-existing output column would
-    // silently duplicate in the joined frame and break any later select
+    // a pre-existing output column would silently duplicate in the
+    // joined frame and break any later select
     val outClash = (labelCols :+ "label_ts").intersect(entityDf.columns)
     require(outClash.isEmpty,
       s"entity df already has output column(s) ${outClash.mkString(", ")} — " +
         "rename or drop them before the label join")
-    val (stamped, rowId) = PointInTimeJoin.stamp(entityDf)
+    val t = graft.plans.AsOfJoin.tsType(entityDf.schema(entityTsCol).dataType,
+      labelDf.schema(labelTsCol).dataType, horizon)
 
     // Scan bounds, computed once (the forward mirror of the backward
     // join's O5 pruning): labels live in (min_ts, max_ts + horizon].
@@ -56,23 +58,16 @@ object LabelJoin {
     // the entity plan allows (zero Spark jobs), else the tiny agg — a
     // footer SUPERSET of the true bounds only widens the label window,
     // never drops a match.
-    val (mnTs, mxTs) = PointInTimeJoin.entityBounds(stamped, entityTsCol)
+    val (mn, mx) = PointInTimeJoin.entityBounds(entityDf, entityTsCol, t)
 
     val ordCols = (labelTsCol +: tieBreaks).distinct
     var lab = labelDf.select((joinKeys ++ ordCols ++ labelCols).distinct.map(col): _*)
-    if (mnTs != null) lab = lab.filter(col(labelTsCol) > lit(mnTs))
-    if (mxTs != null) lab = lab.filter(col(labelTsCol) <=
-      lit(java.sql.Timestamp.from(mxTs.toInstant.plus(horizon))))
-    val horizonInterval = PointInTimeJoin.durationInterval(horizon)
+    if (mn != null) lab = lab.filter(col(labelTsCol) > lit(mn))
+    if (mx != null) lab = lab.filter(col(labelTsCol) <= lit(PointInTimeJoin.shift(mx, horizon)))
     // earliest outcome strictly after the anchor: (label_ts, tiebreaks)
     // ascending, the payload tail pinning determinism
-    val winners = PointInTimeJoin.winners(stamped, rowId, entityTsCol, joinKeys,
-      lab, labelTsCol,
-      (l, r) => r(labelTsCol) > l(entityTsCol) &&
-        r(labelTsCol) <= l(entityTsCol) + horizonInterval,
-      (_, r) => ordCols.map(r),
-      labelCols.map(f => f -> f) :+ ("label_ts" -> labelTsCol), min_by)
-
-    stamped.join(winners, Seq(rowId), "left").drop(rowId)
+    graft.plans.AsOfJoin.join0(entityDf, lab, joinKeys, entityTsCol, labelTsCol, horizon,
+      ordCols.tail, labelCols.map(f => f -> f) :+ ("label_ts" -> labelTsCol),
+      graft.plans.AsOfDirection.Forward)
   }
 }

@@ -9,13 +9,14 @@ import org.apache.spark.sql.functions._
   * absolute timestamp distance within a symmetric `tolerance`
   * (pandas `merge_asof(direction="nearest")`). Ties at equal distance
   * resolve BACKWARD (the row at or before the anchor wins — the
-  * leakage-conservative choice), then by `tieBreaks`.
+  * leakage-conservative choice), then by the smallest (`tieBreaks`,
+  * payload).
   *
   * Same scale shape as its two siblings: the feature scan is bounded
   * by [min(entity_ts) − tolerance, max(entity_ts) + tolerance]
-  * literals (pushed to parquet), and the winner per entity row comes
-  * from the shared kernel ([[PointInTimeJoin.winners]]) with `min_by`
-  * over a (distance, direction) order prefix.
+  * literals (pushed to parquet), then one nearest pass of the
+  * sort-merge as-of exec ([[graft.plans.AsOfJoin]]): each side shuffles
+  * once and no candidate rows materialize.
   */
 object NearestJoin {
 
@@ -36,32 +37,21 @@ object NearestJoin {
     require(outClash.isEmpty,
       s"entity df already has output column(s) ${outClash.mkString(", ")} — " +
         "rename or drop them before the nearest join")
-    val (stamped, rowId) = PointInTimeJoin.stamp(entityDf)
+    val t = graft.plans.AsOfJoin.tsType(entityDf.schema(entityTsCol).dataType,
+      featureDf.schema(featureTsCol).dataType, tolerance)
 
     // shared zero-job footer-bounds path (agg fallback) — a footer
     // SUPERSET of the true bounds only widens the ±tolerance window
-    val (mnTs, mxTs) = PointInTimeJoin.entityBounds(stamped, entityTsCol)
+    val (mn, mx) = PointInTimeJoin.entityBounds(entityDf, entityTsCol, t)
 
     val ordCols = (featureTsCol +: tieBreaks).distinct
     var feat = featureDf.select((joinKeys ++ ordCols ++ featureCols).distinct.map(col): _*)
-    if (mnTs != null) feat = feat.filter(col(featureTsCol) >=
-      lit(java.sql.Timestamp.from(mnTs.toInstant.minus(tolerance))))
-    if (mxTs != null) feat = feat.filter(col(featureTsCol) <=
-      lit(java.sql.Timestamp.from(mxTs.toInstant.plus(tolerance))))
-    val tolInterval = PointInTimeJoin.durationInterval(tolerance)
-    val winners = PointInTimeJoin.winners(stamped, rowId, entityTsCol, joinKeys,
-      feat, featureTsCol,
-      (l, r) => r(featureTsCol) >= l(entityTsCol) - tolInterval &&
-        r(featureTsCol) <= l(entityTsCol) + tolInterval,
-      // winner order: distance, then direction (backward first), then
-      // the user tiebreaks; the kernel appends the payload tail
-      (l, r) => {
-        val absDiff = abs(unix_micros(r(featureTsCol)) - unix_micros(l(entityTsCol)))
-        val dirFlag = when(r(featureTsCol) <= l(entityTsCol), 0).otherwise(1)
-        absDiff +: dirFlag +: ordCols.map(r)
-      },
-      featureCols.map(f => f -> f) :+ ("matched_ts" -> featureTsCol), min_by)
-
-    stamped.join(winners, Seq(rowId), "left").drop(rowId)
+    if (mn != null) feat = feat.filter(col(featureTsCol) >=
+      lit(PointInTimeJoin.shift(mn, tolerance.negated)))
+    if (mx != null) feat = feat.filter(col(featureTsCol) <=
+      lit(PointInTimeJoin.shift(mx, tolerance)))
+    graft.plans.AsOfJoin.join0(entityDf, feat, joinKeys, entityTsCol, featureTsCol, tolerance,
+      ordCols.tail, featureCols.map(f => f -> f) :+ ("matched_ts" -> featureTsCol),
+      graft.plans.AsOfDirection.Nearest)
   }
 }

@@ -8,45 +8,48 @@ import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 
-/** A NATIVE as-of join operator: custom logical node, planner strategy,
-  * and physical sort-merge execution — the engine's signature operation
-  * (backward point-in-time lookup with TTL) expressed as first-class
-  * plan machinery instead of a candidate join + aggregation.
+/** Which right row of the key an [[AsOfJoinNode]] attaches to a left row
+  * (the anchor). Each direction has one winner per ts: Backward takes
+  * the largest (order cols, payload) row, Forward and Nearest the
+  * smallest. */
+sealed trait AsOfDirection
+object AsOfDirection {
+  /** The latest row with ts <= anchor (point-in-time features). */
+  case object Backward extends AsOfDirection
+  /** The earliest row with ts > anchor — strict: a row AT the anchor is
+    * a feature, not a label. */
+  case object Forward extends AsOfDirection
+  /** The nearer of the latest row with ts <= anchor and the earliest
+    * with ts > anchor; equal distance goes backward. */
+  case object Nearest extends AsOfDirection
+}
+
+/** The engine's as-of join operator: custom logical node, planner
+  * strategy, and physical sort-merge execution. Every member of the
+  * as-of family runs on it: the backward point-in-time join
+  * ([[graft.operators.PointInTimeJoin]]), the forward label join
+  * ([[graft.operators.LabelJoin]]) and the nearest join
+  * ([[graft.operators.NearestJoin]]), one [[AsOfDirection]] each.
   *
-  * Why a custom SparkPlan when the declarative formulation
-  * ([[graft.operators.PointInTimeJoin]]) already exists and is
-  * oracle-verified? SHAPE. The declarative plan is
+  * Plan shape: both sides arrive hash-clustered on the join keys and
+  * sorted by (keys, ts[, order cols, payload]) — Spark's
+  * EnsureRequirements inserts exactly the exchanges and sorts the
+  * declared requirements demand, so codegen'd children and exchange
+  * reuse still apply — and a single forward pointer per partition walks
+  * the right side in O(left + right) time and O(1) state. No candidate
+  * rows materialize: an entity row with a 400-day TTL over daily
+  * features never expands into 400 rows, and each side shuffles exactly
+  * once.
   *
-  *   entity ⋈ (range predicate) feature  →  max_by per entity row
-  *
-  * whose intermediate cardinality is Σ candidates: an entity row with a
-  * 400-day TTL over daily features materializes ~400 candidate rows
-  * that the aggregation immediately collapses. The sort-merge physical
-  * operator never materializes candidates: both sides arrive
-  * hash-clustered on the join keys and sorted by (keys, ts[, order
-  * cols]) — Spark's EnsureRequirements inserts exactly the exchanges
-  * and sorts the declared requirements demand, so codegen'd children
-  * and exchange reuse still apply — and a single forward pointer
-  * per key tracks "latest feature row ≤ entity ts" in O(left + right)
-  * time and O(1) state per partition. At 100 TB this is the difference
-  * between shuffling candidate multiples of the fact table and
-  * shuffling each side exactly once.
-  *
-  * Semantics (matches PointInTimeJoin's winner rule EXACTLY, including
-  * ties): feature row with the LARGEST (ts, orderCols..., payload...)
-  * among rows with ts <= entityTs and — when ttl > 0 — ts >= entityTs −
-  * ttl, both edges inclusive. The projected feature payload columns are
-  * appended to the right side's required ordering, so rows arrive
-  * ascending in the SAME total order the declarative path's
-  * max_by(payload, struct(ordCols, payload)) maximizes over — the last
-  * valid row IS that max, and fully-duplicate (keys, ts, orderCols)
-  * feature rows resolve to the payload-max winner on both paths (not
-  * arrival order; judge-confirmed divergence r7, fixed r8). No
-  * uniqueness assumption on the order columns remains. Null join keys
-  * match null keys (the <=> semantics of the declarative path — natural
-  * orderings group nulls together, and SortOrder's nulls-first matches
-  * the struct ordering's null-smallest rule on payload fields); null
-  * timestamps never match.
+  * Semantics: see [[AsOfDirection]]; a nonzero window bounds the
+  * distance between the two ts, edge inclusive. The right side's
+  * required ordering is the total order the winners are picked in:
+  * (ts, order cols, payload) ascending, nulls first, so nulls are
+  * smallest. No uniqueness assumption on the order columns:
+  * fully-duplicate (keys, ts, order) rows resolve by payload, not
+  * arrival order. Null join keys match null keys (the `<=>` rule —
+  * natural orderings group nulls together); null timestamps never
+  * match.
   */
 case class AsOfJoinNode(
     left: LogicalPlan,
@@ -57,7 +60,8 @@ case class AsOfJoinNode(
     rightTs: Expression,
     rightOrder: Seq[Expression],
     rightProject: Seq[Attribute],
-    ttlMicros: Long) extends BinaryNode {
+    windowMicros: Long,
+    direction: AsOfDirection) extends BinaryNode {
 
   override def output: Seq[Attribute] =
     left.output ++ rightProject.map(_.withNullability(true))
@@ -72,8 +76,8 @@ case class AsOfJoinNode(
   * sessions) — see [[AsOfJoin.ensureStrategy]]. */
 object AsOfJoinStrategy extends org.apache.spark.sql.execution.SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case AsOfJoinNode(l, r, lk, rk, lts, rts, ro, rp, ttl) =>
-      AsOfJoinExec(lk, rk, lts, rts, ro, rp, ttl, planLater(l), planLater(r)) :: Nil
+    case AsOfJoinNode(l, r, lk, rk, lts, rts, ro, rp, w, dir) =>
+      AsOfJoinExec(lk, rk, lts, rts, ro, rp, w, dir, planLater(l), planLater(r)) :: Nil
     case _ => Nil
   }
 }
@@ -85,7 +89,8 @@ case class AsOfJoinExec(
     rightTs: Expression,
     rightOrder: Seq[Expression],
     rightProject: Seq[Attribute],
-    ttlMicros: Long,
+    windowMicros: Long,
+    direction: AsOfDirection,
     left: SparkPlan,
     right: SparkPlan) extends BinaryExecNode {
 
@@ -98,9 +103,8 @@ case class AsOfJoinExec(
     ClusteredDistribution(leftKeys) :: ClusteredDistribution(rightKeys) :: Nil
 
   // left sorted by (keys, ts); right by (keys, ts, order cols, PAYLOAD
-  // cols) so the LAST valid row per entity row is the winner under the
-  // exact total order the declarative max_by(payload, struct(ordCols,
-  // payload)) uses — the payload suffix is what makes fully-duplicate
+  // cols), so a ts's largest row is its last and its smallest its
+  // first. The payload suffix is what makes fully-duplicate
   // (keys, ts, order) rows deterministic instead of arrival-ordered.
   // Payload attrs already present among (ts, order) are skipped (a
   // duplicate SortOrder is legal but wasted comparisons per row).
@@ -146,7 +150,8 @@ case class AsOfJoinExec(
     val lt = leftTs
     val rt = rightTs
     val rp = rightProject
-    val ttl = ttlMicros
+    val window = windowMicros
+    val dir = direction
 
     left.execute().zipPartitions(right.execute()) { (lIter, rIter) =>
       val lKeyProj = UnsafeProjection.create(lk, leftOut)
@@ -170,11 +175,10 @@ case class AsOfJoinExec(
         private var rHasCur = false
         private var rKey: InternalRow = _      // copied key of curR
         private var rRow: InternalRow = _      // the CURRENT right row (not yet consumed)
+        private var rTs = 0L                   // its ts
         private var bestRow: InternalRow = _   // copied projected best candidate
         private var bestTs = 0L
         private var bestKey: InternalRow = _   // copied key the best belongs to
-
-        private var bestTsCandidate = 0L
 
         // loop (not recurse): a long run of null-ts feature rows must
         // not grow the stack
@@ -186,7 +190,7 @@ case class AsOfJoinExec(
               rKey = rKeyProj(r).copy()
               // projecting BEFORE buffering keeps copies narrow
               rRow = rOutProj(r).copy()
-              bestTsCandidate = ts.getLong(0)
+              rTs = ts.getLong(0)
               rHasCur = true
               return
             }
@@ -203,26 +207,39 @@ case class AsOfJoinExec(
           val lKey = lKeyProj(l)
           val lTsRow = lTsProj(l)
           if (lTsRow.isNullAt(0)) {
-            // null entity ts: no feature can be ≤ it
+            // a null entity ts matches nothing
             return outProj(joined(l, nullRight))
           }
           val lTsVal = lTsRow.getLong(0)
           // drop right rows (and any stale best) for keys before ours
           while (rHasCur && keyOrd.compare(rKey, lKey) < 0) advanceRight()
-          // consume right rows of OUR key with ts <= entity ts: each one
-          // seen in ascending (ts, order) — the last is the running max
+          // consume right rows of OUR key with ts <= entity ts: the
+          // backward winner is the last one seen (Backward), or the
+          // first one seen at the latest ts (Nearest)
           while (rHasCur && keyOrd.compare(rKey, lKey) == 0 &&
-              bestTsCandidate <= lTsVal) {
-            bestRow = rRow
-            bestTs = bestTsCandidate
-            bestKey = rKey
+              rTs <= lTsVal) {
+            if (dir != AsOfDirection.Nearest || bestRow == null || rTs != bestTs ||
+                keyOrd.compare(rKey, bestKey) != 0) {
+              bestRow = rRow
+              bestTs = rTs
+              bestKey = rKey
+            }
             advanceRight()
           }
-          val valid = bestRow != null && bestKey != null &&
-            keyOrd.compare(bestKey, lKey) == 0 &&
-            bestTs <= lTsVal &&
-            (ttl == 0L || bestTs >= lTsVal - ttl)
-          outProj(joined(l, if (valid) bestRow else nullRight))
+          // the current right row is the first after the anchor: the
+          // forward winner, not consumed — the next anchor may match it
+          val back = bestRow != null && keyOrd.compare(bestKey, lKey) == 0 &&
+            bestTs <= lTsVal && (window == 0L || lTsVal - bestTs <= window)
+          val ahead = rHasCur && keyOrd.compare(rKey, lKey) == 0 &&
+            (window == 0L || rTs - lTsVal <= window)
+          val win = dir match {
+            case AsOfDirection.Backward => if (back) bestRow else nullRight
+            case AsOfDirection.Forward => if (ahead) rRow else nullRight
+            case AsOfDirection.Nearest =>
+              if (back && (!ahead || lTsVal - bestTs <= rTs - lTsVal)) bestRow
+              else if (ahead) rRow else nullRight
+          }
+          outProj(joined(l, win))
         }
       }
     }
@@ -246,6 +263,7 @@ case class AsOfJoinExec(
 object AsOfJoin {
   import org.apache.spark.sql.functions.col
   import org.apache.spark.sql.graftshim.ColumnShim
+  import org.apache.spark.sql.types._
 
   /** Idempotently install [[AsOfJoinStrategy]] into the session's
     * planner (experimental.extraStrategies is the public live-session
@@ -261,8 +279,7 @@ object AsOfJoin {
     * featureCols) at or before `entityTsCol` and — when ttl is nonzero —
     * within `ttl` of it. No uniqueness requirement on `orderCols`:
     * residual ties (fully-duplicate (keys, ts, orderCols) rows) resolve
-    * to the payload-max row, the same total order the declarative
-    * PointInTimeJoin path maximizes. Emits all entity columns plus
+    * to the payload-max row. Emits all entity columns plus
     * `featureCols`. */
   def join(
       entity: DataFrame,
@@ -276,18 +293,48 @@ object AsOfJoin {
     join0(entity, feature, keys, entityTsCol, featureTsCol, ttl, orderCols,
       featureCols.map(c => c -> c))
 
-  /** [[join]] emitting each `(output name, feature column)` pair of
-    * `payload` — for [[graft.operators.PointInTimeJoin]]'s chain links,
-    * which name their outputs per view. */
+  /** The type an entity ts of type `l` and a feature ts of type `r`
+    * compare in — the type Catalyst's implicit coercion compares the
+    * pair in: same-typed TIMESTAMP, TIMESTAMP_NTZ or epoch-long columns
+    * compare raw; DATE against DATE, and DATE or NTZ against TIMESTAMP,
+    * compare as TIMESTAMP (session time zone; midnights keep the date
+    * order); DATE against NTZ compares as NTZ — both are wall-clock
+    * types, so the comparison needs no time zone. An epoch-long ts has
+    * no interval arithmetic, so it allows a zero `window` only. Any
+    * other pair fails here, naming both types. */
+  private[graft] def tsType(l: DataType, r: DataType, window: java.time.Duration): DataType = {
+    val t = (l, r) match {
+      case (LongType, LongType) | (TimestampType, TimestampType) |
+          (TimestampNTZType, TimestampNTZType) => l
+      case (DateType, DateType) => TimestampType
+      case (DateType | TimestampNTZType, DateType | TimestampNTZType) => TimestampNTZType
+      case (DateType | TimestampNTZType | TimestampType,
+          DateType | TimestampNTZType | TimestampType) => TimestampType
+      case _ => throw new IllegalArgumentException(
+        s"as-of timestamps have no common type: entity side ${l.sql} vs feature side " +
+          s"${r.sql} — use TIMESTAMP, TIMESTAMP_NTZ or DATE, or epoch longs on both sides")
+    }
+    require(t != LongType || window.isZero,
+      s"an epoch-long as-of ts allows no time window (got $window) — " +
+        "convert the ts columns to TIMESTAMP to bound the window")
+    t
+  }
+
+  /** [[join]] in any [[AsOfDirection]], emitting each `(output name,
+    * feature column)` pair of `payload`. `window` bounds the ts distance
+    * (the TTL, horizon or tolerance); zero means unbounded. Mismatched key or ts types are
+    * normalized here by casts in the node's key and ts expressions —
+    * none when both sides already agree — so outputs keep their types. */
   private[graft] def join0(
       entity: DataFrame,
       feature: DataFrame,
       keys: Seq[String],
       entityTsCol: String,
       featureTsCol: String,
-      ttl: java.time.Duration,
+      window: java.time.Duration,
       orderCols: Seq[String],
-      payload: Seq[(String, String)]): DataFrame = {
+      payload: Seq[(String, String)],
+      direction: AsOfDirection = AsOfDirection.Backward): DataFrame = {
     val spark = entity.sparkSession
     ensureStrategy(spark)
     // fresh expression ids on the right side so self-joins (entity df
@@ -300,44 +347,47 @@ object AsOfJoin {
       throw new IllegalArgumentException(s"entity column $n not found"))
     def rAttr(n: String) = rplan.output.find(_.name == s"__r_$n").getOrElse(
       throw new IllegalArgumentException(s"feature column $n not found"))
-    require(ttl != null && !ttl.isNegative, "ttl must be >= 0 (0 = unbounded)")
+    require(window != null && !window.isNegative, "ttl must be >= 0 (0 = unbounded)")
     // loud here, not empty.reduce / ClusteredDistribution(Nil) three
     // plan layers down (review r12)
     require(keys.nonEmpty, "as-of join needs at least one join key")
-    require(lAttr(entityTsCol).dataType == org.apache.spark.sql.types.TimestampType &&
-      rAttr(featureTsCol).dataType == org.apache.spark.sql.types.TimestampType,
-      "as-of timestamps must be TimestampType (micros)")
-    // join-key type parity is load-bearing, not cosmetic: the merge's
-    // natural ordering and the hash co-partitioning are both built from
-    // the LEFT key types, so an int-vs-bigint mismatch would hash the
-    // same logical key to different partitions and silently miss every
-    // match (the declarative <=> path would have inserted implicit
-    // casts). Fail loudly instead.
-    keys.foreach { kName =>
-      val (lt, rt) = (lAttr(kName).dataType, rAttr(kName).dataType)
-      require(lt == rt,
-        s"as-of join key '$kName' type mismatch: entity side $lt vs feature " +
-          s"side $rt — cast the sides to a common type before joining")
-    }
-    // float/double keys: Spark's NormalizeFloatingNumbers rule rewrites
-    // join keys of known Join nodes only, not this custom node — without
-    // it -0.0 and 0.0 (equal under the merge ordering) hash to different
-    // partitions and never meet. Apply the same normalization here.
+    // the node is built after analysis, so each cast carries the
+    // session time zone itself
+    val conf = spark.sessionState.conf
+    def cast(e: Expression, t: DataType): Expression =
+      if (e.dataType == t) e
+      else org.apache.spark.sql.catalyst.expressions.Cast(e, t, Some(conf.sessionLocalTimeZone))
+    // join keys widen to the type `<=>` would compare them in: the
+    // merge's ordering and the hash co-partitioning both need ONE key
+    // type, or int-vs-bigint keys would hash the same value to
+    // different partitions. Float/double keys: Spark's
+    // NormalizeFloatingNumbers rewrites join keys of known Join nodes
+    // only, so -0.0/0.0 and NaNs are normalized here.
+    import org.apache.spark.sql.catalyst.analysis.{AnsiTypeCoercion, TypeCoercion}
     import org.apache.spark.sql.catalyst.optimizer.NormalizeNaNAndZero
-    import org.apache.spark.sql.types.{DoubleType, FloatType}
-    def normKey(e: Expression): Expression = e.dataType match {
-      case DoubleType | FloatType => NormalizeNaNAndZero(e)
-      case _ => e
-    }
+    val coercion = if (conf.ansiEnabled) AnsiTypeCoercion else TypeCoercion
+    val (lKeys, rKeys) = keys.map { k =>
+      val (l, r) = (lAttr(k), rAttr(k))
+      val t = coercion.findWiderTypeForTwo(l.dataType, r.dataType).getOrElse(
+        throw new IllegalArgumentException(s"as-of join key '$k' type mismatch: entity " +
+          s"side ${l.dataType.sql} vs feature side ${r.dataType.sql} have no common type"))
+      def norm(e: Expression) = t match {
+        case DoubleType | FloatType => NormalizeNaNAndZero(cast(e, t))
+        case _ => cast(e, t)
+      }
+      (norm(l), norm(r))
+    }.unzip
+    val ts = tsType(lAttr(entityTsCol).dataType, rAttr(featureTsCol).dataType, window)
     val node = AsOfJoinNode(
       lplan, rplan,
-      leftKeys = keys.map(k => normKey(lAttr(k))),
-      rightKeys = keys.map(k => normKey(rAttr(k))),
-      leftTs = lAttr(entityTsCol),
-      rightTs = rAttr(featureTsCol),
+      leftKeys = lKeys,
+      rightKeys = rKeys,
+      leftTs = cast(lAttr(entityTsCol), ts),
+      rightTs = cast(rAttr(featureTsCol), ts),
       rightOrder = orderCols.map(rAttr),
       rightProject = payload.map(p => rAttr(p._2)),
-      ttlMicros = ttl.getSeconds * 1000000L + ttl.getNano / 1000L)
+      windowMicros = window.getSeconds * 1000000L + window.getNano / 1000L,
+      direction = direction)
     val out = ColumnShim.dataFrame(spark, node)
     // name the emitted feature columns
     out.select(entity.columns.map(col).toIndexedSeq ++

@@ -93,9 +93,8 @@ object HistoryQueries {
   /** Weekly as-of snapshots of each user's latest event over a 4-point
     * date grid: the "generate training examples at regular intervals"
     * pattern — entity df is a generated grid (distinct keys × date
-    * spine), the rest IS the PIT join (ttl = 7 days). Exercises the
-    * row-id pinning path too: the distinct makes the entity plan
-    * shuffle-derived. */
+    * spine), the rest IS the PIT join (ttl = 7 days). The distinct
+    * makes the entity plan shuffle-derived. */
   def gridSnapshot(s: SparkSession, dir: String): DataFrame = {
     val events = ev(s, dir)
     val grid = events.select(col("user_id")).distinct()

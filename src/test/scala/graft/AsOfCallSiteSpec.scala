@@ -2,17 +2,17 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The sort-merge as-of exec is reached through `AsOfJoin.join0` from two
-  * places only: the public `AsOfJoin.join`, and `PointInTimeJoin.join`'s
-  * chain link. Every other point-in-time view takes the declarative
-  * `winners` route. A new caller of `join0` is a third as-of route, and
-  * has to be named here. */
+/** The sort-merge as-of exec is the only as-of operator, reached through
+  * `AsOfJoin.join0` from four places: the public `AsOfJoin.join`,
+  * `PointInTimeJoin.join`'s chain link (one per view), `LabelJoin`'s
+  * forward pass and `NearestJoin`'s nearest pass. A new caller of
+  * `join0` is a new as-of route, and has to be named here. */
 class AsOfCallSiteSpec extends AnyFunSuite {
 
   // a call, not the definition
   private val call = """(?<!def )\bjoin0\(""".r
 
-  test("AsOfJoin.join0 has two call sites in src/main: AsOfJoin.join and the PIT chain link") {
+  test("AsOfJoin.join0 callers: AsOfJoin.join, the PIT chain, LabelJoin, NearestJoin") {
     val root = new java.io.File("src/main/scala/graft")
     assert(root.isDirectory, s"run from the repository root (no ${root.getPath})")
     def files(d: java.io.File): Seq[java.io.File] =
@@ -27,6 +27,8 @@ class AsOfCallSiteSpec extends AnyFunSuite {
       else Some(root.toPath.relativize(f.toPath).toString.replace('\\', '/') -> n)
     }.toMap
     assert(found === Map(
+        "operators/LabelJoin.scala" -> 1,
+        "operators/NearestJoin.scala" -> 1,
         "operators/PointInTimeJoin.scala" -> 1,
         "plans/AsOfJoinPlan.scala" -> 1),
       "a new as-of route through AsOfJoin.join0 must be named in AsOfCallSiteSpec")

@@ -131,13 +131,13 @@ class EngineSpec extends AnyFunSuite {
     val entityDf = Seq((1L, entityTs), (2L, entityTs)).toDF("k", "event_timestamp")
     val ttl = Duration.ofMillis(1500)
 
-    // declarative path: an int entity key against the bigint feature key
-    // fails key-type parity, so the view runs `winners` on TIMESTAMP ts
+    // PIT path: an int entity key against the bigint feature key, which
+    // the chain link widens to bigint itself
     val view = FeatureView("fv", Seq("e"), Seq(Feature("v", GraftType.Dbl)),
       ttl, DataFrameSource(featDf, "et", createdTimestampColumn = Some("ct")))
     val declDf = PointInTimeJoin.join(entityDf.withColumn("k", $"k".cast("int")),
       Seq(ViewJoin(view, Seq("k"), Seq("v"), featDf)))
-    assert(!declDf.queryExecution.executedPlan.toString.contains("AsOfJoin"))
+    assert(declDf.queryExecution.executedPlan.toString.contains("AsOfJoin"))
     val decl = declDf.select($"k".cast("long"), $"v").collect()
       .map(r => r.getLong(0) -> Option(r.get(1))).toMap
     assert(decl(1L) === Some(11.0) && decl(2L) === None)
@@ -182,13 +182,23 @@ class EngineSpec extends AnyFunSuite {
 
   test("AsOfJoin rejects mismatched join-key types loudly (review r6)") {
     import spark.implicits._
-    val ent = Seq((1, ts("2024-01-01 00:00:00"))).toDF("k", "event_timestamp")  // int key
+    // int against bigint widens to bigint, as `<=>` would compare them:
+    // both sides hash and merge on the same key values
+    val ent = Seq((1, ts("2024-01-01 00:00:00")), (2, ts("2024-01-01 00:00:00")))
+      .toDF("k", "event_timestamp")  // int key
     val feat = Seq((1L, ts("2024-01-01 00:00:00"), 1.0)).toDF("k", "et", "v")  // bigint key
+    val got = graft.plans.AsOfJoin.join(ent, feat, Seq("k"), "event_timestamp", "et",
+        Duration.ZERO, orderCols = Seq("et"), featureCols = Seq("v"))
+      .select("k", "v").collect().map(r => r.getInt(0) -> Option(r.get(1))).toMap
+    assert(got === Map(1 -> Some(1.0), 2 -> None))
+    // a key pair with no common type still fails loudly
+    val dated = ent.withColumn("k", lit(java.sql.Date.valueOf("2024-01-01")))
     val e = intercept[IllegalArgumentException] {
-      graft.plans.AsOfJoin.join(ent, feat, Seq("k"), "event_timestamp", "et",
+      graft.plans.AsOfJoin.join(dated, feat, Seq("k"), "event_timestamp", "et",
         Duration.ZERO, orderCols = Seq("et"), featureCols = Seq("v"))
     }
-    assert(e.getMessage.contains("type mismatch"))
+    assert(e.getMessage.contains("type mismatch") && e.getMessage.contains("DATE") &&
+      e.getMessage.contains("BIGINT"), e.getMessage)
   }
 
   test("inference: ts column, entity type, features") {

@@ -8,8 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * its tie rules cannot drift between them. A new site that groups and
   * aggregates with `max_by` itself would bring back a second copy. The
   * oracle queries under `queries/` are left out: they state their own
-  * SQL-shaped answers. `PointInTimeJoin.winners` passes `max_by` as a
-  * value (`pick`), so it does not match. */
+  * SQL-shaped answers. The as-of joins reduce nothing with `max_by`:
+  * they run on the sort-merge exec. */
 class LwwReduceCallSiteSpec extends AnyFunSuite {
 
   // `.agg(max_by(` or `.agg(functions.max_by(`, possibly across a line break

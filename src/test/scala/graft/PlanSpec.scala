@@ -10,9 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   *  - ts-bounds predicates reach the parquet scan (PushedFilters), so
   *    row groups outside the retrieval window are skipped;
-  *  - the PIT join reduces candidates with a partial-aggregating
-  *    max_by, not a row_number window (map-side combine: a hot entity
-  *    ships one row per map task, not 10^6 candidate rows);
+  *  - the PIT join runs the sort-merge as-of exec, never a candidate
+  *    join or a row_number window (a hot entity's 10^6 feature rows
+  *    stream through one merge; no candidate row materializes);
   *  - small dimension joins broadcast;
   *  - LSH dedup never degenerates into a cartesian product.
   */
@@ -81,12 +81,9 @@ class PlanSpec extends AnyFunSuite {
     import java.time.Duration
     import graft.model._
     import graft.operators.PointInTimeJoin
-    // same workload as pitJoinSingle but with a DATE-typed feature ts —
-    // sort-merge eligibility requires TimestampType on both sides (the
-    // exec compares raw micros), so this must take the declarative
-    // payload-max path and keep its partial-agg shape. (Since r8 the
-    // exec carries the payload tie-break itself, so tie-break presence
-    // no longer routes — only the ts types do.)
+    // same workload as pitJoinSingle but with a DATE-typed feature ts:
+    // the chain link casts it to TIMESTAMP itself, so there is no
+    // declarative fallback left — no candidate max_by, no row ids
     val entity = spark.read.parquet(s"$sfDir/orders.parquet").select(
       col("o_orderkey"), (col("o_orderdate") + expr("INTERVAL 365 DAY")).as("event_timestamp"))
     val src = FileSource(s"$sfDir/lineitem.parquet", eventTimestampColumn = "l_shipdate")
@@ -98,12 +95,13 @@ class PlanSpec extends AnyFunSuite {
     val plan = PointInTimeJoin.join(entity,
         Seq(PointInTimeJoin.ViewJoin(view, Seq("o_orderkey"), Seq("l_quantity"), feat)))
       .queryExecution.executedPlan.toString
-    assert(plan.contains("partial_max_by"),
-      s"declarative PIT candidate reduction must be a partial-aggregating max_by:\n$plan")
-    assert(!plan.contains("Window") && !plan.contains("AsOfJoin"))
+    assert(plan.contains("AsOfJoin") && !plan.contains("max_by") &&
+      !plan.contains("__graft_row_id"),
+      s"a DATE feature ts must ride the sort-merge as-of chain:\n$plan")
+    assert(!plan.contains("Window"))
 
-    // routes are chosen per view by types alone: an entity column named
-    // like the source feature keeps an all-TIMESTAMP call on the chain
+    // an entity column named like the source feature keeps an
+    // all-TIMESTAMP call on the chain
     val featTs = spark.read.parquet(s"$sfDir/lineitem.parquet")
       .select(col("l_orderkey").as("o_orderkey"), col("l_shipdate"), col("l_quantity"))
     val tsView = PointInTimeJoin.ViewJoin(view, Seq("o_orderkey"), Seq("l_quantity"), featTs)
@@ -113,14 +111,14 @@ class PlanSpec extends AnyFunSuite {
     assert(named.contains("AsOfJoin") && !named.contains("__graft_row_id") &&
       !named.contains("max_by"), s"a named-like-the-feature call must chain:\n$named")
 
-    // a mixed call: the TIMESTAMP view links, the DATE view joins back
+    // a mixed call: the TIMESTAMP view and the DATE view both link
     val dateView = PointInTimeJoin.ViewJoin(
       view.copy(name = "li_d"), Seq("o_orderkey"), Seq("l_quantity"), feat)
     val mixed = PointInTimeJoin.join(entity, Seq(tsView, dateView), fullFeatureNames = true)
       .queryExecution.executedPlan.toString
     def count(p: String, s: String) = p.split(java.util.regex.Pattern.quote(s), -1).length - 1
-    assert(count(mixed, "AsOfJoin") == 1 && count(mixed, "partial_max_by") == 1,
-      s"a mixed call must plan one chain link and one declarative reduction:\n$mixed")
+    assert(count(mixed, "AsOfJoin") == 2 && count(mixed, "max_by") == 0,
+      s"a mixed call must plan two chain links:\n$mixed")
   }
 
   test("pullLatest: partial aggregation before the shuffle") {
@@ -229,24 +227,6 @@ class PlanSpec extends AnyFunSuite {
     val plan = graft.queries.CoreQueries.broadcastJoinAgg(spark, sfDir)
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), s"customer join should broadcast:\n$plan")
-  }
-
-  test("row-id pinning engages only for replay-unstable entity plans") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val scan = graft.sources.Tables.read(spark, sfDir, "orders")
-      .filter(col("o_orderkey") % 2 === 0)
-      .select(col("o_orderkey"), col("o_orderdate").as("event_timestamp"))
-    // scan + filter + project: stable — no checkpoint
-    assert(!graft.operators.PointInTimeJoin.needsRowIdPinning(scan))
-    assert(!graft.operators.PointInTimeJoin.needsRowIdPinning(scan.unionByName(scan)))
-    // shuffle-derived, limit, sample, nondeterministic: must pin
-    assert(graft.operators.PointInTimeJoin.needsRowIdPinning(
-      scan.groupBy("o_orderkey").agg(max("event_timestamp").as("event_timestamp"))))
-    assert(graft.operators.PointInTimeJoin.needsRowIdPinning(scan.limit(10)))
-    assert(graft.operators.PointInTimeJoin.needsRowIdPinning(scan.repartition(8)))
-    assert(graft.operators.PointInTimeJoin.needsRowIdPinning(
-      scan.withColumn("r", rand())))
   }
 
   test("IVF top-k is one bounded-heap aggregation: k-capped partials, no window, no unbounded collect") {

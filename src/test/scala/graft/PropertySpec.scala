@@ -153,14 +153,15 @@ class PropertySpec extends AnyFunSuite {
 
   test("every PIT join route and both AsOfJoin routes agree with the nested-loop oracle (ScalaCheck)") {
     import spark.implicits._
-    import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.{Column, DataFrame}
+    import org.apache.spark.sql.functions.{col, lit, unix_micros, when}
     import graft.plans.AsOfJoin
-    // One generated case, every route PointInTimeJoin.join can take,
-    // with the entity frame at 1 and 4 partitions. Times are UTC
-    // midnights, so a DATE-typed copy of the feature ts (the declarative
-    // route) is exact; tiny (et, ct, v) domains make ties that only the
-    // payload tail breaks.
+    // One generated case through every input shape PointInTimeJoin.join
+    // accepts, with the entity frame at 1 and 4 partitions. Times are
+    // UTC midnights, so DATE-typed copies of either ts are exact; tiny
+    // (et, ct, v) domains make ties that only the payload tail breaks.
+    // Key remaps that are bijections on both sides (0 -> null, or
+    // 0 -> -0.0 / 0.0 and 1 -> NaN) leave the oracle unchanged.
     val day = 86400000L
     val dayBase = java.time.Instant.parse("2024-01-01T00:00:00Z").toEpochMilli
     val genCase = for {
@@ -182,7 +183,8 @@ class PropertySpec extends AnyFunSuite {
         (rnd.nextInt(nKeys).toLong, t(20), t(3), rnd.nextInt(4).toDouble))
       val ents = (0 until nEnt).map(i => (rnd.nextInt(nKeys).toLong, t(20), i.toLong))
       val ttl = Duration.ofDays(ttlD.toLong)
-      val expected = ents.map { case (key, ts, eid) =>
+      val subDay = Duration.ofHours(12)
+      def expect(ttl: Duration): Map[Long, Option[Double]] = ents.map { case (key, ts, eid) =>
         val c = rows.filter { case (k, et, _, _) =>
           k == key && et.getTime <= ts.getTime &&
             (ttl.isZero || et.getTime >= ts.getTime - ttl.toMillis)
@@ -190,34 +192,63 @@ class PropertySpec extends AnyFunSuite {
         eid -> (if (c.isEmpty) None
           else Some(c.maxBy { case (_, et, ct, v) => (et.getTime, ct.getTime, v) }._4))
       }.toMap
+      val expected = expect(ttl)
 
       val featTs = rows.toDF("k", "et", "ct", "v")
-      val featDate = featTs.withColumn("et", col("et").cast("date"))
-      def viewJoin(name: String, feat: DataFrame) = ViewJoin(
+      def retype(df: DataFrame, c: String, e: Column => Column) = df.withColumn(c, e(col(c)))
+      val asDate: Column => Column = _.cast("date")
+      val asNtz: Column => Column = _.cast("timestamp_ntz")
+      val featDate = retype(featTs, "et", asDate)
+      val nullKeys: Column => Column = k => when(k =!= 0, k)
+      def doubleKeys(zero: Double): Column => Column = k =>
+        when(k === 0, lit(zero)).when(k === 1, lit(Double.NaN)).otherwise(k.cast("double"))
+      def viewJoin(name: String, feat: DataFrame, ttl: Duration = ttl) = ViewJoin(
         FeatureView(name, Seq("e"), Seq(Feature("v", GraftType.Dbl)),
           ttl, DataFrameSource(feat, "et", createdTimestampColumn = Some("ct"))),
         Seq("k"), Seq("v"), feat)
-      def pit(entity: DataFrame, feat: DataFrame) = values(PointInTimeJoin.join(entity,
-        Seq(viewJoin("pv", feat)), fullFeatureNames = true), "pv__v")
+      def pit(entity: DataFrame, feat: DataFrame, ttl: Duration = ttl) =
+        values(PointInTimeJoin.join(entity, Seq(viewJoin("pv", feat, ttl)),
+          fullFeatureNames = true), "pv__v")
       val byParts = Seq(1, 4).map { parts =>
         val entity = ents.toDF("k", "event_timestamp", "eid").repartition(parts)
-        // one call, a TIMESTAMP view on the chain and a DATE view declarative
+        val entDate = retype(entity, "event_timestamp", asDate)
+        val entNtz = retype(entity, "event_timestamp", asNtz)
+        // one call, a TIMESTAMP view and a DATE view
         val mixed = PointInTimeJoin.join(entity,
           Seq(viewJoin("pv", featTs), viewJoin("pd", featDate)), fullFeatureNames = true)
         val runs = Seq(
-          "chain" -> pit(entity, featTs),
+          ("chain", pit(entity, featTs), expected),
           // an entity column named like the source feature stays on the chain
-          "chain, entity column named like the feature" ->
-            pit(entity.withColumn("v", lit(-1.0)), featTs),
-          "declarative" -> pit(entity, featDate),
-          // key-type parity fails, so TIMESTAMP ts runs the declarative route
-          "declarative, int entity key" -> pit(entity.withColumn("k", col("k").cast("int")), featTs),
-          "mixed, chain view" -> values(mixed, "pv__v"),
-          "mixed, declarative view" -> values(mixed, "pd__v"),
-          "AsOfJoin sortmerge" -> values(AsOfJoin.join(entity, featTs, Seq("k"),
-            "event_timestamp", "et", ttl, orderCols = Seq("ct"), featureCols = Seq("v")), "v"))
-        Prop.all(runs.map { case (route, got) =>
-          (got == expected) :| s"$route, $parts partition(s): $got != $expected" }: _*)
+          ("chain, entity column named like the feature",
+            pit(entity.withColumn("v", lit(-1.0)), featTs), expected),
+          ("DATE feature ts", pit(entity, featDate), expected),
+          ("DATE entity ts", pit(entDate, featTs), expected),
+          ("DATE entity ts, sub-day ttl", pit(entDate, featTs, subDay), expect(subDay)),
+          ("DATE ts on both sides", pit(entDate, featDate), expected),
+          ("NTZ ts on both sides", pit(entNtz, retype(featTs, "et", asNtz)), expected),
+          ("NTZ entity ts, TIMESTAMP feature ts", pit(entNtz, featTs), expected),
+          ("epoch-long ts on both sides, ttl 0",
+            pit(retype(entity, "event_timestamp", unix_micros),
+              retype(featTs, "et", unix_micros), Duration.ZERO), expect(Duration.ZERO)),
+          ("int entity key, bigint feature key",
+            pit(retype(entity, "k", _.cast("int")), featTs), expected),
+          ("bigint entity key, int feature key",
+            pit(entity, retype(featTs, "k", _.cast("int"))), expected),
+          ("null keys", pit(retype(entity, "k", nullKeys), retype(featTs, "k", nullKeys)),
+            expected),
+          ("double keys with -0.0 / 0.0 / NaN",
+            pit(retype(entity, "k", doubleKeys(-0.0)), retype(featTs, "k", doubleKeys(0.0))),
+            expected),
+          ("double keys, DATE feature ts",
+            pit(retype(entity, "k", doubleKeys(-0.0)), retype(featDate, "k", doubleKeys(0.0))),
+            expected),
+          ("mixed, TIMESTAMP view", values(mixed, "pv__v"), expected),
+          ("mixed, DATE view", values(mixed, "pd__v"), expected),
+          ("AsOfJoin sortmerge", values(AsOfJoin.join(entity, featTs, Seq("k"),
+            "event_timestamp", "et", ttl, orderCols = Seq("ct"), featureCols = Seq("v")), "v"),
+            expected))
+        Prop.all(runs.map { case (route, got, exp) =>
+          (got == exp) :| s"$route, $parts partition(s): $got != $exp" }: _*)
       }
       Prop.all(byParts: _*)
     }
@@ -304,6 +335,59 @@ class PropertySpec extends AnyFunSuite {
     runCheck(prop, minTests = 12)
   }
 
+  /** The input shapes both forward-looking as-of properties add to their
+    * unique-id case: a day grid (so DATE copies are exact) with a
+    * duplicate-prone tie-break and a null-bearing payload, so only the
+    * payload decides some winners. Each shape runs at 1 and 4 entity
+    * partitions plus a shuffle-derived (distinct) entity frame.
+    * `join(entity, feature)` runs the operator; `oracle` gives each
+    * entity row's (id, v) winner; results are compared per `eid`. */
+  private def asOfShapes(
+      rows: Seq[(Long, Timestamp, Long, java.lang.Double)],
+      ents: Seq[(Long, Timestamp, Long)],
+      join: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =>
+        org.apache.spark.sql.DataFrame,
+      oracle: (Long, Timestamp) => Option[(Long, Any)],
+      tsTypes: Seq[String] = Seq("date", "timestamp_ntz")): Prop = {
+    import spark.implicits._
+    import org.apache.spark.sql.{Column, DataFrame}
+    import org.apache.spark.sql.functions.{col, when}
+    val expected = ents.map { case (k, ts, eid) => eid -> oracle(k, ts) }.toMap
+    val feat = rows.toDF("k", "ft", "id", "v")
+    def retype(df: DataFrame, c: String, e: Column => Column) = df.withColumn(c, e(col(c)))
+    val nullKeys: Column => Column = k => when(k =!= 0, k)
+    val entities = Seq(1, 4).map(p => s"$p partition(s)" ->
+      ents.toDF("k", "event_timestamp", "eid").repartition(p)) :+
+      ("shuffle-derived" -> ents.toDF("k", "event_timestamp", "eid").distinct())
+    val runs = entities.flatMap { case (shape, entity) =>
+      Seq(s"TIMESTAMP, $shape" -> join(entity, feat),
+        s"null keys, $shape" -> join(retype(entity, "k", nullKeys), retype(feat, "k", nullKeys))) ++
+      tsTypes.map(t => s"$t, $shape" -> join(retype(entity, "event_timestamp", _.cast(t)),
+        retype(feat, "ft", _.cast(t))))
+    }
+    Prop.all(runs.map { case (name, df) =>
+      val got = df.select("eid", "id", "v").collect().map(r => r.getLong(0) ->
+        Option(r.get(1)).map(_ => (r.getLong(1), if (r.isNullAt(2)) null else r.get(2)))).toMap
+      (got == expected) :| s"$name: $got != $expected"
+    }: _*)
+  }
+
+  /** A day-grid case for [[asOfShapes]]: ids from {0, 1} and v from
+    * {null, 0, 1, 2}, so duplicate (key, ts, id) rows are common. */
+  private def dayGridCase(rnd: scala.util.Random, nKeys: Int, nRows: Int, nEnt: Int) = {
+    val day = 86400000L
+    def t(): Timestamp = new Timestamp(base + rnd.nextInt(12) * day)
+    val rows = (0 until nRows).map(_ => (rnd.nextInt(nKeys).toLong, t(),
+      rnd.nextInt(2).toLong,
+      if (rnd.nextInt(4) == 0) null else java.lang.Double.valueOf(rnd.nextInt(3).toDouble)))
+    val ents = (0 until nEnt).map(i => (rnd.nextInt(nKeys).toLong, t(), i.toLong))
+    (rows, ents)
+  }
+
+  /** (id, v) of a day-grid winner, v null smallest in the payload order. */
+  private def idV(r: (Long, Timestamp, Long, java.lang.Double)): (Long, Double) =
+    (r._3, if (r._4 == null) Double.NegativeInfinity else r._4.doubleValue())
+
   test("LabelJoin agrees with the nested-loop forward oracle on arbitrary inputs (ScalaCheck)") {
     import spark.implicits._
     val genCase = for {
@@ -311,10 +395,12 @@ class PropertySpec extends AnyFunSuite {
       nRows <- Gen.choose(0, 150)
       nEnt <- Gen.choose(1, 40)
       horizonH <- Gen.oneOf(1, 7, 48)
+      horizonD <- Gen.oneOf(1, 3)
       seed <- Gen.choose(0L, 1000000L)
-    } yield (nKeys, nRows, nEnt, horizonH, seed)
+    } yield (nKeys, nRows, nEnt, horizonH, horizonD, seed)
 
-    val prop = Prop.forAllNoShrink(genCase) { case (nKeys, nRows, nEnt, horizonH, seed) =>
+    val prop = Prop.forAllNoShrink(genCase) {
+      case (nKeys, nRows, nEnt, horizonH, horizonD, seed) =>
       val rnd = new scala.util.Random(seed)
       def t(): Timestamp = new Timestamp(base + rnd.nextInt(100) * 3600_000L)
       // unique label ids make the (ts, id) tie-break a total order
@@ -339,7 +425,22 @@ class PropertySpec extends AnyFunSuite {
         else Some(c.minBy { case (_, lt, lid, _) => (lt.getTime, lid) }._3)
       }
 
-      got.length == ents.length && got.forall { case (k, ts, lid) => lid == oracle(k, ts) }
+      // the day grid: duplicate ids, so (lt, id, v) decides
+      val (dRows, dEnts) = dayGridCase(rnd, nKeys, nRows, nEnt)
+      val dHorizon = Duration.ofDays(horizonD.toLong)
+      val shapes = asOfShapes(dRows, dEnts,
+        (e, f) => graft.operators.LabelJoin.join(e, f, Seq("k"), Seq("id", "v"),
+          dHorizon, labelTsCol = "ft", tieBreaks = Seq("id")),
+        (key, ts) => {
+          val c = dRows.filter { case (k, lt, _, _) =>
+            k == key && lt.getTime > ts.getTime && lt.getTime <= ts.getTime + dHorizon.toMillis
+          }
+          if (c.isEmpty) None
+          else Some(c.minBy(r => (r._2.getTime, idV(r)))).map(r => (r._3, r._4))
+        })
+
+      ((got.length == ents.length &&
+        got.forall { case (k, ts, lid) => lid == oracle(k, ts) }) :| "unique ids") && shapes
     }
     runCheck(prop, minTests = 8)
   }
@@ -351,10 +452,11 @@ class PropertySpec extends AnyFunSuite {
       nRows <- Gen.choose(0, 150)
       nEnt <- Gen.choose(1, 40)
       tolH <- Gen.oneOf(1, 7, 48)
+      tolD <- Gen.oneOf(1, 3)
       seed <- Gen.choose(0L, 1000000L)
-    } yield (nKeys, nRows, nEnt, tolH, seed)
+    } yield (nKeys, nRows, nEnt, tolH, tolD, seed)
 
-    val prop = Prop.forAllNoShrink(genCase) { case (nKeys, nRows, nEnt, tolH, seed) =>
+    val prop = Prop.forAllNoShrink(genCase) { case (nKeys, nRows, nEnt, tolH, tolD, seed) =>
       val rnd = new scala.util.Random(seed)
       def t(): Timestamp = new Timestamp(base + rnd.nextInt(100) * 3600_000L)
       val rows = (0 until nRows).map(i =>
@@ -381,9 +483,54 @@ class PropertySpec extends AnyFunSuite {
         }._3)
       }
 
-      got.length == ents.length && got.forall { case (k, ts, fid) => fid == oracle(k, ts) }
+      // the day grid: rows at equal distance on both sides of an anchor
+      // and duplicate ids, so direction, then (id, v), decides
+      val (dRows, dEnts) = dayGridCase(rnd, nKeys, nRows, nEnt)
+      val dTol = Duration.ofDays(tolD.toLong)
+      val shapes = asOfShapes(dRows, dEnts,
+        (e, f) => graft.operators.NearestJoin.join(e, f, Seq("k"), Seq("id", "v"),
+          dTol, featureTsCol = "ft", tieBreaks = Seq("id")),
+        (key, ts) => {
+          val c = dRows.filter { case (k, ft, _, _) =>
+            k == key && math.abs(ft.getTime - ts.getTime) <= dTol.toMillis
+          }
+          if (c.isEmpty) None
+          else Some(c.minBy(r => (math.abs(r._2.getTime - ts.getTime),
+            if (r._2.getTime <= ts.getTime) 0L else 1L, idV(r)))).map(r => (r._3, r._4))
+        }, tsTypes = Nil)
+
+      ((got.length == ents.length &&
+        got.forall { case (k, ts, fid) => fid == oracle(k, ts) }) :| "unique ids") && shapes
     }
     runCheck(prop, minTests = 8)
+  }
+
+  test("NearestJoin on DATE and NTZ ts agrees with the nested-loop nearest oracle (ScalaCheck)") {
+    // its distance compare runs in the links' own ts type, so
+    // wall-clock ts types need no unix_micros (a TIMESTAMP-only function)
+    val genCase = for {
+      nKeys <- Gen.choose(1, 4)
+      nRows <- Gen.choose(0, 60)
+      nEnt <- Gen.choose(1, 25)
+      tolD <- Gen.oneOf(1, 3)
+      seed <- Gen.choose(0L, 1000000L)
+    } yield (nKeys, nRows, nEnt, tolD, seed)
+    val prop = Prop.forAllNoShrink(genCase) { case (nKeys, nRows, nEnt, tolD, seed) =>
+      val (rows, ents) = dayGridCase(new scala.util.Random(seed), nKeys, nRows, nEnt)
+      val tol = Duration.ofDays(tolD.toLong)
+      asOfShapes(rows, ents,
+        (e, f) => graft.operators.NearestJoin.join(e, f, Seq("k"), Seq("id", "v"),
+          tol, featureTsCol = "ft", tieBreaks = Seq("id")),
+        (key, ts) => {
+          val c = rows.filter { case (k, ft, _, _) =>
+            k == key && math.abs(ft.getTime - ts.getTime) <= tol.toMillis
+          }
+          if (c.isEmpty) None
+          else Some(c.minBy(r => (math.abs(r._2.getTime - ts.getTime),
+            if (r._2.getTime <= ts.getTime) 0L else 1L, idV(r)))).map(r => (r._3, r._4))
+        })
+    }
+    runCheck(prop, minTests = 4)
   }
 
   test("Contrastive.negativeSamples: k per anchor, never self, deterministic, uniform-ish (ScalaCheck)") {
